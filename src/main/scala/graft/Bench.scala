@@ -1,5 +1,5 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import scala.util.control.NonFatal
 
 /** Benchmark main: times every SparkEntry query at SPARK_GRAFT_SF_DIR.
   *
@@ -30,37 +30,9 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val detailPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_DETAIL", "/tmp/graft_bench_detail.json")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // Warm the engine (codegen compiler, job scheduler, parquet reader code
-    // path) with data-free work before any timed query: the first query of a
-    // fresh session otherwise absorbs ~4-5s of one-time JIT/init cost
-    // regardless of data size (measured identical at sf0.001 and sf0.1).
-    // The join+window+aggregate warmup matters as much as the scan: whichever
-    // query happens to run first otherwise absorbs the first-shuffle-join /
-    // first-window / first-AQE-replan costs (measured ~3s on the 2nd query
-    // of the run), making per-query times position-dependent instead of
-    // reflecting steady-state cost.
-    spark.range(1000).selectExpr("sum(id)").collect()
-    spark.read.parquet(s"$sfDir/region.parquet").groupBy("r_name").count().collect()
-    def warmJoinsWindows(): Unit = {
-      import org.apache.spark.sql.expressions.Window
-      import org.apache.spark.sql.functions._
-      val fact = spark.range(10000).withColumn("k", pmod(col("id"), lit(97)))
-      val dim = spark.range(97).select(col("id").as("k"))
-      fact.repartition(4, col("k")).join(dim.hint("shuffle_hash"), Seq("k"))
-        .groupBy("k").agg(sum("id").as("s"))
-        .withColumn("rn", row_number().over(Window.partitionBy(pmod(col("k"), lit(7))).orderBy(desc("s"), asc("k"))))
-        .filter(col("rn") <= 3).count(): Unit
-      fact.join(broadcast(dim), Seq("k")).count(): Unit
-    }
-    warmJoinsWindows()
+    val spark = Session.build(defaultCpus = 4)
+    Session.warmup(spark, sfDir)
     val failures = scala.collection.mutable.ListBuffer.empty[String]
     // Queries that serve from a session-lifetime memo (the IVF index + its
     // served top-k, LlmVector): under min-of-2 their FIRST run pays the index
@@ -84,7 +56,7 @@ object Bench {
         val t0 = System.nanoTime()
         try { fn(spark, sfDir).count(); Some((System.nanoTime() - t0) / 1e9) }
         catch {
-          case e: Throwable =>
+          case NonFatal(e) =>
             System.err.println(s"[bench] $name FAILED: ${e.getMessage}")
             None
         }
@@ -138,7 +110,7 @@ object Bench {
               catch {
                 // a deterministic repeat-run breakage that surfaces only here
                 // must stay visible, like the main loop's second-run failures
-                case e: Throwable =>
+                case NonFatal(e) =>
                   System.err.println(s"[bench] $name retry run FAILED: ${e.getMessage}")
                   None
               }

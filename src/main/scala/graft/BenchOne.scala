@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Single-query benchmark loop for plan iteration: times one (or a few)
   * declared queries for N iterations after the same warmup Bench uses.
@@ -10,15 +9,8 @@ object BenchOne {
     val names = args(0).split(",").toSeq
     val iters = if (args.length > 1) args(1).toInt else 3
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    spark.range(1000).selectExpr("sum(id)").collect()
-    spark.read.parquet(s"$sfDir/region.parquet").groupBy("r_name").count().collect()
+    val spark = Session.build(defaultCpus = 4)
+    Session.warmup(spark, sfDir)
     names.foreach { name =>
       val fn = SparkEntry.queries(name)
       (1 to iters).foreach { i =>

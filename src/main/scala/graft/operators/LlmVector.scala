@@ -146,12 +146,10 @@ object LlmVector {
     cosineTopkCore(spark, sfDir).orderBy("a", "rank")
 
   /** In-engine index-quality diagnostic (round 18): recall@5 of the IVF
-    * index against the exact baseline, per label — the RecallProbe loop
-    * made first-class, so an operator of the serving profile can measure
-    * what a knob change buys ON THEIR CORPUS without leaving the engine
-    * (run it with `centroids`/`probeLaw` set to score a candidate
-    * configuration). Both sides are this library's own oracle-proven
-    * relations (exact all-pairs top-5, IVF top-5), so the composition is
+    * index against the exact baseline, per label, so a user can measure
+    * what the index keeps ON THEIR CORPUS without leaving the engine.
+    * Both sides are this library's own oracle-proven relations (exact
+    * all-pairs top-5, IVF top-5), so the composition is
     * fully oracle-checked; per-label grain surfaces WHERE the quantizer
     * loses neighbors rather than one blended number. Cost is dominated BY
     * DEFINITION by the exact half (the ground-truth all-pairs row) — the
@@ -329,7 +327,6 @@ object LlmVector {
     topkMemo.release(spark)
     pqMemo.release(spark)
     pqTopkMemo.release(spark)
-    trainedMemo.release(spark)
   }
 
   private def cellScored(spark: SparkSession, sfDir: String): DataFrame =
@@ -350,10 +347,9 @@ object LlmVector {
     * cells ≈ 178 MB of flat centroid arrays — still a broadcastable
     * dimension table on the 1000-executor target, ~2.8 MB at the ×300
     * probe's N=600k. Beyond the cap a production deployment re-derives
-    * TRAINED centroids with k ∝ √N — that fork EXISTS as of round 17
-    * (`spark.graft.ann.centroids = trained`, see quantizerCentroids; the
-    * measured frontier is SCALE.md round 17) — the cap bounds the fixed
-    * hyperplane budget here, an order of magnitude past the graded range (the
+    * TRAINED centroids with k ∝ √N (that trade is measured at ×100/×300
+    * in SCALE.md rounds 17–18) — the cap bounds the fixed hyperplane
+    * budget here, an order of magnitude past the graded range (the
     * pre-round-16 cap of 8 sat INSIDE it: saturation at N≈131k made build
     * candidate volume ∝N², the measured ×300 spill knee — 268.7 GB memory
     * spill, ×72–123 wall). */
@@ -399,16 +395,16 @@ object LlmVector {
     * quadratic into the centroid scan. nprobe stays coupled to the bit
     * budget (3+2b, so ∝log N — NOT a constant fraction of cells, which
     * would re-quadratic the join); recall at the law's divergence points
-    * is measured, not assumed (tools/RecallProbe, both growth regimes —
-    * table in SCALE.md round 16): near-dup-FAMILY corpora hold recall@5
+    * is measured, not assumed (both growth regimes — table in SCALE.md
+    * round 16): near-dup-FAMILY corpora hold recall@5
     * = 1.0 at ×100/×300 (the quantizer keeps 0.98-cosine families
     * together — the regime semantic dedup rides), while NEW-CONTENT
     * corpora decay to 0.17/0.15 as the log-growth probe budget covers a
     * shrinking cell fraction — the declared trade of a data-oblivious
     * quantizer at sub-quadratic build cost. Holding new-content recall
     * flat requires a constant SCANNED FRACTION (quadratic build) or
-    * data-adaptive TRAINED centroids (the production fork named at
-    * MaxBits); the sf0.1 contract (recall@5 ≥ 0.4, LlmSpec) is the
+    * data-adaptive TRAINED centroids (see MaxBits; SCALE.md rounds
+    * 17–18); the sf0.1 contract (recall@5 ≥ 0.4, LlmSpec) is the
     * gated surface and is unchanged.
     *
     * Parity: the halving introduces no new transcendental — min, subtract,
@@ -423,113 +419,30 @@ object LlmVector {
       least(x, lit(KneeBits.toDouble) + (x - lit(KneeBits.toDouble)) / lit(2.0))))).cast("int")
   }
 
-  /** Distinct labels in the embeddings corpus (0–9 at every SF and in
-    * every synthesized sweep dir — labels are a schema-fixed dimension
-    * like nation/region). Total cell count is NumLabels·2^b; only the
-    * frac probe-law anchor needs the product. */
-  private val NumLabels = 10
+  /** The probe-budget law: nprobe = 3 + 2b, ∝log N (why: buildAnnTopk) —
+    * the law the DuckDB oracle mirror replays. The √cells and
+    * constant-fraction laws, and trained centroids stacked on them, were
+    * measured at ×100/×300 and not shipped (SCALE.md rounds 17–18). */
+  private[graft] def nprobeCol(bBits: Column): Column = lit(3) + lit(2) * bBits
 
-  /** The probe-budget LAW — a measurement-only knob (round 17, the r16
-    * verdict's #1 item: measure the frontier before moving the law).
-    * Unset, the default branch returns the IDENTICAL expression the
-    * engine shipped with since round 6 (nprobe = 3 + 2b, ∝log N — the
-    * law the DuckDB oracle mirror replays), so every oracle row, plan
-    * and hash is unchanged. tools/RecallProbe sets
-    * `spark.graft.ann.probeLaw` to measure the alternatives at the
-    * law's large-N divergence points:
-    *   - "sqrt:<c>"  nprobe = 3 + c·2^ceil(b/2) — ∝√cells, candidate
-    *     volume ~N^1.25 (the unexplored middle point between the
-    *     shipped N·log and the quadratic constant-fraction laws);
-    *   - "frac:<k>"  nprobe = max(3+2b, ceil(NumLabels·2^b / k)) — a
-    *     constant scanned fraction 1/k of all cells, the upper anchor
-    *     (this is the quadratic-build corner; only ever swept, never
-    *     shipped).
-    * Any law change graduates through the r16 discipline: oracle mirror
-    * + value-pin spec move together, 204/204 at all three SFs, LlmSpec's
-    * sf0.1 recall floor holds.
-    *
-    * Round-17 outcome (the frontier, SCALE.md round 17): the default
-    * STAYS log, with data — √cells laws top out at 0.22–0.30 new-content
-    * recall@5 for 1.5–2× build at ×100 (the 0.4 crossing on the
-    * oblivious quantizer is the quadratic frac corner), while the
-    * family regime is 1.00 under every law, so the shipped budget is
-    * the one regime-appropriate default. The measured retrieval-serving
-    * configuration is sqrt:2 STACKED with trained centroids (0.414 /
-    * 0.345 at ×100/×300, ~3.5× one-time build) — two session confs,
-    * no plan change. */
-  private[graft] def nprobeCol(spark: SparkSession, bBits: Column): Column =
-    spark.conf.get("spark.graft.ann.probeLaw", "log") match {
-      case "log" => lit(3) + lit(2) * bBits
-      case s if s.startsWith("sqrt:") =>
-        // pow(2, ·) is exact in double through the b ≤ 16 clamp range
-        lit(3) + lit(s.stripPrefix("sqrt:").toInt) *
-          pow(lit(2.0), floor((bBits + lit(1)) / lit(2.0))).cast("int")
-      case s if s.startsWith("frac:") =>
-        val k = s.stripPrefix("frac:").toInt
-        greatest(lit(3) + lit(2) * bBits,
-          ceil(lit(NumLabels.toDouble) * pow(lit(2.0), bBits) / lit(k.toDouble)).cast("int"))
-      case other => throw new IllegalArgumentException(
-        s"spark.graft.ann.probeLaw '$other' — expected log | sqrt:<c> | frac:<k>")
-    }
-
-  /** Driver-side scalar mirror of bucketBits — the probe-law sweep sizes
-    * the rank cap it must request from N before any job runs.
-    * Round17OpsSpec pins it value-by-value against the Column law so the
-    * two cannot drift. */
+  /** Driver-side scalar mirror of bucketBits — the stream serve sizes its
+    * probe from N before any query arrives. Round17OpsSpec pins it
+    * value-by-value against the Column law so the two cannot drift. */
   private[graft] def bucketBitsScalar(n: Long): Int = {
     val x = math.log(n / 512.0) / math.log(2.0)
     math.min(MaxBits, math.max(0,
       math.ceil(math.min(x, KneeBits + (x - KneeBits) / 2.0)).toInt))
   }
 
-  /** Driver-side scalar mirror of nprobeCol for a law string at bit
-    * budget b — RecallProbe reports the budget actually probed and sizes
-    * maxRank with it. Spec-pinned against the Column form. */
-  private[graft] def nprobeScalar(law: String, b: Int): Int = law match {
-    case "log" => 3 + 2 * b
-    case s if s.startsWith("sqrt:") =>
-      3 + s.stripPrefix("sqrt:").toInt * (1 << ((b + 1) / 2))
-    case s if s.startsWith("frac:") =>
-      math.max(3 + 2 * b,
-        math.ceil(NumLabels.toDouble * (1L << b) / s.stripPrefix("frac:").toInt).toInt)
-    case other => throw new IllegalArgumentException(
-      s"probeLaw '$other' — expected log | sqrt:<c> | frac:<k>")
-  }
+  /** Driver-side scalar mirror of nprobeCol at bit budget b — the stream
+    * serve probes the same cells as the batch build. Spec-pinned against
+    * the Column form. */
+  private[graft] def nprobeScalar(b: Int): Int = 3 + 2 * b
 
   /** Emit cap of the cached per-vector cell ranking (the
-    * graft_ivf_topcells limit). The default covers the shipped log law
-    * at its MaxBits ceiling; a probe-law sweep raises
-    * `spark.graft.ann.maxRank` alongside the law so the cache holds at
-    * least nprobe ranks (RecallProbe computes both from N). */
-  private def maxRank(spark: SparkSession): Int =
-    spark.conf.get("spark.graft.ann.maxRank", (3 + 2 * MaxBits).toString).toInt
-
-  /** Per-task source-byte budget for the ANN candidate join, scaled to the
-    * PROBE budget actually in force: candidate volume per source byte is
-    * ∝ nprobe, so the per-task budget that keeps the candidate sort
-    * resident shrinks by the same factor (round 18 — the ×300 sqrt:4
-    * probe OOM'd the candidate sort at the width the 128 KB budget
-    * yields, because that budget was ProfileJobs-measured UNDER THE
-    * SHIPPED LAW; a 5.7× candidate multiplier needs a ~5.7× wider sort).
-    * `maxRank` is the driver-side proxy — the sweep/serving contract
-    * sets it to the actual nprobe (RecallProbe computes it from N), and
-    * at its 35 default this is EXACTLY ScaleRules.AnnCandidateTaskBytes,
-    * so every unset-knob plan keeps its width byte-identical
-    * (Round18OpsSpec pins both branches). Floor of 4 KB: maxRank is a
-    * session conf, and an absurd value must degrade to more tasks, not a
-    * zero budget — which requires the divisor itself to be clamped ≥ 1
-    * (round-18 ADVICE: maxRank=0 threw ArithmeticException and negative
-    * values silently floored, despite this docstring's promise). */
-  private[graft] def annCandidateTaskBytes(spark: SparkSession): Long = {
-    // non-positive maxRank is an absurd conf: degrade to the 4 KB floor
-    // (more/smaller tasks — the safe direction) rather than clamping the
-    // divisor, which handed maxRank<=0 the MAXIMUM budget (r19 ADVICE:
-    // fewest/biggest tasks, i.e. the spill direction the docstring forbids)
-    val mr = maxRank(spark)
-    if (mr <= 0) 4L << 10
-    else math.max(4L << 10,
-      graft.ScaleRules.AnnCandidateTaskBytes * (3 + 2 * MaxBits) / mr)
-  }
+    * graft_ivf_topcells limit): the probe law's budget at its MaxBits
+    * ceiling, so every bit budget finds its nprobe ranks cached. */
+  private val MaxRank = 3 + 2 * MaxBits
 
   /** Sign-bit bucket: bit j set iff hyperplane-j projection > 0, low b bits
     * only. The projection folds left-to-right in double, matching DuckDB's
@@ -597,8 +510,8 @@ object LlmVector {
     * arrays (not array<struct>) so the scorer's hot loop reads them with
     * zero per-cell allocations; array_sort on the struct list orders by
     * its first field (cell), making the layout deterministic. Shared by
-    * the scored-cell cache build and the k-means assignment step (same
-    * layout, so the two `graft_ivf_topcells` consumers cannot drift). */
+    * the scored-cell cache build and the stream serve (same layout, so
+    * the two `graft_ivf_topcells` consumers cannot drift). */
   private def centroidMatrix(centroids: DataFrame): DataFrame =
     centroids
       .agg(array_sort(collect_list(struct(col("cell"), col("centroid"), col("centroid_nrm")))).as("cs"))
@@ -607,104 +520,8 @@ object LlmVector {
         flatten(transform(col("cs"), c => c.getField("centroid"))).as("cflat"),
         transform(col("cs"), c => c.getField("centroid_nrm")).as("cnrms"))
 
-  /** Serving memo for the TRAINED centroid relation: the k-row result is
-    * lazily cached (plan construction only — the ServingMemo lock is
-    * never held across a job), so the PQ coder and the cell-scored build
-    * reuse one training run instead of re-paying `rounds` corpus passes
-    * per consumer. */
-  private val trainedMemo = new ServingMemo(MemoCap)
-
-  /** Centroid-source dispatcher (round 17, the r16 verdict's item #2:
-    * decide the trained-centroid fork with data). Unset, the quantizer is
-    * the shipped data-OBLIVIOUS one (sign-projection cells → per-cell
-    * means — the formula the DuckDB oracle replays), so every oracle row,
-    * plan and hash is unchanged. `spark.graft.ann.centroids = trained[:r]`
-    * swaps in k-means-TRAINED centroids at the SAME cell count
-    * (NumLabels·2^b ∝ √N): probe law, rank cap and every downstream
-    * consumer (cell scoring, candidate join, PQ residual coder) see an
-    * identical budget, so a measured recall difference is attributable
-    * purely to centroid PLACEMENT. Spec-gated (Round17OpsSpec pins
-    * determinism, schema, k-sizing and the sf0.1 recall floor); measured
-    * at the large-N divergence points by tools/RecallProbe — numbers in
-    * SCALE.md round 17. Like probeLaw, the knob is read at BUILD time;
-    * the trained relation itself memoizes per (session, dir, rounds),
-    * but every DOWNSTREAM result (cell cache, serve shortlists) memoizes
-    * without the knob in its key — set it once per (session, dir), or
-    * releaseCellCache between flips (the spec and RecallProbe do). */
-  private[graft] def quantizerCentroids(spark: SparkSession, sfDir: String): DataFrame =
-    spark.conf.get("spark.graft.ann.centroids", "oblivious") match {
-      case "oblivious" => centroidRelation(spark, sfDir)
-      case t if t == "trained" || t.startsWith("trained:") =>
-        val rounds = if (t == "trained") 4 else t.stripPrefix("trained:").toInt
-        require(rounds >= 1 && rounds <= 16, s"trained rounds $rounds not in [1,16]")
-        // rounds is part of the memo key: trained:1 → trained:8 in one
-        // session must retrain, not serve the first training's cache
-        // (r17 advisory). Downstream consumers still memoize without the
-        // knob — releaseCellCache between flips remains required.
-        trainedMemo.get(spark, s"$sfDir#trained:$rounds")(
-          trainedCentroidRelation(spark, sfDir, rounds).cache())
-      case other => throw new IllegalArgumentException(
-        s"spark.graft.ann.centroids '$other' — expected oblivious | trained[:rounds]")
-    }
-
-  /** k-means (spherical: cosine assignment via `graft_ivf_topcells`
-    * rank-1, mean update) centroids — fully deterministic and fully lazy:
-    *  - k = NumLabels·2^b, the oblivious law's cell count at this N, so
-    *    the cell-count law (and with it build candidate volume ~N^1.5) is
-    *    unchanged — only placement is trained;
-    *  - seeds are a hash-stride sample (xxhash64(vec_id) mod ⌊N/k⌋ = 0 —
-    *    ~k data points, rerun-stable, no RNG), cell id = seed vec_id;
-    *  - `rounds` Lloyd rounds, each one broadcast fan-out of the one-row
-    *    centroid matrix + one groupBy mean: N·k dots per round with NO
-    *    shuffled candidate volume — each round costs one in-row centroid
-    *    scan (~N^1.5 flops, the ×300-measured 23–26 s stage), so training
-    *    multiplies the build's scan side by ~rounds and leaves the
-    *    dominant candidate join untouched;
-    *  - cells that lose all members simply drop out of the next round's
-    *    matrix (k decays slightly — the scorer ranks whatever exists);
-    *  - per-round sums and means accumulate in double, but each round's
-    *    updated means are float-cast before the next assignment (the
-    *    centroid-matrix layout is array<float>); the 4 dp rounding (like
-    *    the oblivious relation) happens only at the END. Determinism is
-    *    per configuration — it rests on the fixed per-partition fold
-    *    order, i.e. stable for a given partitioning/config, not an
-    *    FP-associativity guarantee across machines.
-    * The plan is a `rounds`-deep chain of broadcast exchanges — lazy (no
-    * job at construction, preserving both the ServingMemo contract and
-    * PlanSpec's plans-without-jobs invariant). */
-  private[graft] def trainedCentroidRelation(
-      spark: SparkSession, sfDir: String, rounds: Int): DataFrame = {
-    graft.functions.IvfTopCells.register(spark)
-    val e = emb(spark, sfDir).select("vec_id", "embedding", "nrm")
-    val nRow = Tables.embeddings(spark, sfDir).agg(count(lit(1)).as("n_total"))
-    val seeds = Fanout.broadcastAll(e, nRow, col("vec_id"), col("n_total"))
-      .withColumn("k",
-        lit(NumLabels.toDouble) * pow(lit(2.0), bucketBits(col("n_total"))))
-      .filter(pmod(xxhash64(col("vec_id")),
-        greatest(lit(1L), floor(col("n_total") / col("k")).cast("long"))) === 0L)
-      .select(col("vec_id").as("cell"), col("embedding").as("centroid"))
-      .withColumn("centroid_nrm", norm("centroid"))
-    val sums = (0 until Dim).map(i =>
-      sum(element_at(col("embedding"), i + 1).cast("double")).as(s"s$i"))
-    val fin = (1 to rounds).foldLeft(seeds) { (cents, _) =>
-      Fanout.broadcastAll(e, centroidMatrix(cents), col("vec_id"), size(col("cells")))
-        .withColumn("tc",
-          explode(expr("graft_ivf_topcells(embedding, nrm, cells, cflat, cnrms, 1)")))
-        .select(col("tc.cell").as("cell"), col("embedding"))
-        .groupBy("cell")
-        .agg(count(lit(1)).as("n"), sums: _*)
-        .select(col("cell"), array((0 until Dim).map(i =>
-          (col(s"s$i") / col("n")).cast("float")): _*).as("centroid"))
-        .withColumn("centroid_nrm", norm("centroid"))
-    }
-    fin.select(col("cell"),
-        transform(col("centroid"), c =>
-          round(c.cast("double"), 4).cast("float")).as("centroid"))
-      .withColumn("centroid_nrm", norm("centroid"))
-  }
-
   private def buildCellScored(spark: SparkSession, sfDir: String): DataFrame = {
-    val matrix = centroidMatrix(quantizerCentroids(spark, sfDir))
+    val matrix = centroidMatrix(centroidRelation(spark, sfDir))
     // Cached NARROW ranked top cells (vec_id, cell, dist2cell, cell_rank):
     // the relation is consumed twice per query (rank-1 index side + top-
     // (3+2b) probe side) and by TWO declared queries (llm_ann_ivf,
@@ -736,7 +553,7 @@ object LlmVector {
           .repartition(parts, col("vec_id")),
         matrix, col("vec_id"), size(col("cells")))
       .withColumn("tc", explode(expr(
-        s"graft_ivf_topcells(embedding, nrm, cells, cflat, cnrms, ${maxRank(spark)})")))
+        s"graft_ivf_topcells(embedding, nrm, cells, cflat, cnrms, $MaxRank)")))
       .select(col("vec_id"), col("tc.cell").as("cell"),
         col("tc.dist2cell").as("dist2cell"), col("tc.cell_rank").as("cell_rank"))
       .cache()
@@ -772,7 +589,7 @@ object LlmVector {
     // cells), so total work grows ~N·log N — the textbook IVF knob.
     val nRow = Tables.embeddings(spark, sfDir).agg(count(lit(1)).as("n_total"))
     val probes = Fanout.broadcastAll(ranked, nRow, col("vec_id"), col("n_total"))
-      .filter(col("cell_rank") <= nprobeCol(spark, bucketBits(col("n_total"))))
+      .filter(col("cell_rank") <= nprobeCol(bucketBits(col("n_total"))))
       .join(vecs, "vec_id")
       .select(col("vec_id").as("a"), col("cell"),
         col("embedding").as("ea"), col("nrm").as("na"))
@@ -799,7 +616,7 @@ object LlmVector {
     // measured band was already healthy). (cell, frag) has ~20k distinct
     // keys, so the wide hash distribution stays balanced.
     val parts = graft.ScaleRules.wideBuildWidth(
-      spark, s"$sfDir/embeddings.parquet", annCandidateTaskBytes(spark))
+      spark, s"$sfDir/embeddings.parquet", graft.ScaleRules.AnnCandidateTaskBytes)
     topkWithin(probesF.repartition(parts, col("cell"), col("frag"))
       .join(indexedF.hint("shuffle_hash"), Seq("cell", "frag"))
       .filter(col("a") =!= col("b"))
@@ -829,9 +646,8 @@ object LlmVector {
     *  - self-matches drop (a served query never returns its own id).
     *
     * nprobe/bit-budget are fixed at STREAM-SETUP time from the corpus
-    * count (one setup job — serving setup already materializes the index;
-    * the law and centroid knobs are read through the same dispatchers as
-    * the batch build, so the serving profile's confs apply unchanged). */
+    * count (one setup job — serving setup already materializes the index)
+    * through the spec-pinned scalar mirrors of the batch build's laws. */
   private[graft] def annServeCandidates(
       spark: SparkSession, sfDir: String, queries: DataFrame): DataFrame = {
     graft.functions.IvfTopCells.register(spark)
@@ -840,16 +656,13 @@ object LlmVector {
     // one bit lower under an isNotNull filter when null embeddings exist
     // (round-18 ADVICE: the stream must probe EXACTLY the batch cells)
     val n = Tables.embeddings(spark, sfDir).count()
-    val nprobe = math.min(
-      nprobeScalar(spark.conf.get("spark.graft.ann.probeLaw", "log"),
-        bucketBitsScalar(n)),
-      maxRank(spark))
+    val nprobe = nprobeScalar(bucketBitsScalar(n))
     val vecs = emb(spark, sfDir).select("vec_id", "embedding", "nrm")
     val indexed = cellScored(spark, sfDir).filter(col("cell_rank") === 1)
       .join(vecs, "vec_id")
       .select(col("vec_id").as("b"), col("cell"),
         col("embedding").as("eb"), col("nrm").as("nb"))
-    val matrix = centroidMatrix(quantizerCentroids(spark, sfDir))
+    val matrix = centroidMatrix(centroidRelation(spark, sfDir))
     Fanout.broadcastAll(queries.withColumn("nq", norm("embedding")),
         matrix, col("qid"), size(col("cells")))
       .withColumn("tc", explode(expr(
@@ -875,7 +688,7 @@ object LlmVector {
       .select("vec_id", "cell")
     emb(spark, sfDir).select("vec_id", "embedding")
       .join(own, "vec_id")
-      .join(broadcast(quantizerCentroids(spark, sfDir).select("cell", "centroid")), "cell")
+      .join(broadcast(centroidRelation(spark, sfDir).select("cell", "centroid")), "cell")
       .withColumn("resid", expr(
         s"""transform(sequence(0, ${Dim - 1}), i ->
            |  CAST(element_at(embedding, i+1) AS DOUBLE)
@@ -896,7 +709,7 @@ object LlmVector {
       .select(col("cell"),
         transform(col("plh"), p => p.getField("lo")).as("lows"),
         transform(col("plh"), p => p.getField("hi")).as("highs"))
-      .join(broadcast(quantizerCentroids(spark, sfDir).select("cell", "centroid")), "cell")
+      .join(broadcast(centroidRelation(spark, sfDir).select("cell", "centroid")), "cell")
       .select(col("cell"), col("lows"),
         expr(s"""transform(sequence(0, ${Dim - 1}), i ->
            |  CAST(element_at(centroid, i+1) AS DOUBLE) + element_at(lows, i+1))""".stripMargin)
@@ -963,7 +776,7 @@ object LlmVector {
     val codes = pqIndex(spark, sfDir)
     val nRow = Tables.embeddings(spark, sfDir).agg(count(lit(1)).as("n_total"))
     val probes = Fanout.broadcastAll(ranked, nRow, col("vec_id"), col("n_total"))
-      .filter(col("cell_rank") <= nprobeCol(spark, bucketBits(col("n_total"))))
+      .filter(col("cell_rank") <= nprobeCol(bucketBits(col("n_total"))))
       .join(emb(spark, sfDir).select("vec_id", "embedding", "nrm"), "vec_id")
       .select(col("vec_id").as("a"), col("cell"),
         col("embedding").as("ea"), col("nrm").as("na"))
@@ -979,7 +792,7 @@ object LlmVector {
     // shortlist sort runs over the same ~per-candidate row count as the
     // plain-IVF candidate sort, so it shares AnnCandidateTaskBytes.
     val parts = graft.ScaleRules.wideBuildWidth(
-      spark, s"$sfDir/embeddings.parquet", annCandidateTaskBytes(spark))
+      spark, s"$sfDir/embeddings.parquet", graft.ScaleRules.AnnCandidateTaskBytes)
     val approx = probesF.repartition(parts, col("cell"), col("frag"))
       .join(codesF.hint("shuffle_hash"), Seq("cell", "frag"))
       .filter(col("a") =!= col("b"))

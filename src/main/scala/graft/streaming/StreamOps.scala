@@ -454,16 +454,16 @@ object StreamOps {
   }
 
   /** ANN serve over an unbounded QUERY stream — the deployment shape the
-    * IVF index (and the round-17/18 serving profile) exists for: build
+    * IVF index exists for: build
     * the index once, then answer vector queries as they arrive. The
     * candidate stage is `LlmVector.annServeCandidates` — stream-STATIC
     * and stateless (each query row probes its own top-nprobe cells
     * against the broadcast centroid matrix and equi-joins the memoized
     * rank-1 index on cell; no watermark, no join state) — and the only
-    * state is the per-query top-k (AnnTopKProcessor). The probe law /
-    * centroid-source knobs apply through the same dispatchers as the
-    * batch build, so the documented serving profile's confs govern this
-    * path unchanged. Emits (qid, top neighbor ids, cos rounded 6). */
+    * state is the per-query top-k (AnnTopKProcessor). Centroids and
+    * probe budget are the batch build's, so a corpus vector served here
+    * probes exactly the cells `llm_ann_ivf` probes for it. Emits (qid,
+    * top neighbor ids, cos rounded 6). */
   def streamAnnServe(spark: org.apache.spark.sql.SparkSession, sfDir: String,
       queries: Dataset[AnnQuery], k: Int = 5): Dataset[(Long, Seq[Long], Seq[Double])] = {
     import queries.sparkSession.implicits._

@@ -1,12 +1,12 @@
 package graft.tools
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.ExplainMode
+import scala.util.control.NonFatal
 
 /** Dump the formatted physical plan of EVERY declared query (or a named
   * subset) into one file per query — the round-19 optimization audit needs
   * plan evidence (Exchange count, join strategy, PushedFilters/ReadSchema)
-  * for all 228 queries at the BENCH session shape, which ExplainOne's
-  * local[4]/4-partition session does not reproduce.
+  * for all 228 queries, and a subset dumped on two commits shows what a
+  * change did to the plans it touched.
   * Usage: runMain graft.tools.ExplainAll <outDir> [sfDir] [q1,q2,...]
   */
 object ExplainAll {
@@ -14,11 +14,7 @@ object ExplainAll {
     val outDir = args(0)
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
     val only = if (args.length > 2) args(2).split(",").map(_.trim).filter(_.nonEmpty).toSet else Set.empty[String]
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Session.build(defaultCpus = 32)
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
     val names = graft.SparkEntry.queries.keys.toSeq.sorted
       .filter(n => only.isEmpty || only.contains(n))
@@ -30,7 +26,7 @@ object ExplainAll {
           plan.getBytes(java.nio.charset.StandardCharsets.UTF_8))
         println(s"[explain] $name ok")
       } catch {
-        case e: Throwable => println(s"[explain] $name FAILED: ${e.getMessage}")
+        case NonFatal(e) => println(s"[explain] $name FAILED: ${e.getMessage}")
       }
     }
     spark.stop()

@@ -1,7 +1,6 @@
 package graft.tools
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageCompleted}
-import org.apache.spark.sql.SparkSession
 import scala.collection.mutable
 
 /** Per-job / per-stage wall-clock breakdown of a single declared query's
@@ -19,13 +18,8 @@ object ProfileJobs {
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
     val preQs = if (args.length > 2) args(2).split(",").map(_.trim).filter(_.nonEmpty).toSeq else Seq.empty
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    spark.range(1000).selectExpr("sum(id)").collect()
-    spark.read.parquet(s"$sfDir/region.parquet").groupBy("r_name").count().collect()
+    val spark = graft.Session.build(defaultCpus = 32)
+    graft.Session.warmup(spark, sfDir)
 
     preQs.foreach { q =>
       val t0 = System.nanoTime()

@@ -3,6 +3,7 @@ package graft.tools
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.{SparkEntry, Tables}
+import scala.util.control.NonFatal
 
 /** Scale-stress harness: measures whether the headline query plans actually
   * scale, instead of arguing from plan shape.
@@ -230,14 +231,7 @@ object ScaleStress {
     val baseDir = if (args.length > 0) args(0) else "/root/testdata/sf0.1"
     val outRoot = if (args.length > 1) args(1) else "/tmp/graft_scale"
     val mults = (if (args.length > 2) args(2) else "10,30").split(",").map(_.trim.toInt).toSeq
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session.build(defaultCpus = 32)
     // Legacy events.ts layouts are INT64 nanos (SURVEY §1.3 ⚠L1); with the
     // conf on those read as plain Long and round-trip as Long. Current
     // testdata is TIMESTAMP_NTZ micros, which round-trips natively — the
@@ -266,7 +260,7 @@ object ScaleStress {
     // makes the x1 numbers steady-state and the ratios meaningful.
     swept.foreach { name =>
       try SparkEntry.queries(name)(spark, baseDir).count(): Unit
-      catch { case e: Throwable =>
+      catch { case NonFatal(e) =>
         System.err.println(s"[scale] warmup $name FAILED: ${e.getMessage}")
       }
     }
@@ -300,13 +294,13 @@ object ScaleStress {
             val tServe = math.min(once(), once())
             Seq(s"${name}_build" -> tBuild, name -> tServe)
           } catch {
-            case e: Throwable =>
+            case NonFatal(e) =>
               System.err.println(s"[scale] $name @ $tag FAILED: ${e.getMessage}")
               Seq(name -> -1.0)
           }
         } else {
           val t = try math.min(once(), once()) catch {
-            case e: Throwable =>
+            case NonFatal(e) =>
               System.err.println(s"[scale] $name @ $tag FAILED: ${e.getMessage}")
               -1.0
           }

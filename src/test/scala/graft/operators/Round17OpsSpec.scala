@@ -3,45 +3,23 @@ package graft.operators
 import org.apache.spark.sql.functions._
 import graft.SparkSpec
 
-/** Round-17 invariants — the probe-budget frontier instrument (the r16
-  * verdict's item #1: measure log-law vs √cells vs constant-fraction
-  * probe budgets before moving the law).
-  *
-  * The sweep knob (`spark.graft.ann.probeLaw`) must be invisible when
-  * unset — the default branch IS the shipped law — and the driver-side
-  * scalar mirrors RecallProbe uses to size its rank cap must agree with
-  * the Column expressions the engine plans with, value by value, or the
-  * sweep would label points with budgets the build didn't actually use.
+/** Round-17 invariants — the driver-side scalar mirrors of the IVF laws
+  * (the stream serve sizes its probe with them) agree with the Column
+  * expressions the batch build plans with, value by value, so the two
+  * paths probe the same cells; and the fuzzy top-k join's k cap.
   */
 class Round17OpsSpec extends SparkSpec {
 
-  private val laws = Seq("log", "sqrt:1", "sqrt:2", "sqrt:4", "frac:32", "frac:8")
-
   test("probe-law scalar mirror agrees with the Column law at every bit budget") {
     import spark.implicits._
-    val bs = (0 to 16).toDF("b")
-    laws.foreach { law =>
-      spark.conf.set("spark.graft.ann.probeLaw", law)
-      try {
-        val got = bs.select(col("b"),
-            LlmVector.nprobeCol(spark, col("b")).cast("int").as("np"))
-          .collect().map(r => r.getInt(0) -> r.getInt(1)).toMap
-        (0 to 16).foreach { b =>
-          assert(got(b) === LlmVector.nprobeScalar(law, b),
-            s"law $law at b=$b: Column ${got(b)} vs scalar ${LlmVector.nprobeScalar(law, b)}")
-        }
-      } finally spark.conf.unset("spark.graft.ann.probeLaw")
-    }
-  }
-
-  test("unset law knob IS the shipped log law (the oracle-mirrored 3+2b)") {
-    import spark.implicits._
-    spark.conf.unset("spark.graft.ann.probeLaw")
     val got = (0 to 16).toDF("b")
-      .select(col("b"), LlmVector.nprobeCol(spark, col("b")).cast("int").as("np"))
+      .select(col("b"), LlmVector.nprobeCol(col("b")).cast("int").as("np"))
       .collect().map(r => r.getInt(0) -> r.getInt(1)).toMap
-    (0 to 16).foreach(b => assert(got(b) === 3 + 2 * b,
-      s"default law drifted at b=$b: ${got(b)} != ${3 + 2 * b}"))
+    (0 to 16).foreach { b =>
+      assert(got(b) === LlmVector.nprobeScalar(b),
+        s"b=$b: Column ${got(b)} vs scalar ${LlmVector.nprobeScalar(b)}")
+      assert(got(b) === 3 + 2 * b, s"probe law drifted at b=$b: ${got(b)} != ${3 + 2 * b}")
+    }
   }
 
   test("bucket-bit scalar mirror agrees with the Column law across both regimes") {
@@ -98,109 +76,5 @@ class Round17OpsSpec extends SparkSpec {
     val topk = Joins.joinFuzzyTopk(spark, sf001)
     val over = topk.groupBy("anchor").count().filter(col("count") > 3).count()
     assert(over === 0, s"$over anchors exceed the k=3 cap")
-  }
-
-  test("an unknown probe law fails loudly, not as a silent fallback to log") {
-    spark.conf.set("spark.graft.ann.probeLaw", "cubic:9")
-    try intercept[IllegalArgumentException] {
-      LlmVector.nprobeCol(spark, lit(4))
-    } finally spark.conf.unset("spark.graft.ann.probeLaw")
-  }
-
-  // --- the trained-centroid fork (r16 verdict item #2) ------------------
-  // Every knob test releases the IVF serving caches on both sides: the
-  // memos key on (session, dir) only, so a cached result built under one
-  // centroid source must never leak into a test (or a shipped query)
-  // running under another.
-
-  test("trained centroids are deterministic, k-sized by the oblivious law, proven dtypes") {
-    def run() = LlmVector.trainedCentroidRelation(spark, sf01, 2)
-    val c1 = run().orderBy("cell").collect()
-      .map(r => (r.getLong(0), r.getSeq[Float](1).toList, r.getDouble(2)))
-    val c2 = run().orderBy("cell").collect()
-      .map(r => (r.getLong(0), r.getSeq[Float](1).toList, r.getDouble(2)))
-    assert(c1.toSeq === c2.toSeq, "two identical training runs diverged")
-    // k-sizing: the fork trains AT the oblivious law's cell count
-    // (NumLabels·2^b) — a hash-stride seed sample can land under it and
-    // empty cells drop out, but the count must stay in the law's orbit,
-    // never a constant or ∝N
-    val n = graft.Tables.embeddings(spark, sf01).count()
-    val k = 10L * (1L << LlmVector.bucketBitsScalar(n))
-    assert(c1.length >= 2 && c1.length <= 2 * k,
-      s"${c1.length} trained cells vs law k=$k at n=$n")
-    // internal relation (the dtype gate applies to declared query outputs
-    // — the trained llm_ann_ivf output is assertProvenDtypes'd below);
-    // here pin the schema the downstream matrix/coder consumers expect
-    assert(run().schema.map(f => f.name -> f.dataType.simpleString) ===
-      Seq("cell" -> "bigint", "centroid" -> "array<float>", "centroid_nrm" -> "double"))
-  }
-
-  test("trained centroids hold the sf0.1 recall floor through the unchanged serve path") {
-    val sfBig = "/root/testdata/sf0.1"
-    val brute = LlmVector.llmCosineTopk(spark, sfBig)
-      .select("a", "nn").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    LlmVector.releaseCellCache(spark)
-    spark.conf.set("spark.graft.ann.centroids", "trained")
-    try {
-      val ann = LlmVector.llmAnnIvf(spark, sfBig)
-      val got = ann.select("a", "nn").collect()
-        .map(r => (r.getLong(0), r.getLong(1))).toSet
-      val recall = (brute & got).size.toDouble / brute.size
-      assert(recall >= 0.4,
-        s"trained recall@5 at sf0.1 was $recall — below the graded floor")
-      assertProvenDtypes(ann)
-    } finally {
-      spark.conf.unset("spark.graft.ann.centroids")
-      LlmVector.releaseCellCache(spark)
-    }
-  }
-
-  test("IVF-PQ rides trained centroids end-to-end and holds the recall floor") {
-    // the knob's claim is that EVERY downstream consumer sees the trained
-    // relation — the PQ residual coder is the one that would break
-    // silently (it joins centroids BY CELL; trained cell ids are sparse
-    // seed vec_ids, not the dense label<<16+bucket layout)
-    val sfBig = "/root/testdata/sf0.1"
-    val brute = LlmVector.llmCosineTopk(spark, sfBig)
-      .select("a", "nn").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    LlmVector.releaseCellCache(spark)
-    spark.conf.set("spark.graft.ann.centroids", "trained")
-    try {
-      val pq = LlmVector.llmAnnIvfPq(spark, sfBig)
-      val got = pq.select("a", "nn").collect()
-        .map(r => (r.getLong(0), r.getLong(1))).toSet
-      val recall = (brute & got).size.toDouble / brute.size
-      assert(recall >= 0.4,
-        s"trained IVF-PQ recall@5 at sf0.1 was $recall — below the graded floor")
-      assertProvenDtypes(pq)
-    } finally {
-      spark.conf.unset("spark.graft.ann.centroids")
-      LlmVector.releaseCellCache(spark)
-    }
-  }
-
-  test("unset centroid knob IS the shipped oblivious quantizer, value-identical") {
-    LlmVector.releaseCellCache(spark)
-    val unset = LlmVector.llmAnnIvf(spark, sf01).collect().toSeq
-    LlmVector.releaseCellCache(spark)
-    spark.conf.set("spark.graft.ann.centroids", "oblivious")
-    try {
-      val explicit = LlmVector.llmAnnIvf(spark, sf01).collect().toSeq
-      assert(unset === explicit, "default centroid source drifted from oblivious")
-    } finally {
-      spark.conf.unset("spark.graft.ann.centroids")
-      LlmVector.releaseCellCache(spark)
-    }
-  }
-
-  test("an unknown centroid source fails loudly, not as a silent oblivious fallback") {
-    LlmVector.releaseCellCache(spark)
-    spark.conf.set("spark.graft.ann.centroids", "kmeans++")
-    try intercept[IllegalArgumentException] {
-      LlmVector.llmAnnIvf(spark, sf001)
-    } finally {
-      spark.conf.unset("spark.graft.ann.centroids")
-      LlmVector.releaseCellCache(spark)
-    }
   }
 }

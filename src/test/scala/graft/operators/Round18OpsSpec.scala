@@ -2,62 +2,11 @@ package graft.operators
 
 import graft.SparkSpec
 
-/** Round-18 invariants — the measured retrieval-serving profile promoted
-  * to a supported configuration (the r17 verdict's item #3: the
-  * 0.414 @ ×100 frontier point must be reachable as a documented,
-  * spec-gated profile, not two conf strings buried in a sweep log), and
-  * the trained-centroid memo honoring the rounds knob (r17 advisory:
-  * trained:1 → trained:8 in one session must retrain, not silently serve
-  * the first training's cache).
+/** Round-18 invariants — the in-engine recall diagnostic reproduces the
+  * recall of its two underlying top-5 sets, and the round-18 finance rows
+  * hold their definitional bounds.
   */
 class Round18OpsSpec extends SparkSpec {
-
-  test("serving profile (centroids=trained + probeLaw=sqrt:2) holds the sf0.1 recall floor end-to-end") {
-    // The documented retrieval-serving configuration (SURVEY §2
-    // llm_ann_ivf row; SCALE.md rounds 17–18 measure it at ×100/×300).
-    // Both knobs set together, through the UNCHANGED serve path: the
-    // stacked profile must hold the same sf0.1 floor the shipped default
-    // gates, with driver-proven output dtypes.
-    val sfBig = "/root/testdata/sf0.1"
-    val brute = LlmVector.llmCosineTopk(spark, sfBig)
-      .select("a", "nn").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    LlmVector.releaseCellCache(spark)
-    spark.conf.set("spark.graft.ann.centroids", "trained")
-    spark.conf.set("spark.graft.ann.probeLaw", "sqrt:2")
-    try {
-      val ann = LlmVector.llmAnnIvf(spark, sfBig)
-      val got = ann.select("a", "nn").collect()
-        .map(r => (r.getLong(0), r.getLong(1))).toSet
-      val recall = (brute & got).size.toDouble / brute.size
-      assert(recall >= 0.4,
-        s"serving-profile recall@5 at sf0.1 was $recall — below the documented floor")
-      assertProvenDtypes(ann)
-    } finally {
-      spark.conf.unset("spark.graft.ann.centroids")
-      spark.conf.unset("spark.graft.ann.probeLaw")
-      LlmVector.releaseCellCache(spark)
-    }
-  }
-
-  test("candidate-join task budget follows the probe budget; unset knob is byte-identical") {
-    // The width law's per-task budget was ProfileJobs-measured under the
-    // shipped log law; a raised probe budget multiplies candidate volume
-    // per source byte, so the budget shrinks by the same factor (the
-    // ×300 sqrt:4 probe OOM'd the candidate sort at the unscaled width —
-    // round 18). Unset, the budget IS ScaleRules.AnnCandidateTaskBytes,
-    // so every shipped plan keeps its width.
-    spark.conf.unset("spark.graft.ann.maxRank")
-    assert(LlmVector.annCandidateTaskBytes(spark) ===
-      graft.ScaleRules.AnnCandidateTaskBytes)
-    try {
-      spark.conf.set("spark.graft.ann.maxRank", "131")
-      assert(LlmVector.annCandidateTaskBytes(spark) ===
-        graft.ScaleRules.AnnCandidateTaskBytes * 35 / 131)
-      spark.conf.set("spark.graft.ann.maxRank", "1000000")
-      assert(LlmVector.annCandidateTaskBytes(spark) === (4L << 10),
-        "an absurd maxRank must floor the budget, not zero it")
-    } finally spark.conf.unset("spark.graft.ann.maxRank")
-  }
 
   test("llm_ann_recall equals the independently-computed recall of ivf vs exact") {
     // the declared row aggregates per label; this pin recomputes global
@@ -99,27 +48,5 @@ class Round18OpsSpec extends SparkSpec {
     assert(boll.filter(col("upper") < col("lower")).count() === 0,
       "upper band below lower")
     Seq(gini, rsi, ent, gk, boll).foreach(assertProvenDtypes)
-  }
-
-  test("trained-centroid memo keys on rounds: trained:1 -> trained:8 retrains in-session") {
-    // Object identity is the observable: a memo HIT returns the same
-    // DataFrame instance, so a different rounds value returning the same
-    // instance would mean the knob was silently ignored (the r17
-    // advisory). Plan construction only — no job runs.
-    LlmVector.releaseCellCache(spark)
-    try {
-      spark.conf.set("spark.graft.ann.centroids", "trained:1")
-      val a = LlmVector.quantizerCentroids(spark, sf001)
-      spark.conf.set("spark.graft.ann.centroids", "trained:8")
-      val b = LlmVector.quantizerCentroids(spark, sf001)
-      assert(!(a eq b),
-        "trained:8 served the trained:1 cached relation — rounds missing from the memo key")
-      spark.conf.set("spark.graft.ann.centroids", "trained:1")
-      val c = LlmVector.quantizerCentroids(spark, sf001)
-      assert(a eq c, "same (dir, rounds) no longer memo-hits")
-    } finally {
-      spark.conf.unset("spark.graft.ann.centroids")
-      LlmVector.releaseCellCache(spark)
-    }
   }
 }

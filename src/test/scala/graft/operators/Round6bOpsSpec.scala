@@ -203,26 +203,6 @@ class Round6bOpsSpec extends SparkSpec {
     assert(got === expected, s"pair census for $nationName")
   }
 
-  test("FuzzyAB's grouped candidate form is pair-identical to the shipped SMJ") {
-    // the round-10 negative-result artifact (tools/FuzzyAB) keeps a grouped
-    // one-sort candidate stage as measured evidence; pin that it computes
-    // EXACTLY the shipped form's confirmed pairs so the artifact stays a
-    // valid comparison baseline as the signature scheme evolves
-    import spark.implicits._
-    val c = (0 until 4000).map { i =>
-      (i % 5, s"SEG${i % 3}", i.toLong, f"Customer#${5L * i}%09d")
-    }.toDF("c_nationkey", "c_mktsegment", "c_custkey", "c_name")
-    def confirmed(f: org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame) =
-      f(c).filter(levenshtein(col("name1"), col("name2"), 2) =!= -1)
-        .select("nk", "k1", "k2").collect().map(r =>
-          (r.getInt(0), r.getLong(1), r.getLong(2))).toSet
-    val smj = confirmed(Joins.fuzzyCandidates)
-    val grouped = confirmed(graft.tools.FuzzyAB.fuzzyCandidatesGrouped)
-    assert(smj.nonEmpty, "fixture must produce confirmed pairs")
-    assert(grouped == smj,
-      s"grouped=${grouped.size} smj=${smj.size}, diff=${(grouped diff smj).take(3)} ${(smj diff grouped).take(3)}")
-  }
-
   test("fuzzy join candidate volume grows sub-quadratically with the corpus") {
     // The de-quadratization claim as a COUNT law, not a wall-clock sweep.
     // The candidate law is volume ≈ n · (rows per deletion stem): a corpus

@@ -8,7 +8,7 @@
 # classes dir + the unmanaged Spark jars.
 #
 # Usage: tools/run_tool.sh <mainClass> [args...]
-#   e.g. tools/run_tool.sh graft.tools.RecallProbe /tmp/graft_scale/x100 997 sqrt:1
+#   e.g. tools/run_tool.sh graft.tools.ProfileJobs llm_ann_ivf /tmp/graft_scale/x100
 # Honors SPARK_DRIVER_MEM (default 8g, as build.sbt) and SPARK_GRAFT_CPUS.
 set -euo pipefail
 MAIN=${1:?usage: tools/run_tool.sh <mainClass> [args...]}
