@@ -3,24 +3,16 @@ package graft
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
-import graft.functions.{DotProduct, L2Norm}
 
-/** SparkSessionExtensions entry point: makes the engine's native expressions
-  * available to ANY session via
-  * `spark.sql.extensions=graft.GraftExtensions` — the deployment-grade
-  * alternative to per-session temp-function registration (which
-  * Udfs.register / VectorExprs.register provide for harness-built sessions
-  * whose config the engine doesn't control).
+/** SparkSessionExtensions entry point: the SQL surface of the engine's
+  * native expressions. With `spark.sql.extensions=graft.GraftExtensions`,
+  * every name in `graft.functions.natives` resolves in `spark.sql` and
+  * `expr()` strings. The engine's own operators do not need it: they build
+  * the same expressions as typed Columns (`graft.functions`).
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectFunction((
-      FunctionIdentifier("graft_l2norm"),
-      new ExpressionInfo(classOf[L2Norm].getName, "graft_l2norm"),
-      (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) => L2Norm(exprs.head)))
-    ext.injectFunction((
-      FunctionIdentifier("graft_dot"),
-      new ExpressionInfo(classOf[DotProduct].getName, "graft_dot"),
-      (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) => DotProduct(exprs.head, exprs(1))))
-  }
+  override def apply(ext: SparkSessionExtensions): Unit =
+    graft.functions.natives.foreach { case (name, cls, build) =>
+      ext.injectFunction((FunctionIdentifier(name), new ExpressionInfo(cls.getName, name), build))
+    }
 }

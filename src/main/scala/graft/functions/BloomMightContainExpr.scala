@@ -2,7 +2,7 @@ package graft.functions
 
 import java.io.ByteArrayInputStream
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -54,8 +54,14 @@ case class BloomMightContain(left: Expression, right: Expression) extends Binary
     BloomFilter.readFrom(new ByteArrayInputStream(bytes))
   }
 
-  override protected def nullSafeEval(bloomBytes: Any, key: Any): Any =
-    bloom.mightContainLong(key.asInstanceOf[Long])
+  // Reads `bloom` before the key, so a NULL sketch fails here exactly as it
+  // does at codegen time; BinaryExpression.eval would short-circuit the
+  // NULL child to a NULL result and never reach it.
+  override def eval(input: InternalRow): Any = {
+    val bf = bloom
+    val key = right.eval(input)
+    if (key == null) null else bf.mightContainLong(key.asInstanceOf[Long])
+  }
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
     val bf = ctx.addReferenceObj("bloom", bloom, classOf[BloomFilter].getName)
@@ -64,13 +70,4 @@ case class BloomMightContain(left: Expression, right: Expression) extends Binary
 
   override protected def withNewChildrenInternal(newLeft: Expression, newRight: Expression): BloomMightContain =
     copy(left = newLeft, right = newRight)
-}
-
-/** SQL-function registration (same registry path as graft_dot: the
-  * Column↔Expression bridge is private[sql] in Spark 4, so custom
-  * expressions surface via the function registry + `call_function`). */
-object BloomExprs {
-  def register(spark: SparkSession): Unit =
-    Registration.once(spark, "graft_bloom_might_contain")(exprs =>
-      BloomMightContain(exprs.head, exprs(1)))
 }

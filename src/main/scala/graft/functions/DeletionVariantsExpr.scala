@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnsafeArrayData}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -152,7 +151,4 @@ object DeletionVariants {
     UnsafeArrayData.fromPrimitiveArray(
       if (o == out.length) out else java.util.Arrays.copyOf(out, o))
   }
-
-  def register(spark: SparkSession): Unit =
-    Registration.once(spark, "graft_del_variants")(exprs => DeletionVariants(exprs.head, exprs(1)))
 }

@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -69,13 +68,4 @@ case class DotProduct(left: Expression, right: Expression) extends BinaryExpress
 
   override protected def withNewChildrenInternal(newLeft: Expression, newRight: Expression): DotProduct =
     copy(left = newLeft, right = newRight)
-}
-
-/** SQL-function registration for the native vector expressions. (The
-  * Column↔Expression bridge, ExpressionUtils, is private[sql] in Spark 4, so
-  * the public path to a custom expression is the function registry + expr().) */
-object VectorExprs {
-  /** Registers graft_dot for the session. Idempotent. */
-  def register(spark: SparkSession): Unit =
-    Registration.once(spark, "graft_dot")(exprs => DotProduct(exprs.head, exprs(1)))
 }

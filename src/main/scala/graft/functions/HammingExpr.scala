@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -29,9 +28,4 @@ case class HammingDistance(left: Expression, right: Expression) extends BinaryEx
 
   override protected def withNewChildrenInternal(newLeft: Expression, newRight: Expression): HammingDistance =
     copy(left = newLeft, right = newRight)
-}
-
-object HammingExprs {
-  def register(spark: SparkSession): Unit =
-    Registration.once(spark, "graft_hamming")(exprs => HammingDistance(exprs.head, exprs(1)))
 }

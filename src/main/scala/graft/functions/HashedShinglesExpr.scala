@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnsafeArrayData}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -107,7 +106,4 @@ object HashedShingles {
     UnsafeArrayData.fromPrimitiveArray(
       if (out == nGram) grams else java.util.Arrays.copyOf(grams, out))
   }
-
-  def register(spark: SparkSession): Unit =
-    Registration.once(spark, "graft_hashed_shingles")(exprs => HashedShingles(exprs.head, exprs(1)))
 }

@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.Expression
@@ -171,7 +170,4 @@ object IvfTopCells {
     while (r < size) { out(r) = InternalRow(topC(r), topD(r), r + 1); r += 1 }
     new GenericArrayData(out)
   }
-
-  def register(spark: SparkSession): Unit =
-    Registration.once(spark, "graft_ivf_topcells")(exprs => IvfTopCells(exprs))
 }

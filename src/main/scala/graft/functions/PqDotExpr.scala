@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, QuaternaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -79,10 +78,4 @@ case class PqDot(first: Expression, second: Expression,
   override protected def withNewChildrenInternal(newFirst: Expression,
       newSecond: Expression, newThird: Expression, newFourth: Expression): PqDot =
     copy(first = newFirst, second = newSecond, third = newThird, fourth = newFourth)
-}
-
-object PqDotExprs {
-  def register(spark: SparkSession): Unit =
-    Registration.once(spark, "graft_pq_dot")(
-      exprs => PqDot(exprs.head, exprs(1), exprs(2), exprs(3)))
 }

@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
@@ -129,7 +128,4 @@ object SignBucket {
     }
     bucket
   }
-
-  def register(spark: SparkSession): Unit =
-    Registration.once(spark, "graft_sign_bucket")(exprs => SignBucket(exprs.head, exprs(1)))
 }

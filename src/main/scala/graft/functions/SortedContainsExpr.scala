@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -73,10 +72,4 @@ case class SortedContains(left: Expression, right: Expression) extends BinaryExp
 
   override protected def withNewChildrenInternal(newLeft: Expression, newRight: Expression): SortedContains =
     copy(left = newLeft, right = newRight)
-}
-
-object SortedContainsExprs {
-  def register(spark: SparkSession): Unit =
-    Registration.once(spark, "graft_sorted_contains")(
-      exprs => SortedContains(exprs.head, exprs(1)))
 }

@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression, UnsafeArrayData}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -74,7 +73,4 @@ object SortedDistinct {
     UnsafeArrayData.fromPrimitiveArray(
       if (k == vals.length) vals else java.util.Arrays.copyOf(vals, k))
   }
-
-  def register(spark: SparkSession): Unit =
-    Registration.once(spark, "graft_sorted_distinct")(exprs => SortedDistinct(exprs.head))
 }

@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -93,10 +92,4 @@ case class SortedIntersectCount(left: Expression, right: Expression) extends Bin
 
   override protected def withNewChildrenInternal(newLeft: Expression, newRight: Expression): SortedIntersectCount =
     copy(left = newLeft, right = newRight)
-}
-
-object SortedIntersectExprs {
-  def register(spark: SparkSession): Unit =
-    Registration.once(spark, "graft_sorted_intersect_count")(
-      exprs => SortedIntersectCount(exprs.head, exprs(1)))
 }

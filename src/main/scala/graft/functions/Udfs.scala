@@ -24,16 +24,10 @@ object Udfs {
     math.sqrt(s)
   }
 
-  /** Registers graft_l2norm as a SQL function backed by the native
-    * expression. Idempotent; call before using expr("graft_l2norm(...)"). */
-  def register(spark: SparkSession): Unit =
-    Registration.once(spark, "graft_l2norm")(exprs => L2Norm(exprs.head))
-
   /** Top-10 embeddings by L2 norm via the native expression. */
   def udfL2norm(spark: SparkSession, sfDir: String): DataFrame = {
-    register(spark)
     Tables.embeddings(spark, sfDir)
-      .select(col("vec_id"), round(expr("graft_l2norm(embedding)"), 6).as("l2"))
+      .select(col("vec_id"), round(l2norm(col("embedding")), 6).as("l2"))
       .orderBy(desc("l2"), asc("vec_id"))
       .limit(10)
   }

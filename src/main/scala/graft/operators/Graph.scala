@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
+import graft.functions.{sortedDistinct, sortedIntersectCount}
 
 /** Graph analytics over relational-born graphs (SURVEY.md §2.12 extension).
   *
@@ -67,12 +68,11 @@ object Graph {
     * `okWide` > 0 pre-partitions lineitem by ok at that width (ccPairs'
     * measured ×100 shape); 0 leaves the ok-exchange to the planner. */
   private[graft] def orderPairs(spark: SparkSession, sfDir: String, okWide: Int): DataFrame = {
-    graft.functions.SortedDistinct.register(spark)
     val li = Tables.lineitem(spark, sfDir)
       .select(col("l_orderkey").as("ok"), col("l_partkey").as("p"))
     val liW = if (okWide > 0) li.repartition(okWide, col("ok")) else li
     liW.groupBy("ok").agg(collect_list("p").as("ps"))
-      .select(expr("graft_sorted_distinct(ps)").as("ps"))
+      .select(sortedDistinct(col("ps")).as("ps"))
       .select(explode(col("ps")).as("a"), col("ps"))
       .select(col("a"), explode(col("ps")).as("b"))
       .filter(col("a") =!= col("b"))
@@ -189,7 +189,6 @@ object Graph {
     * Everything is exact integer counting except the final coefficient
     * ratio, rounded at 6. */
   def graphTriangles(spark: SparkSession, sfDir: String): DataFrame = {
-    graft.functions.SortedIntersectExprs.register(spark)
     // undirected edge set, one row per {a,b} with a<b per order (round 20:
     // grouped in-row pair stream, see orderPairs); same single edge-sized
     // exchange trick as graphPagerank's build
@@ -243,7 +242,7 @@ object Graph {
     val tri = oriented.select("u", "w")
       .join(adj.hint("shuffle_hash"), Seq("u"))
       .join(probe, Seq("w"))
-      .agg(sum(expr("graft_sorted_intersect_count(nbrs, nw)")).as("n_triangles"))
+      .agg(sum(sortedIntersectCount(col("nbrs"), col("nw"))).as("n_triangles"))
     val stats = und.agg(count(lit(1)).as("n_edges")).crossJoin(
       deg.agg((sum(col("deg") * (col("deg") - 1)) / lit(2)).cast("long").as("n_wedges")))
     // eager 1-row checkpoint so both caches (read 2× and 3× inside this
@@ -448,7 +447,6 @@ object Graph {
     * edge-sized scored rows, rounded BEFORE ranking so the order ties
     * on the engine-identical rounded key. */
   def graphJaccard(spark: SparkSession, sfDir: String): DataFrame = {
-    graft.functions.SortedIntersectExprs.register(spark)
     // symmetric directed edges, one row per (a,b) per order (round 20:
     // grouped in-row pair stream, see orderPairs): the a-partitioned cache
     // serves the adjacency build, the a<b half serves as the pair list
@@ -466,7 +464,7 @@ object Graph {
       .join(adj.hint("shuffle_hash"), Seq("a"))  // co-partitioned, no exchange
       .join(probe, Seq("b"))
       .select(col("a").as("part_a"), col("b").as("part_b"),
-        expr("graft_sorted_intersect_count(nbrs, nb)").cast("long").as("common_nbrs"),
+        sortedIntersectCount(col("nbrs"), col("nb")).cast("long").as("common_nbrs"),
         (size(col("nbrs")) + size(col("nb"))).cast("long").as("deg_sum"))
       .withColumn("jaccard",
         round(col("common_nbrs") / (col("deg_sum") - col("common_nbrs")), 6))

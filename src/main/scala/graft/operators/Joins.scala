@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.Tables
+import graft.functions.{bloomMightContain, delVariants}
 
 /** Join operators (SURVEY.md §2.3).
   *
@@ -294,7 +295,7 @@ object Joins {
   private[operators] def cappedProbe(bytes: Array[Byte],
       probe: org.apache.spark.sql.Column): Option[org.apache.spark.sql.Column] =
     if (bytes.length <= BloomMaxBytes)
-      Some(call_function("graft_bloom_might_contain", lit(bytes), probe))
+      Some(bloomMightContain(lit(bytes), probe))
     else None
 
   /** sizeInBytes for a parquet scan is COMPRESSED file bytes while
@@ -354,7 +355,6 @@ object Joins {
   }
 
   def joinBloomPrefilter(spark: SparkSession, sfDir: String): DataFrame = {
-    graft.functions.BloomExprs.register(spark)
     val urgent = Tables.orders(spark, sfDir)
       .filter(col("o_orderpriority") === "1-URGENT")
       .select("o_orderkey")
@@ -407,7 +407,6 @@ object Joins {
     * proves. Input needs customer-shaped columns (c_nationkey,
     * c_mktsegment, c_custkey, c_name). */
   private[graft] def fuzzyCandidates(c: DataFrame): DataFrame = {
-    graft.functions.DeletionVariants.register(c.sparkSession)
     // The exploded relation multiplies EVERY byte it carries by the ~n²/2
     // variant fan-out, so it stays NARROW (block key, row key, sig hash):
     // at a 100× corpus the name strings were ~40% of the candidate join's
@@ -417,10 +416,10 @@ object Joins {
     // smaller pair set.
     val a = c.select(col("c_nationkey").as("nk"), col("c_mktsegment").as("seg"),
       col("c_custkey").as("k1"),
-      explode(call_function("graft_del_variants", col("c_name"), lit(2))).as("sig"))
+      explode(delVariants(col("c_name"), 2)).as("sig"))
     val b = c.select(col("c_nationkey").as("nk"), col("c_mktsegment").as("seg"),
       col("c_custkey").as("k2"),
-      explode(call_function("graft_del_variants", col("c_name"), lit(2))).as("sig"))
+      explode(delVariants(col("c_name"), 2)).as("sig"))
     // The merge hint is load-bearing, twice over. (1) Catalyst's size
     // estimate does not account for the ~n²/2-way explode, so the planner
     // sees two "customer-sized" inputs and picks a broadcast hash join —

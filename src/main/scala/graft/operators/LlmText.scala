@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.Tables
+import graft.functions.{hamming, hashedShingles, sortedIntersectCount}
 
 /** LLM-training-data text operators (SURVEY.md §2.10 + builder-prompt
   * extensions: language-ID, quality scoring, token counting, fingerprinting,
@@ -79,12 +80,11 @@ object LlmText {
   /** Per-doc 32-slot MinHash signature: (doc_id, sig array<long>). Shared
     * by the pair-listing query and the representative-based keep query. */
   private[graft] def minhashSigs(spark: SparkSession, sfDir: String): DataFrame = {
-    graft.functions.HashedShingles.register(spark)
     val d = docs(spark, sfDir)
     // graft_hashed_shingles emits per-doc DISTINCT shingle hashes in one
     // codegen pass, so no string shingles and no (doc, shingle) distinct
     // shuffle — the old path exploded 260k strings and deduped them
-    val sh = d.select(col("doc_id"), explode(expr("graft_hashed_shingles(norm, 3)")).as("h64"))
+    val sh = d.select(col("doc_id"), explode(hashedShingles(col("norm"), 3)).as("h64"))
       .withColumn("h", col("h64").bitwiseAND(lit(0xFFFFFFFFL)))
     val perms = (0 until 32).map(i =>
       min(pmod(col("h") * lit(permA(i)) + lit(permB(i)), lit(MinhashPrime))).as(s"mh$i"))
@@ -392,18 +392,16 @@ object LlmText {
   /** Unsorted (a, b, jaccard) pairs with exact token-set Jaccard ≥ 0.5,
     * shared by the declared pair query and the clustering consumer. */
   private def jaccardPairsCore(spark: SparkSession, sfDir: String): DataFrame = {
-    graft.functions.SortedIntersectExprs.register(spark)
-    graft.functions.HashedShingles.register(spark)
     // intersect hashed tokens, not strings (graft_hashed_shingles width 1 =
     // sorted distinct token hashes in one codegen loop): 8-byte compares in
     // the per-pair merge scan; |A ∩ B| is unchanged (collisions ~1e-11)
     val d = docs(spark, sfDir)
       .select(col("doc_id"), col("lang"), col("source"),
-        expr("graft_hashed_shingles(norm, 1)").as("toks"))
+        hashedShingles(col("norm"), 1).as("toks"))
       .withColumn("n", size(col("toks")))
       .repartition(col("lang"), col("source"))
     bucketedSelfPairs(d, "toks")
-      .withColumn("inter", expr("graft_sorted_intersect_count(toks_a, toks_b)"))
+      .withColumn("inter", sortedIntersectCount(col("toks_a"), col("toks_b")))
       .withColumn("jaccard", round(col("inter").cast("double") /
         (col("na") + col("nb") - col("inter")), 6))
       .filter(col("jaccard") >= 0.5)
@@ -472,8 +470,6 @@ object LlmText {
     * blocks, threshold 0.3 — the n-gram variant of `llm_jaccard_exact`
     * (and the exact counterpart of what MinHash estimates). */
   def llmNgramJaccard(spark: SparkSession, sfDir: String): DataFrame = {
-    graft.functions.SortedIntersectExprs.register(spark)
-    graft.functions.HashedShingles.register(spark)
     // repartition on the block key MATERIALIZES the per-doc gram arrays
     // before the self-join — without the boundary Catalyst collapses the
     // projection into the join and regenerates shingles once per PAIR
@@ -484,12 +480,12 @@ object LlmText {
         // one codegen pass: split → 3-gram → hash → sort → dedupe (the
         // composed-HOF formulation interpreted its lambdas and re-split per
         // gram — ~2 s per corpus pass at sf0.1; see HashedShingles)
-        expr("graft_hashed_shingles(norm, 3)").as("grams"))
+        hashedShingles(col("norm"), 3).as("grams"))
       .withColumn("n", size(col("grams")))
       .filter(col("n") > 0)
       .repartition(col("lang"), col("source"))
     bucketedSelfPairs(d, "grams")
-      .withColumn("inter", expr("graft_sorted_intersect_count(grams_a, grams_b)"))
+      .withColumn("inter", sortedIntersectCount(col("grams_a"), col("grams_b")))
       .withColumn("jaccard", round(col("inter").cast("double") /
         (col("na") + col("nb") - col("inter")), 6))
       .filter(col("jaccard") >= 0.3)
@@ -742,7 +738,6 @@ object LlmText {
     * fixture near-dup pair is found. Scale shape: candidates only meet inside
     * a 16-bit bucket — never a full cross join. */
   def llmSimhashNeardup(spark: SparkSession, sfDir: String): DataFrame = {
-    graft.functions.HammingExprs.register(spark)
     val sh = simhashCore(spark, sfDir)
     val banded = sh.select(col("doc_id"), col("simhash"),
         posexplode(array((0 until 4).map(b =>
@@ -751,7 +746,7 @@ object LlmText {
     val a = banded.select(col("band"), col("chunk"), col("doc_id").as("a"), col("simhash").as("sa"))
     val b = banded.select(col("band").as("band2"), col("chunk").as("chunk2"), col("doc_id").as("b"), col("simhash").as("sb"))
     a.join(b, col("band") === col("band2") && col("chunk") === col("chunk2") && col("a") < col("b"))
-      .select(col("a"), col("b"), expr("graft_hamming(sa, sb)").as("hamming"))
+      .select(col("a"), col("b"), hamming(col("sa"), col("sb")).as("hamming"))
       .distinct()
       .filter(col("hamming") <= 8)
       .orderBy("a", "b")
@@ -898,7 +893,6 @@ object LlmText {
     * gram strings become xxhash64s (graft_hashed_shingles) with the same
     * plan. */
   def llmContamination(spark: SparkSession, sfDir: String): DataFrame = {
-    graft.functions.HashedShingles.register(spark)
     val d = docs(spark, sfDir)
       .select(col("doc_id"), col("norm"), split(col("norm"), " ").as("toks"))
     // Both sides hash grams with graft_hashed_shingles (chain-mixed token
@@ -912,9 +906,9 @@ object LlmText {
       .select(col("doc_id").as("eval_id"),
         concat_ws(" ", slice(col("toks"), 1, 13)).as("gram"))
       .select(col("eval_id"),
-        element_at(expr("graft_hashed_shingles(gram, 13)"), 1).as("h"))
+        element_at(hashedShingles(col("gram"), 13), 1).as("h"))
     val grams = d.select(col("doc_id"),
-      explode(expr("graft_hashed_shingles(norm, 13)")).as("h"))
+      explode(hashedShingles(col("norm"), 13)).as("h"))
     grams.join(broadcast(ev), "h")
       .groupBy("doc_id")
       .agg(countDistinct("eval_id").as("n_eval_hits"))

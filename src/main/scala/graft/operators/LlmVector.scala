@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.Tables
+import graft.functions.{dot, ivfTopCells, pqDot, signBucket}
 
 /** LRU-bounded memo for session-lifetime serving caches of cached
   * DataFrames, keyed by (session, sfDir).
@@ -62,19 +63,16 @@ private[graft] final class ServingMemo(cap: Int) {
   *    `llm_knn_label` rides it): a coarse quantizer bounds each probe to
   *    nprobe cells, so candidate generation is an equi-join on cell id.
   *    Centroids are dimension-table sized (k × 64 floats) and broadcast.
-  *  - Dot products run as higher-order zip_with/aggregate over double-cast
-  *    arrays: per-row, no shuffle, and both engines sum left-to-right in
-  *    double so values agree bit-for-bit before rounding.
+  *  - Dot products run as the native `graft.functions.dot` expression
+  *    over float arrays: per-row, no shuffle, and both engines sum
+  *    left-to-right in double so values agree bit-for-bit before rounding.
   */
 object LlmVector {
 
-  /** dot(a, b) in double precision — native codegen expression (bit-identical
-    * fold order to a HOF zip_with/aggregate formulation, ~5-10× faster on
-    * the 4M-pair brute-force path; see DotProductExpr). Referenced via the
-    * registered SQL function, so args are column NAMES. */
-  private def dot(a: String, b: String): Column = expr(s"graft_dot($a, $b)")
-
-  private def norm(c: String): Column = expr(s"sqrt(graft_dot($c, $c))")
+  /** L2 norm through the native dot (bit-identical fold order to a HOF
+    * zip_with/aggregate formulation, ~5-10× faster on the 4M-pair
+    * brute-force path; see DotProductExpr). */
+  private def norm(c: Column): Column = sqrt(dot(c, c))
 
   /** The embeddings table with its L2 norm attached — the single entry
     * point for every vector query. CONTRACT: rows with a NULL embedding
@@ -86,10 +84,9 @@ object LlmVector {
     * filter changes nothing today — it pins the declared behavior if the
     * corpus ever does. */
   private def emb(spark: SparkSession, sfDir: String): DataFrame = {
-    graft.functions.VectorExprs.register(spark)
     Tables.embeddings(spark, sfDir)
       .filter(col("embedding").isNotNull)
-      .withColumn("nrm", norm("embedding"))
+      .withColumn("nrm", norm(col("embedding")))
   }
 
   /** Per-candidate top-5 over NARROW (a, b, cos) rows: rank cos desc (ties
@@ -132,7 +129,7 @@ object LlmVector {
     // the whole O(n²) dot stage in one or two tasks.
     val half = a.repartition(nBlocks, col("blk"))
       .join(b.hint("shuffle_hash"), Seq("blk")).filter(col("a") < col("b"))
-      .withColumn("cos", dot("ea", "eb") / (col("na") * col("nb")))
+      .withColumn("cos", dot(col("ea"), col("eb")) / (col("na") * col("nb")))
     topkWithin(half
       .select(explode(array(
         struct(col("a"), col("b"), col("cos")),
@@ -201,7 +198,7 @@ object LlmVector {
     val a = emb(spark, sfDir).select(col("vec_id").as("a"), col("label"), col("embedding").as("ea"), col("nrm").as("na"))
     val b = emb(spark, sfDir).select(col("vec_id").as("b"), col("label").as("label2"), col("embedding").as("eb"), col("nrm").as("nb"))
     a.join(b, col("label") === col("label2") && col("a") < col("b"))
-      .withColumn("cos", dot("ea", "eb") / (col("na") * col("nb")))
+      .withColumn("cos", dot(col("ea"), col("eb")) / (col("na") * col("nb")))
       .filter(col("cos") >= 0.45)
       .select(col("a"), col("b"), round(col("cos"), 6).as("cos"))
       .orderBy("a", "b")
@@ -240,7 +237,7 @@ object LlmVector {
       col("embedding").as("eb"), col("nrm").as("nb"), col("vcell").as("bcell"))
     val dropped = x.join(y,
         col("vcell") === col("bcell") && col("b") < col("vec_id") &&
-          dot("embedding", "eb") / (col("nrm") * col("nb")) >= SemDedupTau,
+          dot(col("embedding"), col("eb")) / (col("nrm") * col("nb")) >= SemDedupTau,
         "left_semi")
       .select("vec_id")
     x.join(dropped, Seq("vec_id"), "left_anti")
@@ -457,7 +454,7 @@ object LlmVector {
     * stage) and its per-row evaluation allocated a 64-element array per
     * hyperplane per vector. */
   private def bucketCol(bBits: Column): Column =
-    call_function("graft_sign_bucket", col("embedding"), bBits)
+    signBucket(col("embedding"), bBits)
 
   /** Column-form twin of the native bucket (the pre-round-20 shipped
     * formulation) — kept PRIVATE TO THE SPEC surface so Round20OpsSpec can
@@ -479,7 +476,6 @@ object LlmVector {
     * `llm_semdedup`. Corpus size → bucket bits is attached as a broadcast
     * scalar (no collect). */
   private def cellAssigned(spark: SparkSession, sfDir: String): DataFrame = {
-    graft.functions.SignBucket.register(spark)
     val nRow = Tables.embeddings(spark, sfDir).agg(count(lit(1)).as("n_total"))
     Fanout.broadcastAll(emb(spark, sfDir), nRow, col("vec_id"), col("n_total"))
       .withColumn("b_bits", bucketBits(col("n_total")))
@@ -499,7 +495,7 @@ object LlmVector {
       .select(col("cell"), array((0 until Dim).map(i =>
         round(col(s"s$i") / col("n"), 4).cast("float")): _*).as("centroid"))
       // norm once per centroid BEFORE the broadcast, not once per (vector, cell) pair
-      .withColumn("centroid_nrm", norm("centroid"))
+      .withColumn("centroid_nrm", norm(col("centroid")))
   }
 
   /** The whole centroid index as ONE row of three parallel cell-ascending
@@ -547,13 +543,12 @@ object LlmVector {
     // and both consumers group/window on vec_id so the cache's
     // partitioning is reused with no further exchange.
     val parts = spark.sessionState.conf.numShufflePartitions
-    graft.functions.IvfTopCells.register(spark)
     Fanout.broadcastAll(
         emb(spark, sfDir).select("vec_id", "embedding", "nrm")
           .repartition(parts, col("vec_id")),
         matrix, col("vec_id"), size(col("cells")))
-      .withColumn("tc", explode(expr(
-        s"graft_ivf_topcells(embedding, nrm, cells, cflat, cnrms, $MaxRank)")))
+      .withColumn("tc", explode(ivfTopCells(col("embedding"), col("nrm"),
+        col("cells"), col("cflat"), col("cnrms"), MaxRank)))
       .select(col("vec_id"), col("tc.cell").as("cell"),
         col("tc.dist2cell").as("dist2cell"), col("tc.cell_rank").as("cell_rank"))
       .cache()
@@ -620,7 +615,7 @@ object LlmVector {
     topkWithin(probesF.repartition(parts, col("cell"), col("frag"))
       .join(indexedF.hint("shuffle_hash"), Seq("cell", "frag"))
       .filter(col("a") =!= col("b"))
-      .withColumn("cos", dot("ea", "eb") / (col("na") * col("nb")))
+      .withColumn("cos", dot(col("ea"), col("eb")) / (col("na") * col("nb")))
       .select("a", "b", "cos"))
   }
 
@@ -650,7 +645,6 @@ object LlmVector {
     * through the spec-pinned scalar mirrors of the batch build's laws. */
   private[graft] def annServeCandidates(
       spark: SparkSession, sfDir: String, queries: DataFrame): DataFrame = {
-    graft.functions.IvfTopCells.register(spark)
     // count(*) over ALL embeddings rows — the batch path's nRow and the
     // DuckDB bparam both count unfiltered, and bucketBitsScalar can land
     // one bit lower under an isNotNull filter when null embeddings exist
@@ -663,15 +657,15 @@ object LlmVector {
       .select(col("vec_id").as("b"), col("cell"),
         col("embedding").as("eb"), col("nrm").as("nb"))
     val matrix = centroidMatrix(centroidRelation(spark, sfDir))
-    Fanout.broadcastAll(queries.withColumn("nq", norm("embedding")),
+    Fanout.broadcastAll(queries.withColumn("nq", norm(col("embedding"))),
         matrix, col("qid"), size(col("cells")))
-      .withColumn("tc", explode(expr(
-        s"graft_ivf_topcells(embedding, nq, cells, cflat, cnrms, $nprobe)")))
+      .withColumn("tc", explode(ivfTopCells(col("embedding"), col("nq"),
+        col("cells"), col("cflat"), col("cnrms"), nprobe)))
       .select(col("qid"), col("tc.cell").as("cell"),
         col("embedding").as("eq"), col("nq"))
       .join(indexed, "cell")
       .filter(col("b") =!= col("qid"))
-      .withColumn("cos", dot("eq", "eb") / (col("nq") * col("nb")))
+      .withColumn("cos", dot(col("eq"), col("eb")) / (col("nq") * col("nb")))
       .select("qid", "b", "cos")
   }
 
@@ -771,7 +765,6 @@ object LlmVector {
     * shortlist refinement's tie behavior is engine-internal — the exact
     * path `llm_ann_ivf` is the oracle-checked row). */
   private def buildAnnPqTopk(spark: SparkSession, sfDir: String): DataFrame = {
-    graft.functions.PqDotExprs.register(spark)
     val ranked = cellScored(spark, sfDir)
     val codes = pqIndex(spark, sfDir)
     val nRow = Tables.embeddings(spark, sfDir).agg(count(lit(1)).as("n_total"))
@@ -798,7 +791,7 @@ object LlmVector {
       .filter(col("a") =!= col("b"))
       .join(broadcast(pqCellDim(spark, sfDir).select("cell", "base", "scale")), "cell")
       .withColumn("acos",
-        expr("graft_pq_dot(ea, codes, base, scale)") / (col("na") * col("rnorm")))
+        pqDot(col("ea"), col("codes"), col("base"), col("scale")) / (col("na") * col("rnorm")))
     // narrow shortlist BEFORE the window (topkWithin's wide-row lesson),
     // then re-attach floats for the exact refinement of 20 rows/query
     val w = Window.partitionBy("a").orderBy(desc("acos"), asc("b"))
@@ -810,7 +803,7 @@ object LlmVector {
     val vb = emb(spark, sfDir)
       .select(col("vec_id").as("b"), col("embedding").as("eb"), col("nrm").as("nb"))
     topkWithin(shortlist.join(va, "a").join(vb, "b")
-      .withColumn("cos", dot("ea", "eb") / (col("na") * col("nb")))
+      .withColumn("cos", dot(col("ea"), col("eb")) / (col("na") * col("nb")))
       .select("a", "b", "cos"))
   }
 
@@ -944,7 +937,7 @@ object LlmVector {
       .select(col("vec_id").as("pid"), col("embedding").as("pe"), col("nrm").as("pn"))
     val cands = e.crossJoin(broadcast(probe))
       .filter(col("vec_id") =!= col("pid"))
-      .withColumn("rel", dot("embedding", "pe") / (col("nrm") * col("pn")))
+      .withColumn("rel", dot(col("embedding"), col("pe")) / (col("nrm") * col("pn")))
       .orderBy(desc("rel"), col("vec_id")).limit(MmrCandidates)
       .select("vec_id", "rel", "embedding", "nrm")
       .collect() // bounded: exactly MmrCandidates rows (the rerank input)

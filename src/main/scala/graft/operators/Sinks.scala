@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
+import graft.functions.sortedContains
 
 /** Sink-side operators (SURVEY.md §2.12): incremental MERGE/upsert and
   * small-files compaction — the two most common ETL maintenance operations
@@ -514,10 +515,9 @@ object Sinks {
     * bitmap application table formats run inside their readers. Files
     * without a DV surface a null array and keep every row (left join). */
   private def dvApply(spark: SparkSession, scan: DataFrame, dvPath: String): DataFrame = {
-    graft.functions.SortedContainsExprs.register(spark)
     val dv = spark.read.parquet(dvPath).select(col("_f").as("_df"), col("del_pos"))
     scan.join(broadcast(dv), col("_f") === col("_df"), "left")
-      .filter(col("del_pos").isNull || !expr("graft_sorted_contains(del_pos, _pos)"))
+      .filter(col("del_pos").isNull || !sortedContains(col("del_pos"), col("_pos")))
       .drop("_df", "del_pos")
   }
 

@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.functions.{bloomMightContain, dot}
 import org.scalacheck.{Gen, Properties, Test}
 import org.scalacheck.Prop.forAllNoShrink
 
@@ -85,14 +86,43 @@ object GraftProps extends Properties("graft") {
   private val genVec = Gen.listOfN(8, Gen.chooseNum(-10.0f, 10.0f))
     .suchThat(v => v.exists(_ != 0.0f))
 
+  // Edge-case generators for NativeCodegenSpec's codegen-vs-interpreted
+  // differential: nulls at every level, NaN and ±0.0, and (when `ragged`)
+  // empty and off-by-one array lengths around the expected dimension.
+  private[graft] def withNulls[T](g: Gen[T]): Gen[T] =
+    Gen.frequency(9 -> g, 1 -> Gen.const(null.asInstanceOf[T]))
+
+  private[graft] val genEdgeFloat: Gen[java.lang.Float] = Gen.frequency(
+    8 -> Gen.chooseNum(-10.0f, 10.0f), 2 -> Gen.oneOf(Float.NaN, 0.0f, -0.0f)).map(Float.box)
+
+  private[graft] val genEdgeDouble: Gen[java.lang.Double] = Gen.frequency(
+    8 -> Gen.chooseNum(-10.0, 10.0), 2 -> Gen.oneOf(Double.NaN, 0.0, -0.0)).map(Double.box)
+
+  private[graft] def genEdgeArray[T](dim: Int, ragged: Boolean, elem: Gen[T]): Gen[Seq[T]] = {
+    val len = if (ragged) Gen.oneOf(dim, dim, dim, 0, dim - 1, dim + 1) else Gen.const(dim)
+    withNulls(len.flatMap(n => Gen.listOfN(n, withNulls(elem))))
+  }
+
+  /** Ascending small longs with null elements first: the sorted-array
+    * expressions' input shape, duplicates included. */
+  private[graft] val genSortedLongs: Gen[Seq[java.lang.Long]] =
+    withNulls(Gen.choose(0, 8).flatMap(n => Gen.listOfN(n, withNulls(Gen.chooseNum(-3L, 12L).map(Long.box)))))
+      .map(xs => if (xs == null) null else xs.sortBy(x => if (x == null) Long.MinValue else x.longValue))
+
+  /** Short space-separated text: empty tokens, multi-byte codepoints, null. */
+  private[graft] val genEdgeText: Gen[String] = withNulls(
+    Gen.choose(0, 5).flatMap(n => Gen.listOfN(n, Gen.oneOf("a", "b", "ab", "", "é", "日本", "zz")))
+      .map(_.mkString(" ")))
+
   property("cosine ∈ [-1,1] and self-similarity = 1") =
     forAllNoShrink(genVec, genVec) { (u, v) =>
       import spark.implicits._
-      graft.functions.VectorExprs.register(spark)
       val df = Seq((u, v)).toDF("u", "v")
       val r = df.select(
-        expr("graft_dot(u, v) / (sqrt(graft_dot(u, u)) * sqrt(graft_dot(v, v)))").as("cos"),
-        expr("graft_dot(u, u) / (sqrt(graft_dot(u, u)) * sqrt(graft_dot(u, u)))").as("self")
+        (dot(col("u"), col("v")) /
+          (sqrt(dot(col("u"), col("u"))) * sqrt(dot(col("v"), col("v"))))).as("cos"),
+        (dot(col("u"), col("u")) /
+          (sqrt(dot(col("u"), col("u"))) * sqrt(dot(col("u"), col("u"))))).as("self")
       ).collect()(0)
       val cos = r.getDouble(0)
       val self = r.getDouble(1)
@@ -151,11 +181,10 @@ object GraftProps extends Properties("graft") {
   property("bloom codegen probe never false-negatives on inserted keys") =
     forAllNoShrink(genKeys) { keys =>
       import spark.implicits._
-      graft.functions.BloomExprs.register(spark)
       val bf = keys.toDF("k").stat.bloomFilter("k", math.max(keys.size.toLong, 1L), 0.01)
       val bytes = { val b = new java.io.ByteArrayOutputStream(); bf.writeTo(b); b.toByteArray }
       keys.toDF("k")
-        .filter(!call_function("graft_bloom_might_contain", lit(bytes), col("k")))
+        .filter(!bloomMightContain(lit(bytes), col("k")))
         .count() == 0L
     }
 

@@ -30,11 +30,10 @@ class HashedShinglesSpec extends SparkSpec {
 
   test("hash count equals the composed-builtin distinct shingle count (widths 1..3)") {
     import spark.implicits._
-    HashedShingles.register(spark)
     val df = docs.toDF("text")
     (1 to 3).foreach { n =>
       val got = df.select(
-        size(expr(s"graft_hashed_shingles(text, $n)")).as("fast"),
+        size(hashedShingles(col("text"), n)).as("fast"),
         size(array_distinct(composedShingles(col("text"), n))).as("slow"))
         .collect()
       got.zip(docs).foreach { case (r, d) =>
@@ -45,16 +44,14 @@ class HashedShinglesSpec extends SparkSpec {
 
   test("pairwise intersection counts match the string-set intersections") {
     import spark.implicits._
-    HashedShingles.register(spark)
-    SortedIntersectExprs.register(spark)
     val df = docs.zipWithIndex.map(_.swap).toDF("id", "text")
-      .withColumn("h", expr("graft_hashed_shingles(text, 3)"))
+      .withColumn("h", hashedShingles(col("text"), 3))
       .withColumn("s", array_sort(array_distinct(composedShingles(col("text"), 3))))
     val a = df.select(col("id").as("ia"), col("h").as("ha"), col("s").as("sa"))
     val b = df.select(col("id").as("ib"), col("h").as("hb"), col("s").as("sb"))
     val bad = a.join(b, col("ia") < col("ib"))
       .select(
-        expr("graft_sorted_intersect_count(ha, hb)").as("fast"),
+        sortedIntersectCount(col("ha"), col("hb")).as("fast"),
         size(array_intersect(col("sa"), col("sb"))).as("slow"))
       .filter(col("fast") =!= col("slow"))
       .count()
@@ -63,9 +60,8 @@ class HashedShinglesSpec extends SparkSpec {
 
   test("sorted-distinct output contract holds") {
     import spark.implicits._
-    HashedShingles.register(spark)
     val arrs = docs.toDF("text")
-      .select(expr("graft_hashed_shingles(text, 3)").as("h"))
+      .select(hashedShingles(col("text"), 3).as("h"))
       .collect().map(_.getSeq[Long](0))
     arrs.foreach { h =>
       assert(h == h.sorted, "must be sorted")

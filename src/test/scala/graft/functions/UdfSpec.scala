@@ -7,10 +7,9 @@ import org.apache.spark.sql.functions._
 class UdfSpec extends SparkSpec {
 
   test("L2Norm expression is bit-equal to the UDF twin on every row") {
-    Udfs.register(spark)
     val both = Tables.embeddings(spark, sf001)
       .select(col("vec_id"),
-        expr("graft_l2norm(embedding)").as("native"),
+        l2norm(col("embedding")).as("native"),
         Udfs.l2normUdf(col("embedding")).as("viaUdf"))
       .collect()
     assert(both.nonEmpty)
@@ -21,9 +20,8 @@ class UdfSpec extends SparkSpec {
   }
 
   test("L2Norm participates in whole-stage codegen") {
-    Udfs.register(spark)
     val plan = Tables.embeddings(spark, sf001)
-      .select(expr("graft_l2norm(embedding)"))
+      .select(l2norm(col("embedding")))
       .queryExecution.executedPlan.toString
     // WholeStageCodegen stages render as "*(n)" in plan tree strings
     assert(plan.contains("*("), s"plan was:\n$plan")

@@ -2,6 +2,7 @@ package graft.operators
 
 import graft.SparkSpec
 import org.apache.spark.sql.functions._
+import graft.functions.dot
 
 /** Hand-computed in-memory fixtures (FIXTURES.md §B): join-type edge cases,
   * exact cosine values, null-handling aggregation semantics. Expected values
@@ -32,7 +33,6 @@ class FixtureSpec extends SparkSpec {
   }
 
   test("cosine is exactly 1 / 0 / -1 on collinear and orthogonal vectors") {
-    graft.functions.VectorExprs.register(spark)
     val vecs = Seq(
       (1L, Seq(1.0f, 0.0f, 0.0f)),
       (2L, Seq(2.0f, 0.0f, 0.0f)),  // collinear with 1
@@ -43,8 +43,8 @@ class FixtureSpec extends SparkSpec {
     val b = vecs.select(col("id").as("ib"), col("v").as("vb"))
     val cos = a.join(b, col("ia") < col("ib"))
       .select(col("ia"), col("ib"),
-        (expr("graft_dot(va, vb)") /
-          (expr("sqrt(graft_dot(va, va))") * expr("sqrt(graft_dot(vb, vb))"))).as("cos"))
+        (dot(col("va"), col("vb")) /
+          (sqrt(dot(col("va"), col("va"))) * sqrt(dot(col("vb"), col("vb"))))).as("cos"))
       .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap
     assert(cos((1L, 2L)) == 1.0)
     assert(cos((1L, 3L)) == 0.0)

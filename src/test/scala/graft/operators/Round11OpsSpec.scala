@@ -190,17 +190,17 @@ class Round11OpsSpec extends SparkSpec {
     // near-dups (else the larger id would have been dropped) — checked
     // exactly via the same parity dot the query uses
     import org.apache.spark.sql.functions._
+    import graft.functions.dot
     val k = spark.createDataFrame(kept.toSeq).toDF("vec_id", "cell")
     val e = graft.Tables.embeddings(spark, sf01).select("vec_id", "embedding")
-    graft.functions.VectorExprs.register(spark)
     val kx = k.join(e, "vec_id")
       .select(col("vec_id"), col("cell"), col("embedding"),
-        expr("sqrt(graft_dot(embedding, embedding))").as("nrm"))
+        sqrt(dot(col("embedding"), col("embedding"))).as("nrm"))
     val ky = kx.select(col("vec_id").as("b"), col("cell").as("bcell"),
       col("embedding").as("eb"), col("nrm").as("nb"))
     val offenders = kx.join(ky,
         col("cell") === col("bcell") && col("b") < col("vec_id") &&
-          expr("graft_dot(embedding, eb)") / (col("nrm") * col("nb")) >= 0.45)
+          dot(col("embedding"), col("eb")) / (col("nrm") * col("nb")) >= 0.45)
       .count()
     assert(offenders == 0, s"$offenders kept near-dup pairs survived within cells")
   }

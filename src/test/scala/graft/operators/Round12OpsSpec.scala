@@ -2,6 +2,7 @@ package graft.operators
 
 import graft.SparkSpec
 import org.apache.spark.sql.functions._
+import graft.functions.{dot, sortedContains}
 
 /** Invariant checks for the round-12 additions that no oracle can see:
   * the binary-search membership kernel behind deletion-vector application
@@ -9,22 +10,22 @@ import org.apache.spark.sql.functions._
 class Round12OpsSpec extends SparkSpec {
 
   test("sorted-contains binary search agrees with array_contains (codegen + interpreted)") {
-    graft.functions.SortedContainsExprs.register(spark)
     // codegen path over a real plan: every position in and around a sorted
     // array, including duplicates and both ends
     val rows = spark.range(-2, 13)
-      .selectExpr(
-        "id AS v",
-        "graft_sorted_contains(array(0L, 1L, 3L, 3L, 7L, 10L), id) AS bs",
-        "array_contains(array(0L, 1L, 3L, 3L, 7L, 10L), id) AS lin")
+      .select(
+        col("id").as("v"),
+        sortedContains(expr("array(0L, 1L, 3L, 3L, 7L, 10L)"), col("id")).as("bs"),
+        expr("array_contains(array(0L, 1L, 3L, 3L, 7L, 10L), id)").as("lin"))
       .collect()
     rows.foreach(r => assert(r.getBoolean(1) === r.getBoolean(2),
       s"mismatch at v=${r.getLong(0)}"))
-    // empty array finds nothing; null array / null needle stay null
-    val edge = spark.range(1).selectExpr(
-      "graft_sorted_contains(CAST(array() AS ARRAY<LONG>), 1L) AS e",
-      "graft_sorted_contains(CAST(NULL AS ARRAY<LONG>), 1L) AS na",
-      "graft_sorted_contains(array(1L), CAST(NULL AS LONG)) AS nv").head()
+    // empty array finds nothing; null array / null needle stay null (literal
+    // arguments, so this part is constant-folded, not code generated)
+    val edge = spark.range(1).select(
+      sortedContains(expr("CAST(array() AS ARRAY<LONG>)"), expr("1L")).as("e"),
+      sortedContains(expr("CAST(NULL AS ARRAY<LONG>)"), expr("1L")).as("na"),
+      sortedContains(expr("array(1L)"), expr("CAST(NULL AS LONG)")).as("nv")).head()
     assert(!edge.getBoolean(0))
     assert(edge.isNullAt(1) && edge.isNullAt(2))
     // interpreted path (direct eval, no codegen)
@@ -81,15 +82,13 @@ class Round12OpsSpec extends SparkSpec {
   }
 
   test("MMR rerank: greedy per-step optimality and a real diversity win") {
-    import graft.functions.VectorExprs
-    VectorExprs.register(spark)
     val out = LlmVector.llmMmrRerank(spark, sf001).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getDouble(3)))
     assert(out.length == 8 && out.map(_._1).toSeq == (1L to 8L))
     // independent re-derivation of probe + candidates (same definition)
     val e = graft.Tables.embeddings(spark, sf001)
       .filter(col("embedding").isNotNull)
-      .selectExpr("vec_id", "embedding", "sqrt(graft_dot(embedding, embedding)) AS nrm")
+      .select(col("vec_id"), col("embedding"), sqrt(dot(col("embedding"), col("embedding"))).as("nrm"))
       .collect().map(r => (r.getLong(0), r.getSeq[Float](1).map(_.toDouble).toArray, r.getDouble(2)))
       .sortBy(_._1)
     val probe = e.head

@@ -21,10 +21,10 @@ import graft.SparkSpec
 class Round20OpsSpec extends SparkSpec {
 
   import org.apache.spark.sql.functions._
+import graft.functions.{signBucket, sortedDistinct}
 
   test("graft_sign_bucket is bit-equal to the legacy Column bucket, null edges included") {
     import spark.implicits._
-    graft.functions.SignBucket.register(spark)
     val rng = new scala.util.Random(7)
     def vec(): Seq[java.lang.Float] =
       Seq.fill(64)(java.lang.Float.valueOf((rng.nextFloat() - 0.5f) * 10f))
@@ -43,7 +43,7 @@ class Round20OpsSpec extends SparkSpec {
       .withColumn("embedding", col("embedding").cast("array<float>"))
     for (b <- Seq(0, 1, 5, 8, 16)) {
       val got = df.select(col("vec_id"),
-          call_function("graft_sign_bucket", col("embedding"), lit(b)).as("native"),
+          signBucket(col("embedding"), lit(b)).as("native"),
           LlmVector.bucketColLegacy(col("embedding"), lit(b)).as("legacy"))
         .collect()
       got.foreach { r =>
@@ -85,7 +85,6 @@ class Round20OpsSpec extends SparkSpec {
 
   test("grouped in-row pair stream equals the self-join pair set, duplicates and nulls included") {
     import spark.implicits._
-    graft.functions.SortedDistinct.register(spark)
     val rng = new scala.util.Random(11)
     // orders of 1..7 lines over a small part pool so within-order duplicate
     // parts occur; two orders carry null parts (which equi-joins drop)
@@ -99,7 +98,7 @@ class Round20OpsSpec extends SparkSpec {
       .select("ok", "a", "b").distinct()
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
     val grouped = li.groupBy("ok").agg(collect_list("p").as("ps"))
-      .select(col("ok"), expr("graft_sorted_distinct(ps)").as("ps"))
+      .select(col("ok"), sortedDistinct(col("ps")).as("ps"))
       .select(col("ok"), explode(col("ps")).as("a"), col("ps"))
       .select(col("ok"), col("a"), explode(col("ps")).as("b"))
       .filter(col("a") =!= col("b"))

@@ -3,6 +3,7 @@ package graft.operators
 import graft.{SparkSpec, Tables}
 import org.apache.spark.sql.execution.ExplainMode
 import org.apache.spark.sql.functions._
+import graft.functions.bloomMightContain
 
 /** Invariant checks for the second round-6 operator batch: bloom-prefilter
   * correctness + selectivity, split leak-freedom, resample monotonicity,
@@ -12,7 +13,6 @@ import org.apache.spark.sql.functions._
 class Round6bOpsSpec extends SparkSpec {
 
   test("bloom prefilter keeps exactly the semi-join rows and actually prunes") {
-    graft.functions.BloomExprs.register(spark)
     val urgent = Tables.orders(spark, sf001)
       .filter(col("o_orderpriority") === "1-URGENT").select("o_orderkey")
     val bf = urgent.stat.bloomFilter("o_orderkey", math.max(urgent.count(), 1L), 0.01)
@@ -20,7 +20,7 @@ class Round6bOpsSpec extends SparkSpec {
     val li = Tables.lineitem(spark, sf001)
     val nAll = li.count()
     val prefiltered = li.filter(
-      call_function("graft_bloom_might_contain", lit(bytes), col("l_orderkey"))).count()
+      bloomMightContain(lit(bytes), col("l_orderkey"))).count()
     val exact = li.join(urgent, col("l_orderkey") === col("o_orderkey"), "left_semi").count()
     // no false negatives: the prefilter may only ever KEEP extra rows
     assert(prefiltered >= exact, "bloom dropped true matches (false negative)")
@@ -32,7 +32,6 @@ class Round6bOpsSpec extends SparkSpec {
   }
 
   test("bloom prefilter caps the sketch size and falls through to the plain semi-join") {
-    graft.functions.BloomExprs.register(spark)
     // under the cap → a probe predicate is produced
     val urgent = Tables.orders(spark, sf001)
       .filter(col("o_orderpriority") === "1-URGENT").select("o_orderkey")
@@ -52,7 +51,6 @@ class Round6bOpsSpec extends SparkSpec {
   }
 
   test("bloom prefilter build is a single job, and an oversized ESTIMATE runs none") {
-    graft.functions.BloomExprs.register(spark)
     val urgent = Tables.orders(spark, sf001)
       .filter(col("o_orderpriority") === "1-URGENT").select("o_orderkey")
     // the estimate is an over-approximation (filter selectivity unknown to
@@ -112,11 +110,9 @@ class Round6bOpsSpec extends SparkSpec {
   }
 
   test("bloom probe rejects a NULL sketch with a clear error, not an NPE") {
-    graft.functions.BloomExprs.register(spark)
     val err = intercept[Exception] {
       Tables.orders(spark, sf001)
-        .filter(call_function("graft_bloom_might_contain",
-          lit(null).cast("binary"), col("o_orderkey")))
+        .filter(bloomMightContain(lit(null).cast("binary"), col("o_orderkey")))
         .count()
     }
     def messages(t: Throwable): List[String] =
@@ -126,7 +122,6 @@ class Round6bOpsSpec extends SparkSpec {
   }
 
   test("bloom probe expression codegens inside the scan stage (no UDF barrier)") {
-    graft.functions.BloomExprs.register(spark)
     val plan = Joins.joinBloomPrefilter(spark, sf001).queryExecution
       .explainString(ExplainMode.fromString("formatted"))
     assert(plan.contains("graft_bloom_might_contain"), plan)
