@@ -265,21 +265,6 @@ object Graph {
   // (the LlmText.connectedComponents contract).
   private val CcMaxRounds = 64
 
-  /** Connected components over the FREQUENT co-purchase graph (two parts
-    * adjacent when they co-occur in ≥ 2 distinct orders) — the segmentation
-    * primitive beside PageRank's centrality and the dedup family's
-    * doc-clustering CC (LlmText's min-label propagation, which this makes
-    * first-class on a relational-born graph). The support-≥2 threshold is
-    * the point: the support-1 graph is one giant near-clique (every order
-    * fully connects its parts), while requiring a REPEATED pairing leaves
-    * a sparse graph whose component-size histogram actually says
-    * something. Shape: the thresholded edge build is the same
-    * co-partitioned self-join with a groupBy-count instead of a dedup
-    * (pair fanout still bounded by order size); propagation runs to the
-    * FIXPOINT (ccLabels — per round the pagerank adjacency shape, sum-
-    * monotonicity convergence test, loud cap), so the output is true
-    * connected components, oracle-matched against DuckDB's recursive
-    * transitive closure. Output: top-20 components by size. */
   /** The support-≥2 symmetric pair list — factored out so the spec can
     * assert the defining CC property (every edge's endpoints share a
     * label) against exactly the operator's edges. */
@@ -380,10 +365,9 @@ object Graph {
     var (lab, prevSum) = ckptWithSum(adjF.select(col("a").as("node"), col("a").as("lbl")))
     var converged = prevSum == null // empty graph is trivially converged
     var iter = 0
-    var hops = 0
     // One propagation HOP: join labels to the cached adjacency (both sides
     // hash-partitioned on a — no exchange), explode, min per node (the one
-    // exchange). Factored so a round can chain hops before checkpointing.
+    // exchange).
     def hop(l: DataFrame): DataFrame =
       adjF.join(l.select(col("node").as("a"), col("lbl")), "a")
         .select(explode(col("nbrs")).as("node"), col("lbl"))
@@ -407,7 +391,6 @@ object Graph {
       // bar was "≥10% reproduces cold"; it does not, so the kernel keeps
       // the simpler exact-old schedule (one hop, one checkpoint, one
       // convergence aggregate per round).
-      val hopsThisRound = 1
       val (next, s) = ckptWithSum(hop(lab))
       // next is materialized (eager checkpoint): the superseded round's
       // blocks can go now instead of at the next driver GC (same r19-ADVICE
@@ -417,15 +400,29 @@ object Graph {
       converged = s == prevSum
       prevSum = s
       iter += 1
-      hops += hopsThisRound
     }
     require(converged,
-      s"ccPropagate did not converge within $CcMaxRounds rounds ($hops hops) — component diameter bug?")
-    System.err.println(s"[ccPropagate] converged in $iter rounds / $hops hops")
+      s"ccPropagate did not converge within $CcMaxRounds rounds — component diameter bug?")
+    System.err.println(s"[ccPropagate] converged in $iter rounds")
     adjF.unpersist()
     lab
   }
 
+  /** Connected components over the FREQUENT co-purchase graph (two parts
+    * adjacent when they co-occur in ≥ 2 distinct orders) — the segmentation
+    * primitive beside PageRank's centrality and the dedup family's
+    * doc-clustering CC (LlmText's min-label propagation, which this makes
+    * first-class on a relational-born graph). The support-≥2 threshold is
+    * the point: the support-1 graph is one giant near-clique (every order
+    * fully connects its parts), while requiring a REPEATED pairing leaves
+    * a sparse graph whose component-size histogram actually says
+    * something. Shape: the thresholded edge build is the same
+    * co-partitioned self-join with a groupBy-count instead of a dedup
+    * (pair fanout still bounded by order size); propagation runs to the
+    * FIXPOINT (ccLabels — per round the pagerank adjacency shape, sum-
+    * monotonicity convergence test, loud cap), so the output is true
+    * connected components, oracle-matched against DuckDB's recursive
+    * transitive closure. Output: top-20 components by size. */
   def graphCc(spark: SparkSession, sfDir: String): DataFrame =
     ccLabels(spark, sfDir)
       .groupBy(col("lbl").as("component"))

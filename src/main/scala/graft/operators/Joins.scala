@@ -369,37 +369,6 @@ object Joins {
       .orderBy("l_returnflag")
   }
 
-  /** Fuzzy string-match self-join — entity-resolution's workhorse: customer
-    * name pairs within edit distance 2 in the same (nation, mktsegment)
-    * block, as a per-nation pair census.
-    *
-    * Candidate generation is a SIGNATURE JOIN, not block²: each side emits
-    * the ≤2-deletion variant hashes of its name (`graft_del_variants`, a
-    * codegen'd native expression — symmetric-delete/"FastSS" signatures),
-    * and candidates are pairs that share (nation, segment, signature). By
-    * the deletion-variant pigeonhole (see DeletionVariantsExpr.scala), every
-    * pair within ed ≤ 2 shares a variant, so the candidate set is a provable
-    * superset of the answer; the exact banded-levenshtein confirm then makes
-    * the composition byte-identical to the naive all-pairs-in-block form the
-    * DuckDB oracle replays. `k1 < k2` deduplicates the symmetric pair, and
-    * the pair-level `distinct` collapses multi-signature collisions BEFORE
-    * the distance evaluation so each candidate is confirmed once.
-    *
-    * Scale shape: the old form's cost was Σ block² with a FIXED number of
-    * blocks (≤125 nation×segment cells), so work grew quadratically in the
-    * corpus — 16 s at sf0.1 under nation-only blocking, ~18G distance
-    * evaluations at 100×. The signature join's volume is (rows × ~n²/2
-    * variants) on each side — LINEAR in the corpus for fixed key width —
-    * and its output is bounded by true near-duplicate density (plus the
-    * bounded ed ≤ 4 / hash-collision slack), not by block population.
-    * Signatures drawn from the full name stay selective despite the shared
-    * 9-char "Customer#" prefix because every variant retains the digit
-    * suffix that actually distinguishes rows — the reason a PREFIX-segment
-    * PassJoin scheme was vacuous here. The (nk, seg, sig) equi key keeps
-    * the candidate step a shuffled sort-merge join (spill-safe at any
-    * corpus size — see the hint note in fuzzyCandidates); heavy signature
-    * classes (e.g. tail-deletion stems shared by ~100 consecutive keys) are
-    * further split ~125-ways by the block columns riding in the join key. */
   /** The signature-join candidate stage, separated so the spec can assert
     * its growth law directly: candidate volume on a corpus with dense
     * distinct names must grow ~linearly with rows (the de-quadratization
@@ -459,6 +428,37 @@ object Joins {
       .select("nk", "k1", "k2", "name1", "name2")
   }
 
+  /** Fuzzy string-match self-join — entity-resolution's workhorse: customer
+    * name pairs within edit distance 2 in the same (nation, mktsegment)
+    * block, as a per-nation pair census.
+    *
+    * Candidate generation is a SIGNATURE JOIN, not block²: each side emits
+    * the ≤2-deletion variant hashes of its name (`graft_del_variants`, a
+    * codegen'd native expression — symmetric-delete/"FastSS" signatures),
+    * and candidates are pairs that share (nation, segment, signature). By
+    * the deletion-variant pigeonhole (see DeletionVariantsExpr.scala), every
+    * pair within ed ≤ 2 shares a variant, so the candidate set is a provable
+    * superset of the answer; the exact banded-levenshtein confirm then makes
+    * the composition byte-identical to the naive all-pairs-in-block form the
+    * DuckDB oracle replays. `k1 < k2` deduplicates the symmetric pair, and
+    * the pair-level `distinct` collapses multi-signature collisions BEFORE
+    * the distance evaluation so each candidate is confirmed once.
+    *
+    * Scale shape: the old form's cost was Σ block² with a FIXED number of
+    * blocks (≤125 nation×segment cells), so work grew quadratically in the
+    * corpus — 16 s at sf0.1 under nation-only blocking, ~18G distance
+    * evaluations at 100×. The signature join's volume is (rows × ~n²/2
+    * variants) on each side — LINEAR in the corpus for fixed key width —
+    * and its output is bounded by true near-duplicate density (plus the
+    * bounded ed ≤ 4 / hash-collision slack), not by block population.
+    * Signatures drawn from the full name stay selective despite the shared
+    * 9-char "Customer#" prefix because every variant retains the digit
+    * suffix that actually distinguishes rows — the reason a PREFIX-segment
+    * PassJoin scheme was vacuous here. The (nk, seg, sig) equi key keeps
+    * the candidate step a shuffled sort-merge join (spill-safe at any
+    * corpus size — see the hint note in fuzzyCandidates); heavy signature
+    * classes (e.g. tail-deletion stems shared by ~100 consecutive keys) are
+    * further split ~125-ways by the block columns riding in the join key. */
   def joinFuzzyMatch(spark: SparkSession, sfDir: String): DataFrame = {
     // threshold form = banded DP (O(k·n) per pair, early exit; returns -1
     // beyond the bound). Semantics identical to `levenshtein(a,b) <= 2`,

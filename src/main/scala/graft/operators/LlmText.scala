@@ -38,25 +38,6 @@ object LlmText {
       .orderBy("lang")
   }
 
-  /** MinHash near-dup candidates: 3-token shingles → 32 xxhash64 permutations
-    * → min per (doc, perm) → 8 bands × 4 rows → bucket join → pairs with
-    * estimated Jaccard ≥ 0.8 (fraction of equal minhash slots). Rows-only:
-    * hash permutations are engine-specific (no oracle); the exact companion
-    * `llm_jaccard_exact` is the oracle-checked row, and MinHashSpec asserts
-    * estimate quality against exact Jaccard.
-    *
-    * Byte-discipline note (the round-7 fuzzy-join lesson applied, then
-    * deliberately NOT taken here): the band join carries the 32-long
-    * signature through an 8-way fan-out, which looks like the same
-    * carry-wide-through-fan-out smell — but unlike the fuzzy join's name
-    * strings (dead weight re-attachable from the dimension with a cheap
-    * key join), the signature IS the product of this query's dominant
-    * computation. Narrowing the band rows would mean re-executing the
-    * shingle→permute→groupBy pipeline on two more branches (or
-    * materializing it), trading one 8-way byte fan-out for 3× the heavy
-    * compute — the wrong side of the trade at every scale. A production
-    * deployment breaks the tie by WRITING the signature table once
-    * (sink-side materialization), which is what the narrow form assumes. */
   /** Fixed odd multipliers/offsets for the 32 universal-hash permutations
     * h_i(x) = (a_i * x + b_i) mod p over the 32-bit-masked shingle hash —
     * hash each shingle ONCE, then permute arithmetically (32 string
@@ -103,6 +84,25 @@ object LlmText {
     aggregate(zip_with(sigA, sigB, (x, y) => when(x === y, 1).otherwise(0)),
       lit(0), (acc, x) => acc + x).cast("double") / 32.0
 
+  /** MinHash near-dup candidates: 3-token shingles → 32 xxhash64 permutations
+    * → min per (doc, perm) → 8 bands × 4 rows → bucket join → pairs with
+    * estimated Jaccard ≥ 0.8 (fraction of equal minhash slots). Rows-only:
+    * hash permutations are engine-specific (no oracle); the exact companion
+    * `llm_jaccard_exact` is the oracle-checked row, and MinHashSpec asserts
+    * estimate quality against exact Jaccard.
+    *
+    * Byte-discipline note (the round-7 fuzzy-join lesson applied, then
+    * deliberately NOT taken here): the band join carries the 32-long
+    * signature through an 8-way fan-out, which looks like the same
+    * carry-wide-through-fan-out smell — but unlike the fuzzy join's name
+    * strings (dead weight re-attachable from the dimension with a cheap
+    * key join), the signature IS the product of this query's dominant
+    * computation. Narrowing the band rows would mean re-executing the
+    * shingle→permute→groupBy pipeline on two more branches (or
+    * materializing it), trading one 8-way byte fan-out for 3× the heavy
+    * compute — the wrong side of the trade at every scale. A production
+    * deployment breaks the tie by WRITING the signature table once
+    * (sink-side materialization), which is what the narrow form assumes. */
   def llmDedupMinhash(spark: SparkSession, sfDir: String): DataFrame = {
     val sigs = minhashSigs(spark, sfDir)
     val bands = sigs.select(col("doc_id"), col("sig"), posexplode(bandHashes(col("sig"))))
@@ -116,31 +116,6 @@ object LlmText {
       .orderBy("a", "b")
   }
 
-  /** Representative-based MinHash DEDUP — the shape a 100-TB pipeline
-    * actually runs, and the designed scale path past `llm_dedup_minhash`'s
-    * pair listing. Round 9's sweep measured the pair listing going
-    * super-linear on family-structured data (100-copy near-dup families →
-    * ~N²/2 pairs PER FAMILY inside every shared band bucket: 588 s at the
-    * 100× point, ratio ~170) — that is the OUTPUT's intrinsic shape, since
-    * listing all intra-family pairs is quadratic in family size no matter
-    * how the candidates are generated. Deduplication does not need the
-    * pairs: per (band, bucket) it links every member to the bucket's MIN
-    * doc_id — a spanning STAR, O(bucket) edges instead of O(bucket²) —
-    * confirms each link at estimated Jaccard ≥ 0.8 against that
-    * representative, and runs min-label connected components over the
-    * confirmed links (same propagation loop as `llm_dedup_cluster`). Star
-    * edges reach the same components as all-pairs edges for
-    * mutually-similar families (every member confirms against a shared
-    * representative, and CC merges the per-band stars); a member similar
-    * to some bucket-mate but NOT to its bucket's min can detach where the
-    * pair-graph would chain — the declared trade for linear work, stated
-    * here rather than discovered later and pinned by LlmSpec's chain
-    * fixture.
-    * Output: one row per document, its surviving representative, and a
-    * dup flag — deterministic given the fixed permutation constants.
-    * Bands stay NARROW through the bucket join (signatures re-attach by
-    * doc_id only for the confirmed star edges — O(docs·8) rows, unlike the
-    * pair query where the signature IS the dominant product). */
   /** The confirmed star-edge stage of `llm_minhash_dedup_keep`, separated
     * so the spec can assert its growth law directly: an n-member
     * mutually-similar family yields O(n) edges — hard bound 8n, since each
@@ -170,6 +145,31 @@ object LlmText {
       .select(col("rep").as("a"), col("doc_id").as("b"))
   }
 
+  /** Representative-based MinHash DEDUP — the shape a 100-TB pipeline
+    * actually runs, and the designed scale path past `llm_dedup_minhash`'s
+    * pair listing. Round 9's sweep measured the pair listing going
+    * super-linear on family-structured data (100-copy near-dup families →
+    * ~N²/2 pairs PER FAMILY inside every shared band bucket: 588 s at the
+    * 100× point, ratio ~170) — that is the OUTPUT's intrinsic shape, since
+    * listing all intra-family pairs is quadratic in family size no matter
+    * how the candidates are generated. Deduplication does not need the
+    * pairs: per (band, bucket) it links every member to the bucket's MIN
+    * doc_id — a spanning STAR, O(bucket) edges instead of O(bucket²) —
+    * confirms each link at estimated Jaccard ≥ 0.8 against that
+    * representative, and runs min-label connected components over the
+    * confirmed links (same propagation loop as `llm_dedup_cluster`). Star
+    * edges reach the same components as all-pairs edges for
+    * mutually-similar families (every member confirms against a shared
+    * representative, and CC merges the per-band stars); a member similar
+    * to some bucket-mate but NOT to its bucket's min can detach where the
+    * pair-graph would chain — the declared trade for linear work, stated
+    * here rather than discovered later and pinned by LlmSpec's chain
+    * fixture.
+    * Output: one row per document, its surviving representative, and a
+    * dup flag — deterministic given the fixed permutation constants.
+    * Bands stay NARROW through the bucket join (signatures re-attach by
+    * doc_id only for the confirmed star edges — O(docs·8) rows, unlike the
+    * pair query where the signature IS the dominant product). */
   def llmMinhashDedupKeep(spark: SparkSession, sfDir: String): DataFrame = {
     val labels = connectedComponents(minhashStarEdges(spark, sfDir))
     docs(spark, sfDir).select("doc_id")
@@ -208,8 +208,6 @@ object LlmText {
     bpeFromWordFreqs(spark, words, k)
   }
 
-  /** The trainer kernel over an arbitrary (word, freq) table — separated so
-    * the spec can feed a hand-computed fixture vocabulary. */
   /** Apply ONE merge rule (l,r)→"lr" exhaustively left-to-right over a
     * symbol sequence — THE shared kernel of BPE training and encoding
     * (llm_bpe_merges applies it per round; llm_bpe_encode folds the learned
@@ -237,6 +235,8 @@ object LlmText {
       case (syms, (l, r)) => applyMerge(syms, l, r)
     }
 
+  /** The trainer kernel over an arbitrary (word, freq) table — separated so
+    * the spec can feed a hand-computed fixture vocabulary. */
   private[graft] def bpeFromWordFreqs(spark: SparkSession,
       words: org.apache.spark.sql.Dataset[(String, Long)], k: Int): DataFrame = {
     import spark.implicits._
@@ -389,22 +389,38 @@ object LlmText {
       col("pbkt") === col("bkt2") && col("a") < col("b"))
   }
 
-  /** Unsorted (a, b, jaccard) pairs with exact token-set Jaccard ≥ 0.5,
-    * shared by the declared pair query and the clustering consumer. */
-  private def jaccardPairsCore(spark: SparkSession, sfDir: String): DataFrame = {
-    // intersect hashed tokens, not strings (graft_hashed_shingles width 1 =
-    // sorted distinct token hashes in one codegen loop): 8-byte compares in
-    // the per-pair merge scan; |A ∩ B| is unchanged (collisions ~1e-11)
+  /** Unsorted (a, b, jaccard) pairs whose exact set Jaccard over hashed
+    * word-`width`-shingles is ≥ `threshold` — the one pair kernel of
+    * llm_jaccard_exact and its clustering consumer (width 1, 0.5) and
+    * llm_ngram_jaccard (width 3, 0.3). Sets intersect as hashed shingles,
+    * not strings (graft_hashed_shingles = sorted distinct shingle hashes
+    * in one codegen pass: split → n-gram → hash → sort → dedupe; the
+    * composed-HOF formulation interpreted its lambdas and re-split per
+    * gram — ~2 s per corpus pass at sf0.1): 8-byte compares in the
+    * per-pair merge scan; |A ∩ B| is unchanged (collisions ~1e-11). Empty
+    * sets are dropped before pairing — a doc shorter than `width` words has
+    * no shingles, and the pair of two such docs is 0/0, which throws under
+    * ANSI; a split always yields at least one (possibly empty) token, so
+    * at width 1 the filter drops nothing. */
+  private def jaccardPairs(spark: SparkSession, sfDir: String, width: Int,
+      threshold: Double): DataFrame = {
+    val arr = if (width == 1) "toks" else "grams"
+    // repartition on the block key MATERIALIZES the per-doc arrays before
+    // the self-join — without the boundary Catalyst collapses the
+    // projection into the join and regenerates shingles once per PAIR
+    // (measured 13s vs ~3s at sf0.1); it is also the co-partitioning the
+    // block join wants at scale.
     val d = docs(spark, sfDir)
       .select(col("doc_id"), col("lang"), col("source"),
-        hashedShingles(col("norm"), 1).as("toks"))
-      .withColumn("n", size(col("toks")))
+        hashedShingles(col("norm"), width).as(arr))
+      .withColumn("n", size(col(arr)))
+      .filter(col("n") > 0)
       .repartition(col("lang"), col("source"))
-    bucketedSelfPairs(d, "toks")
-      .withColumn("inter", sortedIntersectCount(col("toks_a"), col("toks_b")))
+    bucketedSelfPairs(d, arr)
+      .withColumn("inter", sortedIntersectCount(col(s"${arr}_a"), col(s"${arr}_b")))
       .withColumn("jaccard", round(col("inter").cast("double") /
         (col("na") + col("nb") - col("inter")), 6))
-      .filter(col("jaccard") >= 0.5)
+      .filter(col("jaccard") >= threshold)
       .select("a", "b", "jaccard")
   }
 
@@ -414,19 +430,8 @@ object LlmText {
     * and intersect token ARRAYS per pair — ~20× fewer join rows than the
     * explode-token formulation, same exact result. */
   def llmJaccardExact(spark: SparkSession, sfDir: String): DataFrame =
-    jaccardPairsCore(spark, sfDir).orderBy("a", "b")
+    jaccardPairs(spark, sfDir, 1, 0.5).orderBy("a", "b")
 
-  /** Near-duplicate CLUSTERS: connected components over the Jaccard ≥ 0.5
-    * pair graph — the step a 100-TB dedup pipeline runs after pair
-    * generation (keep one survivor per COMPONENT, not per pair; pairwise
-    * keep-min double-drops transitive chains). Distributed min-label
-    * propagation: per round every node takes the min of its own and its
-    * neighbors' labels — one shuffle join + partial-agg min per round,
-    * converging in O(component diameter) rounds. The driver loop carries
-    * only the convergence flag (Pregel-style iteration, not a data loop),
-    * and lineage is truncated per round with localCheckpoint so the plan
-    * stays O(1) per round. Output: component id (min doc_id) and size,
-    * singletons included. */
   /** Distributed min-label connected components over an undirected pair
     * list (columns (a, b)) — shared by `llm_dedup_cluster` and
     * `llm_minhash_dedup_keep`. Per round every node takes the min of its
@@ -455,8 +460,19 @@ object LlmText {
       .select(col("node").as("id"), col("lbl").as("label"))
   }
 
+  /** Near-duplicate CLUSTERS: connected components over the Jaccard ≥ 0.5
+    * pair graph — the step a 100-TB dedup pipeline runs after pair
+    * generation (keep one survivor per COMPONENT, not per pair; pairwise
+    * keep-min double-drops transitive chains). Distributed min-label
+    * propagation: per round every node takes the min of its own and its
+    * neighbors' labels — one shuffle join + partial-agg min per round,
+    * converging in O(component diameter) rounds. The driver loop carries
+    * only the convergence flag (Pregel-style iteration, not a data loop),
+    * and lineage is truncated per round with localCheckpoint so the plan
+    * stays O(1) per round. Output: component id (min doc_id) and size,
+    * singletons included. */
   def llmDedupCluster(spark: SparkSession, sfDir: String): DataFrame = {
-    val pairs = jaccardPairsCore(spark, sfDir).select("a", "b")
+    val pairs = jaccardPairs(spark, sfDir, 1, 0.5).select("a", "b")
     val labels = connectedComponents(pairs)
     val nodes = labels.select("id")
     val comps = labels.groupBy(col("label").as("cluster")).agg(count(lit(1)).as("csize"))
@@ -469,29 +485,8 @@ object LlmText {
   /** Exact word-3-gram (shingle) Jaccard for doc pairs within (lang, source)
     * blocks, threshold 0.3 — the n-gram variant of `llm_jaccard_exact`
     * (and the exact counterpart of what MinHash estimates). */
-  def llmNgramJaccard(spark: SparkSession, sfDir: String): DataFrame = {
-    // repartition on the block key MATERIALIZES the per-doc gram arrays
-    // before the self-join — without the boundary Catalyst collapses the
-    // projection into the join and regenerates shingles once per PAIR
-    // (measured 13s vs ~3s at sf0.1); it is also the co-partitioning the
-    // block join wants at scale.
-    val d = docs(spark, sfDir)
-      .select(col("doc_id"), col("lang"), col("source"),
-        // one codegen pass: split → 3-gram → hash → sort → dedupe (the
-        // composed-HOF formulation interpreted its lambdas and re-split per
-        // gram — ~2 s per corpus pass at sf0.1; see HashedShingles)
-        hashedShingles(col("norm"), 3).as("grams"))
-      .withColumn("n", size(col("grams")))
-      .filter(col("n") > 0)
-      .repartition(col("lang"), col("source"))
-    bucketedSelfPairs(d, "grams")
-      .withColumn("inter", sortedIntersectCount(col("grams_a"), col("grams_b")))
-      .withColumn("jaccard", round(col("inter").cast("double") /
-        (col("na") + col("nb") - col("inter")), 6))
-      .filter(col("jaccard") >= 0.3)
-      .select("a", "b", "jaccard")
-      .orderBy("a", "b")
-  }
+  def llmNgramJaccard(spark: SparkSession, sfDir: String): DataFrame =
+    jaccardPairs(spark, sfDir, 3, 0.3).orderBy("a", "b")
 
   /** TF-IDF with smoothing idf = ln((N+1)/(df+1)) + 1; top term per doc. */
   def llmTfidf(spark: SparkSession, sfDir: String): DataFrame = {
@@ -560,13 +555,6 @@ object LlmText {
       .orderBy("doc_id")
   }
 
-  /** Corpus bigram language-model scoring — perplexity-style quality
-    * filtering for training data: a document whose word transitions are
-    * improbable under the corpus's own add-1-smoothed bigram model is an
-    * outlier candidate. p(w2|w1) = (c(w1 w2) + 1) / (c(w1) + V) with
-    * unigram-occurrence history counts; per-doc mean log-prob. The bigram
-    * and unigram count tables are corpus-vocabulary sized and broadcast;
-    * everything else is one shuffle per aggregation. */
   /** Shared add-one-smoothed bigram scorer: per doc, the count of bigrams
     * and the (4-decimal-rounded) mean log-probability under the corpus LM.
     * One kernel object serves both `llm_bigram_lm` (the trainer view) and
@@ -590,6 +578,13 @@ object LlmText {
       .agg(count(lit(1)).as("n_bigrams"), round(avg("lp"), 4).as("avg_lp"))
   }
 
+  /** Corpus bigram language-model scoring — perplexity-style quality
+    * filtering for training data: a document whose word transitions are
+    * improbable under the corpus's own add-1-smoothed bigram model is an
+    * outlier candidate. p(w2|w1) = (c(w1 w2) + 1) / (c(w1) + V) with
+    * unigram-occurrence history counts; per-doc mean log-prob. The bigram
+    * and unigram count tables are corpus-vocabulary sized and broadcast;
+    * everything else is one shuffle per aggregation. */
   def llmBigramLm(spark: SparkSession, sfDir: String): DataFrame =
     bigramAvgLp(spark, sfDir).orderBy("doc_id")
 

@@ -245,31 +245,6 @@ object LlmVector {
       .orderBy("vec_id")
   }
 
-  /** IVF cell index: coarse cells = (label, sign-projection bucket)
-    * centroids, components rounded to 4 decimals — the repo's margin for
-    * shuffle-order-dependent double sums — so both engines land on the same
-    * value despite sum-order drift in the avg (6 decimals would sit ~100×
-    * closer to the drift scale). Every vector is scored against all k
-    * centroids via Fanout.broadcastAll — a broadcast HASH join (k rows —
-    * dimension-table sized), never a nested-loop cross join — then ranked
-    * per vector.
-    *
-    * CELL COUNT SCALES WITH THE CORPUS (round 6; growth LAW revised round
-    * 16 — see bucketBits): with cells fixed to the 10 labels, per-cell
-    * size grows ∝N and the probe⋈index candidate join does O(N²/10) dot
-    * products — the ScaleStress harness measured llm_ann_ivf at 237× its
-    * base time on 30× data (the only super-linear query). Each label cell
-    * is therefore sub-divided by `b` sign bits of deterministic ±1
-    * hyperplane projections (random-hyperplane LSH — sign agreement
-    * probability falls with angle, so cosine-close vectors land in the
-    * same bucket): ~512-row cells up to the 131k-vector knee, cell count
-    * ∝√N past it (the bucketBits scaladoc carries the law and its ×300
-    * measurement history). At the oracle/test scale factors (N=500 ≤ 512
-    * → b=0) the sub-division is the identity, so recall specs and small-SF
-    * behavior are unchanged; the hyperplanes are LCG-derived integer
-    * arithmetic the DuckDB oracle regenerates exactly, and the projection
-    * folds left-to-right in double on both engines, so bucket assignment
-    * is parity-exact at every SF. */
   /** Embedding dimensionality — schema-fixed (embeddings.embedding is
     * list<float>[64] at every scale factor; in a real deployment the dim is
     * part of the table contract). Keeping it a compile-time constant lets
@@ -279,6 +254,16 @@ object LlmVector {
     * pairs either way), 2 fewer shuffles, and ~half the one-time codegen
     * cost that dominated this query's bench time. */
   private[graft] val Dim = 64
+
+  /** Both serving memos are LRU-bounded at this many (session, sfDir)
+    * entries: the intended consumers hold ≤1 live entry (Verify/Bench: one
+    * dir; ScaleStress: one dir at a time with an explicit release between
+    * scales), so the cap never evicts in the shipped harnesses — it exists
+    * so a long-lived session sweeping many directories WITHOUT releasing
+    * accumulates a bounded set of cached DataFrames instead of growing for
+    * the session lifetime. Eviction unpersists the cached storage; the next
+    * touch of an evicted (session, sfDir) rebuilds and re-caches. */
+  private val MemoCap = 4
 
   /** Cache lifecycle: one entry per (session, sfDir), built lazily and held
     * for the LIFETIME OF THE SESSION — the intended beneficiary is the
@@ -291,16 +276,6 @@ object LlmVector {
     * needed; the memo map exists so repeated query invocations reuse the ONE
     * cached plan instead of re-calling .cache() per invocation (which logged
     * "already cached" warnings every bench pass). */
-  /** Both serving memos are LRU-bounded at this many (session, sfDir)
-    * entries: the intended consumers hold ≤1 live entry (Verify/Bench: one
-    * dir; ScaleStress: one dir at a time with an explicit release between
-    * scales), so the cap never evicts in the shipped harnesses — it exists
-    * so a long-lived session sweeping many directories WITHOUT releasing
-    * accumulates a bounded set of cached DataFrames instead of growing for
-    * the session lifetime. Eviction unpersists the cached storage; the next
-    * touch of an evicted (session, sfDir) rebuilds and re-caches. */
-  private val MemoCap = 4
-
   private val cellMemo = new ServingMemo(MemoCap)
 
   /** The served ANN RESULT (top-5 per vector — a, nn, rank, cos; ≤5·N
@@ -475,13 +450,16 @@ object LlmVector {
     * corpus-tracking blocking key shared by the IVF index build and
     * `llm_semdedup`. Corpus size → bucket bits is attached as a broadcast
     * scalar (no collect). */
-  private def cellAssigned(spark: SparkSession, sfDir: String): DataFrame = {
-    val nRow = Tables.embeddings(spark, sfDir).agg(count(lit(1)).as("n_total"))
-    Fanout.broadcastAll(emb(spark, sfDir), nRow, col("vec_id"), col("n_total"))
+  private def cellAssigned(spark: SparkSession, sfDir: String): DataFrame =
+    Fanout.broadcastAll(emb(spark, sfDir), nTotal(spark, sfDir), col("vec_id"), col("n_total"))
       .withColumn("b_bits", bucketBits(col("n_total")))
       .withColumn("vcell",
         col("label").cast("long") * lit(1L << MaxBits) + bucketCol(col("b_bits")))
-  }
+
+  /** The one-row corpus size `n_total` — counts ALL embeddings rows,
+    * nulls included, like the DuckDB oracle's bucket-bit parameter. */
+  private def nTotal(spark: SparkSession, sfDir: String): DataFrame =
+    Tables.embeddings(spark, sfDir).agg(count(lit(1)).as("n_total"))
 
   /** Per-cell rounded centroids (cell, centroid float[], centroid_nrm) —
     * shared by the scored-cell cache build and the IVF-PQ residual coder
@@ -516,6 +494,31 @@ object LlmVector {
         flatten(transform(col("cs"), c => c.getField("centroid"))).as("cflat"),
         transform(col("cs"), c => c.getField("centroid_nrm")).as("cnrms"))
 
+  /** IVF cell index: coarse cells = (label, sign-projection bucket)
+    * centroids, components rounded to 4 decimals — the repo's margin for
+    * shuffle-order-dependent double sums — so both engines land on the same
+    * value despite sum-order drift in the avg (6 decimals would sit ~100×
+    * closer to the drift scale). Every vector is scored against all k
+    * centroids via Fanout.broadcastAll — a broadcast HASH join (k rows —
+    * dimension-table sized), never a nested-loop cross join — then ranked
+    * per vector.
+    *
+    * CELL COUNT SCALES WITH THE CORPUS (round 6; growth LAW revised round
+    * 16 — see bucketBits): with cells fixed to the 10 labels, per-cell
+    * size grows ∝N and the probe⋈index candidate join does O(N²/10) dot
+    * products — the ScaleStress harness measured llm_ann_ivf at 237× its
+    * base time on 30× data (the only super-linear query). Each label cell
+    * is therefore sub-divided by `b` sign bits of deterministic ±1
+    * hyperplane projections (random-hyperplane LSH — sign agreement
+    * probability falls with angle, so cosine-close vectors land in the
+    * same bucket): ~512-row cells up to the 131k-vector knee, cell count
+    * ∝√N past it (the bucketBits scaladoc carries the law and its ×300
+    * measurement history). At the oracle/test scale factors (N=500 ≤ 512
+    * → b=0) the sub-division is the identity, so recall specs and small-SF
+    * behavior are unchanged; the hyperplanes are LCG-derived integer
+    * arithmetic the DuckDB oracle regenerates exactly, and the projection
+    * folds left-to-right in double on both engines, so bucket assignment
+    * is parity-exact at every SF. */
   private def buildCellScored(spark: SparkSession, sfDir: String): DataFrame = {
     val matrix = centroidMatrix(centroidRelation(spark, sfDir))
     // Cached NARROW ranked top cells (vec_id, cell, dist2cell, cell_rank):
@@ -566,57 +569,73 @@ object LlmVector {
   private def annTopkCore(spark: SparkSession, sfDir: String): DataFrame =
     topkMemo.get(spark, sfDir)(buildAnnTopk(spark, sfDir).cache())
 
-  private def buildAnnTopk(spark: SparkSession, sfDir: String): DataFrame = {
-    val ranked = cellScored(spark, sfDir)
-    // ranked is narrow (round 6/7) — embeddings re-attach by vec_id
-    // equi-join (linear, broadcast at small N / shuffled at scale) instead
-    // of riding every ranked row through the join
-    val vecs = emb(spark, sfDir).select("vec_id", "embedding", "nrm")
-    val indexed = ranked.filter(col("cell_rank") === 1)
-      .join(vecs, "vec_id")
-      .select(col("vec_id").as("b"), col("cell"),
-        col("embedding").as("eb"), col("nrm").as("nb"))
-    // nprobe scales with the bucket-bit budget (3 + 2b): more cells means
-    // each holds a smaller slice of a vector's true neighborhood, so a
-    // fixed nprobe=3 would silently trade the round-6 speedup for recall
-    // (measured at sf0.1/b=2: recall@5 vs exact = 0.24 at nprobe 3 → 0.44
-    // at 3+2b=7). Candidates/vector stay ~bounded (~nprobe · 512-row
-    // cells), so total work grows ~N·log N — the textbook IVF knob.
-    val nRow = Tables.embeddings(spark, sfDir).agg(count(lit(1)).as("n_total"))
-    val probes = Fanout.broadcastAll(ranked, nRow, col("vec_id"), col("n_total"))
-      .filter(col("cell_rank") <= nprobeCol(bucketBits(col("n_total"))))
-      .join(vecs, "vec_id")
-      .select(col("vec_id").as("a"), col("cell"),
-        col("embedding").as("ea"), col("nrm").as("na"))
-    // The cell id alone has only k distinct values, and the shuffled bytes
-    // are small enough that AQE coalesces the probe⋈index join to ONE
-    // partition — which serializes every candidate dot product into a
-    // single task (measured: a 2.4 s single-task stage, the bulk of this
-    // query's time). Sub-fragment the join like cosineTopkCore: each
-    // cell's index shard is replicated over nFrag sub-buckets, probes
-    // hash into one of them, and the numbered repartition + shuffle_hash
-    // hint pin the dot-product stage partition-parallel. Same candidate
-    // set, same values — only the physical distribution changes.
-    val nFrag = 8
-    val indexedF = indexed.withColumn("frag", explode(sequence(lit(0), lit(nFrag - 1))))
-    val probesF = probes.withColumn("frag", pmod(hash(col("a")), lit(nFrag)))
-    // Candidate-join width: the dot-product + map-side WindowGroupLimit
-    // stage sorts EVERY candidate (a, b, cos) row, and at ×100 the
-    // session-width (32-task) form spilled 40.8 GB mem + 8.2 GB disk in
-    // that one stage — 66.5 of the build's 79.5 s (round-14 ProfileJobs;
-    // the same spill-onset signature as the round-13 graph builds). The
-    // shared hysteresis rule widens it past onset (×100 → ~205 tasks,
-    // candidate sort buffers resident) and leaves every other scale's
-    // plan byte-identical (sf0.1/×10/×30 stay at session width; ×30's
-    // measured band was already healthy). (cell, frag) has ~20k distinct
-    // keys, so the wide hash distribution stays balanced.
-    val parts = graft.ScaleRules.wideBuildWidth(
-      spark, s"$sfDir/embeddings.parquet", graft.ScaleRules.AnnCandidateTaskBytes)
-    topkWithin(probesF.repartition(parts, col("cell"), col("frag"))
-      .join(indexedF.hint("shuffle_hash"), Seq("cell", "frag"))
-      .filter(col("a") =!= col("b"))
+  private def buildAnnTopk(spark: SparkSession, sfDir: String): DataFrame =
+    topkWithin(annCandidates(spark, sfDir, annIndex(spark, sfDir))
       .withColumn("cos", dot(col("ea"), col("eb")) / (col("na") * col("nb")))
       .select("a", "b", "cos"))
+
+  /** Every vector's own (rank-1) cell row of the cached ranking. */
+  private def ownCell(spark: SparkSession, sfDir: String): DataFrame =
+    cellScored(spark, sfDir).filter(col("cell_rank") === 1)
+
+  /** The IVF index side (b, cell, eb, nb): every vector in its own cell,
+    * embedding re-attached by vec_id equi-join (linear, broadcast at small
+    * N / shuffled at scale) instead of riding every ranked row through the
+    * join. The batch build and the stream serve both read this relation,
+    * so a served query probes exactly the index the batch path probes. */
+  private def annIndex(spark: SparkSession, sfDir: String): DataFrame =
+    ownCell(spark, sfDir)
+      .join(emb(spark, sfDir).select("vec_id", "embedding", "nrm"), "vec_id")
+      .select(col("vec_id").as("b"), col("cell"),
+        col("embedding").as("eb"), col("nrm").as("nb"))
+
+  /** The IVF probe side (a, cell, ea, na): every vector in each of its
+    * nprobe nearest cells. nprobe scales with the bucket-bit budget
+    * (3 + 2b): more cells means each holds a smaller slice of a vector's
+    * true neighborhood, so a fixed nprobe=3 would silently trade the
+    * round-6 speedup for recall (measured at sf0.1/b=2: recall@5 vs exact
+    * = 0.24 at nprobe 3 → 0.44 at 3+2b=7). Candidates/vector stay
+    * ~bounded (~nprobe · 512-row cells), so total work grows ~N·log N —
+    * the textbook IVF knob. */
+  private def annProbes(spark: SparkSession, sfDir: String): DataFrame =
+    Fanout.broadcastAll(cellScored(spark, sfDir), nTotal(spark, sfDir), col("vec_id"), col("n_total"))
+      .filter(col("cell_rank") <= nprobeCol(bucketBits(col("n_total"))))
+      .join(emb(spark, sfDir).select("vec_id", "embedding", "nrm"), "vec_id")
+      .select(col("vec_id").as("a"), col("cell"),
+        col("embedding").as("ea"), col("nrm").as("na"))
+
+  /** Probe ⋈ `index` on cell, self-pairs dropped — the candidate join of
+    * plain IVF (float index) and IVF-PQ (codes index). The cell id alone
+    * has only k distinct values, and the shuffled bytes are small enough
+    * that AQE coalesces the join to ONE partition — which serializes every
+    * candidate dot product into a single task (measured: a 2.4 s
+    * single-task stage, the bulk of llm_ann_ivf's time). Sub-fragment the
+    * join like cosineTopkCore: each cell's index shard is replicated over
+    * nFrag sub-buckets, probes hash into one of them, and the numbered
+    * repartition + shuffle_hash hint pin the scoring stage
+    * partition-parallel. Same candidate set, same values — only the
+    * physical distribution changes.
+    *
+    * Candidate-join width: the scoring + map-side WindowGroupLimit stage
+    * sorts EVERY candidate row, and at ×100 the session-width (32-task)
+    * form spilled 40.8 GB mem + 8.2 GB disk in that one stage — 66.5 of
+    * the plain build's 79.5 s, and the identical signature (68.9 s) in
+    * the PQ decode-dot + shortlist stage (round-14 ProfileJobs; the same
+    * spill-onset signature as the round-13 graph builds). The shared
+    * hysteresis rule widens it past onset (×100 → ~205 tasks, candidate
+    * sort buffers resident) and leaves every other scale's plan
+    * byte-identical (sf0.1/×10/×30 stay at session width; ×30's measured
+    * band was already healthy). (cell, frag) has ~20k distinct keys, so
+    * the wide hash distribution stays balanced. */
+  private def annCandidates(spark: SparkSession, sfDir: String, index: DataFrame): DataFrame = {
+    val nFrag = 8
+    val indexF = index.withColumn("frag", explode(sequence(lit(0), lit(nFrag - 1))))
+    val probesF = annProbes(spark, sfDir).withColumn("frag", pmod(hash(col("a")), lit(nFrag)))
+    val parts = graft.ScaleRules.wideBuildWidth(
+      spark, s"$sfDir/embeddings.parquet", graft.ScaleRules.AnnCandidateTaskBytes)
+    probesF.repartition(parts, col("cell"), col("frag"))
+      .join(indexF.hint("shuffle_hash"), Seq("cell", "frag"))
+      .filter(col("a") =!= col("b"))
   }
 
   def llmAnnIvf(spark: SparkSession, sfDir: String): DataFrame =
@@ -634,10 +653,10 @@ object LlmVector {
     *    vector that exists in the corpus probes EXACTLY the cells
     *    `llm_ann_ivf` probes for it);
     *  - candidates come from a stream-STATIC equi-join on cell against the
-    *    memoized rank-1 index side (`cellScored`, the same cached relation
-    *    the batch serve reads) — stateless in the stream, so no watermark
-    *    and no state store; per-query work is nprobe·cell-occupancy dot
-    *    products, identical to a batch probe;
+    *    rank-1 index side (`annIndex` over the memoized `cellScored`, the
+    *    same relation the batch build probes) — stateless in the stream,
+    *    so no watermark and no state store; per-query work is
+    *    nprobe·cell-occupancy dot products, identical to a batch probe;
     *  - self-matches drop (a served query never returns its own id).
     *
     * nprobe/bit-budget are fixed at STREAM-SETUP time from the corpus
@@ -645,17 +664,12 @@ object LlmVector {
     * through the spec-pinned scalar mirrors of the batch build's laws. */
   private[graft] def annServeCandidates(
       spark: SparkSession, sfDir: String, queries: DataFrame): DataFrame = {
-    // count(*) over ALL embeddings rows — the batch path's nRow and the
+    // count(*) over ALL embeddings rows — the batch path's nTotal and the
     // DuckDB bparam both count unfiltered, and bucketBitsScalar can land
     // one bit lower under an isNotNull filter when null embeddings exist
     // (round-18 ADVICE: the stream must probe EXACTLY the batch cells)
     val n = Tables.embeddings(spark, sfDir).count()
     val nprobe = nprobeScalar(bucketBitsScalar(n))
-    val vecs = emb(spark, sfDir).select("vec_id", "embedding", "nrm")
-    val indexed = cellScored(spark, sfDir).filter(col("cell_rank") === 1)
-      .join(vecs, "vec_id")
-      .select(col("vec_id").as("b"), col("cell"),
-        col("embedding").as("eb"), col("nrm").as("nb"))
     val matrix = centroidMatrix(centroidRelation(spark, sfDir))
     Fanout.broadcastAll(queries.withColumn("nq", norm(col("embedding"))),
         matrix, col("qid"), size(col("cells")))
@@ -663,7 +677,7 @@ object LlmVector {
         col("cells"), col("cflat"), col("cnrms"), nprobe)))
       .select(col("qid"), col("tc.cell").as("cell"),
         col("embedding").as("eq"), col("nq"))
-      .join(indexed, "cell")
+      .join(annIndex(spark, sfDir), "cell")
       .filter(col("b") =!= col("qid"))
       .withColumn("cos", dot(col("eq"), col("eb")) / (col("nq") * col("nb")))
       .select("qid", "b", "cos")
@@ -678,8 +692,7 @@ object LlmVector {
     * residuals concentrate near 0 within a cell, so a fixed bit budget
     * spends its precision where the data is. */
   private def pqResiduals(spark: SparkSession, sfDir: String): DataFrame = {
-    val own = cellScored(spark, sfDir).filter(col("cell_rank") === 1)
-      .select("vec_id", "cell")
+    val own = ownCell(spark, sfDir).select("vec_id", "cell")
     emb(spark, sfDir).select("vec_id", "embedding")
       .join(own, "vec_id")
       .join(broadcast(centroidRelation(spark, sfDir).select("cell", "centroid")), "cell")
@@ -765,30 +778,9 @@ object LlmVector {
     * shortlist refinement's tie behavior is engine-internal — the exact
     * path `llm_ann_ivf` is the oracle-checked row). */
   private def buildAnnPqTopk(spark: SparkSession, sfDir: String): DataFrame = {
-    val ranked = cellScored(spark, sfDir)
-    val codes = pqIndex(spark, sfDir)
-    val nRow = Tables.embeddings(spark, sfDir).agg(count(lit(1)).as("n_total"))
-    val probes = Fanout.broadcastAll(ranked, nRow, col("vec_id"), col("n_total"))
-      .filter(col("cell_rank") <= nprobeCol(bucketBits(col("n_total"))))
-      .join(emb(spark, sfDir).select("vec_id", "embedding", "nrm"), "vec_id")
-      .select(col("vec_id").as("a"), col("cell"),
-        col("embedding").as("ea"), col("nrm").as("na"))
-    // sub-fragment the probe⋈codes join exactly like buildAnnTopk: the
-    // cell key alone has few distinct values and AQE would coalesce the
-    // decode-dot stage to one task
-    val nFrag = 8
-    val codesF = codes.withColumn("frag", explode(sequence(lit(0), lit(nFrag - 1))))
-    val probesF = probes.withColumn("frag", pmod(hash(col("a")), lit(nFrag)))
-    // Same spill-onset width as buildAnnTopk: the round-14 ×100 profile
-    // showed the decode-dot + shortlist-window stage with the IDENTICAL
-    // 32-task signature (40.8 GB mem + 8.2 GB disk spill, 68.9 s) — the
-    // shortlist sort runs over the same ~per-candidate row count as the
-    // plain-IVF candidate sort, so it shares AnnCandidateTaskBytes.
-    val parts = graft.ScaleRules.wideBuildWidth(
-      spark, s"$sfDir/embeddings.parquet", graft.ScaleRules.AnnCandidateTaskBytes)
-    val approx = probesF.repartition(parts, col("cell"), col("frag"))
-      .join(codesF.hint("shuffle_hash"), Seq("cell", "frag"))
-      .filter(col("a") =!= col("b"))
+    // the same sub-fragmented, spill-onset-width candidate join as plain
+    // IVF, against the codes index instead of the float one
+    val approx = annCandidates(spark, sfDir, pqIndex(spark, sfDir))
       .join(broadcast(pqCellDim(spark, sfDir).select("cell", "base", "scale")), "cell")
       .withColumn("acos",
         pqDot(col("ea"), col("codes"), col("base"), col("scale")) / (col("na") * col("rnorm")))
@@ -820,8 +812,7 @@ object LlmVector {
   private[graft] def pqIndexForSpec(spark: SparkSession, sfDir: String): DataFrame =
     buildPqIndex(spark, sfDir)
   private[graft] def floatIndexForSpec(spark: SparkSession, sfDir: String): DataFrame = {
-    val own = cellScored(spark, sfDir).filter(col("cell_rank") === 1)
-      .select("vec_id", "cell")
+    val own = ownCell(spark, sfDir).select("vec_id", "cell")
     emb(spark, sfDir).select(col("vec_id").as("b"), col("embedding"), col("nrm"))
       .join(own, col("b") === col("vec_id")).select("b", "cell", "embedding", "nrm")
   }

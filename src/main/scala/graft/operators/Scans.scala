@@ -39,11 +39,6 @@ object Scans {
       .select("event_id", "epoch_us", "user_id", "event_type", "value")
       .orderBy("event_id")
 
-  /** CSV + JSON sink/source roundtrip (side-effecting — rows-only check; the
-    * full row-equality assertion lives in the ScalaTest spec). Writes a
-    * lineitem sample to a temp dir in both formats, reads both back with an
-    * explicit schema, and returns per-flag counts from each format joined —
-    * equal counts prove the roundtrip preserved rows. */
   /** Per-application temp root so concurrent sessions (Verify + Bench + sbt
     * test) never clobber each other's sink directories. Each root is
     * registered for recursive deletion on JVM exit, so repeated Verify /
@@ -83,19 +78,42 @@ object Scans {
     s"${sfDir.replaceAll("[^A-Za-z0-9]", "_")}_$sha"
   }
 
-  def sourceCsvRoundtrip(spark: SparkSession, sfDir: String): DataFrame = {
-    val tmp = s"${tmpRoot(spark)}/roundtrip_${dirKey(sfDir)}"
-    val sample = Tables.lineitem(spark, sfDir)
+  /** This application's scratch directory `<tag>` for the dataset at
+    * `sfDir`: `tmpRoot` plus a `dirKey`-keyed subdirectory, so a plan that
+    * reads the directory lazily never rebinds to another dataset's write. */
+  private[graft] def scratchDir(spark: SparkSession, sfDir: String, tag: String): String =
+    s"${tmpRoot(spark)}/${tag}_${dirKey(sfDir)}"
+
+  /** The lineitem sample every format round trip writes and reads back. */
+  private def lineitemSample(spark: SparkSession, sfDir: String): DataFrame =
+    Tables.lineitem(spark, sfDir)
       .filter(col("l_orderkey") < 1000)
       .select("l_orderkey", "l_linenumber", "l_quantity", "l_returnflag")
+
+  /** The explicit read schema of `lineitemSample`'s text exports. */
+  private val sampleSchema = StructType(Seq(
+    StructField("l_orderkey", LongType), StructField("l_linenumber", IntegerType),
+    StructField("l_quantity", DoubleType), StructField("l_returnflag", StringType)))
+
+  /** Orders written partitioned by order year (`o_year`) under `dir`. */
+  private def writeOrdersByYear(spark: SparkSession, sfDir: String, dir: String): Unit =
+    Tables.orders(spark, sfDir)
+      .withColumn("o_year", year(col("o_orderdate")))
+      .write.mode("overwrite").partitionBy("o_year").parquet(dir)
+
+  /** CSV + JSON sink/source roundtrip (side-effecting — rows-only check; the
+    * full row-equality assertion lives in the ScalaTest spec). Writes a
+    * lineitem sample to a temp dir in both formats, reads both back with an
+    * explicit schema, and returns per-flag counts from each format joined —
+    * equal counts prove the roundtrip preserved rows. */
+  def sourceCsvRoundtrip(spark: SparkSession, sfDir: String): DataFrame = {
+    val tmp = scratchDir(spark, sfDir, "roundtrip")
+    val sample = lineitemSample(spark, sfDir)
     sample.write.mode("overwrite").option("header", "true").csv(s"$tmp/csv")
     sample.write.mode("overwrite").json(s"$tmp/json")
-    val schema = StructType(Seq(
-      StructField("l_orderkey", LongType), StructField("l_linenumber", IntegerType),
-      StructField("l_quantity", DoubleType), StructField("l_returnflag", StringType)))
-    val fromCsv = spark.read.schema(schema).option("header", "true").csv(s"$tmp/csv")
+    val fromCsv = spark.read.schema(sampleSchema).option("header", "true").csv(s"$tmp/csv")
       .groupBy("l_returnflag").agg(count(lit(1)).as("csv_rows"))
-    val fromJson = spark.read.schema(schema).json(s"$tmp/json")
+    val fromJson = spark.read.schema(sampleSchema).json(s"$tmp/json")
       .groupBy("l_returnflag").agg(count(lit(1)).as("json_rows"))
     fromCsv.join(fromJson, "l_returnflag").orderBy("l_returnflag")
   }
@@ -113,17 +131,11 @@ object Scans {
     // sfDir-keyed like json_corrupt/dpp/binfiles: the returned plan reads
     // the path LAZILY, so an unkeyed shared dir would let a later sfDir's
     // write rebind an earlier plan to the wrong data (round-12 advisory).
-    val tmp = s"${tmpRoot(spark)}/xmlrt_${dirKey(sfDir)}"
-    val sample = Tables.lineitem(spark, sfDir)
-      .filter(col("l_orderkey") < 1000)
-      .select("l_orderkey", "l_linenumber", "l_quantity", "l_returnflag")
-    sample.write.mode("overwrite")
+    val tmp = scratchDir(spark, sfDir, "xmlrt")
+    lineitemSample(spark, sfDir).write.mode("overwrite")
       .option("rootTag", "lines").option("rowTag", "line")
       .format("xml").save(s"$tmp/xml")
-    val schema = StructType(Seq(
-      StructField("l_orderkey", LongType), StructField("l_linenumber", IntegerType),
-      StructField("l_quantity", DoubleType), StructField("l_returnflag", StringType)))
-    spark.read.schema(schema).option("rowTag", "line").format("xml").load(s"$tmp/xml")
+    spark.read.schema(sampleSchema).option("rowTag", "line").format("xml").load(s"$tmp/xml")
       .groupBy("l_returnflag")
       .agg(count(lit(1)).as("xml_rows"), round(sum("l_quantity"), 2).as("xml_qty"))
       .orderBy("l_returnflag")
@@ -146,10 +158,8 @@ object Scans {
     * Scale: corrupt handling is per-row in the scan — no extra pass, no
     * driver involvement; the only shuffle is the 5-group aggregate. */
   def sourceJsonCorrupt(spark: SparkSession, sfDir: String): DataFrame = {
-    val tmp = s"${tmpRoot(spark)}/json_corrupt_${dirKey(sfDir)}"
-    val sample = Tables.lineitem(spark, sfDir)
-      .filter(col("l_orderkey") < 1000)
-      .select("l_orderkey", "l_linenumber", "l_quantity", "l_returnflag")
+    val tmp = scratchDir(spark, sfDir, "json_corrupt")
+    val sample = lineitemSample(spark, sfDir)
     sample
       .select(col("l_orderkey"),
         to_json(struct(sample.columns.toIndexedSeq.map(col): _*)).as("j"))
@@ -157,11 +167,7 @@ object Scans {
           concat(lit("{BROKEN "), substring(col("j"), 1, 20)))
         .otherwise(col("j")).as("value"))
       .write.mode("overwrite").text(tmp)
-    val schema = StructType(Seq(
-      StructField("l_orderkey", LongType), StructField("l_linenumber", IntegerType),
-      StructField("l_quantity", DoubleType), StructField("l_returnflag", StringType),
-      StructField("_bad", StringType)))
-    spark.read.schema(schema)
+    spark.read.schema(sampleSchema.add("_bad", StringType))
       .option("mode", "PERMISSIVE").option("columnNameOfCorruptRecord", "_bad")
       .json(tmp)
       .withColumn("flag",
@@ -173,11 +179,8 @@ object Scans {
 
   /** ORC sink/source roundtrip (rows-only, like the csv/json one). */
   def sourceOrcRoundtrip(spark: SparkSession, sfDir: String): DataFrame = {
-    val tmp = s"${tmpRoot(spark)}/roundtrip_orc_${dirKey(sfDir)}"
-    val sample = Tables.lineitem(spark, sfDir)
-      .filter(col("l_orderkey") < 1000)
-      .select("l_orderkey", "l_linenumber", "l_quantity", "l_returnflag")
-    sample.write.mode("overwrite").orc(tmp)
+    val tmp = scratchDir(spark, sfDir, "roundtrip_orc")
+    lineitemSample(spark, sfDir).write.mode("overwrite").orc(tmp)
     spark.read.orc(tmp)
       .groupBy("l_returnflag").agg(count(lit(1)).as("orc_rows"))
       .orderBy("l_returnflag")
@@ -188,10 +191,8 @@ object Scans {
     * asserts PartitionFilters). Oracle-checkable because the counts must
     * equal the unpartitioned table's — the layout changes, the data doesn't. */
   def sourcePartitionedPrune(spark: SparkSession, sfDir: String): DataFrame = {
-    val tmp = s"${tmpRoot(spark)}/part_orders_${dirKey(sfDir)}"
-    Tables.orders(spark, sfDir)
-      .withColumn("o_year", year(col("o_orderdate")))
-      .write.mode("overwrite").partitionBy("o_year").parquet(tmp)
+    val tmp = scratchDir(spark, sfDir, "part_orders")
+    writeOrdersByYear(spark, sfDir, tmp)
     spark.read.parquet(tmp)
       .filter(col("o_year") === 1996)
       .groupBy("o_orderstatus")
@@ -218,10 +219,8 @@ object Scans {
     // per-sfDir subdir (as sinkBucketedJoin): the returned DataFrame reads
     // this path lazily, so a shared dir would rebind an earlier sfDir's
     // plan to the latest data in multi-dataset sessions (ScaleStress)
-    val tmp = s"${tmpRoot(spark)}/dpp_orders_${dirKey(sfDir)}"
-    Tables.orders(spark, sfDir)
-      .withColumn("o_year", year(col("o_orderdate")))
-      .write.mode("overwrite").partitionBy("o_year").parquet(tmp)
+    val tmp = scratchDir(spark, sfDir, "dpp_orders")
+    writeOrdersByYear(spark, sfDir, tmp)
     // partition-dir values read back as int; BIGINT per dtype convention
     val fact = spark.read.parquet(tmp)
       .withColumn("o_year", col("o_year").cast("long"))
@@ -276,7 +275,7 @@ object Scans {
     * lists, not on per-executor local disks (java.nio writes would —
     * round-11 advisory; in local[_] both resolve to the same local FS). */
   def sourceBinaryFiles(spark: SparkSession, sfDir: String): DataFrame = {
-    val dir = s"${tmpRoot(spark)}/binfiles_${dirKey(sfDir)}"
+    val dir = scratchDir(spark, sfDir, "binfiles")
     new java.io.File(dir).mkdirs()
     // Broadcast the SESSION's hadoop conf: executor-side `new
     // Configuration()` would drop spark.hadoop.* settings (fs.defaultFS,

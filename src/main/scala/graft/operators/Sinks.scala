@@ -42,10 +42,9 @@ object Sinks {
     * snapshot preserves row counts (|target| + |inserts|).
     */
   def sinkMergeUpsert(spark: SparkSession, sfDir: String): DataFrame = {
-    merged(spark, sfDir).write.mode("overwrite")
-      .parquet(s"${Scans.tmpRoot(spark)}/merge_orders_${Scans.dirKey(sfDir)}")
-    spark.read.parquet(s"${Scans.tmpRoot(spark)}/merge_orders_${Scans.dirKey(sfDir)}")
-      .orderBy("o_orderkey")
+    val out = Scans.scratchDir(spark, sfDir, "merge_orders")
+    merged(spark, sfDir).write.mode("overwrite").parquet(out)
+    spark.read.parquet(out).orderBy("o_orderkey")
   }
 
   /** The deterministic MERGE inputs — target snapshot plus a changeset
@@ -64,36 +63,28 @@ object Sinks {
     (target, updates.union(inserts))
   }
 
-  /** Generic key-based upsert — the MERGE kernel shared by the batch sink
-    * and the streaming exactly-once sink (graft.streaming.MergeSink):
-    * changeset rows replace same-key snapshot rows, new keys append.
-    * Schemas must match; ONE full-outer shuffle join on the key. */
+  /** The MERGE kernel shared by the batch sink and the streaming
+    * exactly-once sink (graft.streaming.MergeSink): changeset rows replace
+    * same-key snapshot rows, new keys append, and an `op` column records
+    * each key's fate (keep / update / insert). The changeset must carry
+    * the snapshot's column names; ONE full-outer shuffle join on the key.
+    * Output columns: the key, the snapshot's other columns, then `op`. */
   def upsert(snapshot: DataFrame, changes: DataFrame, key: String): DataFrame = {
-    val others = snapshot.columns.filterNot(_ == key).toSeq
-    val s = snapshot.select(col(key), struct(others.map(col): _*).as("_snap"))
-    val c = changes.select(col(key).as("_ckey"), struct(others.map(col): _*).as("_chg"))
-    s.join(c, col(key) === col("_ckey"), "full_outer")
-      .select(coalesce(col("_ckey"), col(key)).as(key),
-        coalesce(col("_chg"), col("_snap")).as("_row"))
-      .select(col(key) +: others.map(o => col(s"_row.$o").as(o)): _*)
+    val c = changes.select(snapshot.columns.toIndexedSeq.map(n => col(n).as(s"_c_$n")): _*)
+    val cKey = col(s"_c_$key")
+    val others = snapshot.columns.toIndexedSeq.filterNot(_ == key)
+      .map(n => when(cKey.isNotNull, col(s"_c_$n")).otherwise(col(n)).as(n))
+    val op = when(cKey.isNull, lit("keep")).when(col(key).isNull, lit("insert"))
+      .otherwise(lit("update")).as("op")
+    snapshot.join(c, col(key) === cKey, "full_outer")
+      .select((coalesce(cKey, col(key)).as(key) +: others :+ op): _*)
   }
 
   /** The merge plan itself (pre-sink) — separated so the spec can assert
     * its shape without the write. */
   private[operators] def merged(spark: SparkSession, sfDir: String): DataFrame = {
-    val (target, cs) = mergeInputs(spark, sfDir)
-    val changeset = cs.toDF("c_key", "c_custkey", "c_status", "c_price")
-    target.join(changeset, col("o_orderkey") === col("c_key"), "full_outer")
-      .select(
-        coalesce(col("c_key"), col("o_orderkey")).as("o_orderkey"),
-        coalesce(col("c_custkey"), col("o_custkey")).as("o_custkey"),
-        when(col("c_key").isNotNull, col("c_status"))
-          .otherwise(col("o_orderstatus")).as("o_orderstatus"),
-        when(col("c_key").isNotNull, col("c_price"))
-          .otherwise(col("o_totalprice")).as("o_totalprice"),
-        when(col("c_key").isNull, lit("keep"))
-          .when(col("o_orderkey").isNull, lit("insert"))
-          .otherwise(lit("update")).as("op"))
+    val (target, changeset) = mergeInputs(spark, sfDir)
+    upsert(target, changeset, "o_orderkey")
   }
 
   /** Change data feed — the CDC diff every downstream incremental consumer
@@ -128,7 +119,7 @@ object Sinks {
       .filter(col("op") =!= "keep")
       .select(coalesce(col("k0"), col("k1")).as("o_orderkey"), col("op"),
         col("old_status"), col("new_status"), col("old_price"), col("new_price"))
-    val root = s"${Scans.tmpRoot(spark)}/cdf_${Scans.dirKey(sfDir)}"
+    val root = Scans.scratchDir(spark, sfDir, "cdf")
     feed.write.mode("overwrite").parquet(root)
     spark.read.parquet(root).orderBy("o_orderkey")
   }
@@ -155,7 +146,7 @@ object Sinks {
     * row-preservation half IS asserted against the source in the spec.
     */
   def sinkCompaction(spark: SparkSession, sfDir: String): DataFrame = {
-    val out = s"${Scans.tmpRoot(spark)}/compact_lineitem_${Scans.dirKey(sfDir)}"
+    val out = Scans.scratchDir(spark, sfDir, "compact_lineitem")
     Tables.lineitem(spark, sfDir)
       .repartitionByRange(CompactionFiles, col("l_orderkey"))
       .sortWithinPartitions("l_orderkey", "l_linenumber")
@@ -220,7 +211,7 @@ object Sinks {
     * bounds (≤0.7 on BOTH dims). No DuckDB oracle: file layout isn't
     * observable from SQL; row preservation is asserted in the spec. */
   def sinkZorder(spark: SparkSession, sfDir: String): DataFrame = {
-    val out = s"${Scans.tmpRoot(spark)}/zorder_lineitem_${Scans.dirKey(sfDir)}"
+    val out = Scans.scratchDir(spark, sfDir, "zorder_lineitem")
     val li = Tables.lineitem(spark, sfDir)
       .select("l_orderkey", "l_partkey", "l_quantity", "l_extendedprice")
     val bounds = li.agg(
@@ -269,7 +260,7 @@ object Sinks {
     * full-outer shuffle join as sink_merge_upsert; versions are immutable
     * snapshots, so AS OF is a plain parquet scan of v2. */
   def sinkTimeTravel(spark: SparkSession, sfDir: String): DataFrame = {
-    val root = s"${Scans.tmpRoot(spark)}/ttravel_orders_${Scans.dirKey(sfDir)}"
+    val root = Scans.scratchDir(spark, sfDir, "ttravel_orders")
     Scans.deleteRecursively(new java.io.File(root))
     val (target, changes) = mergeInputs(spark, sfDir)
     graft.streaming.MergeSink.initTarget(target, root)
@@ -316,7 +307,7 @@ object Sinks {
     * files). */
   private[operators] def prunedScan(spark: SparkSession, sfDir: String,
       maxPlanFiles: Int = ManifestMaxPlanFiles): (Int, DataFrame) = {
-    val out = s"${Scans.tmpRoot(spark)}/manifest_orders_${Scans.dirKey(sfDir)}"
+    val out = Scans.scratchDir(spark, sfDir, "manifest_orders")
     val nFiles = manifestFiles(spark, sfDir)
     Tables.orders(spark, sfDir)
       .repartitionByRange(nFiles, col("o_orderkey"))
@@ -393,7 +384,7 @@ object Sinks {
   def sinkBucketedJoin(spark: SparkSession, sfDir: String): DataFrame = {
     val suffix = Scans.dirKey(sfDir)
     val (liT, ordT) = (s"graft_li_b_$suffix", s"graft_ord_b_$suffix")
-    val root = s"${Scans.tmpRoot(spark)}/bucketed_$suffix"
+    val root = Scans.scratchDir(spark, sfDir, "bucketed")
     spark.sql(s"DROP TABLE IF EXISTS $liT")
     spark.sql(s"DROP TABLE IF EXISTS $ordT")
     Tables.lineitem(spark, sfDir)
@@ -428,7 +419,7 @@ object Sinks {
     // per-sfDir subdir (as sinkBucketedJoin): the returned DataFrame reads
     // these paths lazily, so a shared dir would rebind an earlier sfDir's
     // plan to the latest data in multi-dataset sessions (ScaleStress)
-    val root = s"${Scans.tmpRoot(spark)}/evolve_${Scans.dirKey(sfDir)}"
+    val root = Scans.scratchDir(spark, sfDir, "evolve")
     val o = Tables.orders(spark, sfDir)
     o.filter(col("o_orderkey") % 2 === 0)
       .select("o_orderkey", "o_totalprice")
@@ -458,7 +449,7 @@ object Sinks {
   /** Per-sfDir root for the DV table (the returned DataFrame reads these
     * paths lazily — see sinkSchemaEvolution's rebinding note). */
   private[operators] def dvRoot(spark: SparkSession, sfDir: String): String =
-    s"${Scans.tmpRoot(spark)}/dv_${Scans.dirKey(sfDir)}"
+    Scans.scratchDir(spark, sfDir, "dv")
 
   /** Step 1 — the immutable data files. Written once; the DELETE below
     * never touches them again (the spec snapshots (name, length, mtime)
@@ -478,8 +469,8 @@ object Sinks {
     * parquet `_metadata` hidden columns supply exactly the (file, row
     * position) coordinate a positional deletion vector addresses — no
     * synthetic id column needs to be baked into the data files. */
-  private def dvScan(spark: SparkSession, root: String): DataFrame =
-    spark.read.parquet(s"$root/data")
+  private def dvScan(spark: SparkSession, paths: String*): DataFrame =
+    spark.read.parquet(paths: _*)
       .select(col("_metadata.file_path").as("_f"),
         col("_metadata.row_index").as("_pos"),
         col("l_orderkey"), col("l_linenumber"),
@@ -498,7 +489,7 @@ object Sinks {
   /** The sidecar writer shared by sink_delete_vectors and the purge
     * fixture's accumulated delete. */
   private def dvWriteSidecar(spark: SparkSession, root: String, pred: Column): Unit =
-    dvScan(spark, root)
+    dvScan(spark, s"$root/data")
       .filter(pred)
       .groupBy(col("_f"))
       .agg(sort_array(collect_list(col("_pos"))).as("del_pos"))
@@ -524,10 +515,14 @@ object Sinks {
   /** Step 3 — the merge-on-read scan: one pass over the data files with
     * the per-file deletion vectors applied in-row (`dvApply`). */
   private[graft] def dvRead(spark: SparkSession, root: String): DataFrame =
-    dvApply(spark, dvScan(spark, root), s"$root/dv")
-      .select(col("l_orderkey"), col("l_linenumber"),
-        round(col("l_quantity"), 2).as("qty"),
-        round(col("l_extendedprice"), 2).as("price"))
+    roundedQtyPrice(dvApply(spark, dvScan(spark, s"$root/data"), s"$root/dv"))
+
+  /** The DV queries' output row: key, line number and the two measures
+    * pinned at 2 dp. */
+  private def roundedQtyPrice(li: DataFrame): DataFrame =
+    li.select(col("l_orderkey"), col("l_linenumber"),
+      round(col("l_quantity"), 2).as("qty"),
+      round(col("l_extendedprice"), 2).as("price"))
 
   /** Row-level DELETE via positional deletion vectors — the merge-on-read
     * maintenance primitive (Iceberg v2 / Delta DVs): lineitem written as
@@ -549,7 +544,7 @@ object Sinks {
     * purge fixture and sink_delete_vectors cannot clobber each other's
     * sidecars inside one session. */
   private[operators] def dvpRoot(spark: SparkSession, sfDir: String): String =
-    s"${Scans.tmpRoot(spark)}/dvp_${Scans.dirKey(sfDir)}"
+    Scans.scratchDir(spark, sfDir, "dvp")
 
   /** Rewrite a file once its deletion vector covers this fraction of its
     * rows — the knob every merge-on-read engine exposes (Delta's DV purge,
@@ -600,13 +595,7 @@ object Sinks {
       s"purge fixture must split the files: purged=${purged.size} kept=${kept.size}")
     val purgedPaths = purged.map(_._1).sorted
     val keptPaths = kept.map(_._1).sorted
-    dvApply(spark,
-        spark.read.parquet(purgedPaths: _*)
-          .select(col("_metadata.file_path").as("_f"),
-            col("_metadata.row_index").as("_pos"),
-            col("l_orderkey"), col("l_linenumber"),
-            col("l_quantity"), col("l_extendedprice")),
-        s"$root/dv")
+    dvApply(spark, dvScan(spark, purgedPaths: _*), s"$root/dv")
       .select("l_orderkey", "l_linenumber", "l_quantity", "l_extendedprice")
       .write.mode("overwrite").parquet(s"$root/data2")
     spark.read.parquet(s"$root/dv").filter(col("_f").isin(keptPaths: _*))
@@ -617,7 +606,7 @@ object Sinks {
   /** Per-file deleted fraction (spec hook — the same file-count-bounded
     * stats the purge decision reads). */
   private[operators] def dvFileFractions(spark: SparkSession, root: String): Map[String, Double] = {
-    val rows = dvScan(spark, root).groupBy(col("_f")).agg(count(lit(1)).as("n"))
+    val rows = dvScan(spark, s"$root/data").groupBy(col("_f")).agg(count(lit(1)).as("n"))
     val dels = spark.read.parquet(s"$root/dv")
       .select(col("_f"), size(col("del_pos")).cast("long").as("d"))
     rows.join(dels, Seq("_f"), "left")
@@ -628,20 +617,11 @@ object Sinks {
   /** Step 4 — the post-purge read: kept originals still merge-on-read
     * against the shrunk sidecar; rewritten files read plain. */
   private[operators] def dvpRead(spark: SparkSession, root: String, keptPaths: Seq[String]): DataFrame = {
-    val keptScan = dvApply(spark,
-        spark.read.parquet(keptPaths: _*)
-          .select(col("_metadata.file_path").as("_f"),
-            col("_metadata.row_index").as("_pos"),
-            col("l_orderkey"), col("l_linenumber"),
-            col("l_quantity"), col("l_extendedprice")),
-        s"$root/dv2")
+    val keptScan = dvApply(spark, dvScan(spark, keptPaths: _*), s"$root/dv2")
       .select("l_orderkey", "l_linenumber", "l_quantity", "l_extendedprice")
-    keptScan.unionByName(
+    roundedQtyPrice(keptScan.unionByName(
         spark.read.parquet(s"$root/data2")
-          .select("l_orderkey", "l_linenumber", "l_quantity", "l_extendedprice"))
-      .select(col("l_orderkey"), col("l_linenumber"),
-        round(col("l_quantity"), 2).as("qty"),
-        round(col("l_extendedprice"), 2).as("price"))
+          .select("l_orderkey", "l_linenumber", "l_quantity", "l_extendedprice")))
   }
 
   /** Deletion-vector PURGE — the maintenance half of the merge-on-read
@@ -664,7 +644,7 @@ object Sinks {
   /** Per-sfDir root for the partition-overwrite table (same per-sfDir
     * keying rationale as dvRoot/dvpRoot). */
   private[operators] def poRoot(spark: SparkSession, sfDir: String): String =
-    s"${Scans.tmpRoot(spark)}/po_${Scans.dirKey(sfDir)}"
+    Scans.scratchDir(spark, sfDir, "po")
 
   /** The partitioned base projection: orders keyed by order-year, the
     * layout a daily/yearly batch job overwrites incrementally. */
@@ -732,7 +712,7 @@ object Sinks {
     * the AGGREGATION key. Narrow projection (the three agg inputs), so the
     * rewrite cost is the clustered columns, not the full table. */
   private[operators] def clusteredCopy(spark: SparkSession, sfDir: String): DataFrame = {
-    val out = s"${Scans.tmpRoot(spark)}/clustered_${Scans.dirKey(sfDir)}"
+    val out = Scans.scratchDir(spark, sfDir, "clustered")
     Tables.lineitem(spark, sfDir)
       .select("l_suppkey", "l_extendedprice", "l_discount")
       .repartitionByRange(clusterFiles(spark, sfDir), col("l_suppkey"))

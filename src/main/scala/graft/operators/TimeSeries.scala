@@ -15,11 +15,37 @@ import graft.Tables
   */
 object TimeSeries {
 
+  /** Global daily revenue — one row per order day with the day's total
+    * price pinned at 2 dp (named `as`): the calendar-sized series every
+    * single-window finance query here runs over. The daily partial-agg
+    * shuffle is the only fact-sized pass. */
+  private def dailyRevenue(spark: SparkSession, sfDir: String, as: String = "rev"): DataFrame =
+    Tables.orders(spark, sfDir)
+      .groupBy(to_date(col("o_orderdate")).as("day"))
+      .agg(round(sum("o_totalprice"), 2).as(as))
+
+  /** Per-segment daily revenue (orders ⋈ customer on the customer key,
+    * grouped by `c_mktsegment` and order day), pinned at 2 dp. */
+  private def segmentDailyRevenue(spark: SparkSession, sfDir: String): DataFrame =
+    Tables.orders(spark, sfDir)
+      .join(Tables.customer(spark, sfDir), col("o_custkey") === col("c_custkey"))
+      .groupBy(col("c_mktsegment").as("seg"), to_date(col("o_orderdate")).as("day"))
+      .agg(round(sum("o_totalprice"), 2).as("rev"))
+
+  /** The whole-market series `mrev`: the segments' daily revenue summed
+    * back per day, pinned at 2 dp. */
+  private def marketRevenue(segDaily: DataFrame): DataFrame =
+    segDaily.groupBy("day").agg(round(sum("rev"), 2).as("mrev"))
+
+  /** Per-type daily event value `v`, pinned at 4 dp. */
+  private def typeDailyValue(spark: SparkSession, sfDir: String): DataFrame =
+    Tables.events(spark, sfDir)
+      .groupBy(col("event_type"), to_date(col("ts_ntz")).as("day"))
+      .agg(round(sum("value"), 4).as("v"))
+
   /** Daily revenue with missing calendar days filled as 0.0. */
   def tsGapfill(spark: SparkSession, sfDir: String): DataFrame = {
-    val daily = Tables.orders(spark, sfDir)
-      .groupBy(to_date(col("o_orderdate")).as("day"))
-      .agg(round(sum("o_totalprice"), 2).as("rev"))
+    val daily = dailyRevenue(spark, sfDir)
     val cal = daily.agg(min("day").as("lo"), max("day").as("hi"))
       .select(explode(sequence(col("lo"), col("hi"), expr("interval 1 day"))).as("day"))
     cal.join(daily, Seq("day"), "left")
@@ -41,9 +67,7 @@ object TimeSeries {
     * points and the interpolation is total. Scale: everything after the
     * first groupBy is calendar×type-bounded, never event-grain. */
   def tsInterpLinear(spark: SparkSession, sfDir: String): DataFrame = {
-    val daily = Tables.events(spark, sfDir)
-      .groupBy(col("event_type"), to_date(col("ts_ntz")).as("day"))
-      .agg(round(sum("value"), 4).as("v"))
+    val daily = typeDailyValue(spark, sfDir)
       .filter(dayofmonth(col("day")) % 3 =!= 0)
     val cal = daily.groupBy("event_type").agg(min("day").as("lo"), max("day").as("hi"))
       .select(col("event_type"),
@@ -148,9 +172,7 @@ object TimeSeries {
     * every emitted value is a full window. Same calendar-sized
     * single-window shape as ts_bollinger. */
   def tsRsi(spark: SparkSession, sfDir: String): DataFrame = {
-    val daily = Tables.orders(spark, sfDir)
-      .groupBy(to_date(col("o_orderdate")).as("day"))
-      .agg(round(sum("o_totalprice"), 2).as("rev"))
+    val daily = dailyRevenue(spark, sfDir)
     val wlag = Window.orderBy("day")
     val w = Window.orderBy("day").rowsBetween(-13, Window.currentRow)
     daily
@@ -178,9 +200,7 @@ object TimeSeries {
     * emitting NULL %B by declaration rather than an engine-specific
     * division artifact. */
   def tsBollinger(spark: SparkSession, sfDir: String): DataFrame = {
-    val daily = Tables.orders(spark, sfDir)
-      .groupBy(to_date(col("o_orderdate")).as("day"))
-      .agg(round(sum("o_totalprice"), 2).as("rev"))
+    val daily = dailyRevenue(spark, sfDir)
     val w = Window.orderBy("day").rowsBetween(-19, Window.currentRow)
     daily
       .withColumn("n_obs", count(lit(1)).over(w))
@@ -213,9 +233,7 @@ object TimeSeries {
     * single unpartitioned window is a non-issue at scale; the heavy lifting
     * (the daily aggregation) is a partial-agg shuffle on the date. */
   def winEwma(spark: SparkSession, sfDir: String): DataFrame = {
-    val daily = Tables.orders(spark, sfDir)
-      .groupBy(to_date(col("o_orderdate")).as("day"))
-      .agg(round(sum("o_totalprice"), 2).as("rev"))
+    val daily = dailyRevenue(spark, sfDir)
     val w = Window.orderBy("day")
     val terms = ewmaWeights.zipWithIndex
     val num = terms.map { case (wt, i) =>
@@ -249,10 +267,7 @@ object TimeSeries {
     * window over the aggregated daily series plus one hash aggregate,
     * exactly the win_running_sum scale shape. */
   def tsDrawdown(spark: SparkSession, sfDir: String): DataFrame = {
-    val daily = Tables.orders(spark, sfDir)
-      .join(Tables.customer(spark, sfDir), col("o_custkey") === col("c_custkey"))
-      .groupBy(col("c_mktsegment").as("seg"), to_date(col("o_orderdate")).as("day"))
-      .agg(round(sum("o_totalprice"), 2).as("rev"))
+    val daily = segmentDailyRevenue(spark, sfDir)
     val w = Window.partitionBy("seg").orderBy("day")
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     val keyed = struct(col("dd").as("d"), col("day"))
@@ -273,11 +288,8 @@ object TimeSeries {
     * statistic meaningful). Daily aggregation is the only fact-sized pass;
     * the windows run over the tiny aggregated series. */
   def winBeta(spark: SparkSession, sfDir: String): DataFrame = {
-    val daily = Tables.orders(spark, sfDir)
-      .join(Tables.customer(spark, sfDir), col("o_custkey") === col("c_custkey"))
-      .groupBy(col("c_mktsegment").as("seg"), to_date(col("o_orderdate")).as("day"))
-      .agg(round(sum("o_totalprice"), 2).as("rev"))
-    val mkt = daily.groupBy("day").agg(round(sum("rev"), 2).as("mrev"))
+    val daily = segmentDailyRevenue(spark, sfDir)
+    val mkt = marketRevenue(daily)
     val w = Window.partitionBy("seg").orderBy("day").rowsBetween(-29, Window.currentRow)
     daily.join(mkt, "day")
       .withColumn("n_days", count(lit(1)).over(w))
@@ -317,10 +329,7 @@ object TimeSeries {
     * The only fact-sized pass is the daily aggregation; the windows run
     * over the aggregated series. */
   def tsRollingVol(spark: SparkSession, sfDir: String): DataFrame = {
-    val daily = Tables.orders(spark, sfDir)
-      .join(Tables.customer(spark, sfDir), col("o_custkey") === col("c_custkey"))
-      .groupBy(col("c_mktsegment").as("seg"), to_date(col("o_orderdate")).as("day"))
-      .agg(round(sum("o_totalprice"), 2).as("rev"))
+    val daily = segmentDailyRevenue(spark, sfDir)
     val wlag = Window.partitionBy("seg").orderBy("day")
     val w = Window.partitionBy("seg").orderBy("day").rowsBetween(-29, Window.currentRow)
     daily
@@ -343,11 +352,8 @@ object TimeSeries {
     * fact-sized; the five correlations are ONE grouped pass over the tiny
     * per-(seg, day) series — wide output, no second shuffle per lag. */
   def tsLeadLagCorr(spark: SparkSession, sfDir: String): DataFrame = {
-    val daily = Tables.orders(spark, sfDir)
-      .join(Tables.customer(spark, sfDir), col("o_custkey") === col("c_custkey"))
-      .groupBy(col("c_mktsegment").as("seg"), to_date(col("o_orderdate")).as("day"))
-      .agg(round(sum("o_totalprice"), 2).as("rev"))
-    val mkt = daily.groupBy("day").agg(round(sum("rev"), 2).as("mrev"))
+    val daily = segmentDailyRevenue(spark, sfDir)
+    val mkt = marketRevenue(daily)
     val w = Window.partitionBy("seg").orderBy("day")
     val rets = daily.join(mkt, "day")
       .withColumn("ret", round(col("rev") / lag("rev", 1).over(w) - 1.0, 6))
@@ -470,9 +476,7 @@ object TimeSeries {
     * daily partial-agg shuffle; both windows run over the calendar-sized
     * (~2.4k rows at any corpus size) aggregate — the win_ewma shape. */
   def tsSeasonalDecompose(spark: SparkSession, sfDir: String): DataFrame = {
-    val daily = Tables.orders(spark, sfDir)
-      .groupBy(to_date(col("o_orderdate")).as("day"))
-      .agg(round(sum("o_totalprice"), 2).as("rev"))
+    val daily = dailyRevenue(spark, sfDir)
     val w7 = Window.orderBy("day").rowsBetween(-3, 3)
     val wWd = Window.partitionBy(dayofweek(col("day")))
     daily
@@ -500,9 +504,7 @@ object TimeSeries {
     * lifting is the daily partial-agg shuffle; both windows run on the
     * calendar-sized daily table (the win_ewma shape). */
   def tsCusum(spark: SparkSession, sfDir: String): DataFrame = {
-    val daily = Tables.events(spark, sfDir)
-      .groupBy(col("event_type"), to_date(col("ts_ntz")).as("day"))
-      .agg(round(sum("value"), 4).as("v"))
+    val daily = typeDailyValue(spark, sfDir)
     val stats = daily.groupBy("event_type")
       .agg(round(avg("v"), 6).as("mu"), round(stddev_samp("v"), 6).as("sigma"))
     val w = Window.partitionBy("event_type").orderBy("day")
@@ -527,9 +529,7 @@ object TimeSeries {
     * partial-aggregate finishes — never seven scans. Pairs with no
     * lagged partner drop from corr on both engines by null semantics. */
   def tsAutocorr(spark: SparkSession, sfDir: String): DataFrame = {
-    val daily = Tables.orders(spark, sfDir)
-      .groupBy(to_date(col("o_orderdate")).as("day"))
-      .agg(round(sum("o_totalprice"), 2).as("x"))
+    val daily = dailyRevenue(spark, sfDir, "x")
     val w = Window.orderBy("day")
     val lagCols = (1 to 7).map(l => lag("x", l).over(w).as(s"y$l"))
     val pairs = (1 to 7).map(l =>
@@ -557,9 +557,7 @@ object TimeSeries {
     * pre-agg scan grows with data. Exact interpolated medians; slope at
     * 6, intercept at 4. */
   def tsTheilSen(spark: SparkSession, sfDir: String): DataFrame = {
-    val dailyAll = Tables.orders(spark, sfDir)
-      .groupBy(to_date(col("o_orderdate")).as("day"))
-      .agg(round(sum("o_totalprice"), 2).as("y"))
+    val dailyAll = dailyRevenue(spark, sfDir, "y")
     val bound = dailyAll.agg(max("day").as("dmax"))
     val daily = Fanout.broadcastAll(dailyAll, bound, col("day"), col("dmax"))
       .filter(datediff(col("dmax"), col("day")) < 365)

@@ -56,9 +56,9 @@ object StreamOps {
       "p_user = e_user AND e_ts >= p_ts - INTERVAL 1 HOUR AND e_ts <= p_ts"))
   }
 
-  /** Spark 4 arbitrary state v2: the same running per-user count as
-    * `runningUserCounts`, via transformWithState + ValueState (requires the
-    * RocksDB state store provider; the spec sets it). */
+  /** Arbitrary stateful processing: a running per-user event count, via
+    * Spark 4's transformWithState + ValueState (requires the RocksDB state
+    * store provider; the spec sets it). */
   class RunningCountProcessor extends StatefulProcessor[Long, Evt, (Long, Long)] {
     @transient private var count: ValueState[Long] = _
     override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
@@ -71,7 +71,7 @@ object StreamOps {
     }
   }
 
-  def runningUserCountsV2(events: Dataset[Evt]): Dataset[(Long, Long)] = {
+  def runningUserCounts(events: Dataset[Evt]): Dataset[(Long, Long)] = {
     import events.sparkSession.implicits._
     events.groupByKey(_.user)
       .transformWithState(new RunningCountProcessor, TimeMode.None(), OutputMode.Update())
@@ -103,7 +103,7 @@ object StreamOps {
     }
   }
 
-  def topkPerUserV2(events: Dataset[Evt], k: Int): Dataset[(Long, Seq[Double])] = {
+  def topkPerUser(events: Dataset[Evt], k: Int): Dataset[(Long, Seq[Double])] = {
     import events.sparkSession.implicits._
     events.groupByKey(_.user)
       .transformWithState(new TopKProcessor(k), TimeMode.None(), OutputMode.Update())
@@ -375,19 +375,6 @@ object StreamOps {
     graft.operators.Graph.ccPropagate(sym, 0)
   }
 
-  /** Arbitrary stateful processing: running per-user event count
-    * (mapGroupsWithState; update output mode). */
-  def runningUserCounts(events: Dataset[Evt]): Dataset[(Long, Long)] = {
-    import events.sparkSession.implicits._
-    events.groupByKey(_.user)
-      .mapGroupsWithState(GroupStateTimeout.NoTimeout) {
-        (user: Long, batch: Iterator[Evt], state: GroupState[Long]) =>
-          val total = state.getOption.getOrElse(0L) + batch.size
-          state.update(total)
-          (user, total)
-      }
-  }
-
   /** Last-touch attribution as a stateful stream — the online form of the
     * batch `EventTime.evtAttribution` as-of lookup. Per-user state is ONE
     * long (the latest click's epoch-µs); each purchase is emitted exactly
@@ -503,7 +490,8 @@ case class AttrEvt(us: Long, user: Long, etype: String, value: Double, id: Long)
   * Protocol: `initTarget` writes snapshot v0 before the stream starts. For
   * a NEW batch id, `mergeBatch` reads the latest snapshot v_k, applies
   * `Sinks.upsert` (the same full-outer-join MERGE kernel the batch
-  * sink_merge_upsert runs) and writes v_{k+1}, then marks the id applied.
+  * sink_merge_upsert runs), drops the kernel's `op` audit column and
+  * writes v_{k+1}, then marks the id applied.
   * An already-applied id returns WITHOUT touching state, so redeliveries —
   * in order or out of order — converge to exactly-once application.
   * StreamingSpec feeds sink_merge_upsert's changeset through micro-batches,
@@ -537,6 +525,7 @@ object MergeSink {
     val v = latestVersion(root)
     require(v >= 0, s"MergeSink target $root not initialized (call initTarget)")
     graft.operators.Sinks.upsert(spark.read.parquet(s"$root/v$v"), batch, key)
+      .drop("op")
       .write.mode("overwrite").parquet(s"$root/v${v + 1}")
     appliedMarker(root, batchId).createNewFile(): Unit
   }

@@ -216,8 +216,9 @@ object ScaleStress {
     * shape, not an implementation defect, and re-paying it twice per sweep
     * teaches nothing. The linear-work dedup semantics
     * (`llm_minhash_dedup_keep`: star edges to each bucket's min + connected
-    * components) runs at every scale in its place. */
-  /** `graph_triangles` is capped at 10: wedge enumeration is Θ(Σ dout²)
+    * components) runs at every scale in its place.
+    *
+    * `graph_triangles` is capped at 10: wedge enumeration is Θ(Σ dout²)
     * BY DEFINITION — linear in nodes only through a degree²-sized
     * constant (~2.5k wedge rows per node on this co-purchase graph), so
     * ×100 means ~5×10⁹ wedge rows through the semi-join. The ×10 point

@@ -4,19 +4,11 @@ import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared local session for specs (one JVM, sequential suites — the session
-  * is shared via getOrCreate and intentionally never stopped). */
+  * is shared via getOrCreate and intentionally never stopped): the same
+  * `graft.Session` the harness mains run under, 4 cores unless
+  * SPARK_GRAFT_CPUS says otherwise. */
 trait SparkSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  lazy val spark: SparkSession = graft.Session.build(defaultCpus = 4)
   // Naming: the val drops the decimal point, NOT a digit — sf001 is
   // scale factor 0.001, sf01 is 0.01 (a round-11 advisory misread sf01
   // as sf0.1; any spec comment citing a scale factor means these paths).

@@ -119,7 +119,7 @@ class LlmSpec extends SparkSpec {
     }
   }
 
-  /** Chain-family texts A~B~C with A≁C, found by graft.tools.DetachSearch
+  /** Chain-family texts A~B~C with A≁C, found by a one-off fixture search
     * (round 10) under the mod-prime minhash and then pinned: est(A,B)=0.875
     * and est(B,C)=0.813 (both ≥ 0.8), est(A,C)=0.719 (< 0.8), AND the band
     * structure satisfies (i) every band where B and C bucket together also

@@ -71,7 +71,7 @@ class PlanSpec extends SparkSpec {
   test("partitioned read prunes to the filtered partition") {
     // materialize the partitioned layout first (the query writes then reads)
     Scans.sourcePartitionedPrune(spark, sf001).collect()
-    val tmp = s"${Scans.tmpRoot(spark)}/part_orders_${Scans.dirKey(sf001)}"
+    val tmp = Scans.scratchDir(spark, sf001, "part_orders")
     val plan = formatted(spark.read.parquet(tmp).filter(col("o_year") === 1996)
       .groupBy("o_orderstatus").count())
     val pf = plan.linesIterator.find(_.contains("PartitionFilters")).getOrElse("")

@@ -46,7 +46,7 @@ class Round6OpsSpec extends SparkSpec {
     assert(summary.getLong(1) === Tables.lineitem(spark, sf001).count(), "row preservation")
     // range partitioning ⇒ per-file [min,max] l_orderkey ranges must not
     // overlap — that's what lets parquet footer stats prune whole files
-    val tmp = s"${Scans.tmpRoot(spark)}/compact_lineitem_${Scans.dirKey(sf001)}"
+    val tmp = Scans.scratchDir(spark, sf001, "compact_lineitem")
     val ranges = spark.read.parquet(tmp)
       .select(input_file_name().as("f"), col("l_orderkey"))
       .groupBy("f")

@@ -251,7 +251,7 @@ class Round6bOpsSpec extends SparkSpec {
     import org.apache.spark.sql.execution.FileSourceScanExec
     import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
     Sinks.sinkCompaction(spark, sf001).collect(): Unit
-    val tmp = s"${Scans.tmpRoot(spark)}/compact_lineitem_${Scans.dirKey(sf001)}"
+    val tmp = Scans.scratchDir(spark, sf001, "compact_lineitem")
     val all = spark.read.parquet(tmp)
     val total = all.count()
     // a predicate inside the FIRST file's key range: disjoint per-file

@@ -209,7 +209,7 @@ class StreamingSpec extends SparkSpec {
     spark.conf.set("spark.sql.streaming.stateStore.providerClass",
       "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     val in = MemoryStream[Evt]
-    val q = StreamOps.runningUserCountsV2(in.toDS())
+    val q = StreamOps.runningUserCounts(in.toDS())
       .toDF("user", "total")
       .writeStream.format("memory").queryName("t_tws").outputMode("update").start()
     try {
@@ -236,7 +236,7 @@ class StreamingSpec extends SparkSpec {
     spark.conf.set("spark.sql.streaming.stateStore.providerClass",
       "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     val in = MemoryStream[Evt]
-    val q = StreamOps.topkPerUserV2(in.toDS(), 3)
+    val q = StreamOps.topkPerUser(in.toDS(), 3)
       .toDF("user", "top")
       .writeStream.format("memory").queryName("t_topk").outputMode("update").start()
     try {
@@ -403,24 +403,6 @@ class StreamingSpec extends SparkSpec {
         case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
       }
     }
-  }
-
-  test("mapGroupsWithState keeps a running per-user count across batches") {
-    import spark.implicits._
-    implicit val ctx = spark.sqlContext
-    val in = MemoryStream[Evt]
-    val q = StreamOps.runningUserCounts(in.toDS())
-      .toDF("user", "total")
-      .writeStream.format("memory").queryName("t_state").outputMode("update").start()
-    try {
-      in.addData(evt("10:00"), evt("10:01"), evt("10:02", user = 2L))
-      q.processAllAvailable()
-      in.addData(evt("10:10"))
-      q.processAllAvailable()
-      val latest = spark.sql("SELECT user, max(total) FROM t_state GROUP BY user").collect()
-        .map(r => (r.getLong(0), r.getLong(1))).toMap
-      assert(latest == Map(1L -> 3L, 2L -> 1L))
-    } finally q.stop()
   }
 
   test("streaming CUSUM reproduces the batch change-point rows exactly") {

@@ -1,0 +1,41 @@
+#!/usr/bin/env bash
+# Compare two graft.tools.ExplainAll dump directories (one <query>.txt
+# formatted physical plan per query), typically the parent commit's and a
+# change's. Run-specific tokens are replaced before comparing: expression
+# ids (#123), object identity hashes (@1a2b3c4d), lambda class names, RDD
+# ids, source line numbers, plan_id=, application ids and part-file UUIDs.
+# Prints every query whose normalized plan differs (with a unified diff)
+# or that exists on one side only; exits 1 on any difference, 0 when the
+# two directories hold the same plans.
+#
+# Usage: tools/plan_diff.sh <dirA> <dirB>
+set -uo pipefail
+A=${1:?usage: tools/plan_diff.sh <dirA> <dirB>}
+B=${2:?usage: tools/plan_diff.sh <dirA> <dirB>}
+
+normalize() {
+  sed -E \
+    -e 's/#[0-9]+/#N/g' \
+    -e 's/Lambda[$0-9]*\/0x[0-9a-f]+/Lambda/g' \
+    -e 's/@[0-9a-f]{4,}\b/@H/g' \
+    -e 's/RDD\[[0-9]+\]/RDD[N]/g' \
+    -e 's/\.scala:[0-9]+/.scala:N/g' \
+    -e 's/plan_id=[0-9]+/plan_id=N/g' \
+    -e 's/(local|app)-[0-9]{6,}(-[0-9]+)?/\1-N/g' \
+    -e 's/part-[0-9]+-[0-9a-f]{8}(-[0-9a-f]{4}){3}-[0-9a-f]{12}/part-N-UUID/g' \
+    "$1"
+}
+
+differ=0
+for q in $( (ls "$A"; ls "$B") | grep '\.txt$' | sort -u); do
+  name=${q%.txt}
+  if [ ! -f "$A/$q" ]; then echo "only in $B: $name"; differ=1; continue; fi
+  if [ ! -f "$B/$q" ]; then echo "only in $A: $name"; differ=1; continue; fi
+  if ! out=$(diff -u --label "$A/$q" --label "$B/$q" \
+      <(normalize "$A/$q") <(normalize "$B/$q")); then
+    echo "plan differs: $name"
+    echo "$out"
+    differ=1
+  fi
+done
+exit $differ
