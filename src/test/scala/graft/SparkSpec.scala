@@ -40,4 +40,10 @@ trait SparkSpec extends AnyFunSuite {
       "output dtypes outside the driver-proven set (preverify PROVEN_DTYPES): " +
         bad.map(f => s"${f.name}:${f.dataType.simpleString}").mkString(", "))
   }
+
+  /** Every message along a throwable's cause chain, outermost first — a
+    * failure raised inside a task reaches the driver wrapped, so specs
+    * match the message they expect anywhere in the chain. */
+  def messages(t: Throwable): List[String] =
+    if (t == null) Nil else Option(t.getMessage).toList ++ messages(t.getCause)
 }

@@ -1,0 +1,153 @@
+package graft.operators
+
+import graft.SparkSpec
+import org.apache.spark.sql.functions._
+
+/** Specs for `Aggregations`: the exact decimal path and its overflow
+  * guard, the finance formulas' bounds, and giniCore's bucket
+  * decomposition. */
+class AggregationsSpec extends SparkSpec {
+
+  test("q1_decimal minor units agree with the double-path flagship") {
+    // independent paths: q1_decimal sums exact DECIMAL minor units into
+    // BIGINT; the flagship sums doubles and rounds at 2. On 2-decimal
+    // source data they must agree to the flagship's rounding quantum —
+    // and the dtype contract (BIGINT out, SURVEY §5.7) must hold.
+    val dec = Aggregations.aggPricingDecimal(spark, sf01)
+    assert(Seq("sum_qty_c2", "sum_base_price_c2", "sum_disc_price_u4", "sum_charge_u6")
+      .forall(c => dec.schema(c).dataType == org.apache.spark.sql.types.LongType),
+      "minor-unit sums must be BIGINT (the driver-proven dtype)")
+    val flag = Aggregations.aggPricingSummary(spark, sf01)
+      .select(col("l_returnflag"), col("l_linestatus"), col("sum_qty"),
+        col("sum_base_price"), col("sum_disc_price"), col("sum_charge"),
+        col("count_order").as("count_order_flag"))
+    val j = dec.join(flag, Seq("l_returnflag", "l_linestatus")).collect()
+    assert(j.nonEmpty)
+    // tolerance = the flagship's rounding quantum plus its double-sum
+    // accumulation error (relative ~1e-9 on 1e8-magnitude group sums)
+    def close(exactMinor: Long, unit: Double, dbl: Double): Boolean = {
+      val exact = exactMinor / unit
+      math.abs(exact - dbl) <= 0.011 + 1e-8 * math.abs(exact)
+    }
+    j.foreach { r =>
+      assert(close(r.getAs[Long]("sum_qty_c2"), 100.0, r.getAs[Double]("sum_qty")))
+      assert(close(r.getAs[Long]("sum_base_price_c2"), 100.0, r.getAs[Double]("sum_base_price")))
+      assert(close(r.getAs[Long]("sum_disc_price_u4"), 1e4, r.getAs[Double]("sum_disc_price")))
+      assert(close(r.getAs[Long]("sum_charge_u6"), 1e6, r.getAs[Double]("sum_charge")))
+      assert(r.getAs[Long]("count_order") == r.getAs[Long]("count_order_flag"))
+    }
+  }
+
+  test("toLongChecked passes in-range sums through and RAISES on BIGINT overflow") {
+    import spark.implicits._
+    // in range: identical to a plain cast
+    val ok = Seq("1", "-9223372036854775808", "9223372036854775807")
+      .toDF("s").select(Aggregations.toLongChecked(col("s").cast("decimal(38,0)"), "v").as("v"))
+    assert(ok.collect().map(_.getLong(0)).toSeq ===
+      Seq(1L, Long.MinValue, Long.MaxValue))
+    // out of range: the plain cast would yield NULL (non-ANSI); the guard
+    // must fail the job loudly instead, carrying the column name
+    val over = Seq("9223372036854775808") // Long.MaxValue + 1
+      .toDF("s").select(Aggregations.toLongChecked(col("s").cast("decimal(38,0)"), "sum_charge_u6"))
+    val e = intercept[Exception](over.collect())
+    assert(messages(e).exists(_.contains("sum_charge_u6")),
+      s"overflow must raise with the column name, got: ${messages(e).mkString(" | ")}")
+    // Mode independence (what the guard buys): Spark 4 defaults ANSI ON,
+    // where the plain cast raises CAST_OVERFLOW but names no column;
+    // under ansi=false — the legacy mode — the plain cast is WORSE than
+    // the advisory's "silent NULLs": it silently WRAPS (2⁶³ comes back
+    // as Long.MinValue — corrupted money, no error at all). The guard
+    // fails loudly WITH the column name in both modes.
+    val prev = spark.conf.get("spark.sql.ansi.enabled")
+    try {
+      spark.conf.set("spark.sql.ansi.enabled", "false")
+      val silent = Seq("9223372036854775808").toDF("s")
+        .select(col("s").cast("decimal(38,0)").cast("long")).head()
+      assert(!silent.isNullAt(0) && silent.getLong(0) === Long.MinValue,
+        s"plain cast under ansi=false silently wraps — the corruption the guard closes; got $silent")
+      val e2 = intercept[Exception](Seq("9223372036854775808").toDF("s")
+        .select(Aggregations.toLongChecked(col("s").cast("decimal(38,0)"), "sum_charge_u6"))
+        .collect())
+      assert(messages(e2).exists(_.contains("sum_charge_u6")),
+        "guard must raise with the column name under ansi=false too")
+    } finally spark.conf.set("spark.sql.ansi.enabled", prev)
+  }
+
+  test("round-18 finance rows hold their definitional bounds on real data") {
+    // the oracle proves value equality; these pin the FORMULAS' invariant
+    // ranges so a future refactor that stays self-consistent across both
+    // engines (and so still hash-matches) but breaks the definition fails
+    import org.apache.spark.sql.functions.col
+    val gini = Aggregations.aggGini(spark, sf01)
+    assert(gini.filter(col("gini") < 0.0 || col("gini") >= 1.0).count() === 0,
+      "Gini out of [0, 1)")
+    assert(gini.count() === 5, "one row per market segment")
+    val rsi = TimeSeries.tsRsi(spark, sf01)
+    assert(rsi.filter(col("rsi") < 0.0 || col("rsi") > 100.0).count() === 0,
+      "RSI out of [0, 100]")
+    val ent = Aggregations.aggEntropy(spark, sf01)
+    assert(ent.filter(col("entropy_norm") < 0.0 || col("entropy_norm") > 1.0).count() === 0,
+      "normalized entropy out of [0, 1]")
+    assert(ent.filter(col("entropy") < 0.0).count() === 0, "entropy negative")
+    val gk = TimeSeries.tsGarmanKlass(spark, sf01)
+    assert(gk.filter(col("gk_vol") < 0.0).count() === 0, "GK vol negative")
+    val boll = TimeSeries.tsBollinger(spark, sf01)
+    assert(boll.filter(col("upper") < col("lower")).count() === 0,
+      "upper band below lower")
+    Seq(gini, rsi, ent, gk, boll).foreach(assertProvenDtypes)
+  }
+
+  private def giniRef(rows: Seq[(String, Long, Long)]): Map[String, (Long, BigInt, Double)] =
+    rows.groupBy(_._1).map { case (seg, rs) =>
+      val sorted = rs.sortBy(r => (r._3, r._2))
+      val n = sorted.size.toLong
+      val total = sorted.map(r => BigInt(r._3)).sum
+      val s1 = sorted.zipWithIndex.map { case (r, i) => BigInt(i + 1) * BigInt(r._3) }.sum
+      val gini = 2.0 * s1.toDouble / (n.toDouble * total.toDouble) - (n + 1.0) / n
+      seg -> (n, total, math.rint(gini * 1e6) / 1e6)
+    }
+
+  test("giniCore: bucket decomposition is invariant in the bucket count and matches the exact reference") {
+    import spark.implicits._
+    val rng = new scala.util.Random(42)
+    val rows = (1L to 400L).map { k =>
+      (Seq("AUTO", "BUILDING", "MACH")(rng.nextInt(3)), k, 100L + rng.nextInt(100000))
+    }
+    val cust = rows.toDF("seg", "c_custkey", "cents")
+    val ref = giniRef(rows)
+    for (nb <- Seq(1, 3, 17, 256)) {
+      val got = Aggregations.giniCore(cust, nb).collect()
+        .map(r => r.getString(0) -> (r.getLong(1), r.getLong(2), r.getDouble(3)))
+        .toMap
+      assert(got.keySet === ref.keySet, s"nb=$nb segment set")
+      ref.foreach { case (seg, (n, total, gini)) =>
+        val (gn, gt, gg) = got(seg)
+        assert(gn === n, s"nb=$nb $seg n_cust")
+        assert(BigInt(gt) === total, s"nb=$nb $seg total_cents")
+        assert(math.abs(gg - gini) < 1e-9, s"nb=$nb $seg gini: got $gg want $gini")
+      }
+    }
+  }
+
+  test("giniCore: s1 past Long.MaxValue stays exact (decimal accumulation, r18 ADVICE)") {
+    import spark.implicits._
+    // 2000 customers at ~4.5e15 cents each: total_cents ≈ 9.0e18 (still a
+    // legal BIGINT — total is LINEAR in n, it is s1 that is quadratic) but
+    // sum(rk*cents) ≈ 9e21 ≫ Long.MaxValue — the old LONG s1 aborts under
+    // ANSI (and wraps without it); DECIMAL(38,0) is exact and the final
+    // double division matches the BigInt reference.
+    val rows = (1L to 2000L).map(k => ("HUGE", k, 4500000000000000L + k * 13L))
+    val cust = rows.toDF("seg", "c_custkey", "cents")
+    val ref = giniRef(rows)("HUGE")
+    val s1 = rows.sortBy(r => (r._3, r._2)).zipWithIndex
+      .map { case (r, i) => BigInt(i + 1) * BigInt(r._3) }.sum
+    assert(s1 > BigInt(Long.MaxValue),
+      "fixture must put s1 = sum(rk*cents) past Long range")
+    val r = Aggregations.giniCore(cust, 8).collect()
+    assert(r.length === 1)
+    assert(r(0).getLong(1) === ref._1)
+    assert(BigInt(r(0).getLong(2)) === ref._2)
+    assert(math.abs(r(0).getDouble(3) - ref._3) < 1e-9,
+      s"overflow-range gini: got ${r(0).getDouble(3)} want ${ref._3}")
+  }
+}

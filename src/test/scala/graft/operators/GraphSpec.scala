@@ -1,64 +1,25 @@
 package graft.operators
 
 import graft.SparkSpec
+import graft.functions.sortedDistinct
+import org.apache.spark.sql.functions._
 
-/** Round-20 (optimization round) invariants.
-  *
-  *  - `graft_sign_bucket` (the native IVF sign-projection bucket that
-  *    replaced bucketCol's MaxBits×(zip_with+aggregate) interpreted-HOF
-  *    tree) must be BIT-EQUAL to the old Column formulation on every
-  *    input class the old form could see, including its null-poisoning
-  *    edge cases: the Column sum-of-whens collapsed a null embedding, a
-  *    null element, or a wrong-length vector to bucket 0, never null.
-  *  - the grouped in-row pair enumeration (collect_list →
-  *    `graft_sorted_distinct` → double codegen explode, the exact
-  *    Graph.orderPairs composition that replaced the graph builders'
-  *    lineitem self-join) must emit, per order, EXACTLY the distinct
-  *    ordered pair set the self-join produced — duplicated parts,
-  *    single-line orders and null parts included — with no within-order
-  *    duplicates (graph_cc's support count relies on one-pair-per-order).
-  */
-class Round20OpsSpec extends SparkSpec {
+/** Specs for `Graph`: connected-component convergence on an
+  * odd-diameter path and the observed convergence sum, the in-row
+  * co-purchase pair stream, and PageRank's literal-n recurrence. */
+class GraphSpec extends SparkSpec {
 
-  import org.apache.spark.sql.functions._
-import graft.functions.{signBucket, sortedDistinct}
-
-  test("graft_sign_bucket is bit-equal to the legacy Column bucket, null edges included") {
+  test("ccPropagate: odd-diameter path converges exactly under any round schedule") {
     import spark.implicits._
-    val rng = new scala.util.Random(7)
-    def vec(): Seq[java.lang.Float] =
-      Seq.fill(64)(java.lang.Float.valueOf((rng.nextFloat() - 0.5f) * 10f))
-    val normal = (1 to 200).map(i => (i.toLong, vec()))
-    val withNullElem = {
-      val v = vec().toArray; v(17) = null; Seq((9001L, v.toSeq))
-    }
-    val shortVec = Seq((9002L, vec().take(63)))
-    val longVec = Seq((9003L, vec() ++ Seq(java.lang.Float.valueOf(1.0f))))
-    val nanVec = {
-      val v = vec().toArray; v(0) = java.lang.Float.valueOf(Float.NaN); Seq((9004L, v.toSeq))
-    }
-    val nullVec = Seq((9005L, null: Seq[java.lang.Float]))
-    val rows = normal ++ withNullElem ++ shortVec ++ longVec ++ nanVec ++ nullVec
-    val df = rows.toDF("vec_id", "embedding")
-      .withColumn("embedding", col("embedding").cast("array<float>"))
-    for (b <- Seq(0, 1, 5, 8, 16)) {
-      val got = df.select(col("vec_id"),
-          signBucket(col("embedding"), lit(b)).as("native"),
-          LlmVector.bucketColLegacy(col("embedding"), lit(b)).as("legacy"))
-        .collect()
-      got.foreach { r =>
-        assert(!r.isNullAt(1) && !r.isNullAt(2),
-          s"bucket must never be null (vec ${r.getLong(0)}, b=$b)")
-        assert(r.getLong(1) === r.getLong(2),
-          s"native vs legacy bucket diverge at vec ${r.getLong(0)}, b=$b: " +
-            s"${r.getLong(1)} vs ${r.getLong(2)}")
-      }
-      // the normal vectors must actually spread across buckets at b>0 —
-      // a both-sides-zero bug would otherwise pass the equality vacuously
-      if (b >= 5)
-        assert(got.take(200).map(_.getLong(1)).distinct.length > 8,
-          s"buckets degenerate at b=$b")
-    }
+    // Path 1-2-3-4-5-6 (5 hops of propagation needed — odd, so a paired
+    // schedule's fixpoint lands mid-round) plus a separate 2-cycle {10, 11}.
+    val und = Seq((1L, 2L), (2L, 3L), (3L, 4L), (4L, 5L), (5L, 6L), (10L, 11L))
+    val sym = und.flatMap { case (a, b) => Seq((a, b), (b, a)) }.toDF("a", "b")
+    val lab = Graph.ccPropagate(sym, 0).collect()
+      .map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert((1L to 6L).forall(lab(_) == 1L), s"path component labels: $lab")
+    assert(lab(10L) === 10L && lab(11L) === 10L, s"pair component labels: $lab")
+    assert(lab.size === 8)
   }
 
   // ccPropagate's convergence sum now rides the checkpoint job as an

@@ -1,39 +1,10 @@
 package graft.operators
 
-import org.apache.spark.sql.functions._
 import graft.SparkSpec
+import org.apache.spark.sql.functions._
 
-/** Round-17 invariants — the driver-side scalar mirrors of the IVF laws
-  * (the stream serve sizes its probe with them) agree with the Column
-  * expressions the batch build plans with, value by value, so the two
-  * paths probe the same cells; and the fuzzy top-k join's k cap.
-  */
-class Round17OpsSpec extends SparkSpec {
-
-  test("probe-law scalar mirror agrees with the Column law at every bit budget") {
-    import spark.implicits._
-    val got = (0 to 16).toDF("b")
-      .select(col("b"), LlmVector.nprobeCol(col("b")).cast("int").as("np"))
-      .collect().map(r => r.getInt(0) -> r.getInt(1)).toMap
-    (0 to 16).foreach { b =>
-      assert(got(b) === LlmVector.nprobeScalar(b),
-        s"b=$b: Column ${got(b)} vs scalar ${LlmVector.nprobeScalar(b)}")
-      assert(got(b) === 3 + 2 * b, s"probe law drifted at b=$b: ${got(b)} != ${3 + 2 * b}")
-    }
-  }
-
-  test("bucket-bit scalar mirror agrees with the Column law across both regimes") {
-    import spark.implicits._
-    val ns = Seq(200L, 500L, 2000L, 20000L, 60000L, 131072L, 131073L,
-      200000L, 600000L, 2097152L, 8388608L, 8600000000L, 1000000000000L)
-    val got = ns.toDF("n")
-      .select(col("n"), LlmVector.bucketBits(col("n")).as("b"))
-      .collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
-    ns.foreach { n =>
-      assert(got(n) === LlmVector.bucketBitsScalar(n),
-        s"bucketBits($n): Column ${got(n)} vs scalar ${LlmVector.bucketBitsScalar(n)}")
-    }
-  }
+/** Specs for `Joins`: the fuzzy top-k join's k cap and ordering. */
+class JoinsSpec extends SparkSpec {
 
   test("fuzzy top-k: hand-computed fixture — k cap, ed-before-key order, block isolation") {
     import spark.implicits._

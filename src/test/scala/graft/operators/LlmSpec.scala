@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.SparkSpec
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Specs for the rows-only (non-oracle-checkable) LLM-pipeline operators:
@@ -9,12 +10,18 @@ import org.apache.spark.sql.functions._
   * known near-duplicates, since the synthetic corpus has none. */
 class LlmSpec extends SparkSpec {
 
+  /** The first n tokens of the fixture vocabulary: 16 words cycled, each
+    * suffixed with its pass number (key0 … index0, key1 …). */
+  private def fixtureTokens(n: Int): Seq[String] = {
+    val words = Seq("key", "agg", "row", "scan", "slow", "fast", "table", "value",
+      "part", "hash", "join", "sort", "group", "filter", "map", "index")
+    (0 until n).map(i => words(i % 16) + (i / 16))
+  }
+
   private lazy val fixtureDir: String = {
     val dir = s"${System.getProperty("java.io.tmpdir")}/graft_llm_fixture"
     import spark.implicits._
-    val words = Seq("key", "agg", "row", "scan", "slow", "fast", "table", "value",
-      "part", "hash", "join", "sort", "group", "filter", "map", "index")
-    val base = (0 until 48).map(i => words(i % 16) + (i / 16)).mkString(" ")
+    val base = fixtureTokens(48).mkString(" ")
     val nearDup = base.replace("hash2", "hashx") // 1 of 48 tokens differs → shingle J ≈ 0.87
     val distinct = "alpha beta gamma delta epsilon zeta eta theta iota kappa lambda mu nu xi omicron"
     Seq(
@@ -61,9 +68,7 @@ class LlmSpec extends SparkSpec {
     // bucket). The keep query must collapse the family with O(family) work.
     val dir = s"${System.getProperty("java.io.tmpdir")}/graft_llm_family_fixture"
     import spark.implicits._
-    val words = Seq("key", "agg", "row", "scan", "slow", "fast", "table", "value",
-      "part", "hash", "join", "sort", "group", "filter", "map", "index")
-    val base = (0 until 48).map(i => words(i % 16) + (i / 16)).mkString(" ")
+    val base = fixtureTokens(48).mkString(" ")
     val rows = (0 until 6).map(i => (10L + i, s"$base shard$i", "en", "src0", (base.length + 7).toLong)) :+
       ((20L, "alpha beta gamma delta epsilon zeta eta theta iota kappa", "en", "src0", 52L))
     rows.toDF("doc_id", "text", "lang", "source", "n_chars")
@@ -86,9 +91,7 @@ class LlmSpec extends SparkSpec {
     // makes the pair listing quadratic
     val dir = s"${System.getProperty("java.io.tmpdir")}/graft_llm_family_$n"
     import spark.implicits._
-    val words = Seq("key", "agg", "row", "scan", "slow", "fast", "table", "value",
-      "part", "hash", "join", "sort", "group", "filter", "map", "index")
-    val base = (0 until 48).map(i => words(i % 16) + (i / 16)).mkString(" ")
+    val base = fixtureTokens(48).mkString(" ")
     (0 until n).map(i => (100L + i, s"$base shard$i", "en", "src0", (base.length + 7).toLong))
       .toDF("doc_id", "text", "lang", "source", "n_chars")
       .coalesce(1).write.mode("overwrite").parquet(s"$dir/documents.parquet")
@@ -127,9 +130,7 @@ class LlmSpec extends SparkSpec {
     * or detaches is decided ONLY by which doc is the bucket min. All
     * deterministic (fixed permutation constants). */
   private lazy val chainTexts: (String, String, String) = {
-    val words = Seq("key", "agg", "row", "scan", "slow", "fast", "table", "value",
-      "part", "hash", "join", "sort", "group", "filter", "map", "index")
-    val base = (0 until 60).map(i => words(i % 16) + (i / 16))
+    val base = fixtureTokens(60)
     def variant(tag: String, ps: Seq[Int]): String =
       ps.foldLeft(base)((acc, p) => acc.updated(p, tag + p)).mkString(" ")
     (variant("axx", Seq(0, 13)), base.mkString(" "), variant("cxx", Seq(37, 48, 59)))
@@ -261,6 +262,14 @@ class LlmSpec extends SparkSpec {
     assert(recall >= 0.4, s"recall@5 at sf0.1 was $recall — the nprobe budget regressed")
   }
 
+  /** The float-resident counterpart of the IVF-PQ codes index: every
+    * vector in its own cell with its full embedding and norm. */
+  private def floatIndex(sfDir: String): DataFrame = {
+    val own = LlmVector.ownCell(spark, sfDir).select("vec_id", "cell")
+    LlmVector.emb(spark, sfDir).select(col("vec_id").as("b"), col("embedding"), col("nrm"))
+      .join(own, col("b") === col("vec_id")).select("b", "cell", "embedding", "nrm")
+  }
+
   test("IVF-PQ recall@5 holds the plain-IVF floor; codes index is measurably smaller") {
     val sfBig = "/root/testdata/sf0.1"
     // recall vs exact, same protocol as the plain-IVF gate — the refine
@@ -291,8 +300,8 @@ class LlmSpec extends SparkSpec {
       delta
     }
     val n = graft.Tables.embeddings(spark, sfBig).count()
-    val codeBytes = cachedBytes(LlmVector.pqIndexForSpec(spark, sfBig))
-    val floatBytes = cachedBytes(LlmVector.floatIndexForSpec(spark, sfBig))
+    val codeBytes = cachedBytes(LlmVector.buildPqIndex(spark, sfBig))
+    val floatBytes = cachedBytes(floatIndex(sfBig))
     assert(codeBytes > 0 && floatBytes > 0)
     // per-row accounting at Dim=64: the PAYLOAD shrinks exactly 4× (256
     // float bytes → 64 code bytes per vector) but each row also carries

@@ -232,4 +232,26 @@ class PlanSpec extends SparkSpec {
       }
     assert(offenders.isEmpty, s"cross products in: ${offenders.sorted.mkString(", ")}")
   }
+
+  test("every spec-gated (no-oracle) query emits only driver-proven output dtypes") {
+    val specGated = graft.SparkEntry.queries.keySet -- graft.SparkEntry.oracleSql.keySet
+    // the population itself is pinned: a new ✗-oracle row must be added
+    // here CONSCIOUSLY (and SURVEY §2 updated), not slip in ungated
+    val declared = Set(
+      "agg_approx_distinct", "agg_approx_percentile", "agg_cms_merge",
+      "agg_hll_merge", "agg_quantile_merge", "agg_theta_intersect",
+      "llm_ann_ivfpq", "llm_bpe_encode", "llm_bpe_merges",
+      "llm_dedup_minhash", "llm_minhash_dedup_keep", "llm_mmr_rerank",
+      "llm_simhash", "llm_simhash_neardup", "llm_split_neardup_safe",
+      "sink_compaction", "sink_zorder")
+    assert(specGated === declared,
+      s"spec-gated population drifted: +${specGated -- declared} -${declared -- specGated}")
+    // schema-only pass: building the plan is enough to read output dtypes
+    // (some builders are eagerly side-effecting — sinks write their
+    // fixture — but none needs a collect here)
+    for (k <- declared.toSeq.sorted) {
+      val df = graft.SparkEntry.queries(k)(spark, sf01)
+      withClue(s"query $k: ") { assertProvenDtypes(df) }
+    }
+  }
 }

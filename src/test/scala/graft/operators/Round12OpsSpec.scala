@@ -66,7 +66,7 @@ class Round12OpsSpec extends SparkSpec {
     // agrees — 1 row there); the structure the operator exists to report
     // appears from sf0.01 up (9 components there, 20+ at sf0.1).
     val lab = Graph.ccLabels(spark, sf01)
-    val pairs = Graph.ccPairs(spark, sf01)
+    val pairs = Graph.ccPairs(spark, sf01, 0)
     val mismatched = pairs
       .join(lab.select(col("node").as("a"), col("lbl").as("la")), "a")
       .join(lab.select(col("node").as("b"), col("lbl").as("lb")), "b")

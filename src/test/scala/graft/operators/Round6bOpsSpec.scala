@@ -65,48 +65,40 @@ class Round6bOpsSpec extends SparkSpec {
     // unrelated async session work (broadcast cleanup, lazy metadata jobs)
     // can't inflate the count and flake the pin.
     val group = "round6b-bloom-build"
-    def groupOf(js: org.apache.spark.scheduler.SparkListenerJobStart): String =
-      Option(js.properties).map(_.getProperty("spark.jobGroup.id", "")).getOrElse("")
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        if (groupOf(js) == group) jobs.incrementAndGet(); ()
+    // the number of jobs `body` runs in the group; listener events post
+    // asynchronously, so the count is read once it is stable
+    def jobsIn(desc: String)(body: => Unit): Int = {
+      val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+      val listener = new org.apache.spark.scheduler.SparkListener {
+        override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+          val g = Option(js.properties).map(_.getProperty("spark.jobGroup.id", "")).getOrElse("")
+          if (g == group) jobs.incrementAndGet(); ()
+        }
       }
+      spark.sparkContext.addSparkListener(listener)
+      try {
+        spark.sparkContext.setJobGroup(group, desc)
+        try body finally spark.sparkContext.clearJobGroup()
+        var last = -1
+        var spins = 0
+        while (jobs.get() != last && spins < 20) { last = jobs.get(); Thread.sleep(250); spins += 1 }
+      } finally spark.sparkContext.removeSparkListener(listener)
+      jobs.get()
     }
-    // listener events post asynchronously: wait until the count is stable
-    def spinStable(counter: java.util.concurrent.atomic.AtomicInteger): Unit = {
-      var last = -1
-      var spins = 0
-      while (counter.get() != last && spins < 20) { last = counter.get(); Thread.sleep(250); spins += 1 }
+    val jobs = jobsIn("bloom sketch build") {
+      assert(Joins.bloomPrefilter(urgent, "o_orderkey", col("l_orderkey")).isDefined)
     }
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      spark.sparkContext.setJobGroup(group, "bloom sketch build")
-      try assert(Joins.bloomPrefilter(urgent, "o_orderkey", col("l_orderkey")).isDefined)
-      finally spark.sparkContext.clearJobGroup()
-      spinStable(jobs)
-    } finally spark.sparkContext.removeSparkListener(listener)
-    assert(jobs.get() == 1, s"bloom build must be a single pass over the build side, ran ${jobs.get()} jobs")
+    assert(jobs == 1, s"bloom build must be a single pass over the build side, ran $jobs jobs")
     // a build side ESTIMATED past BloomMaxItems falls through BEFORE any
     // job or sketch allocation — a fact-sized build can neither double-scan
     // nor OOM the driver on bit allocation
     val huge = spark.range(Joins.BloomMaxItems + 1).select(col("id").as("o_orderkey"))
     assert(Joins.estimatedRows(huge) > Joins.BloomMaxItems)
-    val jobs2 = new java.util.concurrent.atomic.AtomicInteger(0)
-    val listener2 = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        if (groupOf(js) == group) jobs2.incrementAndGet(); ()
-      }
-    }
-    spark.sparkContext.addSparkListener(listener2)
-    try {
-      spark.sparkContext.setJobGroup(group, "bloom sketch build (oversize fallthrough)")
-      try assert(Joins.bloomPrefilter(huge, "o_orderkey", col("l_orderkey")).isEmpty,
+    val jobs2 = jobsIn("bloom sketch build (oversize fallthrough)") {
+      assert(Joins.bloomPrefilter(huge, "o_orderkey", col("l_orderkey")).isEmpty,
         "over-estimated build side must fall through to the plain semi-join")
-      finally spark.sparkContext.clearJobGroup()
-      spinStable(jobs2)
-    } finally spark.sparkContext.removeSparkListener(listener2)
-    assert(jobs2.get() == 0, s"fallthrough must not run any job, ran ${jobs2.get()}")
+    }
+    assert(jobs2 == 0, s"fallthrough must not run any job, ran $jobs2")
   }
 
   test("bloom probe rejects a NULL sketch with a clear error, not an NPE") {
@@ -115,8 +107,6 @@ class Round6bOpsSpec extends SparkSpec {
         .filter(bloomMightContain(lit(null).cast("binary"), col("o_orderkey")))
         .count()
     }
-    def messages(t: Throwable): List[String] =
-      if (t == null) Nil else Option(t.getMessage).toList ++ messages(t.getCause)
     assert(messages(err).exists(_.contains("evaluated to NULL")),
       s"expected the clear null-sketch message, got: ${messages(err)}")
   }

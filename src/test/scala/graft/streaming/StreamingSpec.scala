@@ -455,6 +455,55 @@ class StreamingSpec extends SparkSpec {
     }
   }
 
+  test("streaming CUSUM equals the textbook recurrence under all-positive drift") {
+    import spark.implicits._
+    implicit val ctx = spark.sqlContext
+    val prev = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
+    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
+      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+    // mu = 0, sigma = 1 → allowance k = 0.5, decision h = 4. Constant
+    // x = 2.0 drifts UP from the very first observation: every prefix
+    // sum is positive, so a running min over OBSERVED rows only (the
+    // r12 bug — minima initialized to MaxValue instead of the implicit
+    // P_0 = 0) under-reports S⁺ by the first prefix value (1.5) forever
+    // and fires the 4σ alarm one day late. The textbook recurrence
+    // S⁺_t = max(0, S⁺_{t-1} + x_t − μ − k) gives exactly 1.5·t.
+    val baseline = Map("m" -> (0.0, 1.0))
+    val days = (1L to 6L).map(d => ("m", d, 2.0))
+    val in = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(String, Long, Double)]
+    val q = graft.streaming.StreamOps.cusumPerKey(in.toDS(), baseline)
+      .toDF("k", "day", "s_up", "s_dn", "alarm")
+      .writeStream.format("memory").queryName("t_cusum13").outputMode("update").start()
+    try {
+      // two micro-batches so the P_0 floor must survive a state round-trip
+      in.addData(days.take(3)); q.processAllAvailable()
+      in.addData(days.drop(3)); q.processAllAvailable()
+      val got = spark.sql("SELECT day, s_up, s_dn, alarm FROM t_cusum13").collect()
+        .map(r => (r.getLong(0), r.getDouble(1), r.getDouble(2), r.getBoolean(3)))
+        .sortBy(_._1)
+      // hand-rolled textbook recurrence, same rounding discipline
+      var sUp = 0.0; var sDn = 0.0
+      val expect = days.map { case (_, d, x) =>
+        sUp = math.max(0.0, sUp + (x - 0.0 - 0.5))
+        sDn = math.max(0.0, sDn + (0.0 - 0.5 - x))
+        (d, BigDecimal(sUp).setScale(4, BigDecimal.RoundingMode.HALF_UP).toDouble,
+          BigDecimal(sDn).setScale(4, BigDecimal.RoundingMode.HALF_UP).toDouble,
+          sUp > 4.0 || sDn > 4.0)
+      }
+      assert(got.toSeq === expect,
+        "CUSUM emissions must equal the textbook recurrence (P_0 = 0 floor)")
+      // non-vacuity: the drift is positive from row one and the alarm fires
+      assert(got.head._2 === 1.5 && got.exists(_._4),
+        "fixture must exercise the all-positive-drift path and the alarm")
+    } finally {
+      q.stop()
+      prev match {
+        case Some(p) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", p)
+        case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
+      }
+    }
+  }
+
   test("streaming CC forest reduction reproduces the batch graph_cc labels") {
     import spark.implicits._
     implicit val ctx = spark.sqlContext
@@ -464,7 +513,7 @@ class StreamingSpec extends SparkSpec {
     val sf = "/root/testdata/sf0.001"
     // the batch operator's own edge relation (symmetric support-≥2
     // co-purchase pairs) and its fixpoint labels — the twin's truth
-    val edges = graft.operators.Graph.ccPairs(spark, sf).collect()
+    val edges = graft.operators.Graph.ccPairs(spark, sf, 0).collect()
       .map(r => (r.getLong(0), r.getLong(1)))
     assert(edges.length > 100, "fixture graph should be non-trivial")
     val batch = graft.operators.Graph.ccLabels(spark, sf).collect()
@@ -506,6 +555,17 @@ class StreamingSpec extends SparkSpec {
         case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
       }
     }
+  }
+
+  test("ccConsolidate labels a hand-built forest with per-component min node ids") {
+    import spark.implicits._
+    // two components {1,2,3,7} and {5,9}; forest edges emitted once per
+    // undirected pair, in arbitrary orientation (as the stream does)
+    val forest = Seq((2L, 1L), (2L, 3L), (7L, 3L), (9L, 5L)).toDF("a", "b")
+    val labels = graft.streaming.StreamOps.ccConsolidate(forest)
+      .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
+    assert(labels === Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 7L -> 1L, 5L -> 5L, 9L -> 5L))
+    assertProvenDtypes(graft.streaming.StreamOps.ccConsolidate(forest))
   }
 
   test("streaming ANN serve answers a query stream with the batch llm_ann_ivf top-5") {

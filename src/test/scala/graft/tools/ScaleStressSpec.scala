@@ -115,9 +115,7 @@ class ScaleStressSpec extends SparkSpec {
     val e = intercept[Exception] {
       ScaleStress.isometricCopy(bad, 3).collect()
     }
-    def msgs(t: Throwable): Seq[String] =
-      if (t == null) Seq.empty else Option(t.getMessage).toSeq ++ msgs(t.getCause)
-    assert(msgs(e).exists(_.contains("!= 64")), s"expected a dim-mismatch raise_error, got: $e")
+    assert(messages(e).exists(_.contains("!= 64")), s"expected a dim-mismatch raise_error, got: $e")
   }
 
   test("distinct copies get distinct isometries (no two blocks are clones of each other)") {
