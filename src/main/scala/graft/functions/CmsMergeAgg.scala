@@ -1,33 +1,19 @@
 package graft.functions
 
-import org.apache.spark.sql.{Encoder, Encoders}
-import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.util.sketch.CountMinSketch
 
-/** Typed Aggregator merging serialized Count-Min sketches (the binary
-  * output of Spark's `count_min_sketch` aggregate). CMS merge is EXACT:
-  * same (depth, width, seed) sketches merge by cell-wise counter addition,
-  * so a merge of per-group sketches is bit-equivalent to one global sketch
-  * over the union of their inputs — the property Round11OpsSpec asserts.
-  * Distributive (reduce == merge), so Spark runs it partial-aggregate
-  * style; each buffer is the ~KB sketch, never the raw rows. The empty
-  * array is the identity element (count_min_sketch never emits it for a
-  * non-empty group). */
-object CmsMergeAgg extends Aggregator[Array[Byte], Array[Byte], Array[Byte]] {
+/** Merges serialized Count-Min sketches (the binary output of Spark's
+  * `count_min_sketch` aggregate). CMS merge is EXACT: same (depth, width,
+  * seed) sketches merge by cell-wise counter addition, so a merge of
+  * per-group sketches is bit-equivalent to one global sketch over the
+  * union of their inputs — the property Round11OpsSpec asserts. Each
+  * buffer is the ~KB sketch; `count_min_sketch` never emits the empty
+  * identity for a non-empty group. */
+object CmsMergeAgg extends SketchMergeAgg {
 
-  private def mergeBytes(a: Array[Byte], b: Array[Byte]): Array[Byte] =
-    if (a == null || a.isEmpty) b
-    else if (b == null || b.isEmpty) a
-    else {
-      val s = CountMinSketch.readFrom(a)
-      s.mergeInPlace(CountMinSketch.readFrom(b))
-      s.toByteArray
-    }
-
-  def zero: Array[Byte] = Array.empty
-  def reduce(buf: Array[Byte], in: Array[Byte]): Array[Byte] = mergeBytes(buf, in)
-  def merge(b1: Array[Byte], b2: Array[Byte]): Array[Byte] = mergeBytes(b1, b2)
-  def finish(r: Array[Byte]): Array[Byte] = r
-  def bufferEncoder: Encoder[Array[Byte]] = Encoders.BINARY
-  def outputEncoder: Encoder[Array[Byte]] = Encoders.BINARY
+  protected def mergeNonEmpty(a: Array[Byte], b: Array[Byte]): Array[Byte] = {
+    val s = CountMinSketch.readFrom(a)
+    s.mergeInPlace(CountMinSketch.readFrom(b))
+    s.toByteArray
+  }
 }

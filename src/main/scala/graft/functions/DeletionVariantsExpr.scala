@@ -1,7 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnsafeArrayData}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, LongType, StringType}
@@ -75,16 +75,6 @@ case class DeletionVariants(left: Expression, right: Expression) extends BinaryE
 }
 
 object DeletionVariants {
-  private final val FnvOffset = 0xcbf29ce484222325L
-  private final val FnvPrime = 0x100000001b3L
-
-  private def splitmix64(x0: Long): Long = {
-    var x = x0 + 0x9e3779b97f4a7c15L
-    x = (x ^ (x >>> 30)) * 0xbf58476d1ce4e5b9L
-    x = (x ^ (x >>> 27)) * 0x94d049bb133111ebL
-    x ^ (x >>> 31)
-  }
-
   /** FNV-1a over the codepoints of `cps` skipping indices d1 and d2 (pass
     * -1 to skip nothing). Each codepoint's 21-bit scalar value is mixed as
     * one token (FNV's xor-multiply chain doesn't care that the token is
@@ -139,16 +129,8 @@ object DeletionVariants {
         d1 += 1
       }
     }
-    java.util.Arrays.sort(out)
-    // in-place dedupe (identical bytes at different deletion positions —
-    // e.g. runs of '0' — collapse to one signature)
-    var o = 0
-    var i = 0
-    while (i < w) {
-      if (i == 0 || out(i) != out(i - 1)) { out(o) = out(i); o += 1 }
-      i += 1
-    }
-    UnsafeArrayData.fromPrimitiveArray(
-      if (o == out.length) out else java.util.Arrays.copyOf(out, o))
+    // identical bytes at different deletion positions — e.g. runs of '0' —
+    // collapse to one signature
+    SortedDistinct.sortDedupe(out, w)
   }
 }

@@ -29,9 +29,22 @@ case class DotProduct(left: Expression, right: Expression) extends BinaryExpress
         s"graft_dot requires (array<float>, array<float>), got (${l.catalogString}, ${r.catalogString})")
     }
 
-  override protected def nullSafeEval(a: Any, b: Any): Any = {
-    val x = a.asInstanceOf[ArrayData]
-    val y = b.asInstanceOf[ArrayData]
+  override protected def nullSafeEval(a: Any, b: Any): Any =
+    DotProduct.compute(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    nullSafeCodeGen(ctx, ev, (a, b) =>
+      s"${ev.value} = graft.functions.DotProduct.compute($a, $b);")
+
+  override protected def withNewChildrenInternal(newLeft: Expression, newRight: Expression): DotProduct =
+    copy(left = newLeft, right = newRight)
+}
+
+object DotProduct {
+  /** Public + JVM-friendly so generated code can call it. Fails fast on a
+    * length mismatch: a silently truncated dot product would corrupt every
+    * downstream cosine with no error signal. */
+  def compute(x: ArrayData, y: ArrayData): Double = {
     val n = x.numElements()
     if (n != y.numElements())
       throw new IllegalArgumentException(
@@ -44,28 +57,4 @@ case class DotProduct(left: Expression, right: Expression) extends BinaryExpress
     }
     s
   }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val i = ctx.freshName("i")
-      val n = ctx.freshName("n")
-      val s = ctx.freshName("s")
-      // fail fast on length mismatch: a silently-truncated dot product would
-      // corrupt every downstream cosine with no error signal
-      s"""
-         |int $n = $a.numElements();
-         |if ($n != $b.numElements()) {
-         |  throw new IllegalArgumentException(
-         |    "graft_dot: vector length mismatch (" + $n + " vs " + $b.numElements() + ")");
-         |}
-         |double $s = 0.0;
-         |for (int $i = 0; $i < $n; $i++) {
-         |  $s += (double) $a.getFloat($i) * (double) $b.getFloat($i);
-         |}
-         |${ev.value} = $s;
-       """.stripMargin
-    })
-
-  override protected def withNewChildrenInternal(newLeft: Expression, newRight: Expression): DotProduct =
-    copy(left = newLeft, right = newRight)
 }

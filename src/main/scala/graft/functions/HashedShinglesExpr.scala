@@ -54,16 +54,6 @@ case class HashedShingles(left: Expression, right: Expression) extends BinaryExp
 }
 
 object HashedShingles {
-  private final val FnvOffset = 0xcbf29ce484222325L
-  private final val FnvPrime = 0x100000001b3L
-
-  private def splitmix64(x0: Long): Long = {
-    var x = x0 + 0x9e3779b97f4a7c15L
-    x = (x ^ (x >>> 30)) * 0xbf58476d1ce4e5b9L
-    x = (x ^ (x >>> 27)) * 0x94d049bb133111ebL
-    x ^ (x >>> 31)
-  }
-
   /** Public + JVM-friendly signature so generated code can call it. */
   def compute(s: UTF8String, width: Int): ArrayData = {
     val bytes = s.getBytes
@@ -95,15 +85,6 @@ object HashedShingles {
       grams(i) = g
       i += 1
     }
-    java.util.Arrays.sort(grams)
-    // in-place dedupe of the sorted array
-    var out = 0
-    i = 0
-    while (i < nGram) {
-      if (i == 0 || grams(i) != grams(i - 1)) { grams(out) = grams(i); out += 1 }
-      i += 1
-    }
-    UnsafeArrayData.fromPrimitiveArray(
-      if (out == nGram) grams else java.util.Arrays.copyOf(grams, out))
+    SortedDistinct.sortDedupe(grams, nGram)
   }
 }

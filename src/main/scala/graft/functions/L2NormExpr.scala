@@ -25,32 +25,18 @@ case class L2Norm(child: Expression) extends UnaryExpression {
         s"graft_l2norm requires array<float>, got ${other.catalogString}")
     }
 
-  override protected def nullSafeEval(input: Any): Any = {
-    val arr = input.asInstanceOf[ArrayData]
-    var s = 0.0
-    var i = 0
-    while (i < arr.numElements()) {
-      val v = arr.getFloat(i).toDouble
-      s += v * v
-      i += 1
-    }
-    math.sqrt(s)
-  }
+  override protected def nullSafeEval(input: Any): Any =
+    L2Norm.compute(input.asInstanceOf[ArrayData])
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => {
-      val i = ctx.freshName("i")
-      val s = ctx.freshName("s")
-      s"""
-         |double $s = 0.0;
-         |for (int $i = 0; $i < $c.numElements(); $i++) {
-         |  double v = (double) $c.getFloat($i);
-         |  $s += v * v;
-         |}
-         |${ev.value} = Math.sqrt($s);
-       """.stripMargin
-    })
+    nullSafeCodeGen(ctx, ev, c => s"${ev.value} = graft.functions.L2Norm.compute($c);")
 
   override protected def withNewChildInternal(newChild: Expression): L2Norm =
     copy(child = newChild)
+}
+
+object L2Norm {
+  /** Public + JVM-friendly so generated code can call it. The self dot
+    * product is the same left-to-right double fold of v·v. */
+  def compute(v: ArrayData): Double = math.sqrt(DotProduct.compute(v, v))
 }

@@ -37,11 +37,22 @@ case class PqDot(first: Expression, second: Expression,
           s"got (${a.catalogString}, ${b.catalogString}, ${c.catalogString}, ${d.catalogString})")
     }
 
-  override protected def nullSafeEval(q: Any, codes: Any, base: Any, scale: Any): Any = {
-    val qa = q.asInstanceOf[ArrayData]
-    val ca = codes.asInstanceOf[ArrayData]
-    val ba = base.asInstanceOf[ArrayData]
-    val sa = scale.asInstanceOf[ArrayData]
+  override protected def nullSafeEval(q: Any, codes: Any, base: Any, scale: Any): Any =
+    PqDot.compute(q.asInstanceOf[ArrayData], codes.asInstanceOf[ArrayData],
+      base.asInstanceOf[ArrayData], scale.asInstanceOf[ArrayData])
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    nullSafeCodeGen(ctx, ev, (q, c, b, sc) =>
+      s"${ev.value} = graft.functions.PqDot.compute($q, $c, $b, $sc);")
+
+  override protected def withNewChildrenInternal(newFirst: Expression,
+      newSecond: Expression, newThird: Expression, newFourth: Expression): PqDot =
+    copy(first = newFirst, second = newSecond, third = newThird, fourth = newFourth)
+}
+
+object PqDot {
+  /** Public + JVM-friendly so generated code can call it. */
+  def compute(qa: ArrayData, ca: ArrayData, ba: ArrayData, sa: ArrayData): Double = {
     val n = qa.numElements()
     if (ca.numElements() != n || ba.numElements() != n || sa.numElements() != n)
       throw new IllegalArgumentException(
@@ -55,27 +66,4 @@ case class PqDot(first: Expression, second: Expression,
     }
     s
   }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (q, c, b, sc) => {
-      val i = ctx.freshName("i")
-      val n = ctx.freshName("n")
-      val s = ctx.freshName("s")
-      s"""
-         |int $n = $q.numElements();
-         |if ($c.numElements() != $n || $b.numElements() != $n || $sc.numElements() != $n) {
-         |  throw new IllegalArgumentException("graft_pq_dot: length mismatch");
-         |}
-         |double $s = 0.0;
-         |for (int $i = 0; $i < $n; $i++) {
-         |  $s += (double) $q.getFloat($i)
-         |    * ($b.getDouble($i) + (((double) $c.getByte($i)) + 128.0) * $sc.getDouble($i));
-         |}
-         |${ev.value} = $s;
-       """.stripMargin
-    })
-
-  override protected def withNewChildrenInternal(newFirst: Expression,
-      newSecond: Expression, newThird: Expression, newFourth: Expression): PqDot =
-    copy(first = newFirst, second = newSecond, third = newThird, fourth = newFourth)
 }

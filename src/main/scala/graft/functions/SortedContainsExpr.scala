@@ -34,42 +34,29 @@ case class SortedContains(left: Expression, right: Expression) extends BinaryExp
         s"graft_sorted_contains requires (array<long>, long), got (${l.catalogString}, ${r.catalogString})")
     }
 
-  override protected def nullSafeEval(a: Any, b: Any): Any = {
-    val arr = a.asInstanceOf[ArrayData]
-    val v = b.asInstanceOf[Long]
-    var lo = 0
-    var hi = arr.numElements() - 1
-    var found = false
-    while (!found && lo <= hi) {
-      val mid = (lo + hi) >>> 1
-      val m = arr.getLong(mid)
-      if (m == v) found = true
-      else if (m < v) lo = mid + 1
-      else hi = mid - 1
-    }
-    found
-  }
+  override protected def nullSafeEval(a: Any, b: Any): Any =
+    SortedContains.compute(a.asInstanceOf[ArrayData], b.asInstanceOf[Long])
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val lo = ctx.freshName("lo")
-      val hi = ctx.freshName("hi")
-      val mid = ctx.freshName("mid")
-      val m = ctx.freshName("m")
-      s"""
-         |int $lo = 0, $hi = $a.numElements() - 1;
-         |boolean ${ev.value}Found = false;
-         |while (!${ev.value}Found && $lo <= $hi) {
-         |  int $mid = ($lo + $hi) >>> 1;
-         |  long $m = $a.getLong($mid);
-         |  if ($m == $b) { ${ev.value}Found = true; }
-         |  else if ($m < $b) { $lo = $mid + 1; }
-         |  else { $hi = $mid - 1; }
-         |}
-         |${ev.value} = ${ev.value}Found;
-       """.stripMargin
-    })
+    nullSafeCodeGen(ctx, ev, (a, b) =>
+      s"${ev.value} = graft.functions.SortedContains.compute($a, $b);")
 
   override protected def withNewChildrenInternal(newLeft: Expression, newRight: Expression): SortedContains =
     copy(left = newLeft, right = newRight)
+}
+
+object SortedContains {
+  /** Public + JVM-friendly so generated code can call it. */
+  def compute(arr: ArrayData, v: Long): Boolean = {
+    var lo = 0
+    var hi = arr.numElements() - 1
+    while (lo <= hi) {
+      val mid = (lo + hi) >>> 1
+      val m = arr.getLong(mid)
+      if (m == v) return true
+      else if (m < v) lo = mid + 1
+      else hi = mid - 1
+    }
+    false
+  }
 }

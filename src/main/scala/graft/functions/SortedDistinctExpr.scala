@@ -63,10 +63,17 @@ object SortedDistinct {
       if (!arr.isNullAt(i)) { vals(m) = arr.getLong(i); m += 1 }
       i += 1
     }
-    java.util.Arrays.sort(vals, 0, m)
+    sortDedupe(vals, m)
+  }
+
+  /** Sorts the first `n` longs of `vals`, drops repeats in place and wraps
+    * the distinct prefix as a primitive UnsafeArrayData — the tail that
+    * every sorted-distinct-longs kernel ends with. */
+  private[functions] def sortDedupe(vals: Array[Long], n: Int): UnsafeArrayData = {
+    java.util.Arrays.sort(vals, 0, n)
     var k = 0
-    i = 0
-    while (i < m) {
+    var i = 0
+    while (i < n) {
       if (k == 0 || vals(i) != vals(k - 1)) { vals(k) = vals(i); k += 1 }
       i += 1
     }

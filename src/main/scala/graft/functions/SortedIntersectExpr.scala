@@ -5,7 +5,6 @@ import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, LongType, StringType}
-import org.apache.spark.unsafe.types.UTF8String
 
 /** Native Catalyst expression: |A ∩ B| for two SORTED, DISTINCT arrays of
   * strings OR longs, via a merge scan — the hot inner loop of exact
@@ -42,21 +41,35 @@ case class SortedIntersectCount(left: Expression, right: Expression) extends Bin
   override protected def nullSafeEval(a: Any, b: Any): Any = {
     val x = a.asInstanceOf[ArrayData]
     val y = b.asInstanceOf[ArrayData]
-    val long = isLong
+    if (isLong) SortedIntersectCount.countLong(x, y) else SortedIntersectCount.countUtf8(x, y)
+  }
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val kernel = if (isLong) "countLong" else "countUtf8"
+    nullSafeCodeGen(ctx, ev, (a, b) =>
+      s"${ev.value} = graft.functions.SortedIntersectCount.$kernel($a, $b);")
+  }
+
+  override protected def withNewChildrenInternal(newLeft: Expression, newRight: Expression): SortedIntersectCount =
+    copy(left = newLeft, right = newRight)
+}
+
+object SortedIntersectCount {
+  // Arrays permit null elements: both kernels skip them (a null never counts
+  // toward the intersection) instead of NPE-ing in the comparison.
+
+  /** Public + JVM-friendly so generated code can call it. */
+  def countLong(x: ArrayData, y: ArrayData): Int = {
+    val nx = x.numElements()
+    val ny = y.numElements()
     var i = 0
     var j = 0
     var c = 0
-    val nx = x.numElements()
-    val ny = y.numElements()
     while (i < nx && j < ny) {
-      // arrays permit null elements; skip them (a null never counts toward
-      // the intersection) instead of NPE-ing in the comparison
       if (x.isNullAt(i)) i += 1
       else if (y.isNullAt(j)) j += 1
       else {
-        val cmp =
-          if (long) java.lang.Long.compare(x.getLong(i), y.getLong(j))
-          else x.getUTF8String(i).compareTo(y.getUTF8String(j))
+        val cmp = java.lang.Long.compare(x.getLong(i), y.getLong(j))
         if (cmp == 0) { c += 1; i += 1; j += 1 }
         else if (cmp < 0) i += 1
         else j += 1
@@ -65,31 +78,23 @@ case class SortedIntersectCount(left: Expression, right: Expression) extends Bin
     c
   }
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val i = ctx.freshName("i")
-      val j = ctx.freshName("j")
-      val c = ctx.freshName("c")
-      val cmp = ctx.freshName("cmp")
-      val cmpExpr =
-        if (isLong) s"java.lang.Long.compare($a.getLong($i), $b.getLong($j))"
-        else s"$a.getUTF8String($i).compareTo($b.getUTF8String($j))"
-      s"""
-         |int $i = 0, $j = 0, $c = 0;
-         |while ($i < $a.numElements() && $j < $b.numElements()) {
-         |  if ($a.isNullAt($i)) { $i++; }
-         |  else if ($b.isNullAt($j)) { $j++; }
-         |  else {
-         |    int $cmp = $cmpExpr;
-         |    if ($cmp == 0) { $c++; $i++; $j++; }
-         |    else if ($cmp < 0) { $i++; }
-         |    else { $j++; }
-         |  }
-         |}
-         |${ev.value} = $c;
-       """.stripMargin
-    })
-
-  override protected def withNewChildrenInternal(newLeft: Expression, newRight: Expression): SortedIntersectCount =
-    copy(left = newLeft, right = newRight)
+  /** Public + JVM-friendly so generated code can call it. */
+  def countUtf8(x: ArrayData, y: ArrayData): Int = {
+    val nx = x.numElements()
+    val ny = y.numElements()
+    var i = 0
+    var j = 0
+    var c = 0
+    while (i < nx && j < ny) {
+      if (x.isNullAt(i)) i += 1
+      else if (y.isNullAt(j)) j += 1
+      else {
+        val cmp = x.getUTF8String(i).compareTo(y.getUTF8String(j))
+        if (cmp == 0) { c += 1; i += 1; j += 1 }
+        else if (cmp < 0) i += 1
+        else j += 1
+      }
+    }
+    c
+  }
 }

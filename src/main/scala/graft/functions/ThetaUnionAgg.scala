@@ -1,40 +1,27 @@
 package graft.functions
 
-import org.apache.spark.sql.{Encoder, Encoders}
-import org.apache.spark.sql.expressions.Aggregator
 import org.apache.datasketches.memory.Memory
 import org.apache.datasketches.theta.{SetOperation, Sketches}
 
-/** Typed Aggregator unioning serialized Datasketches THETA sketches
-  * (compact form). Theta is the distinct-count sketch family with a full
-  * SET ALGEBRA — union (here), intersection, and A-NOT-B — which HLL
-  * fundamentally lacks (HLL unions only); that algebra is what makes
-  * cross-segment overlap questions answerable from per-segment sketches
-  * at 100 TB. Inputs are per-partition compact sketches (built in one
-  * mapPartitions pass — the union never sees raw rows), so this merge
-  * runs over sketch-count cardinality, not row cardinality. Empty array
-  * is the identity. */
-object ThetaUnionAgg extends Aggregator[Array[Byte], Array[Byte], Array[Byte]] {
+/** Unions serialized Datasketches THETA sketches (compact form). Theta is
+  * the distinct-count sketch family with a full SET ALGEBRA — union
+  * (here), intersection, and A-NOT-B — which HLL fundamentally lacks (HLL
+  * unions only); that algebra is what makes cross-segment overlap
+  * questions answerable from per-segment sketches at 100 TB. Inputs are
+  * per-partition compact sketches (built in one mapPartitions pass — the
+  * union never sees raw rows), so this merge runs over sketch-count
+  * cardinality, not row cardinality. */
+object ThetaUnionAgg extends SketchMergeAgg {
 
-  private def mergeBytes(a: Array[Byte], b: Array[Byte]): Array[Byte] =
-    if (a == null || a.isEmpty) b
-    else if (b == null || b.isEmpty) a
-    else {
-      val u = SetOperation.builder().buildUnion()
-      u.union(Memory.wrap(a))
-      u.union(Memory.wrap(b))
-      u.getResult.toByteArray
-    }
+  protected def mergeNonEmpty(a: Array[Byte], b: Array[Byte]): Array[Byte] = {
+    val u = SetOperation.builder().buildUnion()
+    u.union(Memory.wrap(a))
+    u.union(Memory.wrap(b))
+    u.getResult.toByteArray
+  }
 
   /** Estimate helper for consumers of the merged bytes. */
   def estimate(bytes: Array[Byte]): Double =
     if (bytes == null || bytes.isEmpty) 0.0
     else Sketches.heapifyCompactSketch(Memory.wrap(bytes)).getEstimate
-
-  def zero: Array[Byte] = Array.empty
-  def reduce(buf: Array[Byte], in: Array[Byte]): Array[Byte] = mergeBytes(buf, in)
-  def merge(b1: Array[Byte], b2: Array[Byte]): Array[Byte] = mergeBytes(b1, b2)
-  def finish(r: Array[Byte]): Array[Byte] = r
-  def bufferEncoder: Encoder[Array[Byte]] = Encoders.BINARY
-  def outputEncoder: Encoder[Array[Byte]] = Encoders.BINARY
 }

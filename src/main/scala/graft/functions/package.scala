@@ -34,6 +34,19 @@ package object functions {
     ("graft_ivf_topcells", classOf[IvfTopCells], e => IvfTopCells(e)),
   )
 
+  /** FNV-1a-64 offset basis and prime, and the splitmix64 finalizer: the
+    * token hash of the signature expressions (graft_hashed_shingles,
+    * graft_del_variants). */
+  private[functions] final val FnvOffset = 0xcbf29ce484222325L
+  private[functions] final val FnvPrime = 0x100000001b3L
+
+  private[functions] def splitmix64(x0: Long): Long = {
+    var x = x0 + 0x9e3779b97f4a7c15L
+    x = (x ^ (x >>> 30)) * 0xbf58476d1ce4e5b9L
+    x = (x ^ (x >>> 27)) * 0x94d049bb133111ebL
+    x ^ (x >>> 31)
+  }
+
   /** graft_dot: Σ a[i]·b[i] over two array<float>, folded in double. */
   def dot(a: Column, b: Column): Column = column(DotProduct(expression(a), expression(b)))
 

@@ -26,17 +26,20 @@ object Fanout {
     * `seed` (any non-nullable-ish real column). */
   def fanKey(seed: Column): Column = pmod(xxhash64(seed), lit(1)).cast("int")
 
+  /** `base`, suffixed with `_` until no column of `frames` has that name:
+    * a generated helper column must not silently replace, join on or drop
+    * a caller's column of the same name. */
+  def freshColumn(base: String, frames: DataFrame*): String = {
+    var c = base
+    while (frames.exists(_.columns.contains(c))) c += "_"
+    c
+  }
+
   /** big ⋈ broadcast(small) with every row matched — a BroadcastHashJoin on
     * the non-foldable constant key. `seedBig` / `seedSmall` must be columns
     * of the respective sides. */
   def broadcastAll(big: DataFrame, small: DataFrame, seedBig: Column, seedSmall: Column): DataFrame = {
-    // collision-proof key name: withColumn would silently REPLACE (and drop
-    // would then remove) a pre-existing column of the same name
-    val k = {
-      var c = "__graft_fan"
-      while (big.columns.contains(c) || small.columns.contains(c)) c += "_"
-      c
-    }
+    val k = freshColumn("__graft_fan", big, small)
     big.withColumn(k, fanKey(seedBig))
       .join(broadcast(small.withColumn(k, fanKey(seedSmall))), Seq(k))
       .drop(k)

@@ -22,13 +22,7 @@ object Skew {
   def saltedJoin(fact: DataFrame, build: DataFrame, key: String, salt: Int): DataFrame = {
     require(salt > 0, "salt must be positive")
     val salts = array((0 until salt).map(lit): _*)
-    // Collision-proof generated column name: a fact/build column literally
-    // named like our salt column must not be silently joined on or dropped.
-    val saltCol = {
-      var c = "__graft_salt"
-      while (fact.columns.contains(c) || build.columns.contains(c)) c += "_"
-      c
-    }
+    val saltCol = Fanout.freshColumn("__graft_salt", fact, build)
     // Salt assignment only affects placement, never the result: a per-row
     // uniform draw, NOT a hash of every fact column (which fails analysis on
     // unhashable column types such as MapType). A hot key fans out over all

@@ -13,8 +13,8 @@ import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
 
 /** Every native expression returns the same rows from its generated code
-  * as from its interpreted `eval`, and throws the same exception class
-  * where an input must fail.
+  * as from its interpreted `eval`, and throws the same exception (class
+  * and message) where an input must fail.
   *
   * Mode (a) turns off whole-stage codegen and builds every projection with
   * the interpreted factory (`NO_CODEGEN`); mode (b) forces whole-stage
@@ -43,8 +43,8 @@ class NativeCodegenSpec extends SparkSpec {
   private def rootCause(t: Throwable): Throwable =
     if (t.getCause == null || (t.getCause eq t)) t else rootCause(t.getCause)
 
-  /** Rows (or the root exception class) of `build()` under one mode, and
-    * whether the executed plan was whole-stage code generated. */
+  /** Rows (or the root exception's class and message) of `build()` under
+    * one mode, and whether the executed plan was whole-stage code generated. */
   private def run(build: () => DataFrame, codegen: Boolean): (Either[String, Seq[Any]], Boolean) = {
     val confs = Seq(
       "spark.sql.codegen.wholeStage" -> codegen.toString,
@@ -56,7 +56,7 @@ class NativeCodegenSpec extends SparkSpec {
       val fused = df.queryExecution.executedPlan.exists(_.isInstanceOf[WholeStageCodegenExec])
       val out =
         try Right(df.collect().toSeq.map(normalize))
-        catch { case NonFatal(e) => Left(rootCause(e).getClass.getName) }
+        catch { case NonFatal(e) => Left(rootCause(e).toString) }
       (out, fused)
     } finally saved.foreach { case (k, v) => v.fold(spark.conf.unset(k))(spark.conf.set(k, _)) }
   }
