@@ -1,6 +1,7 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, GraftColumns, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.UnscaledValue
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.Tables
@@ -41,91 +42,79 @@ object Aggregations {
       .orderBy("l_returnflag", "l_linestatus")
   }
 
-  /** Exact-decimal twin of the flagship pricing summary — exact money
+  /** Exact-money twin of the flagship pricing summary — exact money
     * math end-to-end, hash-matched against DuckDB with NO round()
     * anywhere (the ⚠L3 rounding convention exists for DOUBLE-typed rows;
     * this row retires it where a finance user cares most). Every source
     * measure is exactly 2-decimal (probed: max|x - round(x,2)| = 0 on all
-    * three SFs), so the double→decimal cast is tie-free and identical on
-    * both engines; intermediates are sized to stay inside DECIMAL(38,_)
-    * — ext DEC(12,2) × (1−disc) DEC(4,2) → DEC(17,4), × (1+tax) DEC(4,2)
-    * → DEC(22,6), × the scale factor → ≤ DEC(30,6) — so Spark never
-    * enters its precision-loss path and every sum is EXACT (decimal sums
-    * are order-independent, unlike the double rows' shuffle-order 1e-9
-    * drift).
+    * three SFs), so the double→DECIMAL(12,2)/DECIMAL(3,2) casts — the
+    * money semantics, the same casts the oracle SQL makes — are tie-free
+    * and identical on both engines.
     *
     * Output dtype: exact integer MINOR UNITS as BIGINT (cents ×100 for
     * the 2-decimal sums, ×1e4 / ×1e6 for the 4/6-decimal ones) — the
     * fixed-point convention money pipelines actually store. Round 12
     * shipped these as DECIMAL(38,_) and the driver's comparator hash-
-    * failed them while the local type-strict replay passed (identical
-    * printed values both engines; VERDICT r12 attributes it to decimal
-    * stringification/version drift in the driver environment — DECIMAL
-    * was the ONE output dtype family with no driver-green precedent).
-    * Same exact arithmetic inside; int64 out, the dtype 203 queries
-    * already hash-match on. The per-row scale-up is decimal×decimal
-    * (exact, integer-valued by construction), summed as DECIMAL(≤38,0)
-    * (mergeable, ≥1e26 headroom — scale-safe at any corpus); only the
-    * final gate-facing cast narrows to BIGINT. That narrowing IS a scale
-    * exposure (round-13 advisory corrected the original arithmetic here):
-    * Long.Max ≈ 9.2e18 u6-units is only $9.2e12 of charge per group, and
-    * the measured top-group charge_u6 sum at sf0.01 is ~5.3e14 — so
-    * sum_charge_u6 overflows at ~17,000× sf0.01 (~175 GB-equivalent
-    * corpus) and sum_disc_price_u4 at 100× that (~17 TB). The failure
-    * mode is session-config-dependent, and measurement (AggregationsSpec)
-    * corrected the round-13 advisory's description: under
-    * `spark.sql.ansi.enabled=false` (legacy mode) the decimal→long cast
-    * does not NULL — it silently WRAPS (2⁶³ comes back as Long.MinValue:
-    * corrupted money with no error) while DuckDB's CAST raises; Spark
-    * 4's ANSI-on default raises CAST_OVERFLOW but names no column.
-    * `toLongChecked` guards the narrowing mode-independently: in range →
-    * the same BIGINT; out of range → raise_error carrying the COLUMN
-    * NAME, matching the oracle's loud-failure semantics in every session
-    * (AggregationsSpec pins both modes — no test-SF corpus can exercise
-    * this). (A
-    * 100-TB deployment keeps the DECIMAL(38,0) sums and skips the
-    * narrowing; BIGINT-out is this row's driver-proven gate dtype.)
+    * failed them while the local type-strict replay passed; int64 out is
+    * the dtype 203 queries already hash-match on.
+    *
+    * Arithmetic runs in those same long minor units, never in BigDecimal:
+    * each cast value becomes its exact unscaled long (`minorUnits`), and
+    * ext_c2·(100−disc_c2) = disc_price_u4, ·(100+tax_c2) = charge_u6 are
+    * long products. A product cannot overflow: a DECIMAL(12,2) is below
+    * 1e12 cents and each DECIMAL(3,2) factor is at most 1099, so
+    * |charge_u6| < 1.3e18 < Long.MaxValue for every value that survives
+    * the casts (at sf0.1 the largest charge_u6 is ~1.13e11). The four
+    * sums are long sums (`sumChecked`). Every input is non-negative, so a
+    * running sum overflows exactly when the BIGINT output would: Long.Max
+    * ≈ 9.2e18 u6-units is $9.2e12 of charge per group, and the top
+    * group's charge_u6 sum at sf0.01 is ~5.3e14 — sum_charge_u6 overflows
+    * at ~17,000× sf0.01 (~175 GB-equivalent corpus), sum_disc_price_u4 at
+    * 100× that. There the query FAILS LOUDLY with the column name in both
+    * ANSI modes (plain long sum: ansi=false silently wraps, ansi=true
+    * raises naming no column), matching the oracle's raising CAST.
     * Same plan shape as the flagship: partial hash agg, one shuffle on
-    * the group keys. */
+    * the group keys; PlanSpec pins that no DecimalType reaches the
+    * arithmetic or the aggregate buffers. */
   def aggPricingDecimal(spark: SparkSession, sfDir: String): DataFrame = {
-    val one = lit(1).cast("decimal(1,0)")
-    val ext = col("l_extendedprice").cast("decimal(12,2)")
-    val disc = col("l_discount").cast("decimal(3,2)")
-    val tax = col("l_tax").cast("decimal(3,2)")
-    val c2 = lit(100).cast("decimal(3,0)")
-    val u4 = lit(10000).cast("decimal(5,0)")
-    val u6 = lit(1000000).cast("decimal(7,0)")
+    val disc = minorUnits(col("l_discount"), "decimal(3,2)")
+    val tax = minorUnits(col("l_tax"), "decimal(3,2)")
+    val extC2 = minorUnits(col("l_extendedprice"), "decimal(12,2)")
+    val discPriceU4 = extC2 * (lit(100L) - disc)
     Tables.lineitem(spark, sfDir)
       .select(col("l_returnflag"), col("l_linestatus"),
-        (col("l_quantity").cast("decimal(12,2)") * c2).cast("decimal(16,0)").as("qty_c2"),
-        (ext * c2).cast("decimal(16,0)").as("ext_c2"),
-        (ext * (one - disc) * u4).cast("decimal(23,0)").as("disc_price_u4"),
-        (ext * (one - disc) * (one + tax) * u6).cast("decimal(30,0)").as("charge_u6"))
+        minorUnits(col("l_quantity"), "decimal(12,2)").as("qty_c2"),
+        extC2.as("ext_c2"),
+        discPriceU4.as("disc_price_u4"),
+        (discPriceU4 * (lit(100L) + tax)).as("charge_u6"))
       .groupBy("l_returnflag", "l_linestatus")
       .agg(
-        toLongChecked(sum("qty_c2"), "sum_qty_c2").as("sum_qty_c2"),
-        toLongChecked(sum("ext_c2"), "sum_base_price_c2").as("sum_base_price_c2"),
-        toLongChecked(sum("disc_price_u4"), "sum_disc_price_u4").as("sum_disc_price_u4"),
-        toLongChecked(sum("charge_u6"), "sum_charge_u6").as("sum_charge_u6"),
+        sumChecked("qty_c2", "sum_qty_c2"),
+        sumChecked("ext_c2", "sum_base_price_c2"),
+        sumChecked("disc_price_u4", "sum_disc_price_u4"),
+        sumChecked("charge_u6", "sum_charge_u6"),
         count(lit(1)).as("count_order"))
       .orderBy("l_returnflag", "l_linestatus")
   }
 
-  /** BIGINT-range-checked decimal→long narrowing. The plain cast diverges
-    * from the DuckDB oracle's raising CAST exactly when it matters (the
-    * corpus scale where q1_decimal's minor-unit sums outgrow int64 — see
-    * aggPricingDecimal's headroom arithmetic): under ansi=false it
-    * silently WRAPS (measured, AggregationsSpec — NOT the advisory's
-    * "silent NULLs"), under Spark 4's ANSI-on default it raises without
-    * naming a column. In range the value is unchanged; out of range the
-    * query FAILS LOUDLY with the column name in both modes. Output type
-    * is the `when` branch's LongType either way. */
-  private[graft] def toLongChecked(c: org.apache.spark.sql.Column, name: String)
-      : org.apache.spark.sql.Column =
-    when(c.isNull.or(c.between(lit(Long.MinValue), lit(Long.MaxValue))),
-      c.cast("long"))
-      .otherwise(raise_error(concat(
-        lit(s"$name overflows BIGINT minor units: "), c.cast("string"))))
+  /** `c` cast to the 2-scale decimal type `dec`, as its exact unscaled
+    * long (cents). Catalyst's `UnscaledValue` reads the compact decimal's
+    * long; the plain `(c.cast(dec) * 100).cast("long")` multiplies a
+    * Decimal per row instead (measured at sf0.1: q1_decimal's full result
+    * 0.92 s against 0.77 s, min of 6). */
+  private def minorUnits(c: Column, dec: String): Column =
+    GraftColumns.column(UnscaledValue(GraftColumns.expression(c.cast(dec))))
+
+  /** Long sum of `c` as `name` that fails the query, naming the column,
+    * when the sum leaves BIGINT — in both ANSI modes. `try_sum` yields
+    * NULL on overflow; a NULL over a group with a non-NULL input can only
+    * be that overflow, while an all-NULL group still sums to NULL. */
+  private[graft] def sumChecked(c: String, name: String): Column = {
+    val s = try_sum(col(c))
+    when(s.isNull && count(col(c)) > 0,
+      raise_error(lit(s"$name overflows BIGINT minor units")))
+      .otherwise(s).as(name)
+  }
 
   /** Histogram bucket count — 10 keeps every bucket populated at sf0.001
     * while still exercising the least() edge-cap on the max value. */
@@ -661,7 +650,8 @@ object Aggregations {
     val counts = Tables.lineitem(spark, sfDir)
       .groupBy("l_returnflag", "l_quantity").agg(count(lit(1)).as("cnt"))
     val w = Window.partitionBy("l_returnflag").orderBy(desc("cnt"), asc("l_quantity"))
-    counts.withColumn("rn", row_number().over(w)).filter(col("rn") === 1)
+    Windows.rangeForWindow(counts, "l_returnflag")
+      .withColumn("rn", row_number().over(w)).filter(col("rn") === 1)
       .select(col("l_returnflag"), col("l_quantity").as("mode_qty"), col("cnt").as("mode_cnt"))
       .orderBy("l_returnflag")
   }

@@ -62,7 +62,7 @@ object Composite {
       .groupBy("n_name", "c_custkey")
       .agg(round(sum("o_totalprice"), 2).as("revenue"))
     val w = Window.partitionBy("n_name").orderBy(desc("revenue"), asc("c_custkey"))
-    perCust.withColumn("rn", row_number().over(w))
+    Windows.rangeForWindow(perCust, "n_name").withColumn("rn", row_number().over(w))
       .filter(col("rn") === 1)
       .select("n_name", "c_custkey", "revenue")
       .orderBy("n_name")
@@ -76,7 +76,7 @@ object Composite {
       .groupBy(col("c_mktsegment").as("segment"), year(col("o_orderdate")).cast("long").as("y"))
       .agg(sum("o_totalprice").as("rev"))
     val w = Window.partitionBy("segment").orderBy("y")
-    yearly.select(col("segment"), col("y"),
+    Windows.rangeForWindow(yearly, "segment").select(col("segment"), col("y"),
         round(col("rev"), 2).as("revenue"),
         round((col("rev") - lag("rev", 1).over(w)) / lag("rev", 1).over(w), 6).as("yoy"))
       .orderBy("segment", "y")

@@ -111,7 +111,7 @@ object EventTime {
       .groupBy(col("event_type"), to_date(col("ts_ntz")).as("day"))
       .agg(round(sum("value"), 2).as("rev"))
     val w = org.apache.spark.sql.expressions.Window.partitionBy("event_type")
-    daily
+    Windows.rangeForWindow(daily, "event_type")
       .withColumn("z", round((col("rev") - avg("rev").over(w)) / stddev_samp("rev").over(w), 4))
       .filter(abs(col("z")) > 2)
       .orderBy("event_type", "day")

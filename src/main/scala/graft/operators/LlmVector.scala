@@ -139,7 +139,13 @@ object LlmVector {
   }
 
   /** Brute-force-exact cosine top-5 neighbors per vector (the oracle
-    * baseline; see cosineTopkCore for the scale shape). */
+    * baseline; see cosineTopkCore for the scale shape). The window keeps
+    * its own hash exchange rather than sharing a range partitioning with
+    * the final orderBy (`Windows.rangeForWindow`): topkWithin's rank
+    * filter plans a map-side partial limit ahead of that exchange, and a
+    * range exchange first would ship every mirrored pair instead of ≤5
+    * per vector and partition — measured at sf0.1, full result 2.4 →
+    * 3.7 s and task CPU 6.0 → 10.5 s. */
   def llmCosineTopk(spark: SparkSession, sfDir: String): DataFrame =
     cosineTopkCore(spark, sfDir).orderBy("a", "rank")
 

@@ -81,7 +81,7 @@ object TimeSeries {
     val pd = last(knownDay, ignoreNulls = true).over(wPrev)
     val nv = first(col("v"), ignoreNulls = true).over(wNext)
     val nd = first(knownDay, ignoreNulls = true).over(wNext)
-    cal.join(daily, Seq("event_type", "day"), "left")
+    Windows.rangeForWindow(cal.join(daily, Seq("event_type", "day"), "left"), "event_type")
       .select(col("event_type"), col("day"),
         col("v").isNull.cast("long").as("is_gap"),
         round(coalesce(col("v"),
@@ -94,7 +94,7 @@ object TimeSeries {
   def tsForwardFill(spark: SparkSession, sfDir: String): DataFrame = {
     val w = Window.partitionBy("o_custkey").orderBy("o_orderdate", "o_orderkey")
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    Tables.orders(spark, sfDir)
+    Windows.rangeForWindow(Tables.orders(spark, sfDir), "o_custkey")
       .withColumn("tp_gappy",
         when(col("o_orderkey") % 7 === 0, lit(null)).otherwise(col("o_totalprice")))
       .select(col("o_custkey"), col("o_orderkey"), col("o_orderdate"),
@@ -291,7 +291,7 @@ object TimeSeries {
     val daily = segmentDailyRevenue(spark, sfDir)
     val mkt = marketRevenue(daily)
     val w = Window.partitionBy("seg").orderBy("day").rowsBetween(-29, Window.currentRow)
-    daily.join(mkt, "day")
+    Windows.rangeForWindow(daily.join(mkt, "day"), "seg")
       .withColumn("n_days", count(lit(1)).over(w))
       .withColumn("beta_corr", round(corr("rev", "mrev").over(w), 4))
       .filter(col("n_days") >= 5)
@@ -332,7 +332,7 @@ object TimeSeries {
     val daily = segmentDailyRevenue(spark, sfDir)
     val wlag = Window.partitionBy("seg").orderBy("day")
     val w = Window.partitionBy("seg").orderBy("day").rowsBetween(-29, Window.currentRow)
-    daily
+    Windows.rangeForWindow(daily, "seg")
       .withColumn("ret", round(col("rev") / lag(col("rev"), 1).over(wlag) - 1.0, 6))
       .withColumn("n_obs", count(col("ret")).over(w))
       .withColumn("vol30", round(stddev_samp("ret").over(w), 4))
@@ -509,7 +509,7 @@ object TimeSeries {
       .agg(round(avg("v"), 6).as("mu"), round(stddev_samp("v"), 6).as("sigma"))
     val w = Window.partitionBy("event_type").orderBy("day")
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    daily.join(broadcast(stats), Seq("event_type"))
+    Windows.rangeForWindow(daily.join(broadcast(stats), Seq("event_type")), "event_type")
       .withColumn("p_up", sum(col("v") - col("mu") - lit(0.5) * col("sigma")).over(w))
       .withColumn("p_dn", sum(col("mu") - lit(0.5) * col("sigma") - col("v")).over(w))
       .withColumn("s_up", round(col("p_up") - least(lit(0.0), min("p_up").over(w)), 4))

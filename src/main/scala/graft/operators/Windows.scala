@@ -24,9 +24,37 @@ import graft.Tables
   */
 object Windows {
 
+  /** `df` range-partitioned on a window's partition `keys`, for a window
+    * that a global `orderBy` on the same leading keys follows. Left
+    * alone, Spark plans a hash exchange and a sort for the window, then a
+    * range exchange, a sampling job and a second sort for the orderBy.
+    * `RangePartitioning(keys)` meets both the window's clustered
+    * distribution and the orderBy's ordered one, so one exchange remains;
+    * where the orderBy's keys are a prefix of the window's sort order
+    * (partition keys, then its ORDER BY), that sort is the final order
+    * and the second sort goes too — one partition-and-sort step feeding
+    * both operators, as in "Building Advanced SQL Analytics From
+    * Low-Level Plan Operators" (SIGMOD 2021).
+    *
+    * Keys with few distinct values (l_returnflag, c_mktsegment,
+    * event_type, lang) run the window on one task per key value under
+    * either exchange; their sites were measured at sf0.1 before
+    * converting, and each ran one job fewer with its full-result time and
+    * task CPU lower or within run-to-run noise. A rank filter over the
+    * window (`row_number() <= k`) plans as a map-side partial limit ahead
+    * of the window's own exchange, which a range exchange first moves
+    * behind the shuffle: cheap over an aggregate's output (aggMode,
+    * Composite.topCustomerPerNation), slower over raw rows
+    * (winTopkPerGroup, Joins.joinFuzzyTopk, LlmText.llmTfidf,
+    * LlmVector.llmCosineTopk keep their hash exchange). The range
+    * partitioner's sampling pass also reads the window's input rather
+    * than its shuffled output (winIgnoreNulls keeps its hash exchange). */
+  def rangeForWindow(df: DataFrame, keys: String*): DataFrame =
+    df.repartitionByRange(keys.map(col): _*)
+
   def winRankDense(spark: SparkSession, sfDir: String): DataFrame = {
     val w = Window.partitionBy("c_mktsegment").orderBy(desc("c_acctbal"), asc("c_custkey"))
-    Tables.customer(spark, sfDir)
+    rangeForWindow(Tables.customer(spark, sfDir), "c_mktsegment")
       .select(col("c_mktsegment"), col("c_custkey"), col("c_acctbal"),
         rank().over(w).cast("long").as("rnk"),
         dense_rank().over(w).cast("long").as("drnk"),
@@ -34,6 +62,13 @@ object Windows {
       .orderBy("c_mktsegment", "rn")
   }
 
+  /** Top 3 orders per customer. The window keeps its own hash exchange
+    * rather than sharing a range partitioning with the final orderBy
+    * (`rangeForWindow`): the rn ≤ 3 filter plans a map-side partial limit
+    * ahead of that exchange, and a range exchange first ships all orders
+    * and adds a sampling pass over the scan — measured at sf0.1, task CPU
+    * 0.43 → 0.52 s (a repeat: 0.45 → 0.50 s) although the full result on
+    * an idle host fell 0.62 → 0.48 s. */
   def winTopkPerGroup(spark: SparkSession, sfDir: String): DataFrame = {
     val w = Window.partitionBy("o_custkey").orderBy(desc("o_totalprice"), asc("o_orderkey"))
     Tables.orders(spark, sfDir)
@@ -46,7 +81,7 @@ object Windows {
   def winRunningSum(spark: SparkSession, sfDir: String): DataFrame = {
     val w = Window.partitionBy("o_custkey").orderBy("o_orderdate", "o_orderkey")
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    Tables.orders(spark, sfDir)
+    rangeForWindow(Tables.orders(spark, sfDir), "o_custkey")
       .select(col("o_custkey"), col("o_orderkey"), col("o_orderdate"),
         round(sum("o_totalprice").over(w), 2).as("running_total"))
       .orderBy("o_custkey", "o_orderdate", "o_orderkey")
@@ -134,7 +169,7 @@ object Windows {
   /** RANGE frame: customers within ±100 acctbal of each row, per segment. */
   def winRangeFrame(spark: SparkSession, sfDir: String): DataFrame = {
     val w = Window.partitionBy("c_mktsegment").orderBy("c_acctbal").rangeBetween(-100, 100)
-    Tables.customer(spark, sfDir)
+    rangeForWindow(Tables.customer(spark, sfDir), "c_mktsegment")
       .select(col("c_mktsegment"), col("c_custkey"), col("c_acctbal"),
         count(lit(1)).over(w).as("near_cnt"))
       .orderBy("c_mktsegment", "c_custkey")
@@ -163,7 +198,14 @@ object Windows {
     * user_id; lag/lead are frame-independent offsets, first rides the
     * default running frame on both engines, nth gets the explicit full
     * frame. Total order (user_id, event_id); values rounded on both
-    * engines per convention. */
+    * engines per convention. The window keeps its own hash exchange
+    * rather than sharing a range partitioning with the final orderBy
+    * (`rangeForWindow`): the range partitioner's sampling pass would then
+    * run over the events scan instead of over the shuffled window output,
+    * and on this table the scan costs more than the sort and window it
+    * saves — measured at sf0.1, task CPU 0.65 → 0.84 s (a repeat:
+    * 0.80 → 1.05 s) although the full result on an idle host fell
+    * 0.81 → 0.73 s. */
   def winIgnoreNulls(spark: SparkSession, sfDir: String): DataFrame = {
     val w = Window.partitionBy("user_id").orderBy("epoch_us", "event_id")
     val wAll = w.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
@@ -195,7 +237,7 @@ object Windows {
       .groupBy(col("event_type"), to_date(col("ts_ntz")).as("day"))
       .agg(round(sum("value"), 4).as("day_value"))
     val w = Window.partitionBy("event_type").orderBy("day").rowsBetween(-6, 0)
-    daily.select(col("event_type"), col("day"),
+    rangeForWindow(daily, "event_type").select(col("event_type"), col("day"),
         round(percentile(col("day_value"), lit(0.5)).over(w), 4).as("med7"),
         round(percentile(col("day_value"), lit(0.9)).over(w), 4).as("p90_7"))
       .orderBy("event_type", "day")
@@ -215,7 +257,7 @@ object Windows {
     val wFirst = Window.partitionBy("user_id", "event_type").orderBy("epoch_us", "event_id")
     val wRun = Window.partitionBy("user_id").orderBy("epoch_us", "event_id")
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    Tables.events(spark, sfDir)
+    rangeForWindow(Tables.events(spark, sfDir), "user_id")
       .select(col("user_id"), col("event_id"), col("epoch_us"), col("event_type"))
       .withColumn("fst", when(row_number().over(wFirst) === 1, lit(1L)).otherwise(lit(0L)))
       .select(col("user_id"), col("event_id"),

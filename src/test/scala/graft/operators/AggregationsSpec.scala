@@ -3,7 +3,7 @@ package graft.operators
 import graft.SparkSpec
 import org.apache.spark.sql.functions._
 
-/** Specs for `Aggregations`: the exact decimal path and its overflow
+/** Specs for `Aggregations`: the exact minor-unit path and its overflow
   * guard, the finance formulas' bounds, and giniCore's bucket
   * decomposition. */
 class AggregationsSpec extends SparkSpec {
@@ -38,38 +38,27 @@ class AggregationsSpec extends SparkSpec {
     }
   }
 
-  test("toLongChecked passes in-range sums through and RAISES on BIGINT overflow") {
+  test("sumChecked raises on BIGINT overflow with the column name in both ANSI modes") {
     import spark.implicits._
-    // in range: identical to a plain cast
-    val ok = Seq("1", "-9223372036854775808", "9223372036854775807")
-      .toDF("s").select(Aggregations.toLongChecked(col("s").cast("decimal(38,0)"), "v").as("v"))
-    assert(ok.collect().map(_.getLong(0)).toSeq ===
-      Seq(1L, Long.MinValue, Long.MaxValue))
-    // out of range: the plain cast would yield NULL (non-ANSI); the guard
-    // must fail the job loudly instead, carrying the column name
-    val over = Seq("9223372036854775808") // Long.MaxValue + 1
-      .toDF("s").select(Aggregations.toLongChecked(col("s").cast("decimal(38,0)"), "sum_charge_u6"))
-    val e = intercept[Exception](over.collect())
-    assert(messages(e).exists(_.contains("sum_charge_u6")),
-      s"overflow must raise with the column name, got: ${messages(e).mkString(" | ")}")
-    // Mode independence (what the guard buys): Spark 4 defaults ANSI ON,
-    // where the plain cast raises CAST_OVERFLOW but names no column;
-    // under ansi=false — the legacy mode — the plain cast is WORSE than
-    // the advisory's "silent NULLs": it silently WRAPS (2⁶³ comes back
-    // as Long.MinValue — corrupted money, no error at all). The guard
-    // fails loudly WITH the column name in both modes.
+    // group a passes Long.MaxValue only after its third row (and, split
+    // round-robin, only in the merge of in-range partial sums); group b
+    // stays in range; group c has only NULL inputs
+    val half = Long.MaxValue / 2 + 1
+    val rows = Seq(("a", Some(half)), ("a", Some(half)), ("a", Some(3L)), ("a", Some(4L)),
+      ("b", Some(7L)), ("b", None), ("b", Some(8L)), ("c", None)).toDF("g", "v")
+    def sums(df: org.apache.spark.sql.DataFrame) =
+      df.groupBy("g").agg(Aggregations.sumChecked("v", "sum_charge_u6")).orderBy("g")
     val prev = spark.conf.get("spark.sql.ansi.enabled")
     try {
-      spark.conf.set("spark.sql.ansi.enabled", "false")
-      val silent = Seq("9223372036854775808").toDF("s")
-        .select(col("s").cast("decimal(38,0)").cast("long")).head()
-      assert(!silent.isNullAt(0) && silent.getLong(0) === Long.MinValue,
-        s"plain cast under ansi=false silently wraps — the corruption the guard closes; got $silent")
-      val e2 = intercept[Exception](Seq("9223372036854775808").toDF("s")
-        .select(Aggregations.toLongChecked(col("s").cast("decimal(38,0)"), "sum_charge_u6"))
-        .collect())
-      assert(messages(e2).exists(_.contains("sum_charge_u6")),
-        "guard must raise with the column name under ansi=false too")
+      for (ansi <- Seq("true", "false"); input <- Seq(rows.coalesce(1), rows.repartition(4))) {
+        spark.conf.set("spark.sql.ansi.enabled", ansi)
+        val ok = sums(input.filter(col("g") =!= "a")).collect()
+        assert(ok.map(r => r.getString(0) -> Option(r.get(1))).toSeq ===
+          Seq("b" -> Some(15L), "c" -> None), s"ansi=$ansi: in-range sums and all-NULL group")
+        val e = intercept[Exception](sums(input).collect())
+        assert(messages(e).exists(_.contains("sum_charge_u6")),
+          s"ansi=$ansi: overflow must raise with the column name, got: ${messages(e).mkString(" | ")}")
+      }
     } finally spark.conf.set("spark.sql.ansi.enabled", prev)
   }
 

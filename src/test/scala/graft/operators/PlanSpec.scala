@@ -14,6 +14,13 @@ class PlanSpec extends SparkSpec {
   private def formatted(df: DataFrame): String =
     df.queryExecution.explainString(ExplainMode.fromString("formatted"))
 
+  /** Count of the physical nodes named exactly `node` (`Exchange` is a
+    * shuffle, not `BroadcastExchange`; `Sort` is not `SortMergeJoin`) in a
+    * formatted plan, by its numbered detail headers — the count
+    * `tools/plan_diff.sh` prints. */
+  private def nodes(plan: String, node: String): Int =
+    raw"""(?m)^\(\d+\) $node( \[codegen id : \d+\])?$$""".r.findAllIn(plan).size
+
   test("scan_pruned reads only the projected columns from parquet") {
     val plan = formatted(Scans.scanPruned(spark, sf001))
     val readSchema = plan.linesIterator.find(_.contains("ReadSchema")).getOrElse("")
@@ -208,6 +215,72 @@ class PlanSpec extends SparkSpec {
     val plan = formatted(Composite.sqlQualify(spark, sf001))
     val limits = """\(\d+\) WindowGroupLimit""".r.findAllIn(plan).size
     assert(limits == 2, s"expected partial+final WindowGroupLimit, saw $limits")
+  }
+
+  test("win_running_sum shares one range exchange and one sort between its window and orderBy") {
+    // the window's partition key leads the orderBy's keys, so one
+    // RangePartitioning(o_custkey) meets both distributions and the
+    // window's sort is the final order (the hash + range pair is 2 and 2)
+    val plan = formatted(Windows.winRunningSum(spark, sf001))
+    assert(nodes(plan, "Exchange") == 1 && nodes(plan, "Sort") == 1, plan)
+    assert(plan.contains("rangepartitioning(o_custkey") && !plan.contains("hashpartitioning"), plan)
+  }
+
+  test("agg_mode's few-valued window key shares the orderBy's range exchange") {
+    // l_returnflag has 3 values: the window runs on one task per value
+    // under either exchange. The range exchange also serves the orderBy,
+    // and the window's sort is the final order: the aggregate's shuffle
+    // plus one, and one sort (a hash exchange for the window is 3 and 3,
+    // its map-side partial rank limit sorting the aggregate's output)
+    val plan = formatted(Aggregations.aggMode(spark, sf001))
+    assert(nodes(plan, "Exchange") == 2 && nodes(plan, "Sort") == 1, plan)
+  }
+
+  test("q1_decimal runs no DecimalType arithmetic or aggregate buffer above its input casts") {
+    import org.apache.spark.sql.catalyst.expressions.{Expression, UnscaledValue}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
+    import org.apache.spark.sql.types.DecimalType
+    val df = Aggregations.aggPricingDecimal(spark, sf001)
+    df.collect()
+    val executed = new AdaptiveSparkPlanHelper {}.collect(df.queryExecution.executedPlan) { case p => p }
+    val aggs = executed.collect { case a: BaseAggregateExec => a }
+    assert(aggs.nonEmpty, "no aggregate in the executed plan")
+    val decimalBuffers = aggs.flatMap(_.aggregateExpressions)
+      .flatMap(_.aggregateFunction.aggBufferAttributes).filter(_.dataType.isInstanceOf[DecimalType])
+    assert(decimalBuffers.isEmpty, s"decimal aggregate buffers: $decimalBuffers")
+    // a decimal may appear only as the cast an UnscaledValue reads
+    def decimalsAbove(e: Expression): Seq[Expression] = e match {
+      case _: UnscaledValue => Nil
+      case x if x.resolved && x.dataType.isInstanceOf[DecimalType] => Seq(x)
+      case x => x.children.flatMap(decimalsAbove)
+    }
+    val decimals = executed.flatMap(_.expressions).flatMap(decimalsAbove)
+    assert(decimals.isEmpty, s"decimal arithmetic above the input casts: $decimals")
+  }
+
+  test("no lambda body in a declared query re-evaluates work that uses no lambda variable") {
+    // A lambda body runs once per element: a subtree in it that reads no
+    // lambda variable (say `split(norm, " ")` inside a transform over the
+    // tokens) is recomputed for every element. Hoist it into a column.
+    import org.apache.spark.sql.catalyst.expressions._
+    def free(e: Expression): Set[ExprId] = e match {
+      case v: NamedLambdaVariable => Set(v.exprId)
+      case LambdaFunction(body, args, _) => free(body) -- args.map(_.exprId)
+      case x => x.children.flatMap(free).toSet
+    }
+    def invariant(e: Expression): Seq[Expression] = e match {
+      case _: Attribute | _: Literal => Nil
+      case lf: LambdaFunction => invariant(lf.function)
+      case x if free(x).isEmpty => Seq(x)
+      case x => x.children.flatMap(invariant)
+    }
+    val offenders = graft.SparkEntry.queries.toSeq.sortBy(_._1).flatMap { case (name, fn) =>
+      val plan = fn(spark, sf001).queryExecution.optimizedPlan
+      plan.flatMap(_.expressions).flatMap(_.collect { case lf: LambdaFunction => lf })
+        .flatMap(lf => invariant(lf.function)).map(e => s"$name: ${e.sql}").distinct
+    }
+    assert(offenders.isEmpty, s"lambda-invariant work:\n${offenders.mkString("\n")}")
   }
 
   test("no declared query plans an accidental cross product") {

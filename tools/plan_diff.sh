@@ -4,9 +4,11 @@
 # change's. Run-specific tokens are replaced before comparing: expression
 # ids (#123), object identity hashes (@1a2b3c4d), lambda class names, RDD
 # ids, source line numbers, plan_id=, application ids and part-file UUIDs.
-# Prints every query whose normalized plan differs (with a unified diff)
-# or that exists on one side only; exits 1 on any difference, 0 when the
-# two directories hold the same plans.
+# Prints every query whose normalized plan differs (with a unified diff
+# and its shuffle Exchange and Sort node counts on each side) or that
+# exists on one side only, then the Exchange and Sort totals over the
+# differing queries; exits 1 on any difference, 0 when the two
+# directories hold the same plans.
 #
 # Usage: tools/plan_diff.sh <dirA> <dirB>
 set -uo pipefail
@@ -26,7 +28,15 @@ normalize() {
     "$1"
 }
 
+# physical nodes named exactly $2 (a shuffle "Exchange", not
+# "BroadcastExchange"; "Sort", not "SortMergeJoin"), by their numbered
+# detail headers in the formatted plan
+count() {
+  grep -cE "^\([0-9]+\) $2( \[codegen id : [0-9]+\])?\$" "$1"
+}
+
 differ=0
+exA=0 exB=0 sortA=0 sortB=0 changed=0
 for q in $( (ls "$A"; ls "$B") | grep '\.txt$' | sort -u); do
   name=${q%.txt}
   if [ ! -f "$A/$q" ]; then echo "only in $B: $name"; differ=1; continue; fi
@@ -35,7 +45,16 @@ for q in $( (ls "$A"; ls "$B") | grep '\.txt$' | sort -u); do
       <(normalize "$A/$q") <(normalize "$B/$q")); then
     echo "plan differs: $name"
     echo "$out"
+    ea=$(count "$A/$q" Exchange) eb=$(count "$B/$q" Exchange)
+    sa=$(count "$A/$q" Sort) sb=$(count "$B/$q" Sort)
+    echo "counts $name: Exchange $ea -> $eb, Sort $sa -> $sb"
+    exA=$((exA + ea)) exB=$((exB + eb)) sortA=$((sortA + sa)) sortB=$((sortB + sb))
+    changed=$((changed + 1))
     differ=1
   fi
 done
+if [ "$changed" -gt 0 ]; then
+  echo "totals over $changed differing plans: Exchange $exA -> $exB ($((exA - exB)) removed)," \
+    "Sort $sortA -> $sortB ($((sortA - sortB)) removed)"
+fi
 exit $differ
