@@ -123,8 +123,8 @@ object Aggregations {
   /** Equi-width histogram of order totals — the optimizer-statistics /
     * distribution-monitoring primitive: global [min, max] split into
     * `HistBuckets` fixed-width buckets, each reporting count + observed
-    * min/max. The bounds row broadcasts via Fanout (one 1-row aggregate,
-    * never a driver collect), bucketing is pure row-local arithmetic, and
+    * min/max. The bounds reach every row as one scalar subquery (one 1-row
+    * aggregate, never a driver collect), bucketing is pure row-local arithmetic, and
     * the groupBy partial-aggregates — one scan + one ≤`HistBuckets`-row
     * shuffle at any corpus size. This is the scale-safe histogram shape:
     * an equi-DEPTH histogram needs a global sort or exact percentiles
@@ -134,10 +134,10 @@ object Aggregations {
     * same doubles); the max value caps into the last bucket. */
   def aggHistogram(spark: SparkSession, sfDir: String): DataFrame = {
     val o = Tables.orders(spark, sfDir).select(col("o_totalprice").as("v"), col("o_orderkey"))
-    val bounds = o.agg(min("v").as("lo"), max("v").as("hi"))
-    Fanout.broadcastAll(o, bounds, col("o_orderkey"), col("lo"))
-      .withColumn("bucket", least(lit(HistBuckets - 1L),
-        floor((col("v") - col("lo")) / ((col("hi") - col("lo")) / lit(HistBuckets.toDouble)))))
+    val bounds = o.agg(struct(min("v").as("lo"), max("v").as("hi"))).scalar()
+    val (lo, hi) = (bounds.getField("lo"), bounds.getField("hi"))
+    o.withColumn("bucket", least(lit(HistBuckets - 1L),
+        floor((col("v") - lo) / ((hi - lo) / lit(HistBuckets.toDouble)))))
       .groupBy("bucket")
       .agg(count(lit(1)).as("n"), min("v").as("lo_v"), max("v").as("hi_v"))
       .orderBy("bucket")
@@ -200,7 +200,7 @@ object Aggregations {
     *     this time per segment): the previous form ranked each segment in
     *     ONE window partition — parallelism 5 at any corpus size. Here
     *     order-preserving VALUE buckets over the global cents domain
-    *     (bounds via one aggregate broadcast back — no driver collect;
+    *     (bounds via one scalar-subquery aggregate — no driver collect;
     *     equal cents share a bucket by construction, so the (cents,
     *     custkey) total order is bucket-respecting) give per-(seg, bucket)
     *     local ranks, and Σ rank·cents decomposes exactly:
@@ -222,7 +222,7 @@ object Aggregations {
     *     oracle needs no change and the 6-dp boundary stays proof-exact.
     */
   private[graft] def giniCore(cust: DataFrame, nb: Int): DataFrame = {
-    val bounds = cust.agg(min("cents").as("lo"), max("cents").as("hi"))
+    val bounds = cust.agg(struct(min("cents").as("lo"), max("cents").as("hi"))).scalar()
     // integer bucket index: monotone in cents, exact, ∈ [0, nb-1]. DIV, not
     // `/`: Spark's `/` on longs is DOUBLE division, whose rounding could
     // move a boundary value across buckets at large magnitudes. The product
@@ -232,7 +232,8 @@ object Aggregations {
     // wrap without ANSI would mis-bucket and corrupt the rank offsets.
     // Exact decimal keeps every in-range value's bucket identical and makes
     // the wide-span case correct instead of silently wrong.
-    val bucketed = Fanout.broadcastAll(cust, bounds, col("c_custkey"), col("lo"))
+    val bucketed = cust
+      .withColumns(Map("lo" -> bounds.getField("lo"), "hi" -> bounds.getField("hi")))
       .withColumn("bkt",
         expr(s"CAST(((CAST(cents AS DECIMAL(38,0)) - lo) * ${nb}L) DIV (hi - lo + 1L) AS INT)"))
     val wLocal = Window.partitionBy("seg", "bkt").orderBy("cents", "c_custkey")
@@ -364,15 +365,14 @@ object Aggregations {
       .groupBy(trunc(col("o_orderdate"), "month").as("month"))
       .agg(expr(s"count_min_sketch(o_custkey, ${CmsEps}d, ${CmsConf}d, $CmsSeed)").as("sk"))
     val cmsMerge = udaf(graft.functions.CmsMergeAgg)
-    val merged = monthly.agg(count(lit(1)).as("n_months"),
-      cmsMerge(col("sk")).as("sk"))
+    val merged = monthly.agg(struct(count(lit(1)).as("n_months"),
+      cmsMerge(col("sk")).as("sk"))).scalar()
     val top = o.groupBy("o_custkey").agg(count(lit(1)).as("true_cnt"))
       .orderBy(desc("true_cnt"), asc("o_custkey")).limit(5)
     val est = udf((sk: Array[Byte], key: Long) =>
       org.apache.spark.util.sketch.CountMinSketch.readFrom(sk).estimateCount(key))
-    Fanout.broadcastAll(top, merged, col("o_custkey"), col("n_months"))
-      .select(col("o_custkey"), col("true_cnt"), col("n_months"),
-        est(col("sk"), col("o_custkey")).as("est"))
+    top.select(col("o_custkey"), col("true_cnt"), merged.getField("n_months").as("n_months"),
+        est(merged.getField("sk"), col("o_custkey")).as("est"))
       .orderBy("o_custkey")
   }
 

@@ -312,7 +312,7 @@ object EventTime {
     * of quintile thresholds the metric exceeds), not ntile: equal metric
     * values get equal scores (ntile splits ties arbitrarily), and the
     * plan needs no global window — one user-grain aggregate, ONE 1-row
-    * threshold aggregate broadcast back (Fanout), then row-local
+    * threshold aggregate read back as a scalar subquery, then row-local
     * scoring. R scores on the last-active day number directly (recent =
     * high = R5, so 555 = champions). Thresholds are exact interpolated
     * percentiles; both engines interpolate a + (b−a)·g, and metric
@@ -328,14 +328,14 @@ object EventTime {
       .agg(max("day_num").cast("double").as("r_raw"),
         count(lit(1)).cast("double").as("f_raw"),
         round(sum("value"), 4).as("m_raw"))
-    val thr = per.agg(
+    val thr = per.agg(struct(
       expr("percentile(r_raw, array(0.2, 0.4, 0.6, 0.8))").as("rq"),
       expr("percentile(f_raw, array(0.2, 0.4, 0.6, 0.8))").as("fq"),
-      expr("percentile(m_raw, array(0.2, 0.4, 0.6, 0.8))").as("mq"))
+      expr("percentile(m_raw, array(0.2, 0.4, 0.6, 0.8))").as("mq"))).scalar()
     def tile(v: String, q: String) =
       (lit(1) + (col(v) > col(q)(0)).cast("int") + (col(v) > col(q)(1)).cast("int") +
         (col(v) > col(q)(2)).cast("int") + (col(v) > col(q)(3)).cast("int")).cast("long")
-    Fanout.broadcastAll(per, thr, col("user_id"), col("rq")(0))
+    per.withColumns(Seq("rq", "fq", "mq").map(q => q -> thr.getField(q)).toMap)
       .select(tile("r_raw", "rq").as("r_score"), tile("f_raw", "fq").as("f_score"),
         tile("m_raw", "mq").as("m_score"), col("m_raw"))
       .groupBy("r_score", "f_score", "m_score")

@@ -258,21 +258,21 @@ object Joins {
     * Round6bOpsSpec additionally asserts prefilter selectivity, bloom/exact
     * agreement, the size cap, and the single-job build.
     *
-    * The sketch is a plan literal, so its size is capped (`BloomMaxBytes`,
-    * 8 MB — the same ceiling Spark's injected runtime filters use): a build
+    * The sketch is a plan literal, so its size is bounded twice: a build
     * side estimated past `BloomMaxItems` (~7M keys at 1% fpp) gets NO
     * prefilter instead of a bloated plan/codegen source — decided BEFORE
     * allocating the sketch or running any job, so a fact-sized build can
-    * neither OOM the driver on bit allocation nor waste a scan. The
+    * neither OOM the driver on bit allocation nor waste a scan — and a
+    * sketch that is built has its bits clamped to `BloomLitMaxBytes`. The
     * fallthrough is result-identical by construction — the exact semi-join
     * downstream is the answer either way; the bloom only sheds fact rows
-    * early. */
-  final val BloomMaxBytes: Int = 8 << 20
-
-  /** Largest item count whose 1%-fpp sketch serializes under
-    * `BloomMaxBytes`: numBits ≈ n·ln(0.01)/ln(2)² ≈ 9.59·n. Checked against
-    * the ESTIMATE before the sketch is allocated. */
-  final val BloomMaxItems: Long = (BloomMaxBytes.toLong * 8 / 9.6).toLong
+    * early.
+    *
+    * `BloomMaxItems` is the largest item count whose optimal 1%-fpp sketch
+    * (numBits ≈ n·ln(0.01)/ln(2)² ≈ 9.6·n) stays under 8 MiB, the ceiling
+    * Spark's injected runtime filters use: 8·2²³ bits / 9.6 = 6,990,506.
+    * Checked against the ESTIMATE before the sketch is allocated. */
+  final val BloomMaxItems: Long = 6990506L
 
   /** Budget for the sketch LITERAL that actually ships in the plan. The
     * row estimate errs high by design (×4 compression headroom, and Filter
@@ -289,14 +289,6 @@ object Joins {
     * the clamp alternative the round-8 advice proposed alongside the
     * headroom. */
   final val BloomLitMaxBytes: Int = 2 << 20
-
-  /** The cap decision, separated so the oversize path is unit-testable
-    * without materializing a multi-million-row build side. */
-  private[operators] def cappedProbe(bytes: Array[Byte],
-      probe: org.apache.spark.sql.Column): Option[org.apache.spark.sql.Column] =
-    if (bytes.length <= BloomMaxBytes)
-      Some(bloomMightContain(lit(bytes), probe))
-    else None
 
   /** sizeInBytes for a parquet scan is COMPRESSED file bytes while
     * `schema.defaultSize` is the in-memory row width, so the quotient can
@@ -325,8 +317,8 @@ object Joins {
   }
 
   /** The capped prefilter predicate: Some(probe) when the build side's
-    * ESTIMATED sketch fits `BloomMaxBytes`, None (no prefilter, no job)
-    * when it doesn't. `keyCol` must be integral — keys are inserted with
+    * ESTIMATED row count is at most `BloomMaxItems`, None (no prefilter,
+    * no job) when it isn't. `keyCol` must be integral — keys are inserted with
     * `putLong`, matching `graft_bloom_might_contain`'s `mightContainLong`
     * probe. The sketch is built with ONE `treeAggregate` pass (one job,
     * one scan of the build side — `stat.bloomFilter`'s SQL aggregate runs
@@ -350,7 +342,7 @@ object Joins {
         bf.writeTo(bos)
         bos.toByteArray
       }
-      cappedProbe(bytes, probe)
+      Some(bloomMightContain(lit(bytes), probe))
     }
   }
 

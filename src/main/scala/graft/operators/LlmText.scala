@@ -503,13 +503,12 @@ object LlmText {
     val tf = tok.groupBy("doc_id", "token").agg(count(lit(1)).as("tf"))
     val df = tok.select("doc_id", "token").distinct()
       .groupBy("token").agg(count(lit(1)).as("df"))
-    // N as a broadcast 1-row aggregate inside the plan — not an eager
-    // driver-side d.count(), which cost an extra full scan per invocation.
-    // Fanout.broadcastAll keeps it a broadcast HASH join, not a nested loop.
-    val n = d.agg(count(lit(1)).as("n_total"))
+    // N as a scalar subquery inside the plan — not an eager driver-side
+    // d.count(), which cost an extra full scan per invocation.
+    val n = d.agg(count(lit(1))).scalar()
     val w = Window.partitionBy("doc_id").orderBy(desc("tfidf"), asc("token"))
-    Fanout.broadcastAll(tf.join(broadcast(df), "token"), n, col("token"), col("n_total"))
-      .withColumn("tfidf", round(col("tf") * (log((col("n_total") + 1.0) / (col("df") + 1.0)) + 1.0), 6))
+    tf.join(broadcast(df), "token")
+      .withColumn("tfidf", round(col("tf") * (log((n + 1.0) / (col("df") + 1.0)) + 1.0), 6))
       .withColumn("rn", row_number().over(w))
       .filter(col("rn") === 1)
       .select(col("doc_id"), col("token").as("top_term"), col("tfidf"))
@@ -577,10 +576,9 @@ object LlmText {
       .select("doc_id", "w", "w2")
     val uniC = tok.groupBy("w").agg(count(lit(1)).as("c1"))
     val bigC = big.groupBy("w", "w2").agg(count(lit(1)).as("c2"))
-    val vocab = tok.agg(countDistinct("w").as("v"))
-    val scored = big.join(broadcast(bigC), Seq("w", "w2")).join(broadcast(uniC), Seq("w"))
-    Fanout.broadcastAll(scored, vocab, col("w"), col("v"))
-      .withColumn("lp", log((col("c2") + 1.0) / (col("c1") + col("v"))))
+    val vocab = tok.agg(countDistinct("w")).scalar()
+    big.join(broadcast(bigC), Seq("w", "w2")).join(broadcast(uniC), Seq("w"))
+      .withColumn("lp", log((col("c2") + 1.0) / (col("c1") + vocab)))
       .groupBy("doc_id")
       // 4-decimal margin: the per-doc mean folds shuffle-order-dependent sums
       .agg(count(lit(1)).as("n_bigrams"), round(avg("lp"), 4).as("avg_lp"))
@@ -760,26 +758,24 @@ object LlmText {
     * curation stack. tf / df / doc-length / corpus stats are all integer
     * counts, so every input to the scoring formula is bit-identical across
     * engines; only the summed score needs the rounding margin. The df table
-    * is query-term sized (broadcast), corpus stats are a broadcast 1-row
-    * aggregate (Fanout — hash join, not a nested loop), and tf/dl are
+    * is query-term sized (broadcast), corpus stats are a 1-row aggregate
+    * read as a scalar subquery, and tf/dl are
     * partial-agg shuffles on doc or token: linear at any corpus size. */
   def llmBm25(spark: SparkSession, sfDir: String): DataFrame = {
     val terms = Seq("scan", "hash", "agg")
     val tok = docs(spark, sfDir)
       .select(col("doc_id"), explode(split(col("norm"), " ")).as("token"))
     val dl = tok.groupBy("doc_id").agg(count(lit(1)).as("dl"))
-    val stats = dl.agg(count(lit(1)).as("n_docs"), sum("dl").as("tot_dl"))
+    val stats = dl.agg(struct(count(lit(1)).as("n_docs"), sum("dl").as("tot_dl"))).scalar()
     val tf = tok.filter(col("token").isin(terms: _*))
       .groupBy("doc_id", "token").agg(count(lit(1)).as("tf"))
     val df = tf.groupBy("token").agg(count(lit(1)).as("df"))
-    val joined = Fanout.broadcastAll(
-      tf.join(broadcast(df), "token").join(dl, "doc_id"),
-      stats, col("token"), col("n_docs"))
-    val avgdl = col("tot_dl").cast("double") / col("n_docs")
-    val idf = log(lit(1.0) + (col("n_docs") - col("df") + lit(0.5)) / (col("df") + lit(0.5)))
+    val nDocs = stats.getField("n_docs")
+    val avgdl = stats.getField("tot_dl").cast("double") / nDocs
+    val idf = log(lit(1.0) + (nDocs - col("df") + lit(0.5)) / (col("df") + lit(0.5)))
     val tfNorm = (col("tf") * lit(2.2)) /
       (col("tf") + lit(1.2) * (lit(0.25) + lit(0.75) * col("dl") / avgdl))
-    joined
+    tf.join(broadcast(df), "token").join(dl, "doc_id")
       .withColumn("term_score", idf * tfNorm)
       .groupBy("doc_id")
       .agg(round(sum("term_score"), 4).as("bm25"))
@@ -804,16 +800,14 @@ object LlmText {
     val bigC = big.groupBy("w", "w2").agg(count(lit(1)).as("c2"))
       .filter(col("c2") >= 5)
     val uniC = tok.groupBy("w").agg(count(lit(1)).as("c1"))
-    val totals = Fanout.broadcastAll(
-      tok.agg(count(lit(1)).as("t1")), big.agg(count(lit(1)).as("t2")),
-      col("t1"), col("t2"))
-    val scored = bigC
+    val t1 = tok.agg(count(lit(1))).scalar()
+    val t2 = big.agg(count(lit(1))).scalar()
+    bigC
       .join(broadcast(uniC), Seq("w"))
       .join(broadcast(uniC.select(col("w").as("w2"), col("c1").as("c1b"))), Seq("w2"))
-    Fanout.broadcastAll(scored, totals, col("w"), col("t1"))
       .withColumn("pmi", round(log(
-        (col("c2").cast("double") * col("t1") * col("t1")) /
-          (col("t2").cast("double") * col("c1") * col("c1b"))), 4))
+        (col("c2").cast("double") * t1 * t1) /
+          (t2.cast("double") * col("c1") * col("c1b"))), 4))
       .select(col("w"), col("w2"), col("c2"), col("pmi"))
       .orderBy(desc("pmi"), asc("w"), asc("w2"))
       .limit(20)
@@ -845,20 +839,20 @@ object LlmText {
     * the vocab be to cover X% of the corpus" curve every tokenizer design
     * starts from. One fact-sized explode+aggregate; the ranking window
     * runs over the VOCABULARY (tiny by definition), and the corpus total
-    * rides a broadcast 1-row aggregate. Counts are integers → the shares
+    * is a scalar subquery. Counts are integers → the shares
     * are deterministic ratios. */
   def llmVocabCoverage(spark: SparkSession, sfDir: String): DataFrame = {
     val freq = docs(spark, sfDir)
       .select(explode(split(col("norm"), " ")).as("token"))
       .groupBy("token").agg(count(lit(1)).as("c"))
-    val tot = freq.agg(sum("c").as("t"))
+    val tot = freq.agg(sum("c")).scalar()
     val w = Window.orderBy(desc("c"), asc("token"))
     val cumW = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    Fanout.broadcastAll(freq, tot, col("token"), col("t"))
+    freq
       .withColumn("rnk", row_number().over(w).cast("long"))
       .withColumn("cum", sum("c").over(cumW))
       .select(col("rnk"), col("token"), col("c"),
-        round(col("cum").cast("double") / col("t"), 4).as("cum_share"))
+        round(col("cum").cast("double") / tot, 4).as("cum_share"))
       .orderBy("rnk")
   }
 
@@ -974,17 +968,15 @@ object LlmText {
     * (weight ∝ √tokens, the standard temperature-style upweighting of
     * small domains; sqrt is correctly rounded in IEEE so both engines agree
     * bit-for-bit before the rounded ratio). One partial-agg shuffle over
-    * the corpus; the normalizing total rides a broadcast 1-row aggregate
-    * (Fanout — hash join, not a nested loop). */
+    * the corpus; the normalizing total is a scalar subquery. */
   def llmDomainMix(spark: SparkSession, sfDir: String): DataFrame = {
     val per = docs(spark, sfDir)
       .groupBy("lang", "source")
       .agg(count(lit(1)).as("n_docs"),
         sum(size(split(col("norm"), " ")).cast("long")).as("n_tokens"))
-    val tot = per.agg(sum(sqrt(col("n_tokens"))).as("t"))
-    Fanout.broadcastAll(per, tot, col("lang"), col("t"))
-      .select(col("lang"), col("source"), col("n_docs"), col("n_tokens"),
-        round(sqrt(col("n_tokens")) / col("t"), 6).as("mix_weight"))
+    val tot = per.agg(sum(sqrt(col("n_tokens")))).scalar()
+    per.select(col("lang"), col("source"), col("n_docs"), col("n_tokens"),
+        round(sqrt(col("n_tokens")) / tot, 6).as("mix_weight"))
       .orderBy("lang", "source")
   }
 
@@ -1027,11 +1019,12 @@ object LlmText {
       .groupBy("lang", "source")
       .agg(count(lit(1)).as("n_docs"),
         sum(size(split(col("norm"), " ")).cast("long")).as("n_tokens"))
-    val tot = per.agg(sum(sqrt(col("n_tokens"))).as("t"), sum("n_docs").as("n_total"))
-    val rates = Fanout.broadcastAll(per, tot, col("lang"), col("t"))
+    val tot = per.agg(struct(sum(sqrt(col("n_tokens"))).as("t"), sum("n_docs").as("n_total"))).scalar()
+    val rates = per
       .withColumn("keep_rate",
         least(lit(1.0),
-          round(round(sqrt(col("n_tokens")) / col("t"), 6) * col("n_total") / col("n_docs"), 6)))
+          round(round(sqrt(col("n_tokens")) / tot.getField("t"), 6) *
+            tot.getField("n_total") / col("n_docs"), 6)))
       .select(col("lang"), col("source"), col("n_docs").as("n_before"), col("keep_rate"))
     docs(spark, sfDir)
       .withColumn("u", (col("doc_id") * 48271 % 2147483647).cast("double") / 2147483647.0)

@@ -84,7 +84,7 @@ object LlmVector {
     * plan. The synthesized tables contain no null embeddings, so the
     * filter changes nothing today — it pins the declared behavior if the
     * corpus ever does. */
-  private[graft] def emb(spark: SparkSession, sfDir: String): DataFrame = {
+  private def emb(spark: SparkSession, sfDir: String): DataFrame = {
     Tables.embeddings(spark, sfDir)
       .filter(col("embedding").isNotNull)
       .withColumn("nrm", norm(col("embedding")))
@@ -412,18 +412,17 @@ object LlmVector {
     * label·2^MaxBits + sign-projection bucket — the shift clears the full
     * bucket range, so cells never collide across labels) — the
     * corpus-tracking blocking key shared by the IVF index build and
-    * `llm_semdedup`. Corpus size → bucket bits is attached as a broadcast
-    * scalar (no collect). */
+    * `llm_semdedup`. Corpus size → bucket bits is a scalar subquery (no
+    * collect). */
   private def cellAssigned(spark: SparkSession, sfDir: String): DataFrame =
-    Fanout.broadcastAll(emb(spark, sfDir), nTotal(spark, sfDir), col("vec_id"), col("n_total"))
-      .withColumn("b_bits", bucketBits(col("n_total")))
-      .withColumn("vcell",
-        col("label").cast("long") * lit(1L << MaxBits) + bucketCol(col("b_bits")))
+    emb(spark, sfDir)
+      .withColumn("vcell", col("label").cast("long") * lit(1L << MaxBits) +
+        bucketCol(bucketBits(nTotal(spark, sfDir))))
 
-  /** The one-row corpus size `n_total` — counts ALL embeddings rows,
+  /** The corpus size as a scalar subquery — counts ALL embeddings rows,
     * nulls included, like the DuckDB oracle's bucket-bit parameter. */
-  private def nTotal(spark: SparkSession, sfDir: String): DataFrame =
-    Tables.embeddings(spark, sfDir).agg(count(lit(1)).as("n_total"))
+  private def nTotal(spark: SparkSession, sfDir: String): Column =
+    Tables.embeddings(spark, sfDir).agg(count(lit(1))).scalar()
 
   /** Per-cell rounded centroids (cell, centroid float[], centroid_nrm) —
     * shared by the scored-cell cache build and the IVF-PQ residual coder
@@ -436,36 +435,46 @@ object LlmVector {
       .agg(count(lit(1)).as("n"), sums: _*)
       .select(col("cell"), array((0 until Dim).map(i =>
         round(col(s"s$i") / col("n"), 4).cast("float")): _*).as("centroid"))
-      // norm once per centroid BEFORE the broadcast, not once per (vector, cell) pair
+      // norm once per centroid BEFORE the matrix, not once per (vector, cell) pair
       .withColumn("centroid_nrm", norm(col("centroid")))
   }
 
-  /** The whole centroid index as ONE row of three parallel cell-ascending
-    * arrays (ids, row-major flattened centroids, norms): k·(8+4·Dim+8)
-    * bytes — ~2.8 MB at the ×300 probe's N=600k (10·2^10 cells), ~178 MB
-    * at the MaxBits=16 saturation point (N ≈ 8.6×10⁹ — see the MaxBits
-    * doc; a dimension table at every reachable scale). Flat primitive
-    * arrays (not array<struct>) so the scorer's hot loop reads them with
-    * zero per-cell allocations; array_sort on the struct list orders by
-    * its first field (cell), making the layout deterministic. Shared by
-    * the scored-cell cache build and the stream serve (same layout, so
-    * the two `graft_ivf_topcells` consumers cannot drift). */
-  private def centroidMatrix(centroids: DataFrame): DataFrame =
+  /** The whole centroid index as ONE scalar subquery value: a struct of
+    * three parallel cell-ascending arrays (ids, row-major flattened
+    * centroids, norms), k·(8+4·Dim+8) bytes — ~2.8 MB at the ×300 probe's
+    * N=600k (10·2^10 cells), ~178 MB at the MaxBits=16 saturation point
+    * (N ≈ 8.6×10⁹ — see the MaxBits doc). The driver computes it once
+    * before the stage that scores against it, and the value ships inside
+    * that stage's task binary (broadcast once per stage), so it must stay
+    * a dimension-table-sized value.
+    * Flat primitive arrays (not array<struct>) so the scorer's hot loop
+    * reads them with zero per-cell allocations; array_sort on the struct
+    * list orders by its first field (cell), making the layout
+    * deterministic. Shared by the scored-cell cache build and the stream
+    * serve (same layout, so the two `graft_ivf_topcells` consumers cannot
+    * drift). */
+  private def centroidMatrix(centroids: DataFrame): Column =
     centroids
       .agg(array_sort(collect_list(struct(col("cell"), col("centroid"), col("centroid_nrm")))).as("cs"))
-      .select(
+      .select(struct(
         transform(col("cs"), c => c.getField("cell")).as("cells"),
         flatten(transform(col("cs"), c => c.getField("centroid"))).as("cflat"),
-        transform(col("cs"), c => c.getField("centroid_nrm")).as("cnrms"))
+        transform(col("cs"), c => c.getField("centroid_nrm")).as("cnrms")))
+      .scalar()
+
+  /** One row per top-`limit` cell (a `graft_ivf_topcells` struct) of the
+    * embedding `emb` against the centroid `matrix`. */
+  private def topCells(emb: Column, nrm: Column, matrix: Column, limit: Int): Column =
+    explode(ivfTopCells(emb, nrm, matrix.getField("cells"), matrix.getField("cflat"),
+      matrix.getField("cnrms"), limit))
 
   /** IVF cell index: coarse cells = (label, sign-projection bucket)
     * centroids, components rounded to 4 decimals — the repo's margin for
     * shuffle-order-dependent double sums — so both engines land on the same
     * value despite sum-order drift in the avg (6 decimals would sit ~100×
     * closer to the drift scale). Every vector is scored against all k
-    * centroids via Fanout.broadcastAll — a broadcast HASH join (k rows —
-    * dimension-table sized), never a nested-loop cross join — then ranked
-    * per vector.
+    * centroids of the one-value centroid matrix (a scalar subquery —
+    * dimension-table sized; no join at all) — then ranked per vector.
     *
     * CELL COUNT SCALES WITH THE CORPUS (round 6; growth LAW revised round
     * 16 — see bucketBits): with cells fixed to the 10 labels, per-cell
@@ -498,8 +507,8 @@ object LlmVector {
     // wall across same-code sweeps — all to keep ≤19 rows/vector. Now the
     // scorer (`graft_ivf_topcells`, a native expression) ranks all k cells
     // against each vector IN the row pipeline with a bounded insertion
-    // pass and emits only the top-(3+2·MaxBits) structs; the only joins
-    // are broadcast fan-outs of one single-row dimension table. Same dot
+    // pass and emits only the top-(3+2·MaxBits) structs, reading the
+    // centroid matrix as one scalar subquery value — no join. Same dot
     // fold order, same (dist DESC, cell ASC) comparator semantics — the
     // cached relation is byte-identical to the fan-out formulation's, so
     // neither the oracle nor the recall spec can tell the difference.
@@ -510,12 +519,9 @@ object LlmVector {
     // and both consumers group/window on vec_id so the cache's
     // partitioning is reused with no further exchange.
     val parts = spark.sessionState.conf.numShufflePartitions
-    Fanout.broadcastAll(
-        emb(spark, sfDir).select("vec_id", "embedding", "nrm")
-          .repartition(parts, col("vec_id")),
-        matrix, col("vec_id"), size(col("cells")))
-      .withColumn("tc", explode(ivfTopCells(col("embedding"), col("nrm"),
-        col("cells"), col("cflat"), col("cnrms"), MaxRank)))
+    emb(spark, sfDir).select("vec_id", "embedding", "nrm")
+      .repartition(parts, col("vec_id"))
+      .withColumn("tc", topCells(col("embedding"), col("nrm"), matrix, MaxRank))
       .select(col("vec_id"), col("tc.cell").as("cell"),
         col("tc.dist2cell").as("dist2cell"), col("tc.cell_rank").as("cell_rank"))
       .cache()
@@ -539,7 +545,7 @@ object LlmVector {
       .select("a", "b", "cos"))
 
   /** Every vector's own (rank-1) cell row of the cached ranking. */
-  private[graft] def ownCell(spark: SparkSession, sfDir: String): DataFrame =
+  private def ownCell(spark: SparkSession, sfDir: String): DataFrame =
     cellScored(spark, sfDir).filter(col("cell_rank") === 1)
 
   /** The IVF index side (b, cell, eb, nb): every vector in its own cell,
@@ -547,7 +553,7 @@ object LlmVector {
     * N / shuffled at scale) instead of riding every ranked row through the
     * join. The batch build and the stream serve both read this relation,
     * so a served query probes exactly the index the batch path probes. */
-  private def annIndex(spark: SparkSession, sfDir: String): DataFrame =
+  private[graft] def annIndex(spark: SparkSession, sfDir: String): DataFrame =
     ownCell(spark, sfDir)
       .join(emb(spark, sfDir).select("vec_id", "embedding", "nrm"), "vec_id")
       .select(col("vec_id").as("b"), col("cell"),
@@ -562,8 +568,8 @@ object LlmVector {
     * ~bounded (~nprobe · 512-row cells), so total work grows ~N·log N —
     * the textbook IVF knob. */
   private def annProbes(spark: SparkSession, sfDir: String): DataFrame =
-    Fanout.broadcastAll(cellScored(spark, sfDir), nTotal(spark, sfDir), col("vec_id"), col("n_total"))
-      .filter(col("cell_rank") <= nprobeCol(bucketBits(col("n_total"))))
+    cellScored(spark, sfDir)
+      .filter(col("cell_rank") <= nprobeCol(bucketBits(nTotal(spark, sfDir))))
       .join(emb(spark, sfDir).select("vec_id", "embedding", "nrm"), "vec_id")
       .select(col("vec_id").as("a"), col("cell"),
         col("embedding").as("ea"), col("nrm").as("na"))
@@ -612,7 +618,8 @@ object LlmVector {
     * result is the stream of (qid, nn candidate, exact cos) rows:
     *
     *  - each query row ranks its top-nprobe cells IN-ROW against the
-    *    broadcast one-row centroid matrix (`graft_ivf_topcells` — the same
+    *    centroid matrix, one scalar subquery value computed from the
+    *    static corpus (`graft_ivf_topcells` — the same
     *    expression, matrix and probe law as the batch build, so a query
     *    vector that exists in the corpus probes EXACTLY the cells
     *    `llm_ann_ivf` probes for it);
@@ -635,10 +642,8 @@ object LlmVector {
     val n = Tables.embeddings(spark, sfDir).count()
     val nprobe = nprobeScalar(bucketBitsScalar(n))
     val matrix = centroidMatrix(centroidRelation(spark, sfDir))
-    Fanout.broadcastAll(queries.withColumn("nq", norm(col("embedding"))),
-        matrix, col("qid"), size(col("cells")))
-      .withColumn("tc", explode(ivfTopCells(col("embedding"), col("nq"),
-        col("cells"), col("cflat"), col("cnrms"), nprobe)))
+    queries.withColumn("nq", norm(col("embedding")))
+      .withColumn("tc", topCells(col("embedding"), col("nq"), matrix, nprobe))
       .select(col("qid"), col("tc.cell").as("cell"),
         col("embedding").as("eq"), col("nq"))
       .join(annIndex(spark, sfDir), "cell")
@@ -776,7 +781,7 @@ object LlmVector {
     * broadcast/probe, with the reconstruction error quantifying the recall
     * cost. Bounds come from an exact per-dimension min/max aggregate
     * (selections — no float-sum drift, so both engines see identical
-    * bounds) broadcast to every row via Fanout; codes are integers, so
+    * bounds) read by every row as one scalar subquery; codes are integers, so
     * `code_sum` is parity-trivial, and the MSE is the usual left-to-right
     * double fold both engines share. */
   def llmEmbedQuantize(spark: SparkSession, sfDir: String): DataFrame = {
@@ -786,9 +791,10 @@ object LlmVector {
         max(col("v").cast("double")).as("hi"))
     val bounds = stats
       .groupBy().agg(array_sort(collect_list(struct(col("pos"), col("lo"), col("hi")))).as("plh"))
-      .select(transform(col("plh"), p => p.getField("lo")).as("lows"),
-        transform(col("plh"), p => p.getField("hi")).as("highs"))
-    Fanout.broadcastAll(e, bounds, col("vec_id"), col("lows"))
+      .select(struct(transform(col("plh"), p => p.getField("lo")).as("lows"),
+        transform(col("plh"), p => p.getField("hi")).as("highs")))
+      .scalar()
+    e.withColumns(Map("lows" -> bounds.getField("lows"), "highs" -> bounds.getField("highs")))
       .withColumn("codes", expr(
         """transform(sequence(0, size(embedding) - 1),
           |  i -> CASE WHEN highs[i] = lows[i] THEN 0L

@@ -201,16 +201,16 @@ object Quality {
     * needs); the total is the sum of the rows. Deterministic to the
     * margin: proportions are ratios of exact integer counts, so only the
     * final ln/multiply touches float variance — rounded at 6.
-    * Scale: one bounds aggregate broadcast back (no driver collect), one
+    * Scale: one bounds aggregate read as a scalar subquery (no driver collect), one
     * filtered scan of the two years, one ≤10-row shuffle. */
   def dqDriftPsi(spark: SparkSession, sfDir: String): DataFrame = {
     val o = Tables.orders(spark, sfDir)
       .select(col("o_orderkey"), col("o_totalprice").as("v"),
         year(col("o_orderdate")).as("yr"))
-    val bounds = o.agg(min("v").as("lo"), max("v").as("hi"),
-      min("yr").as("y0"), max("yr").as("y1"))
+    val bounds = o.agg(struct(min("v").as("lo"), max("v").as("hi"),
+      min("yr").as("y0"), max("yr").as("y1"))).scalar()
     val nB = 10L
-    Fanout.broadcastAll(o, bounds, col("o_orderkey"), col("lo"))
+    o.withColumns(Seq("lo", "hi", "y0", "y1").map(c => c -> bounds.getField(c)).toMap)
       .filter(col("yr") === col("y0") || col("yr") === col("y1"))
       .withColumn("bucket", least(lit(nB - 1),
         floor((col("v") - col("lo")) / ((col("hi") - col("lo")) / lit(nB.toDouble)))))

@@ -198,7 +198,7 @@ object Sinks {
     * optimization lakehouses run as OPTIMIZE ZORDER BY: lineitem rewritten
     * in `zorderFiles(...)` (bytes-scaled) range-partitioned files ordered by
     * the interleaved bits of (l_orderkey, l_partkey), each first bucketized to 16 bits
-    * against its global min/max (a broadcast 1-row aggregate via Fanout).
+    * against its global min/max (a 1-row aggregate read as a scalar subquery).
     * A single-column sort gives later scans min/max pruning on ONE
     * dimension and leaves the other's per-file span at ~100%; the z-curve
     * splits BOTH spans, so predicates on either key (or both) skip files.
@@ -214,10 +214,10 @@ object Sinks {
     val out = Scans.scratchDir(spark, sfDir, "zorder_lineitem")
     val li = Tables.lineitem(spark, sfDir)
       .select("l_orderkey", "l_partkey", "l_quantity", "l_extendedprice")
-    val bounds = li.agg(
+    val bounds = li.agg(struct(
       min("l_orderkey").as("o_lo"), max("l_orderkey").as("o_hi"),
-      min("l_partkey").as("p_lo"), max("l_partkey").as("p_hi"))
-    Fanout.broadcastAll(li, bounds, col("l_orderkey"), col("o_lo"))
+      min("l_partkey").as("p_lo"), max("l_partkey").as("p_hi"))).scalar()
+    li.withColumns(Seq("o_lo", "o_hi", "p_lo", "p_hi").map(c => c -> bounds.getField(c)).toMap)
       .withColumn("o16",
         expr("((l_orderkey - o_lo) * 65535) DIV greatest(o_hi - o_lo, 1)"))
       .withColumn("p16",
@@ -233,10 +233,10 @@ object Sinks {
       min("l_orderkey").as("olo"), max("l_orderkey").as("ohi"),
       min("l_partkey").as("plo"), max("l_partkey").as("phi"),
       count(lit(1)).as("n"))
-    val global = rd.agg(
+    val global = rd.agg(struct(
       min("l_orderkey").as("g_olo"), max("l_orderkey").as("g_ohi"),
-      min("l_partkey").as("g_plo"), max("l_partkey").as("g_phi"))
-    Fanout.broadcastAll(perFile, global, col("olo"), col("g_olo"))
+      min("l_partkey").as("g_plo"), max("l_partkey").as("g_phi"))).scalar()
+    perFile.withColumns(Seq("g_olo", "g_ohi", "g_plo", "g_phi").map(c => c -> global.getField(c)).toMap)
       .agg(
         count(lit(1)).as("n_files"),
         sum("n").as("n_rows"),

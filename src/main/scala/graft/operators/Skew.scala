@@ -16,13 +16,22 @@ import org.apache.spark.sql.functions._
   */
 object Skew {
 
+  /** `base`, suffixed with `_` until no column of `frames` has that name:
+    * a generated helper column must not silently replace, join on or drop
+    * a caller's column of the same name. */
+  private def freshColumn(base: String, frames: DataFrame*): String = {
+    var c = base
+    while (frames.exists(_.columns.contains(c))) c += "_"
+    c
+  }
+
   /** Inner equi-join of `fact` (potentially skewed on `key`) with the small
     * `build` side, salted `salt` ways. `build` must be unique per key (a
     * dimension), since it is replicated. */
   def saltedJoin(fact: DataFrame, build: DataFrame, key: String, salt: Int): DataFrame = {
     require(salt > 0, "salt must be positive")
     val salts = array((0 until salt).map(lit): _*)
-    val saltCol = Fanout.freshColumn("__graft_salt", fact, build)
+    val saltCol = freshColumn("__graft_salt", fact, build)
     // Salt assignment only affects placement, never the result: a per-row
     // uniform draw, NOT a hash of every fact column (which fails analysis on
     // unhashable column types such as MapType). A hot key fans out over all

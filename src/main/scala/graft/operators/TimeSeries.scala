@@ -558,18 +558,18 @@ object TimeSeries {
     * 6, intercept at 4. */
   def tsTheilSen(spark: SparkSession, sfDir: String): DataFrame = {
     val dailyAll = dailyRevenue(spark, sfDir, "y")
-    val bound = dailyAll.agg(max("day").as("dmax"))
-    val daily = Fanout.broadcastAll(dailyAll, bound, col("day"), col("dmax"))
-      .filter(datediff(col("dmax"), col("day")) < 365)
+    val dmax = dailyAll.agg(max("day")).scalar()
+    val daily = dailyAll
+      .filter(datediff(dmax, col("day")) < 365)
       .select(datediff(col("day"), to_date(lit("1995-01-01"))).cast("double").as("x"),
         col("y"))
     val a = daily.select(col("x").as("xa"), col("y").as("ya"))
     val b = daily.select(col("x").as("xb"), col("y").as("yb"))
     val slope = a.crossJoin(b).filter(col("xa") < col("xb"))
       .select(((col("yb") - col("ya")) / (col("xb") - col("xa"))).as("s"))
-      .agg(expr("percentile(s, 0.5)").as("slope"))
-    Fanout.broadcastAll(daily, slope, col("x"), col("slope"))
-      .select(col("x"), col("y"), col("slope"))
+      .agg(expr("percentile(s, 0.5)"))
+      .scalar()
+    daily.select(col("x"), col("y"), slope.as("slope"))
       .agg(count(lit(1)).as("n_days"),
         round(first("slope"), 6).as("slope"),
         round(expr("percentile(y - slope * x, 0.5)"), 4).as("intercept"))

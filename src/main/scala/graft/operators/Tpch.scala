@@ -218,21 +218,20 @@ object Tpch {
   }
 
   /** Q22 idiom — idle high-balance customers: above the average positive
-    * account balance (1-row scalar attached via Fanout.broadcastAll — a
-    * broadcast HASH join, so PlanSpec's cross-product guard stays
-    * exception-free) with no order since 2000 (anti-join), counted per
+    * account balance (a scalar subquery over one 1-row aggregate) with no
+    * order since 2000 (anti-join), counted per
     * nation. The threshold is rounded at 6 decimals on BOTH engines:
     * the raw avg is a shuffle-order-dependent double sum, and a balance
     * within a ULP of it could otherwise flip set membership. */
   def q22IdleCustomers(spark: SparkSession, sfDir: String): DataFrame = {
     val c = Tables.customer(spark, sfDir)
     val avgBal = c.filter(col("c_acctbal") > 0.0)
-      .agg(round(avg("c_acctbal"), 6).as("avg_bal"))
+      .agg(round(avg("c_acctbal"), 6))
+      .scalar()
     val cutoff = to_timestamp_ntz(lit("2000-01-01"))
     val recent = Tables.orders(spark, sfDir).filter(col("o_orderdate") >= cutoff)
     val n = Tables.nation(spark, sfDir)
-    Fanout.broadcastAll(c, avgBal, col("c_custkey"), col("avg_bal"))
-      .filter(col("c_acctbal") > col("avg_bal"))
+    c.filter(col("c_acctbal") > avgBal)
       .join(recent, col("c_custkey") === recent("o_custkey"), "left_anti")
       .join(broadcast(n), col("c_nationkey") === n("n_nationkey"))
       .groupBy("n_name")
@@ -277,8 +276,8 @@ object Tpch {
   }
 
   /** Q15 idiom — top supplier by quarterly revenue: a supplier-keyed revenue
-    * rollup, its max attached back as a 1-row broadcast scalar (Fanout —
-    * hash join, not a view + correlated subquery re-scan), equality filter,
+    * rollup, its max read back as an uncorrelated scalar subquery (not a
+    * view + correlated subquery re-scan), equality filter,
     * supplier names joined last. Revenue is rounded at 2 decimals BEFORE
     * the max/equality on both engines so membership can't flip on
     * sum-order ULPs. */
@@ -289,10 +288,9 @@ object Tpch {
       .filter(col("l_shipdate") >= lo && col("l_shipdate") < hi)
       .groupBy(col("l_suppkey").as("supplier_no"))
       .agg(round(sum(rev), 2).as("total_revenue"))
-    val mx = suppRev.agg(max("total_revenue").as("max_rev"))
+    val mx = suppRev.agg(max("total_revenue")).scalar()
     val s = Tables.supplier(spark, sfDir)
-    Fanout.broadcastAll(suppRev, mx, col("supplier_no"), col("max_rev"))
-      .filter(col("total_revenue") === col("max_rev"))
+    suppRev.filter(col("total_revenue") === mx)
       .join(s, col("supplier_no") === s("s_suppkey"))
       .select(col("s_suppkey"), col("s_name"), col("total_revenue"))
       .orderBy("s_suppkey")

@@ -146,11 +146,9 @@ object Windows {
     val offsets = counts
       .withColumn("off", coalesce(sum("bn").over(wPrefix), lit(0L)))
       .select("bkt", "off")
-    val nRow = counts.agg(sum("bn").as("n_total"))
-    val ranked = Fanout.broadcastAll(
-      c.withColumn("lr", row_number().over(wLocal).cast("long"))
-        .join(broadcast(offsets), Seq("bkt")),
-      nRow, col("c_custkey"), col("n_total"))
+    val ranked = c.withColumn("lr", row_number().over(wLocal).cast("long"))
+      .join(broadcast(offsets), Seq("bkt"))
+      .withColumn("n_total", counts.agg(sum("bn")).scalar())
     val r = col("off") + col("lr")
     val n = col("n_total")
     val q = floor(n / lit(10)).cast("long")       // small-bucket size

@@ -89,9 +89,8 @@ class GraphSpec extends SparkSpec {
       .agg(collect_list("b").as("nbrs"), count(lit(1)).as("outdeg"))
       .persist()
     adj.count()
-    val n = adj.agg(count(lit(1)).as("n_total"))
-    var ranks = Fanout.broadcastAll(adj.select("a"), n, col("a"), col("n_total"))
-      .select(col("a").as("node"), col("n_total"), (lit(1.0) / col("n_total")).as("r"))
+    val n = adj.agg(count(lit(1))).scalar()
+    var ranks = adj.select(col("a").as("node"), n.as("n_total"), (lit(1.0) / n).as("r"))
     for (_ <- 1 to 5) {
       ranks = adj
         .join(ranks.select(col("node").as("a"), col("n_total"), col("r")), "a")

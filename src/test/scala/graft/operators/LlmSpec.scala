@@ -1,7 +1,6 @@
 package graft.operators
 
 import graft.SparkSpec
-import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Specs for the rows-only (non-oracle-checkable) LLM-pipeline operators:
@@ -262,14 +261,6 @@ class LlmSpec extends SparkSpec {
     assert(recall >= 0.4, s"recall@5 at sf0.1 was $recall — the nprobe budget regressed")
   }
 
-  /** The float-resident counterpart of the IVF-PQ codes index: every
-    * vector in its own cell with its full embedding and norm. */
-  private def floatIndex(sfDir: String): DataFrame = {
-    val own = LlmVector.ownCell(spark, sfDir).select("vec_id", "cell")
-    LlmVector.emb(spark, sfDir).select(col("vec_id").as("b"), col("embedding"), col("nrm"))
-      .join(own, col("b") === col("vec_id")).select("b", "cell", "embedding", "nrm")
-  }
-
   test("IVF-PQ recall@5 holds the plain-IVF floor; codes index is measurably smaller") {
     val sfBig = "/root/testdata/sf0.1"
     // recall vs exact, same protocol as the plain-IVF gate — the refine
@@ -283,7 +274,8 @@ class LlmSpec extends SparkSpec {
     assert(pq.groupBy(_._1).forall(_._2.size <= 5))
 
     // memory: the smaller serving residency is the point of the compose —
-    // cache both layouts and compare MEASURED storage bytes. Two traps:
+    // cache the codes index and the float index the plain-IVF path serves
+    // (`annIndex`) and compare MEASURED storage bytes. Two traps:
     // (1) the recall run above memo-cached the same codes-index plan, and
     // CacheManager dedups by plan, so a second cache() of it would
     // materialize nothing (delta = 0) — release the memos first; (2) both
@@ -301,7 +293,7 @@ class LlmSpec extends SparkSpec {
     }
     val n = graft.Tables.embeddings(spark, sfBig).count()
     val codeBytes = cachedBytes(LlmVector.buildPqIndex(spark, sfBig))
-    val floatBytes = cachedBytes(floatIndex(sfBig))
+    val floatBytes = cachedBytes(LlmVector.annIndex(spark, sfBig))
     assert(codeBytes > 0 && floatBytes > 0)
     // per-row accounting at Dim=64: the PAYLOAD shrinks exactly 4× (256
     // float bytes → 64 code bytes per vector) but each row also carries

@@ -92,8 +92,9 @@ class PlanSpec extends SparkSpec {
 
   test("embedding similarity queries never plan a nested-loop join") {
     // The exact all-pairs path is a fragment-replicate equi-join and the IVF
-    // path scores centroids through a constant-key broadcast HASH join, so
-    // no declared embedding query may fall back to BroadcastNestedLoopJoin.
+    // path scores each vector in-row against the centroid matrix, one
+    // scalar subquery value, so no declared embedding query may fall back
+    // to BroadcastNestedLoopJoin.
     val embedding = Seq("llm_cosine_topk", "llm_knn_label", "llm_ann_ivf", "llm_embed_neardup")
     embedding.foreach { name =>
       val plan = formatted(graft.SparkEntry.queries(name)(spark, sf001))
@@ -203,9 +204,13 @@ class PlanSpec extends SparkSpec {
   }
 
   test("agg_histogram broadcasts its 1-row bounds, never collects or re-sorts") {
+    // the bounds row arrives as one scalar subquery; no join attaches it
     val plan = formatted(Aggregations.aggHistogram(spark, sf001))
-    assert(plan.contains("BroadcastHashJoin"), "bounds row must broadcast (Fanout)")
-    assert(!plan.contains("SortMergeJoin") && !plan.contains("CartesianProduct"))
+    assert(plan.contains("===== Subqueries =====") &&
+      plan.contains("Hosting Expression = Subquery subquery#"),
+      s"bounds row must arrive as a scalar subquery:\n$plan")
+    val joins = Seq("BroadcastHashJoin", "SortMergeJoin", "BroadcastNestedLoopJoin", "CartesianProduct")
+    assert(!joins.exists(plan.contains), s"agg_histogram plans a join:\n$plan")
   }
 
   test("sql_qualify plans the rank-limit pushdown (WindowGroupLimit)") {
@@ -304,6 +309,22 @@ class PlanSpec extends SparkSpec {
         else None
       }
     assert(offenders.isEmpty, s"cross products in: ${offenders.sorted.mkString(", ")}")
+  }
+
+  test("no declared query joins a one-row relation") {
+    // A one-row statistic (bounds, a total, a corpus size, the centroid
+    // matrix) reaches the rows that read it as a scalar subquery
+    // (`Dataset.scalar()`), which fails loudly if it ever has a second
+    // row. A join with a side the optimizer proves has at most one row is
+    // the fan-out form this keeps out: a second row there would silently
+    // multiply the other side's rows.
+    import org.apache.spark.sql.catalyst.plans.logical.Join
+    val offenders = graft.SparkEntry.queries.toSeq.sortBy(_._1).collect {
+      case (name, fn) if fn(spark, sf001).queryExecution.optimizedPlan.collectWithSubqueries {
+          case j: Join if Seq(j.left, j.right).exists(_.maxRows.exists(_ <= 1)) => j
+        }.nonEmpty => name
+    }
+    assert(offenders.isEmpty, s"joins with a one-row side in: ${offenders.mkString(", ")}")
   }
 
   test("every spec-gated (no-oracle) query emits only driver-proven output dtypes") {

@@ -37,17 +37,19 @@ class Round6bOpsSpec extends SparkSpec {
       .filter(col("o_orderpriority") === "1-URGENT").select("o_orderkey")
     assert(Joins.bloomPrefilter(urgent, "o_orderkey", col("l_orderkey")).isDefined,
       "small build side must get a prefilter")
-    // over the cap → NO probe (the query keeps only the exact semi-join,
-    // which is result-identical — the bloom never changes the answer)
-    val oversized = new Array[Byte](Joins.BloomMaxBytes + 1)
-    assert(Joins.cappedProbe(oversized, col("l_orderkey")).isEmpty,
-      "oversized sketch must fall through instead of inflating the plan")
-    // the 8 MB ceiling is real: a build side of ~10M distinct keys at 1% fpp
-    // serializes past it (≈12 MB), so a fact-sized build can't sneak in
-    val big = org.apache.spark.util.sketch.BloomFilter.create(10000000L, 0.01)
-    val bos = new java.io.ByteArrayOutputStream()
-    big.writeTo(bos)
-    assert(bos.toByteArray.length > Joins.BloomMaxBytes)
+    // an estimate whose optimal 1%-fpp sketch (≈19.2M bits) passes the
+    // literal budget gets a sketch clamped to it: the literal that ships in
+    // the plan is the clamped bit array plus the sketch's small header.
+    // (Past BloomMaxItems no sketch is built — the single-job test below.)
+    val wide = spark.range(2000000).toDF()
+    assert(Joins.estimatedRows(wide) * 9.59 > Joins.BloomLitMaxBytes.toLong * 8)
+    val probe = Joins.bloomPrefilter(wide, "id", col("l_orderkey"))
+    assert(probe.isDefined, "a build side under BloomMaxItems must get a prefilter")
+    import org.apache.spark.sql.catalyst.expressions.Literal
+    val shipped = wide.toDF("l_orderkey").filter(probe.get).queryExecution.analyzed
+      .expressions.flatMap(_.collect { case Literal(b: Array[Byte], _) => b.length })
+    assert(shipped.size == 1 && shipped.head <= Joins.BloomLitMaxBytes + 16,
+      s"sketch literal of $shipped bytes exceeds the ${Joins.BloomLitMaxBytes}-byte budget")
   }
 
   test("bloom prefilter build is a single job, and an oversized ESTIMATE runs none") {

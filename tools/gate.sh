@@ -9,7 +9,8 @@
 #   /tmp/graft_gate (dumps land in <outRoot>/sf0.001, <outRoot>/sf0.01 and
 #   <outRoot>/sf0.1)
 # Runs the compiled classes through run_tool.sh, so compile first
-# (`sbt compile`). Honors SPARK_DRIVER_MEM and SPARK_GRAFT_CPUS.
+# (`sbt compile`). A scale factor whose Verify fails is reported as failed
+# and its replay is skipped. Honors SPARK_DRIVER_MEM and SPARK_GRAFT_CPUS.
 set -uo pipefail
 DATA=${1:?usage: tools/gate.sh <testdataDir> [outRoot]}
 OUT=${2:-/tmp/graft_gate}
@@ -21,7 +22,11 @@ for sf in sf0.001 sf0.01 sf0.1; do
   # query that now fails to write still pass the replay
   rm -rf "${OUT:?}/$sf"
   echo "[gate] $sf: Verify" >&2
-  "$HERE/run_tool.sh" graft.Verify "$DATA/$sf" "$OUT/$sf" || failed+=("$sf:verify")
+  if ! "$HERE/run_tool.sh" graft.Verify "$DATA/$sf" "$OUT/$sf"; then
+    echo "[gate] $sf: Verify failed, preverify skipped" >&2
+    failed+=("$sf:verify")
+    continue
+  fi
   echo "[gate] $sf: preverify" >&2
   python3 "$HERE/preverify.py" "$DATA/$sf" "$OUT/$sf" | tee "$OUT/$sf.preverify.log" | grep -v '^PASS '
   [ "${PIPESTATUS[0]}" -eq 0 ] || failed+=("$sf:preverify")

@@ -9,16 +9,26 @@
 #
 # Usage: tools/run_tool.sh <mainClass> [args...]
 #   e.g. tools/run_tool.sh graft.tools.ProfileJobs llm_ann_ivf /tmp/graft_scale/x100
+# Runs the classes of the checkout this script sits in (compile it first).
 # Honors SPARK_DRIVER_MEM (default 8g, as build.sbt) and SPARK_GRAFT_CPUS.
 set -euo pipefail
 MAIN=${1:?usage: tools/run_tool.sh <mainClass> [args...]}
 shift
-CLASSES=/root/repo/target/scala-2.13/classes
+ROOT=$(cd "$(dirname "$0")/.." && pwd)
+CLASSES=$ROOT/target/scala-2.13/classes
+SRC=$ROOT/src/main/scala
+for d in "$CLASSES" "$SRC"; do
+  if [ ! -d "$d" ]; then
+    echo "[run_tool] missing $d (run \`sbt compile\` in $ROOT first)" >&2
+    exit 2
+  fi
+done
 # Staleness guard (r17 advisory): measuring after editing sources without
 # recompiling silently measures OLD code. Warn (don't fail — the
 # no-compile-during-measurement discipline makes mid-sweep edits legal).
-NEWEST_CLASS=$(find "$CLASSES" -name '*.class' -printf '%T@\n' 2>/dev/null | sort -n | tail -1)
-STALE=$(find /root/repo/src/main/scala -name '*.scala' -newermt "@${NEWEST_CLASS:-0}" 2>/dev/null | head -3)
+# `|| true`: head closing the pipe early must not end the script.
+NEWEST_CLASS=$(find "$CLASSES" -name '*.class' -printf '%T@\n' | sort -n | tail -1)
+STALE=$(find "$SRC" -name '*.scala' -newermt "@${NEWEST_CLASS:-0}" | head -3 || true)
 if [ -n "$STALE" ]; then
   echo "[run_tool] WARNING: sources newer than compiled classes — this JVM runs OLD code:" >&2
   echo "$STALE" | sed 's/^/[run_tool]   /' >&2
