@@ -19,7 +19,7 @@ import org.apache.spark.sql.types._
   * ranking sort was pure spill I/O — 52–98 s across same-code sweeps, all
   * for a result that keeps ≤(3+2·MaxBits) rows per vector. Scoring instead
   * runs HERE,
-  * per row, against the broadcast centroid matrix: no N×k rows ever exist,
+  * per row, against the one-value centroid matrix: no N×k rows ever exist,
   * no shuffle, no sort, no spill — one bounded insertion pass per vector
   * (typ. one compare per cell once the top set saturates). The operator's
   * output is byte-identical to the fan-out formulation because both the
@@ -39,8 +39,8 @@ import org.apache.spark.sql.types._
   * allocates 2 views per cell per row — GC pressure at N rows × k cells).
   * The matrix is k·(8+4·dim+8) bytes (~2.8 MB at the ×300 probe's 10k
   * cells; ~178 MB at the MaxBits=16 saturation point) — a
-  * dimension table; callers attach it with a broadcast fan-out join, the
-  * same policy as every other schema-fixed small side in this engine.
+  * dimension table; callers pass it as one scalar subquery value, the
+  * same policy as every other one-row statistic in this engine.
   *
   * `limit` must be a positive literal: the output is the serving-cache
   * relation, and a non-foldable cap was exactly the regression the old

@@ -8,21 +8,14 @@ import graft.Tables
 /** UDF / UDAF / UDTF surface (SURVEY.md §2.11).
   *
   * Preference order demonstrated here, fastest first: native Catalyst
-  * Expression (L2Norm, codegen'd) > Scala UDF (l2normUdf — kept as the
-  * reference twin) > driver-side anything. Typed Aggregators compile to
+  * Expression (L2Norm, codegen'd) > Scala UDF (UdfSpec keeps one as the
+  * expression's reference twin) > driver-side anything. Typed Aggregators compile to
   * ObjectHashAggregate — partial-merge friendly, so they scale like built-in
   * aggregates. The UDTF analogue is Dataset.flatMap (a Catalyst Generator is
   * the expression-level equivalent of explode; flatMap is the idiomatic
   * Spark 4 user surface for custom row-generating logic).
   */
 object Udfs {
-
-  /** Scala-UDF twin of the L2Norm expression (same fold order → bit-equal). */
-  val l2normUdf = udf { (a: Seq[Float]) =>
-    var s = 0.0
-    a.foreach { x => s += x.toDouble * x.toDouble }
-    math.sqrt(s)
-  }
 
   /** Top-10 embeddings by L2 norm via the native expression. */
   def udfL2norm(spark: SparkSession, sfDir: String): DataFrame = {

@@ -252,7 +252,7 @@ object LlmVector {
       .orderBy("vec_id")
   }
 
-  /** Both serving memos are LRU-bounded at this many (session, sfDir)
+  /** Every serving memo is LRU-bounded at this many (session, sfDir)
     * entries: the intended consumers hold ≤1 live entry (Verify/Bench: one
     * dir; ScaleStress: one dir at a time with an explicit release between
     * scales), so the cap never evicts in the shipped harnesses — it exists
@@ -294,7 +294,6 @@ object LlmVector {
   private[graft] def releaseCellCache(spark: SparkSession): Unit = {
     cellMemo.release(spark)
     topkMemo.release(spark)
-    pqMemo.release(spark)
     pqTopkMemo.release(spark)
   }
 
@@ -374,24 +373,16 @@ object LlmVector {
     * measured at ×100/×300 and not shipped (SCALE.md rounds 17–18). */
   private[graft] def nprobeCol(bBits: Column): Column = lit(3) + lit(2) * bBits
 
-  /** Driver-side scalar mirror of bucketBits — the stream serve sizes its
-    * probe from N before any query arrives. LlmVectorSpec pins it
-    * value-by-value against the Column law so the two cannot drift. */
-  private[graft] def bucketBitsScalar(n: Long): Int = {
-    val x = math.log(n / 512.0) / math.log(2.0)
-    math.min(MaxBits, math.max(0,
-      math.ceil(math.min(x, KneeBits + (x - KneeBits) / 2.0)).toInt))
-  }
-
-  /** Driver-side scalar mirror of nprobeCol at bit budget b — the stream
-    * serve probes the same cells as the batch build. Spec-pinned against
-    * the Column form. */
-  private[graft] def nprobeScalar(b: Int): Int = 3 + 2 * b
-
-  /** Emit cap of the cached per-vector cell ranking (the
-    * graft_ivf_topcells limit): the probe law's budget at its MaxBits
-    * ceiling, so every bit budget finds its nprobe ranks cached. */
+  /** Emit cap of every cell ranking (the graft_ivf_topcells limit): the
+    * probe law's budget at its MaxBits ceiling, so every bit budget finds
+    * its nprobe ranks. */
   private val MaxRank = 3 + 2 * MaxBits
+
+  /** The probe law as one predicate — rank ≤ 3 + 2·b(N), N the `nTotal`
+    * scalar subquery — filtering both the batch build's and the stream
+    * serve's cell rankings, so the two probe the same cells. */
+  private def probed(rank: Column, spark: SparkSession, sfDir: String): Column =
+    rank <= nprobeCol(bucketBits(nTotal(spark, sfDir)))
 
   /** Sign-bit bucket: bit j set iff hyperplane-j projection > 0, low b bits
     * only. The projection folds left-to-right in double, matching DuckDB's
@@ -569,7 +560,7 @@ object LlmVector {
     * the textbook IVF knob. */
   private def annProbes(spark: SparkSession, sfDir: String): DataFrame =
     cellScored(spark, sfDir)
-      .filter(col("cell_rank") <= nprobeCol(bucketBits(nTotal(spark, sfDir))))
+      .filter(probed(col("cell_rank"), spark, sfDir))
       .join(emb(spark, sfDir).select("vec_id", "embedding", "nrm"), "vec_id")
       .select(col("vec_id").as("a"), col("cell"),
         col("embedding").as("ea"), col("nrm").as("na"))
@@ -617,12 +608,12 @@ object LlmVector {
     * (round 18). `queries` is unbounded (qid, embedding float[Dim]); the
     * result is the stream of (qid, nn candidate, exact cos) rows:
     *
-    *  - each query row ranks its top-nprobe cells IN-ROW against the
-    *    centroid matrix, one scalar subquery value computed from the
-    *    static corpus (`graft_ivf_topcells` — the same
-    *    expression, matrix and probe law as the batch build, so a query
-    *    vector that exists in the corpus probes EXACTLY the cells
-    *    `llm_ann_ivf` probes for it);
+    *  - each query row ranks its cells IN-ROW against the centroid matrix
+    *    (`graft_ivf_topcells`, capped at MaxRank like the cached batch
+    *    ranking) and keeps the ranks the shared `probed` law admits — the
+    *    same expression, matrix and corpus-size scalar subquery as the
+    *    batch build, so a query vector that exists in the corpus probes
+    *    EXACTLY the cells `llm_ann_ivf` probes for it;
     *  - candidates come from a stream-STATIC equi-join on cell against the
     *    rank-1 index side (`annIndex` over the memoized `cellScored`, the
     *    same relation the batch build probes) — stateless in the stream,
@@ -630,20 +621,15 @@ object LlmVector {
     *    nprobe·cell-occupancy dot products, identical to a batch probe;
     *  - self-matches drop (a served query never returns its own id).
     *
-    * nprobe/bit-budget are fixed at STREAM-SETUP time from the corpus
-    * count (one setup job — serving setup already materializes the index)
-    * through the spec-pinned scalar mirrors of the batch build's laws. */
+    * Building the relation reads no table data: the corpus size and the
+    * centroid matrix are scalar subqueries evaluated with each
+    * micro-batch. */
   private[graft] def annServeCandidates(
       spark: SparkSession, sfDir: String, queries: DataFrame): DataFrame = {
-    // count(*) over ALL embeddings rows — the batch path's nTotal and the
-    // DuckDB bparam both count unfiltered, and bucketBitsScalar can land
-    // one bit lower under an isNotNull filter when null embeddings exist
-    // (round-18 ADVICE: the stream must probe EXACTLY the batch cells)
-    val n = Tables.embeddings(spark, sfDir).count()
-    val nprobe = nprobeScalar(bucketBitsScalar(n))
     val matrix = centroidMatrix(centroidRelation(spark, sfDir))
     queries.withColumn("nq", norm(col("embedding")))
-      .withColumn("tc", topCells(col("embedding"), col("nq"), matrix, nprobe))
+      .withColumn("tc", topCells(col("embedding"), col("nq"), matrix, MaxRank))
+      .filter(probed(col("tc.cell_rank"), spark, sfDir))
       .select(col("qid"), col("tc.cell").as("cell"),
         col("embedding").as("eq"), col("nq"))
       .join(annIndex(spark, sfDir), "cell")
@@ -651,10 +637,6 @@ object LlmVector {
       .withColumn("cos", dot(col("eq"), col("eb")) / (col("nq") * col("nb")))
       .select("qid", "b", "cos")
   }
-
-  /** Serving memo for the IVF-PQ codes index — the 4×-smaller residency
-    * the compose exists for (same lifecycle as the float memos). */
-  private val pqMemo = new ServingMemo(MemoCap)
 
   /** Every vector with its rank-1 cell, its centroid, and the RESIDUAL
     * (embedding − centroid, in double) — the quantity IVF-PQ quantizes:
@@ -671,20 +653,29 @@ object LlmVector {
            |  - CAST(element_at(centroid, i+1) AS DOUBLE))""".stripMargin))
   }
 
+  /** Exact per-dimension (min, max) bounds of `vec` per group of `keys`
+    * (one row when there are none): the keys, then a struct of `lows` and
+    * `highs`, double arrays in dimension order. Min/max are selections, so
+    * there is no float-sum drift. */
+  private def dimBounds(df: DataFrame, vec: Column, keys: String*): DataFrame = {
+    val k = keys.map(col)
+    df.select(k :+ posexplode(vec): _*).toDF(keys :+ "pos" :+ "v": _*)
+      .groupBy(k :+ col("pos"): _*)
+      .agg(min(col("v").cast("double")).as("lo"), max(col("v").cast("double")).as("hi"))
+      .groupBy(k: _*)
+      .agg(array_sort(collect_list(struct(col("pos"), col("lo"), col("hi")))).as("plh"))
+      .select(k :+ struct(transform(col("plh"), p => p.getField("lo")).as("lows"),
+        transform(col("plh"), p => p.getField("hi")).as("highs")): _*)
+  }
+
   /** The per-cell coder dimension table (cell-count rows — ~10k at the
     * ×300 probe, ~655k at the MaxBits cap): exact per-dimension
     * residual bounds plus the decode affine — base = centroid + lo and
     * scale = (hi − lo)/255, so decode is b̂ᵢ = baseᵢ + (codeᵢ+128)·scaleᵢ.
-    * Bounds are min/max selections (no float-sum drift), deterministic. */
-  private def pqCellDim(spark: SparkSession, sfDir: String): DataFrame = {
-    val stats = pqResiduals(spark, sfDir)
-      .select(col("cell"), posexplode(col("resid")).as(Seq("pos", "v")))
-      .groupBy("cell", "pos").agg(min("v").as("lo"), max("v").as("hi"))
-    stats.groupBy("cell")
-      .agg(array_sort(collect_list(struct(col("pos"), col("lo"), col("hi")))).as("plh"))
-      .select(col("cell"),
-        transform(col("plh"), p => p.getField("lo")).as("lows"),
-        transform(col("plh"), p => p.getField("hi")).as("highs"))
+    * Bounds come from `dimBounds`, so they are deterministic. */
+  private def pqCellDim(spark: SparkSession, sfDir: String): DataFrame =
+    dimBounds(pqResiduals(spark, sfDir), col("resid"), "cell")
+      .toDF("cell", "bounds").select("cell", "bounds.*")
       .join(broadcast(centroidRelation(spark, sfDir).select("cell", "centroid")), "cell")
       .select(col("cell"), col("lows"),
         expr(s"""transform(sequence(0, ${Dim - 1}), i ->
@@ -693,18 +684,16 @@ object LlmVector {
         expr(s"""transform(sequence(0, ${Dim - 1}), i ->
            |  (element_at(highs, i+1) - element_at(lows, i+1)) / 255.0D)""".stripMargin)
           .as("scale"))
-  }
 
-  private def pqIndex(spark: SparkSession, sfDir: String): DataFrame =
-    pqMemo.get(spark, sfDir)(buildPqIndex(spark, sfDir).cache())
-
-  /** The IVF-PQ serving index: one row per vector holding ONLY its cell,
+  /** The IVF-PQ codes index: one row per vector holding ONLY its cell,
     * the uint8 residual codes (stored −128-shifted as array<tinyint> —
     * one byte per dimension, 4× smaller than the float vector), and the
-    * reconstructed norm. This is the billion-vector memory layout:
-    * together with the cell-count-row coder table it is the ENTIRE serving
-    * state — the float embeddings are only touched again to refine a
-    * 20-candidate shortlist per query. Codes are exact-deterministic
+    * reconstructed norm. This is the billion-vector memory layout a
+    * serving tier would keep resident: with the cell-count-row coder
+    * table it is all candidate scoring reads — the float embeddings are
+    * only touched again to refine a 20-candidate shortlist per query.
+    * It is not cached on its own: its one consumer, the PQ top-k, is
+    * memoized. Codes are exact-deterministic
     * (integer rounding on exact min/max bounds; the fp-safety clamp can
     * only fire on the boundary value itself). */
   private[graft] def buildPqIndex(spark: SparkSession, sfDir: String): DataFrame = {
@@ -742,14 +731,14 @@ object LlmVector {
     * how many vectors fit a serving tier at 10⁹ scale. Like plain IVF the
     * result memoizes (build-once/serve-cheap; ScaleStress reports the
     * `_build` line separately). LlmSpec pins recall@5 ≥ the plain-IVF
-    * floor on the real sf0.1 embeddings and measures the cached codes
-    * index vs the float layout with per-row byte pins; no oracle (the
+    * floor on the real sf0.1 embeddings and measures the codes index's
+    * cached bytes vs the float layout's with per-row byte pins; no oracle (the
     * shortlist refinement's tie behavior is engine-internal — the exact
     * path `llm_ann_ivf` is the oracle-checked row). */
   private def buildAnnPqTopk(spark: SparkSession, sfDir: String): DataFrame = {
     // the same sub-fragmented, spill-onset-width candidate join as plain
     // IVF, against the codes index instead of the float one
-    val approx = annCandidates(spark, sfDir, pqIndex(spark, sfDir))
+    val approx = annCandidates(spark, sfDir, buildPqIndex(spark, sfDir))
       .join(broadcast(pqCellDim(spark, sfDir).select("cell", "base", "scale")), "cell")
       .withColumn("acos",
         pqDot(col("ea"), col("codes"), col("base"), col("scale")) / (col("na") * col("rnorm")))
@@ -786,14 +775,7 @@ object LlmVector {
     * double fold both engines share. */
   def llmEmbedQuantize(spark: SparkSession, sfDir: String): DataFrame = {
     val e = Tables.embeddings(spark, sfDir)
-    val stats = e.select(posexplode(col("embedding"))).toDF("pos", "v")
-      .groupBy("pos").agg(min(col("v").cast("double")).as("lo"),
-        max(col("v").cast("double")).as("hi"))
-    val bounds = stats
-      .groupBy().agg(array_sort(collect_list(struct(col("pos"), col("lo"), col("hi")))).as("plh"))
-      .select(struct(transform(col("plh"), p => p.getField("lo")).as("lows"),
-        transform(col("plh"), p => p.getField("hi")).as("highs")))
-      .scalar()
+    val bounds = dimBounds(e, col("embedding")).scalar()
     e.withColumns(Map("lows" -> bounds.getField("lows"), "highs" -> bounds.getField("highs")))
       .withColumn("codes", expr(
         """transform(sequence(0, size(embedding) - 1),

@@ -444,13 +444,14 @@ object StreamOps {
     * IVF index exists for: build
     * the index once, then answer vector queries as they arrive. The
     * candidate stage is `LlmVector.annServeCandidates` — stream-STATIC
-    * and stateless (each query row probes its own top-nprobe cells
-    * against the broadcast centroid matrix and equi-joins the memoized
-    * rank-1 index on cell; no watermark, no join state) — and the only
-    * state is the per-query top-k (AnnTopKProcessor). Centroids and
-    * probe budget are the batch build's, so a corpus vector served here
-    * probes exactly the cells `llm_ann_ivf` probes for it. Emits (qid,
-    * top neighbor ids, cos rounded 6). */
+    * and stateless (each query row ranks its cells against the centroid
+    * matrix, a scalar subquery, keeps the ones the batch build's probe
+    * law admits and equi-joins the memoized rank-1 index on cell; no
+    * watermark, no join state) — and the only state is the per-query
+    * top-k (AnnTopKProcessor). Centroids and probe law are the batch
+    * build's, so a corpus vector served here probes exactly the cells
+    * `llm_ann_ivf` probes for it. Emits (qid, top neighbor ids, cos
+    * rounded 6). */
   def streamAnnServe(spark: org.apache.spark.sql.SparkSession, sfDir: String,
       queries: Dataset[AnnQuery], k: Int = 5): Dataset[(Long, Seq[Long], Seq[Double])] = {
     import queries.sparkSession.implicits._

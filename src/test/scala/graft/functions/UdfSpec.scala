@@ -6,11 +6,18 @@ import org.apache.spark.sql.functions._
 /** §2.11 rows-only coverage: native-Expression vs UDF twin equality. */
 class UdfSpec extends SparkSpec {
 
+  /** Scala-UDF twin of the L2Norm expression (same fold order → bit-equal). */
+  private val l2normUdf = udf { (a: Seq[Float]) =>
+    var s = 0.0
+    a.foreach { x => s += x.toDouble * x.toDouble }
+    math.sqrt(s)
+  }
+
   test("L2Norm expression is bit-equal to the UDF twin on every row") {
     val both = Tables.embeddings(spark, sf001)
       .select(col("vec_id"),
         l2norm(col("embedding")).as("native"),
-        Udfs.l2normUdf(col("embedding")).as("viaUdf"))
+        l2normUdf(col("embedding")).as("viaUdf"))
       .collect()
     assert(both.nonEmpty)
     both.foreach { r =>

@@ -276,9 +276,11 @@ class LlmSpec extends SparkSpec {
     // memory: the smaller serving residency is the point of the compose —
     // cache the codes index and the float index the plain-IVF path serves
     // (`annIndex`) and compare MEASURED storage bytes. Two traps:
-    // (1) the recall run above memo-cached the same codes-index plan, and
-    // CacheManager dedups by plan, so a second cache() of it would
-    // materialize nothing (delta = 0) — release the memos first; (2) both
+    // (1) CacheManager dedups by plan, so a cache() of a plan some memo
+    // already holds would materialize nothing (delta = 0); no memo caches
+    // either index plan (the PQ memo holds the top-k, not its codes index),
+    // and releasing the memos first keeps the recall run's caches out of
+    // the measurement; (2) both
     // index plans read the memoized cell assignment, so WARM that memo
     // again before measuring or the first measurement absorbs its bytes.
     LlmVector.releaseCellCache(spark)

@@ -5,9 +5,9 @@ import graft.functions.{signBucket, SignBucket}
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
-/** Specs for `LlmVector`: the IVF cell laws and their driver-side
-  * mirrors, the native sign bucket against its Column-form twin, and
-  * `llm_ann_recall` against an independent recomputation. */
+/** Specs for `LlmVector`: the IVF cell and probe laws, the native sign
+  * bucket against its Column-form twin, and `llm_ann_recall` against an
+  * independent recomputation. */
 class LlmVectorSpec extends SparkSpec {
 
   test("IVF bucket-bit law: ~512-row cells to the 131k knee, sqrt(N) cells past it, clamped at 16") {
@@ -43,28 +43,13 @@ class LlmVectorSpec extends SparkSpec {
     assert(maxB === 16, s"clamp drifted to $maxB — vcell label shift must move with it")
   }
 
-  test("probe-law scalar mirror agrees with the Column law at every bit budget") {
+  test("IVF probe law is 3 + 2b at every bit budget") {
     import spark.implicits._
     val got = (0 to 16).toDF("b")
       .select(col("b"), LlmVector.nprobeCol(col("b")).cast("int").as("np"))
       .collect().map(r => r.getInt(0) -> r.getInt(1)).toMap
     (0 to 16).foreach { b =>
-      assert(got(b) === LlmVector.nprobeScalar(b),
-        s"b=$b: Column ${got(b)} vs scalar ${LlmVector.nprobeScalar(b)}")
       assert(got(b) === 3 + 2 * b, s"probe law drifted at b=$b: ${got(b)} != ${3 + 2 * b}")
-    }
-  }
-
-  test("bucket-bit scalar mirror agrees with the Column law across both regimes") {
-    import spark.implicits._
-    val ns = Seq(200L, 500L, 2000L, 20000L, 60000L, 131072L, 131073L,
-      200000L, 600000L, 2097152L, 8388608L, 8600000000L, 1000000000000L)
-    val got = ns.toDF("n")
-      .select(col("n"), LlmVector.bucketBits(col("n")).as("b"))
-      .collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
-    ns.foreach { n =>
-      assert(got(n) === LlmVector.bucketBitsScalar(n),
-        s"bucketBits($n): Column ${got(n)} vs scalar ${LlmVector.bucketBitsScalar(n)}")
     }
   }
 

@@ -531,55 +531,60 @@ class StreamingSpec extends SparkSpec {
   test("streaming ANN serve answers a query stream with the batch llm_ann_ivf top-5") {
     import spark.implicits._
     implicit val ctx = spark.sqlContext
-    withRocksDbState {
-      // six REAL corpus vectors as external queries (deterministic stride),
-      // fed in two micro-batches: the serve path shares the batch build's
-      // centroid matrix, probe law and memoized index, so each query's
-      // emission must EQUAL the batch operator's top-5 for that vec_id
-      // (same (cos desc, nn asc) comparator, same self-exclusion)
-      val corpus = graft.Tables.embeddings(spark, sf001)
-        .filter(col("embedding").isNotNull)
-        .orderBy(col("vec_id")).limit(120).collect()
-        .map(r => AnnQuery(r.getAs[Long]("vec_id"),
-          r.getSeq[Float](r.fieldIndex("embedding"))))
-      val queries = corpus.grouped(20).map(_.head).take(6).toSeq
-      val qids = queries.map(_.qid).toSet
-      val expected = graft.SparkEntry.queries("llm_ann_ivf")(spark, sf001)
-        .collect()
-        .map(r => (r.getLong(r.fieldIndex("a")), r.getLong(r.fieldIndex("rank")),
-          r.getLong(r.fieldIndex("nn"))))
-        .filter(t => qids.contains(t._1))
-        .groupBy(_._1).map { case (a, rows) =>
-          a -> rows.sortBy(_._2).map(_._3).toList
-        }
-      val in = MemoryStream[AnnQuery]
-      val q = StreamOps.streamAnnServe(spark, sf001, in.toDS(), 5)
-        .toDF("qid", "nns", "cos")
-        .writeStream.format("memory").queryName("t_annserve").outputMode("update").start()
-      try {
-        in.addData(queries.take(3))
-        q.processAllAvailable()
-        in.addData(queries.drop(3))
-        // re-deliver one batch-1 query: at-least-once replay must be
-        // idempotent (the state dedups by neighbor), not double-count
-        in.addData(queries.head)
-        q.processAllAvailable()
-        val rows = spark.sql("SELECT qid, nns, cos FROM t_annserve").collect()
-          .map(r => (r.getLong(0), r.getSeq[Long](1).toList, r.getSeq[Double](2).toList))
-        // every query's final emission equals the batch top-5 (re-delivery
-        // emits the same list twice for queries.head - both must match)
-        expected.foreach { case (a, nns) =>
-          val got = rows.filter(_._1 == a)
-          assert(got.nonEmpty, s"query $a never emitted")
-          got.foreach { g =>
-            assert(g._2 == nns, s"query $a served ${g._2} vs batch $nns")
-            assert(g._3.length == g._2.length &&
-              g._3 == g._3.sorted(Ordering[Double].reverse),
-              s"query $a cos emissions not descending: ${g._3}")
+    // b = 0 (nprobe 3) at sf0.001; at sf0.1 N = 2000 gives b = 2 and
+    // nprobe 7, so the probe law filters the served ranking there
+    for ((sf, i) <- Seq(sf001, "/root/testdata/sf0.1").zipWithIndex) withClue(s"$sf: ") {
+      withRocksDbState {
+        // six REAL corpus vectors as external queries (deterministic stride),
+        // fed in two micro-batches: the serve path shares the batch build's
+        // centroid matrix, probe law and memoized index, so each query's
+        // emission must EQUAL the batch operator's top-5 for that vec_id
+        // (same (cos desc, nn asc) comparator, same self-exclusion)
+        val corpus = graft.Tables.embeddings(spark, sf)
+          .filter(col("embedding").isNotNull)
+          .orderBy(col("vec_id")).limit(120).collect()
+          .map(r => AnnQuery(r.getAs[Long]("vec_id"),
+            r.getSeq[Float](r.fieldIndex("embedding"))))
+        val queries = corpus.grouped(20).map(_.head).take(6).toSeq
+        val qids = queries.map(_.qid).toSet
+        val expected = graft.SparkEntry.queries("llm_ann_ivf")(spark, sf)
+          .collect()
+          .map(r => (r.getLong(r.fieldIndex("a")), r.getLong(r.fieldIndex("rank")),
+            r.getLong(r.fieldIndex("nn"))))
+          .filter(t => qids.contains(t._1))
+          .groupBy(_._1).map { case (a, rows) =>
+            a -> rows.sortBy(_._2).map(_._3).toList
           }
-        }
-        assert(rows.forall(_._2.length <= 5), "state exceeded k neighbors")
-      } finally q.stop()
+        val in = MemoryStream[AnnQuery]
+        val sink = s"t_annserve$i"
+        val q = StreamOps.streamAnnServe(spark, sf, in.toDS(), 5)
+          .toDF("qid", "nns", "cos")
+          .writeStream.format("memory").queryName(sink).outputMode("update").start()
+        try {
+          in.addData(queries.take(3))
+          q.processAllAvailable()
+          in.addData(queries.drop(3))
+          // re-deliver one batch-1 query: at-least-once replay must be
+          // idempotent (the state dedups by neighbor), not double-count
+          in.addData(queries.head)
+          q.processAllAvailable()
+          val rows = spark.sql(s"SELECT qid, nns, cos FROM $sink").collect()
+            .map(r => (r.getLong(0), r.getSeq[Long](1).toList, r.getSeq[Double](2).toList))
+          // every query's final emission equals the batch top-5 (re-delivery
+          // emits the same list twice for queries.head - both must match)
+          expected.foreach { case (a, nns) =>
+            val got = rows.filter(_._1 == a)
+            assert(got.nonEmpty, s"query $a never emitted")
+            got.foreach { g =>
+              assert(g._2 == nns, s"query $a served ${g._2} vs batch $nns")
+              assert(g._3.length == g._2.length &&
+                g._3 == g._3.sorted(Ordering[Double].reverse),
+                s"query $a cos emissions not descending: ${g._3}")
+            }
+          }
+          assert(rows.forall(_._2.length <= 5), "state exceeded k neighbors")
+        } finally q.stop()
+      }
     }
   }
 }

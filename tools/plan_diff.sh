@@ -8,7 +8,10 @@
 # and its shuffle Exchange and Sort node counts on each side) or that
 # exists on one side only, then the Exchange and Sort totals over the
 # differing queries; exits 1 on any difference, 0 when the two
-# directories hold the same plans.
+# directories hold the same plans. A formatted plan prints one
+# Subquery:N section, with the whole subquery plan, per reference to a
+# scalar subquery, while execution runs it once (ReusedSubquery), so the
+# counts skip a section whose body repeats an earlier one.
 #
 # Usage: tools/plan_diff.sh <dirA> <dirB>
 set -uo pipefail
@@ -28,11 +31,23 @@ normalize() {
     "$1"
 }
 
+# the normalized plan without the Subquery:N sections whose body (with
+# operator numbers replaced, blank lines ignored) repeats an earlier
+# section's
+distinct_subqueries() {
+  normalize "$1" | awk '
+    function flush() { if (insec && !(key in seen)) { seen[key] = 1; printf "%s", buf } }
+    /^Subquery:[0-9]+ / { flush(); insec = 1; buf = $0 "\n"; key = ""; next }
+    insec { buf = buf $0 "\n"; k = $0; gsub(/\([0-9]+\)/, "(N)", k); if (k != "") key = key k "\n"; next }
+    { print }
+    END { flush() }'
+}
+
 # physical nodes named exactly $2 (a shuffle "Exchange", not
 # "BroadcastExchange"; "Sort", not "SortMergeJoin"), by their numbered
-# detail headers in the formatted plan
+# detail headers in the formatted plan, each distinct subquery once
 count() {
-  grep -cE "^\([0-9]+\) $2( \[codegen id : [0-9]+\])?\$" "$1"
+  distinct_subqueries "$1" | grep -cE "^\([0-9]+\) $2( \[codegen id : [0-9]+\])?\$"
 }
 
 differ=0
