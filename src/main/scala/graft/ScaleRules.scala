@@ -74,6 +74,18 @@ object ScaleRules {
     * after the halving to 128 KB measured it gone (40.8 GB → 0.4 GB). */
   val AnnCandidateTaskBytes: Long = 128L << 10
 
+  /** Node cap of one task's union-find in `Graph.localStars` (the CC
+    * kernel's per-partition star contraction), after which it emits its
+    * stars and restarts empty. Bytes per held node: a `LongMap[Long]` slot
+    * is an 8-byte key plus a 4-byte value reference at ≤ 50% load (24–48
+    * bytes across its doubling), the boxed value 16 bytes, and the flush
+    * adds 16 bytes of node/root arrays plus a leaf-flag map — ≤ ~100 bytes
+    * per node, so 2^18 nodes stay under ~26 MB per task, a small share of
+    * a task's heap at 4 tasks on the 3 GB benchmark heap. No sf ≤ 0.1
+    * partition reaches it (the largest graph, graph_cc at sf0.1, has
+    * 20,000 parts). */
+  val CcStarNodeCap: Int = 1 << 18
+
   /** Hysteresis: the wide width engages only at ≥ this multiple of the
     * session shuffle width — below spill onset, narrow plans stay put. */
   val WideBuildHysteresis: Int = 4

@@ -310,16 +310,81 @@ object Graph {
     ccPropagate(ccPairs(spark, sfDir, wide), wide)
   }
 
-  /** Min-label propagation fixpoint over an arbitrary SYMMETRIC (a, b)
-    * edge relation — the engine's ONE connected-components core, shared
-    * by batch `graph_cc` (support-≥2 co-purchase pairs, wide build past
-    * spill onset), the streaming forest consolidation
-    * (`StreamOps.ccConsolidate`, which symmetrizes its node-bounded
-    * forest and runs at session width), and since round 15 the doc
-    * near-dup family (`LlmText.connectedComponents` — the
-    * minhash-keep/dedup-cluster/neardup-split CC, whose ×100 cost is a
-    * scheduling floor, so this kernel's 2-exchange rounds over the
-    * persisted adjacency ARE its scale story).
+  /** Union-find over Long node ids with union by MIN root and path
+    * compression: a component's root is always its min node, the min-label
+    * CC convention (deterministic, restart-stable). `load` gives a node's
+    * parent the first time it is touched — identity for a fresh forest,
+    * the state store for `StreamOps.CcForestProcessor`; `parent` holds
+    * every node touched so far. Shared by that processor and `localStars`. */
+  private[graft] final class MinRootUnionFind(load: Long => Long = x => x) {
+    val parent = new scala.collection.mutable.LongMap[Long]
+    private def p(x: Long): Long = parent.getOrElseUpdate(x, load(x))
+    def find(x: Long): Long = {
+      var r = x
+      while (p(r) != r) r = p(r)
+      var c = x // path-compress the walked chain onto the root
+      while (c != r) { val nxt = parent(c); parent(c) = r; c = nxt }
+      r
+    }
+    /** Merges the components of a and b; true iff they were distinct. */
+    def union(a: Long, b: Long): Boolean = {
+      val ra = find(a)
+      val rb = find(b)
+      if (ra != rb) { if (ra < rb) parent(rb) = ra else parent(ra) = rb }
+      ra != rb
+    }
+  }
+
+  /** One partition's (a, b) edges contracted to symmetric STARS: a
+    * union-find over the partition, then per local component an edge
+    * pair (min, x), (x, min) for each other member x, and a self-edge
+    * (x, x) for a member-less root (a node whose only edges are
+    * self-loops), so every node seen is emitted. The components are
+    * unchanged: each star edge joins two nodes that were already
+    * connected, and both ends of every input edge land in one star. Task
+    * state is bounded: once `cap` nodes are held, the stars so far are
+    * emitted and the forest restarts empty — correct at any flush point,
+    * only less contracted. */
+  private[graft] def localStars(edges: Iterator[(Long, Long)],
+      cap: Int = graft.ScaleRules.CcStarNodeCap): Iterator[(Long, Long)] = {
+    var uf = new MinRootUnionFind()
+    def stars(): Iterator[(Long, Long)] = {
+      val nodes = new Array[Long](uf.parent.size)
+      var i = 0
+      uf.parent.foreachKey { x => nodes(i) = x; i += 1 }
+      val roots = nodes.map(uf.find)
+      val hasLeaf = new scala.collection.mutable.LongMap[Boolean]
+      for (j <- nodes.indices if roots(j) != nodes(j)) hasLeaf(roots(j)) = true
+      uf = new MinRootUnionFind()
+      Iterator.range(0, nodes.length).flatMap { j =>
+        val (x, r) = (nodes(j), roots(j))
+        if (x != r) Iterator((r, x), (x, r))
+        else if (!hasLeaf.contains(x)) Iterator.single((x, x))
+        else Iterator.empty
+      }
+    }
+    edges.flatMap { case (a, b) =>
+      uf.union(a, b)
+      if (uf.parent.size >= cap) stars() else Iterator.empty
+    } ++ stars()
+  }
+
+  /** Min-label propagation fixpoint over an (a, b) edge relation of
+    * non-null Long node ids — the engine's ONE connected-components core,
+    * shared by batch `graph_cc` (support-≥2 co-purchase pairs, wide build
+    * past spill onset), the streaming forest consolidation
+    * (`StreamOps.ccConsolidate`, node-bounded forest at session width),
+    * and the doc near-dup family (`LlmText.connectedComponents` — the
+    * minhash-keep/dedup-cluster/neardup-split CC).
+    * Input contract: edge DIRECTION and duplicates do not matter — one row
+    * per undirected pair is enough — and a self-loop (x, x) makes x a
+    * node. Before the adjacency build, one typed pass per input partition
+    * contracts its edges to symmetric union-find stars (`localStars`), so
+    * a partition that holds whole components hands the propagation its
+    * exact labels, and the stars are symmetric by construction (callers
+    * no longer union in reversed edges). Labels are seeded one hop in
+    * (each node's min over itself and its neighbors), so the rounds only
+    * confirm what the stars already joined.
     * `wide` is the build-stage shuffle width (pass the session width, or
     * 0, for no wide build — see ScaleRules.wideBuildWidth). */
   private[graft] def ccPropagate(pairs: DataFrame, wide: Int): DataFrame = {
@@ -335,9 +400,12 @@ object Graph {
     // adjacency comes back to session width for the propagation rounds
     // (sub-second per round at 32; the wide form paid an extra stage per
     // round).
+    import spark.implicits._
+    val stars = pairs.select("a", "b").as[(Long, Long)]
+      .mapPartitions(localStars(_)).toDF("a", "b")
     val narrow = spark.sessionState.conf.numShufflePartitions
-    val built = (if (wide > narrow) pairs.repartition(wide, col("a"))
-                 else pairs.repartition(col("a")))
+    val built = (if (wide > narrow) stars.repartition(wide, col("a"))
+                 else stars.repartition(col("a")))
       .groupBy("a").agg(collect_list("b").as("nbrs0"))
       .select(col("a"), concat(col("nbrs0"), array(col("a"))).as("nbrs"))
     val adjF = (if (wide > narrow) built.repartition(col("a")) else built)
@@ -357,7 +425,9 @@ object Graph {
       val out = df.observe(obs, sum(col("lbl")).as("s")).localCheckpoint()
       (out, obs.get.apply("s"))
     }
-    var (lab, prevSum) = ckptWithSum(adjF.select(col("a").as("node"), col("a").as("lbl")))
+    // Seeded one hop in: nbrs holds the node itself, so array_min(nbrs)
+    // is the label one propagation round would give it.
+    var (lab, prevSum) = ckptWithSum(adjF.select(col("a").as("node"), array_min(col("nbrs")).as("lbl")))
     var converged = prevSum == null // empty graph is trivially converged
     var iter = 0
     // One propagation HOP: join labels to the cached adjacency (both sides

@@ -411,13 +411,20 @@ object LlmText {
     // the self-join — without the boundary Catalyst collapses the
     // projection into the join and regenerates shingles once per PAIR
     // (measured 13s vs ~3s at sf0.1); it is also the co-partitioning the
-    // block join wants at scale.
+    // block join wants at scale. It runs at the SESSION width: a keyed
+    // repartition without a count is sized by AQE from map-output bytes,
+    // which folded this join into ONE task — its inputs are small in bytes
+    // but its work grows with the square of each block. A numbered
+    // repartition (REPARTITION_BY_NUM) is not coalesced, so the join runs
+    // on every core, and each task still holds whole blocks, so the CC
+    // kernel's per-partition stars are the exact near-dup components.
     val d = docs(spark, sfDir)
       .select(col("doc_id"), col("lang"), col("source"),
         hashedShingles(col("norm"), width).as(arr))
       .withColumn("n", size(col(arr)))
       .filter(col("n") > 0)
-      .repartition(col("lang"), col("source"))
+      .repartition(spark.sessionState.conf.numShufflePartitions,
+        col("lang"), col("source"))
     bucketedSelfPairs(d, arr)
       .withColumn("inter", sortedIntersectCount(col(s"${arr}_a"), col(s"${arr}_b")))
       .withColumn("jaccard", round(col("inter").cast("double") /
@@ -455,10 +462,10 @@ object LlmText {
     // node-sized join per round). llm_minhash_dedup_keep's ×100 cost is
     // pure per-round scheduling floor (round-14 ProfileJobs: zero spill,
     // no stage over 200 ms), so per-round plan weight IS its scale story.
-    // Symmetrize here: callers pass one row per undirected pair, the
-    // kernel's contract is a symmetric relation. Width 0 = session width
-    // (doc near-dup graphs are node-sparse; no spill-onset wide build).
-    Graph.ccPropagate(pairs.union(pairs.select(col("b"), col("a"))).toDF("a", "b"), 0)
+    // One row per undirected pair is the kernel's contract (its star pass
+    // ignores direction). Width 0 = session width (doc near-dup graphs are
+    // node-sparse; no spill-onset wide build).
+    Graph.ccPropagate(pairs, 0)
       .select(col("node").as("id"), col("lbl").as("label"))
   }
 

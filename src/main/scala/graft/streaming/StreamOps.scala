@@ -315,31 +315,19 @@ object StreamOps {
         Encoders.scalaLong, Encoders.scalaLong, TTLConfig.NONE)
     override def handleInputRows(key: Int, rows: Iterator[(Int, Long, Long)],
         timerValues: TimerValues): Iterator[(Long, Long)] = {
-      val local = scala.collection.mutable.Map.empty[Long, Long]
-      val dirty = scala.collection.mutable.Set.empty[Long]
-      def p(x: Long): Long = local.getOrElseUpdate(x,
-        if (parent.containsKey(x)) parent.getValue(x) else x)
-      def find(x: Long): Long = {
-        var r = x
-        while (p(r) != r) r = p(r)
-        var c = x // path-compress the walked chain onto the root
-        while (p(c) != r) { val nxt = p(c); local(c) = r; dirty += c; c = nxt }
-        r
-      }
-      val out = scala.collection.mutable.ListBuffer.empty[(Long, Long)]
-      rows.foreach { case (_, a, b) =>
-        val ra = find(a)
-        val rb = find(b)
-        if (ra != rb) {
-          // union by MIN root: roots only ever decrease, matching the
-          // batch min-label convention (deterministic, restart-stable)
-          val (lo, hi) = if (ra < rb) (ra, rb) else (rb, ra)
-          local(hi) = lo
-          dirty += hi
-          out += ((a, b))
-        }
-      }
-      dirty.foreach(k => parent.updateValue(k, local(k)))
+      // the batch's pointers load from the state store on first touch; the
+      // shared union-find (union by MIN root — roots only ever decrease,
+      // matching the batch min-label convention — with path compression)
+      // runs over that local cache
+      val loaded = new scala.collection.mutable.LongMap[Long]
+      val uf = new graft.operators.Graph.MinRootUnionFind(x => {
+        val p = if (parent.containsKey(x)) parent.getValue(x) else x
+        loaded(x) = p
+        p
+      })
+      val out = rows.filter { case (_, a, b) => uf.union(a, b) }
+        .map { case (_, a, b) => (a, b) }.toList
+      uf.parent.foreachEntry((k, p) => if (loaded(k) != p) parent.updateValue(k, p))
       out.iterator
     }
   }
@@ -364,15 +352,13 @@ object StreamOps {
     * CcForestProcessor). Input: a 2-column (a, b) forest relation;
     * output: (node, lbl). Runs the SAME distributed propagation core as
     * batch graph_cc (`Graph.ccPropagate` — one engine kernel, so the twin
-    * cannot drift), after symmetrizing: forest edges are emitted once per
-    * undirected pair, and min-label needs the label to flow both ways.
+    * cannot drift); forest edges are emitted once per undirected pair,
+    * which is the kernel's input contract.
     * Width: the forest is node-bounded by construction (≤ buckets·(n−1)
     * rows regardless of stream length), so the session width is the right
     * build width — no wide-build gate. */
   def ccConsolidate(forest: DataFrame): DataFrame = {
-    val f = forest.toDF("a", "b")
-    val sym = f.union(f.select(col("b").as("a"), col("a").as("b")))
-    graft.operators.Graph.ccPropagate(sym, 0)
+    graft.operators.Graph.ccPropagate(forest.toDF("a", "b"), 0)
   }
 
   /** Last-touch attribution as a stateful stream — the online form of the

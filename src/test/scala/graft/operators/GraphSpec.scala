@@ -5,7 +5,9 @@ import graft.functions.sortedDistinct
 import org.apache.spark.sql.functions._
 
 /** Specs for `Graph`: connected-component convergence on an
-  * odd-diameter path and the observed convergence sum, the in-row
+  * odd-diameter path, on random one-direction graphs against a reference
+  * union-find, and under the star pass's flush cap; the observed
+  * convergence sum, the in-row
   * co-purchase pair stream, and PageRank's literal-n recurrence. */
 class GraphSpec extends SparkSpec {
 
@@ -20,6 +22,49 @@ class GraphSpec extends SparkSpec {
     assert((1L to 6L).forall(lab(_) == 1L), s"path component labels: $lab")
     assert(lab(10L) === 10L && lab(11L) === 10L, s"pair component labels: $lab")
     assert(lab.size === 8)
+  }
+
+  /** Reference labels: node → min node of its component, by a plain local
+    * union-find over the undirected edges. */
+  private def referenceLabels(edges: Seq[(Long, Long)]): Map[Long, Long] = {
+    val up = scala.collection.mutable.Map.empty[Long, Long]
+    def root(x: Long): Long = up.get(x).fold(x)(root)
+    edges.foreach { case (a, b) =>
+      val (ra, rb) = (root(a), root(b))
+      if (ra != rb) up(math.max(ra, rb)) = math.min(ra, rb)
+    }
+    edges.flatMap { case (a, b) => Seq(a, b) }.distinct.map(x => x -> root(x)).toMap
+  }
+
+  test("ccPropagate equals a reference union-find on one-direction random graphs over 1, 3 and 8 partitions") {
+    import spark.implicits._
+    val rng = new scala.util.Random(7)
+    for (graph <- 0 until 3; parts <- Seq(1, 3, 8)) {
+      // sparse random edges, each stored in ONE direction only, shuffled so
+      // components span partitions; node 900 + graph's only edge is a self-loop
+      val und = Seq.fill(60)((rng.nextInt(120).toLong, rng.nextInt(120).toLong))
+        .filter { case (a, b) => a != b }
+      val edges = rng.shuffle(und :+ ((900L + graph, 900L + graph)))
+      val lab = Graph.ccPropagate(
+        spark.sparkContext.parallelize(edges, parts).toDF("a", "b"), 0)
+        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      assert(lab === referenceLabels(edges), s"graph $graph over $parts partitions")
+    }
+    assert(Graph.ccPropagate(Seq.empty[(Long, Long)].toDF("a", "b"), 0).count() === 0L)
+  }
+
+  test("localStars keeps the node set and the components under a 2- and 3-node flush cap") {
+    val rng = new scala.util.Random(5)
+    val edges = Seq.fill(40)((rng.nextInt(30).toLong, rng.nextInt(30).toLong)) :+ ((77L, 77L))
+    val whole = Graph.localStars(edges.iterator).toSeq
+    // one flush at the end: every local component is one star around its min
+    assert(whole.forall { case (a, b) => a == b || whole.contains((b, a)) })
+    assert(referenceLabels(whole) === referenceLabels(edges))
+    for (cap <- Seq(2, 3)) {
+      val flushed = Graph.localStars(edges.iterator, cap).toSeq
+      assert(flushed.size > whole.size, s"cap $cap must flush more than once")
+      assert(referenceLabels(flushed) === referenceLabels(whole), s"cap $cap")
+    }
   }
 
   // ccPropagate's convergence sum now rides the checkpoint job as an

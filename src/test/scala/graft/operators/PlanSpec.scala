@@ -333,6 +333,48 @@ class PlanSpec extends SparkSpec {
     assert(offenders.isEmpty, s"joins with a one-row side in: ${offenders.mkString(", ")}")
   }
 
+  // AQE sizes a count-less keyed repartition from map-output bytes and
+  // folds the near-dup pair stage's join, whose work grows with the square
+  // of each block, into one task; a numbered repartition is not coalesced
+  test("llm_jaccard_exact's block exchange is REPARTITION_BY_NUM at session width") {
+    val width = spark.sessionState.conf.numShufflePartitions
+    val plan = formatted(LlmText.llmJaccardExact(spark, sf01))
+    val block = raw"hashpartitioning\(lang#\d+, source#\d+, (\d+)\), (\w+)".r
+      .findAllMatchIn(plan).map(m => (m.group(1).toInt, m.group(2))).toSet
+    assert(block === Set((width, "REPARTITION_BY_NUM")), plan)
+  }
+
+  test("llm_jaccard_exact's block-join stage runs one task per shuffle partition") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted, StageInfo}
+    import org.apache.spark.sql.execution.WholeStageCodegenExec
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.joins.BaseJoinExec
+    import scala.jdk.CollectionConverters._
+    val width = spark.sessionState.conf.numShufflePartitions
+    val df = LlmText.llmJaccardExact(spark, sf01)
+    val stages = new java.util.concurrent.ConcurrentLinkedQueue[StageInfo]
+    val listener = new SparkListener {
+      override def onStageCompleted(e: SparkListenerStageCompleted): Unit = { stages.add(e.stageInfo); () }
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      df.collect()
+      // listener events post asynchronously: read once the count is stable
+      var last = -1
+      while (stages.size != last) { last = stages.size; Thread.sleep(250) }
+    } finally spark.sparkContext.removeSparkListener(listener)
+    // the executed stages that run the join's codegen stage
+    val joinScopes = new AdaptiveSparkPlanHelper {}.collect(df.queryExecution.executedPlan) {
+      case w: WholeStageCodegenExec if w.child.exists(_.isInstanceOf[BaseJoinExec]) =>
+        s"WholeStageCodegen (${w.codegenStageId})"
+    }.toSet
+    val joinTasks = stages.asScala.toSeq
+      .filter(_.rddInfos.exists(_.scope.exists(s => joinScopes.contains(s.name))))
+      .map(_.numTasks)
+    assert(joinTasks.nonEmpty && joinTasks.forall(_ == width),
+      s"block-join stage task counts $joinTasks, session width $width")
+  }
+
   test("every spec-gated (no-oracle) query emits only driver-proven output dtypes") {
     val specGated = graft.SparkEntry.queries.keySet -- graft.SparkEntry.oracleSql.keySet
     // the population itself is pinned: a new ✗-oracle row must be added
