@@ -1,7 +1,11 @@
 package graft
 
+import java.util.concurrent.ConcurrentHashMap
+
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** Central table access for the engine.
   *
@@ -12,13 +16,47 @@ import org.apache.spark.sql.functions._
   *
   * Scale note: each accessor returns a plain parquet-backed DataFrame leaf, so
   * Catalyst predicate pushdown / column pruning apply to whatever the caller
-  * composes on top — nothing is cached or collected here.
+  * composes on top — no data is cached or collected here. Only each table's
+  * schema is remembered (`schemas`), so that building a DataFrame starts no
+  * Spark job after the first read.
   */
 object Tables {
 
-  /** Generic table reader: `$sfDir/$name.parquet`. */
-  def t(spark: SparkSession, sfDir: String, name: String): DataFrame =
-    spark.read.parquet(s"$sfDir/$name.parquet")
+  /** A table's schema and the status of the file it was inferred from. */
+  private final case class Footer(modified: Long, length: Long, schema: StructType)
+
+  /** Process-wide schema memo, keyed by the qualified table path plus the
+    * session's explicitly set `spark.sql.parquet.*` and
+    * `spark.sql.legacy.parquet.*` confs, which change what inference yields
+    * (`inferTimestampNTZ.enabled`, `nanosAsLong`, …). An entry whose
+    * modification time or length no longer matches the file is replaced, so
+    * the map holds one entry per table path and conf set. */
+  private val schemas = new ConcurrentHashMap[(String, Map[String, String]), Footer]()
+
+  /** Generic table reader: `$sfDir/$name.parquet`. The first read of a
+    * path under a conf set lets Spark infer the schema from the parquet
+    * footer (one Spark job); later reads hand Spark that schema
+    * (`spark.read.schema`), which file sources make nullable exactly as
+    * inference does, so the plan is the same and no job runs. The file
+    * status comes from a driver-side `getFileStatus`. The inference runs
+    * outside the map's lock (get, infer, put): two first reads may both
+    * infer, and the later `put` wins with an equal schema. */
+  def t(spark: SparkSession, sfDir: String, name: String): DataFrame = {
+    val path = s"$sfDir/$name.parquet"
+    val p = new Path(path)
+    val st = p.getFileSystem(spark.sparkContext.hadoopConfiguration).getFileStatus(p)
+    val key = (st.getPath.toString, spark.conf.getAll.filter { case (k, _) =>
+      k.startsWith("spark.sql.parquet.") || k.startsWith("spark.sql.legacy.parquet.")
+    })
+    val known = schemas.get(key)
+    if (known != null && known.modified == st.getModificationTime && known.length == st.getLen)
+      spark.read.schema(known.schema).parquet(path)
+    else {
+      val df = spark.read.parquet(path)
+      schemas.put(key, Footer(st.getModificationTime, st.getLen, df.schema))
+      df
+    }
+  }
 
   def region(spark: SparkSession, sfDir: String): DataFrame   = t(spark, sfDir, "region")
   def nation(spark: SparkSession, sfDir: String): DataFrame   = t(spark, sfDir, "nation")

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, GraftColumns, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.UnscaledValue
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.DecimalType
 import graft.Tables
 
 /** Aggregation operators (SURVEY.md §2.4).
@@ -77,13 +78,13 @@ object Aggregations {
     * the group keys; PlanSpec pins that no DecimalType reaches the
     * arithmetic or the aggregate buffers. */
   def aggPricingDecimal(spark: SparkSession, sfDir: String): DataFrame = {
-    val disc = minorUnits(col("l_discount"), "decimal(3,2)")
-    val tax = minorUnits(col("l_tax"), "decimal(3,2)")
-    val extC2 = minorUnits(col("l_extendedprice"), "decimal(12,2)")
+    val disc = minorUnits(col("l_discount"), 3)
+    val tax = minorUnits(col("l_tax"), 3)
+    val extC2 = minorUnits(col("l_extendedprice"), 12)
     val discPriceU4 = extC2 * (lit(100L) - disc)
     Tables.lineitem(spark, sfDir)
       .select(col("l_returnflag"), col("l_linestatus"),
-        minorUnits(col("l_quantity"), "decimal(12,2)").as("qty_c2"),
+        minorUnits(col("l_quantity"), 12).as("qty_c2"),
         extC2.as("ext_c2"),
         discPriceU4.as("disc_price_u4"),
         (discPriceU4 * (lit(100L) + tax)).as("charge_u6"))
@@ -97,13 +98,33 @@ object Aggregations {
       .orderBy("l_returnflag", "l_linestatus")
   }
 
-  /** `c` cast to the 2-scale decimal type `dec`, as its exact unscaled
-    * long (cents). Catalyst's `UnscaledValue` reads the compact decimal's
-    * long; the plain `(c.cast(dec) * 100).cast("long")` multiplies a
-    * Decimal per row instead (measured at sf0.1: q1_decimal's full result
-    * 0.92 s against 0.77 s, min of 6). */
-  private def minorUnits(c: Column, dec: String): Column =
-    GraftColumns.column(UnscaledValue(GraftColumns.expression(c.cast(dec))))
+  /** The DOUBLE column `c` cast to DECIMAL(`precision`, 2), as its exact
+    * unscaled long (cents) — the value of `UnscaledValue(cast(c))`, in
+    * every row and ANSI mode.
+    *
+    * Spark's cast rounds the decimal string `Double.toString(d)` HALF_UP
+    * to scale 2, through a BigDecimal per row. Most rows skip it: with
+    * x = fl(100·d), the fast value is floor(x + 0.5) when
+    * |d| < min(1e9, 10^(precision−2) − 1) and x lies more than 1e-4 from
+    * a rounding tie (|x − floor(x) − 0.5| > 1e-4). It is exact there:
+    * the string s lies within ulp(d)/2 of d, and for |d| < 1e9,
+    * ulp(d) ≤ 2^-22, so |100·s − x| ≤ 1.2e-5 + 1.5e-5 (the second term
+    * bounds the rounding of the product) — far inside the margin, so
+    * 100·s and x round to the same integer, and x + 0.5 rounds to no
+    * integer boundary. The magnitude bound keeps the rounded value
+    * inside DECIMAL(precision, 2). Every other row — near a tie, out of
+    * range, NaN, ±Inf or null — takes the cast (an overflow raises under
+    * ANSI and is null without it). Catalyst's `UnscaledValue` reads the
+    * compact decimal's long; `(c.cast(dec) * 100).cast("long")` would
+    * multiply a Decimal per row instead. */
+  private[graft] def minorUnits(c: Column, precision: Int): Column = {
+    val x = c * 100
+    val exact = GraftColumns.column(UnscaledValue(
+      GraftColumns.expression(c.cast(DecimalType(precision, 2)))))
+    when(abs(c) < math.min(1e9, math.pow(10, precision - 2) - 1)
+        && abs(x - floor(x) - 0.5) > 1e-4, floor(x + 0.5))
+      .otherwise(exact)
+  }
 
   /** Long sum of `c` as `name` that fails the query, naming the column,
     * when the sum leaves BIGINT — in both ANSI modes. `try_sum` yields
@@ -174,8 +195,9 @@ object Aggregations {
     * the inequality scalar beside win_pareto's 80/20 share curve: G =
     * 2·Σ(rank·xᵢ)/(n·Σxᵢ) − (n+1)/n over customers ranked ascending by
     * (revenue, custkey — the deterministic tie-break). ALL sums run in
-    * exact integer cents (the q1_decimal minor-unit convention: 2-dp
-    * totals cast to DECIMAL(12,2) and scaled ×100 before summing), so
+    * exact integer cents (q1_decimal's minor-unit rule: each 2-dp total
+    * becomes its DECIMAL(12,2) cents through `minorUnits`, and the
+    * per-customer sum is `sumChecked`), so
     * the only floating-point ops are the two final divisions of exact
     * integers — engine-identical to the ulp, making the 6-dp rounding
     * boundary-proof rather than probabilistic. One customer-grain
@@ -183,8 +205,10 @@ object Aggregations {
   def aggGini(spark: SparkSession, sfDir: String): DataFrame = {
     val cust = Tables.orders(spark, sfDir)
       .join(Tables.customer(spark, sfDir), col("o_custkey") === col("c_custkey"))
-      .groupBy(col("c_mktsegment").as("seg"), col("c_custkey"))
-      .agg(sum(col("o_totalprice").cast("decimal(12,2)") * 100).cast("long").as("cents"))
+      .select(col("c_mktsegment").as("seg"), col("c_custkey"),
+        minorUnits(col("o_totalprice"), 12).as("cents"))
+      .groupBy("seg", "c_custkey")
+      .agg(sumChecked("cents", "cents"))
     val nb = graft.ScaleRules.bytesScaledCount(
       spark, s"$sfDir/customer.parquet", 4L << 20, 256)
     giniCore(cust, nb)

@@ -41,6 +41,30 @@ trait SparkSpec extends AnyFunSuite {
         bad.map(f => s"${f.name}:${f.dataType.simpleString}").mkString(", "))
   }
 
+  /** The number of Spark jobs `body` starts. Only jobs in the job group
+    * set around `body` count, so unrelated async session work (broadcast
+    * cleanup, lazy metadata jobs) can't inflate the count; listener events
+    * post asynchronously, so the count is read once it is stable. */
+  def jobsIn(desc: String)(body: => Unit): Int = {
+    val group = "spark-spec-jobs"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        val g = Option(js.properties).map(_.getProperty("spark.jobGroup.id", "")).getOrElse("")
+        if (g == group) jobs.incrementAndGet(); ()
+      }
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      spark.sparkContext.setJobGroup(group, desc)
+      try body finally spark.sparkContext.clearJobGroup()
+      var last = -1
+      var spins = 0
+      while (jobs.get() != last && spins < 20) { last = jobs.get(); Thread.sleep(250); spins += 1 }
+    } finally spark.sparkContext.removeSparkListener(listener)
+    jobs.get()
+  }
+
   /** Every message along a throwable's cause chain, outermost first — a
     * failure raised inside a task reaches the driver wrapped, so specs
     * match the message they expect anywhere in the chain. */

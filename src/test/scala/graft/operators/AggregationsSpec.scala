@@ -3,8 +3,8 @@ package graft.operators
 import graft.SparkSpec
 import org.apache.spark.sql.functions._
 
-/** Specs for `Aggregations`: the exact minor-unit path and its overflow
-  * guard, the finance formulas' bounds, and giniCore's bucket
+/** Specs for `Aggregations`: the exact minor-unit path, its cents rule
+  * against Spark's cast, and its overflow guard, the finance formulas' bounds, and giniCore's bucket
   * decomposition. */
 class AggregationsSpec extends SparkSpec {
 
@@ -35,6 +35,64 @@ class AggregationsSpec extends SparkSpec {
       assert(close(r.getAs[Long]("sum_disc_price_u4"), 1e4, r.getAs[Double]("sum_disc_price")))
       assert(close(r.getAs[Long]("sum_charge_u6"), 1e6, r.getAs[Double]("sum_charge")))
       assert(r.getAs[Long]("count_order") == r.getAs[Long]("count_order_flag"))
+    }
+  }
+
+  test("minorUnits equals UnscaledValue(cast) on ties, bounds and random doubles in every mode") {
+    import java.math.{BigDecimal => JBig, RoundingMode}
+    import org.apache.spark.sql.{Column, GraftColumns, Row}
+    import org.apache.spark.sql.catalyst.expressions.UnscaledValue
+    import org.apache.spark.sql.types._
+    val rng = new scala.util.Random(7)
+    // ties: the x.xx5 grid (divided and multiplied), also at large magnitudes
+    val ties = (5 until 100000 by 10).map(_ / 1000.0) ++ (0 to 200000).map(_ * 0.005) ++
+      Seq(1e3, 1e6, 1e8, 999999990.0).flatMap(b => (5 until 10000 by 10).map(b + _ / 1000.0))
+    val random = (0 until 200000).map(i => rng.nextDouble() * math.pow(10, i % 10 - 2))
+    // both sides of the fast-path bounds and of each type's range
+    val edges = Seq(8.999999, 8.9999999999, 9.0, 9.000000001, 9.99, 9.994, 9.9949999,
+      9.995, 9.995000001, 10.0, 999999999.99, 999999999.995, 1e9, 1e9 + 0.005,
+      9999999999.99, 9999999999.994, 9999999999.995, 1e10, 1e11, 0.0,
+      Double.MinPositiveValue, java.lang.Double.MIN_NORMAL, Double.MaxValue,
+      Double.NaN, Double.PositiveInfinity).flatMap(d => Seq(d, -d))
+    // whether Spark's cast fits DECIMAL(p, 2): HALF_UP of Double.toString
+    def fits(d: Double, p: Int): Boolean = !d.isNaN && !d.isInfinite &&
+      new JBig(java.lang.Double.toString(d)).setScale(2, RoundingMode.HALF_UP).abs
+        .compareTo(JBig.TEN.pow(p - 2)) < 0
+    val schema = StructType(Seq(StructField("d", DoubleType),
+      StructField("fits3", BooleanType), StructField("fits12", BooleanType)))
+    val rows = (ties ++ random).flatMap(d => Seq(d, -d)) ++ edges
+    val df = spark.createDataFrame(spark.sparkContext.parallelize(
+      rows.map(d => Row(d, fits(d, 3), fits(d, 12))) :+ Row(null, true, true), 4), schema)
+    def ref(c: Column, p: Int): Column =
+      GraftColumns.column(UnscaledValue(GraftColumns.expression(c.cast(DecimalType(p, 2)))))
+    val keys = Seq("spark.sql.ansi.enabled", "spark.sql.codegen.wholeStage",
+      "spark.sql.codegen.factoryMode")
+    val saved = keys.map(k => k -> spark.conf.getOption(k))
+    try {
+      for (ansi <- Seq(true, false); codegen <- Seq(true, false); p <- Seq(3, 12)) {
+        spark.conf.set("spark.sql.ansi.enabled", ansi.toString)
+        spark.conf.set("spark.sql.codegen.wholeStage", codegen.toString)
+        spark.conf.set("spark.sql.codegen.factoryMode", if (codegen) "CODEGEN_ONLY" else "NO_CODEGEN")
+        val mode = s"ansi=$ansi codegen=$codegen DECIMAL($p,2)"
+        // under ANSI a value outside the type raises, so it is checked alone below
+        val in = if (ansi) df.filter(col(s"fits$p")) else df
+        val bad = in.filter(!(Aggregations.minorUnits(col("d"), p) <=> ref(col("d"), p)))
+        val n = bad.count()
+        assert(n == 0, s"$mode: $n mismatches, e.g. ${bad.select("d").limit(5).collect().mkString(" ")}")
+        if (ansi) edges.filterNot(fits(_, p)).foreach { d =>
+          val one = spark.createDataFrame(spark.sparkContext.parallelize(Seq(Row(d)), 1),
+            StructType(Seq(StructField("d", DoubleType))))
+          def outcome(c: Column) = scala.util.Try(one.select(c).head().get(0))
+          val (fast, exact) = (outcome(Aggregations.minorUnits(col("d"), p)), outcome(ref(col("d"), p)))
+          if (!d.isNaN && !d.isInfinite)
+            assert(exact.isFailure, s"$mode: the cast of $d must raise")
+          assert(fast.isFailure == exact.isFailure && (fast.isFailure || fast == exact),
+            s"$mode: $d gave $fast, the cast $exact")
+        }
+      }
+    } finally saved.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
     }
   }
 

@@ -63,30 +63,6 @@ class Round6bOpsSpec extends SparkSpec {
     assert(est <= Joins.BloomMaxItems, s"sf0.001 build side must sit far under the cap, est=$est")
     // single pass: the build runs ONE Spark job (the old count()+bloomFilter
     // shape ran two scans of the build side — this pin keeps it dead).
-    // Counted jobs are filtered to the job group set around the build, so
-    // unrelated async session work (broadcast cleanup, lazy metadata jobs)
-    // can't inflate the count and flake the pin.
-    val group = "round6b-bloom-build"
-    // the number of jobs `body` runs in the group; listener events post
-    // asynchronously, so the count is read once it is stable
-    def jobsIn(desc: String)(body: => Unit): Int = {
-      val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-      val listener = new org.apache.spark.scheduler.SparkListener {
-        override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-          val g = Option(js.properties).map(_.getProperty("spark.jobGroup.id", "")).getOrElse("")
-          if (g == group) jobs.incrementAndGet(); ()
-        }
-      }
-      spark.sparkContext.addSparkListener(listener)
-      try {
-        spark.sparkContext.setJobGroup(group, desc)
-        try body finally spark.sparkContext.clearJobGroup()
-        var last = -1
-        var spins = 0
-        while (jobs.get() != last && spins < 20) { last = jobs.get(); Thread.sleep(250); spins += 1 }
-      } finally spark.sparkContext.removeSparkListener(listener)
-      jobs.get()
-    }
     val jobs = jobsIn("bloom sketch build") {
       assert(Joins.bloomPrefilter(urgent, "o_orderkey", col("l_orderkey")).isDefined)
     }
