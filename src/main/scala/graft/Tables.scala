@@ -29,16 +29,22 @@ object Tables {
     * session's explicitly set `spark.sql.parquet.*` and
     * `spark.sql.legacy.parquet.*` confs, which change what inference yields
     * (`inferTimestampNTZ.enabled`, `nanosAsLong`, …). An entry whose
-    * modification time or length no longer matches the file is replaced, so
-    * the map holds one entry per table path and conf set. */
+    * modification time or length no longer matches the path's status is
+    * replaced, so the map holds one entry per table path and conf set. For a
+    * single-file table that status is the file's own. For a directory table
+    * (Spark-written part files) it is only the directory's: its length is 0
+    * and its mtime moves only when entries are added or removed, so a part
+    * file rewritten in place is not detected. The memo relies on such
+    * directories being replaced whole, as `mode("overwrite")` does. */
   private val schemas = new ConcurrentHashMap[(String, Map[String, String]), Footer]()
 
   /** Generic table reader: `$sfDir/$name.parquet`. The first read of a
     * path under a conf set lets Spark infer the schema from the parquet
     * footer (one Spark job); later reads hand Spark that schema
     * (`spark.read.schema`), which file sources make nullable exactly as
-    * inference does, so the plan is the same and no job runs. The file
-    * status comes from a driver-side `getFileStatus`. The inference runs
+    * inference does, so the plan is the same and no job runs. The path's
+    * status comes from a driver-side `getFileStatus` (see `schemas` for what
+    * it detects on a directory table). The inference runs
     * outside the map's lock (get, infer, put): two first reads may both
     * infer, and the later `put` wins with an equal schema. */
   def t(spark: SparkSession, sfDir: String, name: String): DataFrame = {
